@@ -538,8 +538,7 @@ object Snapshots {
     // schema-in-the-log from the first commit: every later reader —
     // and every append's schema check — plans from the version
     // metadata instead of sampling parquet footers
-    val ddl = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map(_.copy(nullable = true))).toDDL
+    val ddl = loggedDdl(df.schema)
     publishNext(spark, root,
       v => dirBody(v, dataDir, nRows, None, Some(ddl), None, cons,
         effParts, effBucket))
@@ -568,8 +567,7 @@ object Snapshots {
       s"partition column $c is not a column of the batch"))
     partitionBy.foreach(requireLoggable(_, "partition column"))
     val (dataDir, nRows) = writeDataDir(spark, df, root, partitionBy, bucketBy)
-    val ddl = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map(_.copy(nullable = true))).toDDL
+    val ddl = loggedDdl(df.schema)
     val target = prior.getOrElse(0L) + 1
     fireRaceHook()
     if (!tryPublish(spark, root, target,
@@ -599,8 +597,7 @@ object Snapshots {
       s"partition column $c is not a column of the batch"))
     partitionBy.foreach(requireLoggable(_, "partition column"))
     val (dataDir, nRows) = writeDataDir(spark, df, root, partitionBy, bucketBy)
-    val ddl = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map(_.copy(nullable = true))).toDDL
+    val ddl = loggedDdl(df.schema)
     publishNext(spark, root,
       v => dirBody(v, dataDir, nRows, None, Some(ddl), None, Nil,
         partitionBy, bucketBy))
@@ -947,14 +944,6 @@ object Snapshots {
 
   // --- manifest versions: explicit file lists for copy-on-write ---
 
-  private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+".r
-
-  /** Strip any URI scheme, keep the absolute path — the shared
-    * normalization for comparing `input_file_name()` URIs
-    * ("file:///x") with Hadoop listing URIs ("file:/x").
-    */
-  private def normPath(s: String): String = SchemeRe.replaceFirstIn(s, "/")
-
   private def rootPathOf(spark: SparkSession, root: String): String = {
     val p = new Path(root)
     fs(spark, p).makeQualified(p).toUri.getPath
@@ -966,7 +955,7 @@ object Snapshots {
     * to itself, so every consumer reads it unchanged.
     */
   private def relOf(spark: SparkSession, root: String, abs: String): String = {
-    val p = normPath(abs)
+    val p = StatsIndex.normPath(abs)
     val rootP = rootPathOf(spark, root)
     if (p.startsWith(rootP + "/")) p.stripPrefix(rootP).stripPrefix("/") else p
   }
@@ -1802,10 +1791,9 @@ object Snapshots {
           .forall(_.tombstone),
       s"$dstRoot already has committed versions — use CREATE OR " +
         "REPLACE ... SHALLOW CLONE to re-point it")
-    val absFiles = filesOfVersion(spark, srcRoot, v).map(normPath)
+    val absFiles = filesOfVersion(spark, srcRoot, v).map(f => StatsIndex.normPath(f))
     val man = writeManifest(spark, dstRoot, absFiles)
-    val ddl = m.schemaDdl.getOrElse(org.apache.spark.sql.types.StructType(
-      read(spark, srcRoot, Some(v)).schema.fields.map(_.copy(nullable = true))).toDDL)
+    val ddl = m.schemaDdl.getOrElse(loggedDdl(read(spark, srcRoot, Some(v)).schema))
     val nv =
       if (orReplace)
         // the replace verb takes any next slot (publishNext semantics)
@@ -2007,8 +1995,7 @@ object Snapshots {
     */
   private def relFileCol(rootAbs: String): Column =
     org.apache.spark.sql.functions.regexp_replace(
-      org.apache.spark.sql.functions.regexp_replace(
-        col("_metadata.file_path"), SchemeRe.regex, "/"),
+      StatsIndex.normPath(col("_metadata.file_path")),
       "^" + java.util.regex.Pattern.quote(rootAbs + "/"), "")
 
   private def emptyDv(spark: SparkSession): DataFrame = {
@@ -2519,9 +2506,7 @@ object Snapshots {
             .delete(new Path(root, freshDir), true)
           throw e
       }
-      // stored nullable: files from before an evolution genuinely
-      // yield nulls for added columns
-      val ddl = StructType(newSchema.fields.map(_.copy(nullable = true))).toDDL
+      val ddl = loggedDdl(newSchema)
       val man = writeManifest(spark, root, oldRel ++ freshRel)
       val v = prior.getOrElse(0L) + 1
       // a prior deletion vector rides forward by reference: its
@@ -2633,7 +2618,7 @@ object Snapshots {
     val files = statuses
       .filter(st => st.isFile && !st.getPath.getName.startsWith(".") &&
         !st.getPath.getName.startsWith("_"))
-      .map(st => (normPath(st.getPath.toString), st.getLen,
+      .map(st => (StatsIndex.normPath(st.getPath.toString), st.getLen,
         st.getModificationTime))
     val loaded = loadedCopyPaths(spark, root)
     val fresh = files.filterNot(t => loaded.contains(t._1))
@@ -2712,76 +2697,299 @@ object Snapshots {
     }
   }
 
-  /** The copy-on-write writers split the version into touched +
-    * untouched THROUGH the stats table, so a stats table missing a
-    * live file would silently DROP that file from the new version —
-    * fail loudly instead. One metadata count vs one manifest/listing
-    * length.
+  /** One attempt of a manifest-delta writer, planned against the
+    * version it read ([[CowBase]]): what [[commitDelta]] cannot derive
+    * for the writer.
+    *
+    *  - `rewritten`: the read version's files (root-relative) the
+    *    rewrite re-reads and replaces;
+    *  - `rewrite`: the rows to stage, given the read version's deletion
+    *    vector (re-read files read LOGICALLY, or its deleted rows would
+    *    resurrect);
+    *  - `ddl`: the schema the new version logs;
+    *  - `addedConflicts`: [[rebaseDelta]]'s predicate over the stats
+    *    rows of the files an interleaved commit added;
+    *  - `dropped`: files removed WITHOUT being read (a partition
+    *    overwrite's path-proven files of a replaced tuple);
+    *  - `compaction`: a layout-only rewrite ([[optimize]]): the row
+    *    count stays the read version's, every file the vector names is
+    *    re-read (so no vector carries), and a rewrite that carries
+    *    nothing publishes its fresh dir as the version's layout;
+    *  - `release`: runs once the staging write is over, whatever its
+    *    outcome (unpersisting a frame the rewrite persisted).
     */
-  private def requireStatsCoverage(spark: SparkSession, root: String,
-                                   m: VMeta, stats: DataFrame): Unit = {
-    // the stats frame is a LocalRelation ([[statsOf]]): the projection
-    // folds and the collect is a driver handoff — no Spark job
-    val nStats = stats.select("file").collect().iterator
-      .map(_.getString(0)).toSet.size
-    val nFiles = relFilesOf(spark, root, m).size
-    require(nStats == nFiles,
-      s"stats index covers $nStats files but version has $nFiles — " +
-        "rebuild via commitWithStats before copy-on-write commits")
+  private final case class CowPlan(rewritten: Seq[String],
+      rewrite: DataFrame => DataFrame, ddl: Option[String],
+      addedConflicts: DataFrame => Boolean,
+      dropped: Seq[String] = Nil, compaction: Boolean = false,
+      release: () => Unit = () => ())
+
+  /** The version a [[commitDelta]] attempt read. Its file list and its
+    * skipping index resolve on first use, so a writer that turns out
+    * to have nothing to do reads neither.
+    */
+  private final class CowBase(spark: SparkSession, root: String,
+                              val v: Long, val m: VMeta,
+                              physStatsCols: Seq[String]) {
+    lazy val rels: Seq[String] = relFilesOf(spark, root, m)
+
+    /** The index as collected rows. The copy-on-write split runs
+      * THROUGH it, so an index missing a live file would silently DROP
+      * that file from the new version — fail loudly instead (one
+      * driver-side distinct count against the file list).
+      */
+    lazy val statsRows: (org.apache.spark.sql.types.StructType,
+                         Array[org.apache.spark.sql.Row]) = {
+      val (schema, rows) = statsRowsOf(spark, root, m, physStatsCols)
+      val fIdx = schema.fieldIndex("file")
+      val nStats = rows.iterator.map(_.getString(fIdx)).toSet.size
+      require(nStats == rels.size,
+        s"stats index covers $nStats files but version has ${rels.size} — " +
+          "rebuild via commitWithStats before copy-on-write commits")
+      (schema, rows)
+    }
+
+    /** [[statsRows]] as a LocalRelation: projections and filters fold,
+      * `collect()` is a driver handoff, and a broadcast builds from the
+      * local rows — no Spark job (see [[statsRowsOf]]).
+      */
+    def stats: DataFrame = localStats(spark, statsRows._1, statsRows._2.toIndexedSeq)
   }
 
-  /** COPY-ON-WRITE row-level MERGE (upsert semantics — the Delta
-    * `MERGE INTO` analogue): rows of the latest version whose `key`
-    * matches an update row are REPLACED, all update rows land (so
-    * unmatched update keys INSERT), and — the scale contract — only
-    * the files that CAN contain an update key are rewritten. File
-    * targeting is metadata: the version's per-file min/max stats on
-    * `key` ([[commitWithStats]]'s index) joined against the update
-    * keys (stats broadcast — one pass over the updates, no
-    * all-pairs); files whose range misses every update key are
-    * carried into the new version BY REFERENCE via the manifest.
-    * A key-localized update batch against a key-clustered layout
-    * therefore rewrites O(batch locality) files out of millions —
-    * which is the only shape row-level mutation can take at 100 TB.
-    *
-    * Semantics notes (both standard): a NULL update key never
-    * matches (it inserts; existing null-key rows survive), and
-    * updates should be key-distinct — duplicate update keys all
-    * insert, as in a multi-match MERGE.
-    *
-    * Conflict-safe exactly like [[optimize]]/[[append]] (publish at
-    * readVersion+1; on a lost race the rewrite is recomputed against
-    * the new latest). The new version's stats index reuses the
-    * untouched files' rows verbatim and rebuilds only the fresh dir.
+  /** Column set of a skipping index built on `cols`. */
+  private def statsColumns(cols: Seq[String]): Set[String] =
+    Set("file", "n_rows") ++ cols.flatMap(c =>
+      Seq(s"min_$c", s"max_$c", s"nulls_$c"))
+
+  /** The schema a writer logs: stored nullable, because files from
+    * before an evolution genuinely yield nulls for added columns.
     */
-  /** Bucket-aware refinement of merge file targeting: when the table
-    * is bucketed on EXACTLY the merge key, a key's candidate files
-    * are named by its bucket id directly — `pmod(hash(key), n)` is
-    * both Spark's bucket function and [[writeDataDir]]'s layout
-    * placement, so a file whose `_NNNNN` tag is outside the update
-    * keys' bucket-id set provably contains no update key, whatever
-    * its min/max range says. Composes WITH the range targeting (both
-    * are sound negatives); untagged files stay conservative. At
-    * scale this makes a skew-heavy update batch (one hot key range
-    * spanning every file's [min,max]) still touch only its buckets.
+  private def loggedDdl(schema: org.apache.spark.sql.types.StructType): String =
+    org.apache.spark.sql.types.StructType(
+      schema.fields.map(_.copy(nullable = true))).toDDL
+
+  /** The one copy-on-write commit of the manifest-delta writers
+    * ([[merge]], [[mergeClauses]], [[deleteRange]],
+    * [[replacePartition]]/[[replacePartitions]], [[optimize]]). Per
+    * attempt it resolves the latest version (the FIRST attempt may
+    * reuse a caller-probed `metaHint` — one metadata read per
+    * statement; a stale hint just loses the publish race), re-checks
+    * the tag, and lets the writer `plan` against it (`Left` = nothing
+    * to do: that receipt returns as-is). Then, on the driver, the
+    * version splits into the carried complement and the removed files;
+    * the deletion vector's entries for carried files ride into a new
+    * vector (their positions stay valid — the files are carried
+    * verbatim; removed files' entries die with them); the rewrite
+    * stages into a fresh dir; and the new version — carried files BY
+    * REFERENCE plus the fresh dir — publishes at EXACTLY
+    * readVersion+1.
+    *
+    * The skipping index on `statsCols` (logical names) rides the same
+    * commit: carried files' rows verbatim plus one build over the
+    * fresh dir. Row accounting derives from it too (stats `n_rows` is
+    * per-file PHYSICAL, so the carried vector's size is subtracted).
+    * Only a compaction may run without one — its row count is the
+    * read version's.
+    *
+    * A lost race first tries the generalized OCC re-base
+    * ([[rebaseDelta]]): a delta provably disjoint from the interleaved
+    * commits keeps its staged rewrite and vector carry and rebuilds
+    * only the tiny manifest. Any conflict deletes the staged files and
+    * re-plans against the new latest.
     */
-  private def bucketPrune(keys: DataFrame, touched: DataFrame,
-                          bucket: Option[Bucketing],
-                          key: String): DataFrame = bucket match {
-    case Some(b) if b.cols == Seq(key) =>
-      import org.apache.spark.sql.functions.{hash, pmod, regexp_extract}
-      // `keys` must already carry the table key's EXACT logged type
-      // (the callers cast the source to the table schema): murmur3
-      // hashes an INT and a LONG of the same value differently, so a
-      // dtype drift here would prune the WRONG buckets — a silently
-      // lost update
-      val hitIds = keys
-        .select(pmod(hash(col("__mk")), lit(b.n)).as("__bid"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val bid = regexp_extract(col("file"), "_(\\d+)\\.[^/]*$", 1)
-      touched.filter(bid === "" ||
-        bid.cast("int").isin(hitIds.map(i => i: Any): _*))
-    case _ => touched
+  private def commitDelta(spark: SparkSession, root: String, what: String,
+      statsCols: Seq[String], tag: Option[Long] = None,
+      metaHint: Option[(Long, VMeta)] = None)
+      (plan: CowBase => Either[CowResult, CowPlan]): CowResult = {
+    var attempts = 0
+    def lostRace(): Unit = {
+      attempts += 1
+      require(attempts < 100, s"$root: $what lost $attempts commit races")
+    }
+    def remove(rel: String): Unit =
+      fs(spark, new Path(root, rel)).delete(new Path(root, rel), true)
+    var hintLeft = metaHint
+    while (true) {
+      val (v, m) = hintLeft match {
+        case Some(h) => hintLeft = None; h
+        case None =>
+          val lv = latestVersion(spark, root).getOrElse(
+            throw new IllegalArgumentException(
+              s"$root has no committed versions"))
+          (lv, versionMeta(spark, root, lv))
+      }
+      requireLive(m, root, what)
+      requireTagMonotonic(spark, root, tag, what)
+      // the files and the index carry PHYSICAL names; every writer but
+      // a compaction refuses a column-mapped table in its plan
+      val physStatsCols = statsCols.map(m.colmap.physicalOf)
+      val base = new CowBase(spark, root, v, m, physStatsCols)
+      val p = plan(base) match {
+        case Left(noop) => return noop
+        case Right(p) => p
+      }
+      val removed = (p.rewritten ++ p.dropped).toSet
+      val carried = base.rels.filterNot(removed).sorted
+      val indexed = physStatsCols.nonEmpty || !p.compaction
+      val carriedStats =
+        if (!indexed) None
+        else {
+          val (schema, rows) = base.statsRows
+          val keep = carried.toSet
+          val fIdx = schema.fieldIndex("file")
+          Some((schema,
+            rows.filter(r => keep(relOf(spark, root, r.getString(fIdx))))))
+        }
+      val dvPrior = dvOf(spark, root, m)
+      val (dvCarry, dvCarryN) =
+        if (m.dv.isEmpty || carried.isEmpty || p.compaction) (None, 0L)
+        else {
+          val relDf = spark.createDataset(carried)(
+            org.apache.spark.sql.Encoders.STRING).toDF("file")
+          val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
+          val n = kept.count()
+          if (n == 0L) (None, 0L)
+          else {
+            val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
+            kept.write.mode("overwrite").parquet(new Path(root, dvRel).toString)
+            (Some(dvRel), n)
+          }
+        }
+      val (freshDir, freshRows) =
+        try writeDataDir(spark, p.rewrite(dvPrior), root, m.parts, m.bucket)
+        finally p.release()
+      val freshRel = listFreshRel(spark, root, freshDir)
+      val rows = carriedStats match {
+        case Some((schema, cRows)) if !p.compaction =>
+          val nIdx = schema.fieldIndex("n_rows")
+          cRows.iterator.map(_.getLong(nIdx)).sum - dvCarryN + freshRows
+        case _ => m.nRows
+      }
+      // the new version's index: carried rows verbatim + one build over
+      // the fresh dir. A prior index built for DIFFERENT columns cannot
+      // union with the fresh build — the whole layout rebuilds instead
+      // of failing after the publish landed.
+      def index(nv: Long, layoutId: String,
+                carriedIdx: (org.apache.spark.sql.types.StructType,
+                             Array[org.apache.spark.sql.Row])): Unit = {
+        val (cSchema, cRows) = carriedIdx
+        if (cSchema.fieldNames.toSet != statsColumns(physStatsCols))
+          ensureStats(spark, root, versionMeta(spark, root, nv), physStatsCols)
+        else {
+          val (schema, all) =
+            if (freshRel.isEmpty) carriedIdx
+            else {
+              val (fSchema, fRows) = StatsIndex.buildRows(spark,
+                new Path(root, freshDir).toString, physStatsCols)
+              unionStatsRows(cSchema, cRows, fSchema, fRows)
+            }
+          writeStatsRows(spark, root, layoutId, schema, all)
+        }
+      }
+      val man =
+        if (p.compaction && carried.isEmpty) None
+        else Some(writeManifest(spark, root, carried ++ freshRel))
+      val body = man match {
+        case None => dirBody(v + 1, freshDir, rows, tag, p.ddl, None,
+          m.constraints, m.parts, m.bucket, m.colmap)
+        case Some(mf) => manBody(v + 1, mf, rows, tag, p.ddl, dvCarry,
+          m.constraints, m.parts, m.bucket, m.colmap)
+      }
+      fireRaceHook()
+      if (tryPublish(spark, root, v + 1, body)) {
+        carriedStats.foreach(index(v + 1,
+          man.map(manifestLayoutId).getOrElse(freshDir.stripPrefix("data/")), _))
+        return CowResult(v + 1, p.rewritten.size, removed.size + carried.size,
+          freshRows)
+      }
+      man.foreach(remove)
+      lostRace()
+      // re-base while the interleaved state admits it: manifest = new
+      // latest's files − removed + fresh, rows compose additively (the
+      // file sets are disjoint), the written vector carry rides as-is
+      val rowsDelta = rows - m.nRows
+      def rebase() = rebaseDelta(spark, root, v, m, removed,
+        carriedStats.map(_ => physStatsCols), p.addedConflicts)
+      var based = rebase()
+      while (based.nonEmpty) {
+        val (v2, carried2, stats2, rows2) = based.get
+        // a refusal cleans the staged orphans before it propagates
+        try requireTagMonotonic(spark, root, tag, what)
+        catch {
+          case e: Throwable =>
+            remove(freshDir)
+            dvCarry.foreach(remove)
+            throw e
+        }
+        val man2 = writeManifest(spark, root, carried2 ++ freshRel)
+        if (tryPublish(spark, root, v2 + 1,
+            manBody(v2 + 1, man2, rows2 + rowsDelta, tag, p.ddl, dvCarry,
+              m.constraints, m.parts, m.bucket, m.colmap))) {
+          stats2.foreach(index(v2 + 1, manifestLayoutId(man2), _))
+          rebases.incrementAndGet()
+          return CowResult(v2 + 1, p.rewritten.size,
+            removed.size + carried2.size, freshRows)
+        }
+        remove(man2)
+        lostRace()
+        based = rebase()
+      }
+      // conflict shape — full re-stage against the new latest
+      remove(freshDir)
+      dvCarry.foreach(remove)
+      restages.incrementAndGet()
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Merge file targeting, shared by [[merge]] and [[mergeClauses]]:
+    * files whose [min,max] on `key` can contain SOME source key, plus
+    * no-stats files (conservative). The stats side is metadata-sized
+    * and broadcast; the scan side is the source keys — one pass, no
+    * shuffle of the table itself. Returns the distinct non-null key
+    * frame (column `__mk`, [[addedKeyOverlap]]'s input) and the
+    * touched files as the stats index names them.
+    *
+    * Bucket-aware refinement: when the table is bucketed on EXACTLY
+    * the merge key, a key's candidate files are named by its bucket id
+    * directly — `pmod(hash(key), n)` is both Spark's bucket function
+    * and [[writeDataDir]]'s layout placement, so a file whose `_NNNNN`
+    * tag is outside the source keys' bucket-id set provably contains
+    * no source key, whatever its min/max range says. Both are sound
+    * negatives; untagged files stay conservative. At scale this makes
+    * a skew-heavy batch (one hot key range spanning every file's
+    * [min,max]) still touch only its buckets.
+    */
+  private def keyTargets(stats: DataFrame, source: DataFrame, key: String,
+                         bucket: Option[Bucketing]): (DataFrame, Seq[String]) = {
+    val k = source.select(col(key).as("__mk"))
+      .filter(col("__mk").isNotNull).distinct()
+    val ranged = k.join(
+        org.apache.spark.sql.functions.broadcast(
+          stats.select(col("file"), col(s"min_$key"), col(s"max_$key"))),
+        col("__mk") >= col(s"min_$key") && col("__mk") <= col(s"max_$key"))
+      .select("file")
+    val candidates = ranged.unionByName(
+        stats.filter(col(s"min_$key").isNull || col(s"max_$key").isNull)
+          .select("file"))
+      .distinct()
+    val touched = bucket match {
+      case Some(b) if b.cols == Seq(key) =>
+        import org.apache.spark.sql.functions.{hash, pmod, regexp_extract}
+        // `source` must already carry the table key's EXACT logged type
+        // (the callers cast it to the table schema): murmur3 hashes an
+        // INT and a LONG of the same value differently, so a dtype
+        // drift here would prune the WRONG buckets — a silently lost
+        // update
+        val hitIds = k
+          .select(pmod(hash(col("__mk")), lit(b.n)).as("__bid"))
+          .distinct().collect().map(_.getInt(0)).toSeq
+        val bid = regexp_extract(col("file"), "_(\\d+)\\.[^/]*$", 1)
+        candidates.filter(bid === "" ||
+          bid.cast("int").isin(hitIds.map(i => i: Any): _*))
+      case _ => candidates
+    }
+    (k, touched.collect().map(_.getString(0)).sorted.toSeq)
   }
 
   /** Source-key sanity in ONE churn-sized aggregate pass: (a) the
@@ -2817,7 +3025,31 @@ object Snapshots {
         "per duplicate; de-duplicate the source first")
   }
 
-
+  /** COPY-ON-WRITE row-level MERGE (upsert semantics — the Delta
+    * `MERGE INTO` analogue): rows of the latest version whose `key`
+    * matches an update row are REPLACED, all update rows land (so
+    * unmatched update keys INSERT), and — the scale contract — only
+    * the files that CAN contain an update key are rewritten. File
+    * targeting is metadata ([[keyTargets]]): the version's per-file
+    * min/max stats on `key` ([[commitWithStats]]'s index) joined
+    * against the update keys (stats broadcast — one pass over the
+    * updates, no all-pairs); files whose range misses every update key
+    * are carried into the new version BY REFERENCE via the manifest.
+    * A key-localized update batch against a key-clustered layout
+    * therefore rewrites O(batch locality) files out of millions —
+    * which is the only shape row-level mutation can take at 100 TB.
+    *
+    * Semantics notes (both standard): a NULL update key never
+    * matches (it inserts; existing null-key rows survive), and
+    * updates should be key-distinct — duplicate update keys all
+    * insert, as in a multi-match MERGE.
+    *
+    * Conflict-safe through [[commitDelta]] (publish at readVersion+1;
+    * a lost race re-bases when no interleaved file can hold an update
+    * key, else the rewrite is recomputed against the new latest). The
+    * new version's stats index reuses the untouched files' rows
+    * verbatim and rebuilds only the fresh dir.
+    */
   def merge(spark: SparkSession, updates: DataFrame, root: String,
             key: String, statsCols: Seq[String],
             tag: Option[Long] = None,
@@ -2836,229 +3068,47 @@ object Snapshots {
       updates.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val updRaw = if (preCached) updates
       else updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try mergeBody(spark, updRaw, root, key, statsCols, tag, metaHint)
-    finally if (!preCached) updRaw.unpersist()
-  }
-
-  private def mergeBody(spark: SparkSession, updates: DataFrame, root: String,
-                        key: String, statsCols: Seq[String],
-                        tag: Option[Long],
-                        metaHint: Option[(Long, VMeta)]): CowResult = {
-    var attempts = 0
-    // a caller that already probed the latest meta (the SQL router)
-    // passes it down: the FIRST attempt reuses it — one metadata read
-    // per statement — and a stale hint just loses the publish race,
-    // which re-reads fresh like any lost race
-    var hintLeft = metaHint
-    while (true) {
-      val (v, m) = hintLeft match {
-        case Some(h) => hintLeft = None; h
-        case None =>
-          val lv = latestVersion(spark, root).getOrElse(
-            throw new IllegalArgumentException(
-              s"$root has no committed versions"))
-          (lv, versionMeta(spark, root, lv))
-      }
-      requireLive(m, root, "merge")
+    try commitDelta(spark, root, "merge", statsCols, tag, metaHint) { base =>
+      val m = base.m
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
         "materializeMapping before merge")
-      val tableSchema = schemaOf(spark, root, v, m)
+      val tableSchema = schemaOf(spark, root, base.v, m)
       val tableCols = tableSchema.fieldNames
-      require(updates.columns.toSet == tableCols.toSet,
-        s"updates schema ${updates.columns.toSet} != table ${tableCols.toSet}")
-      requireTagMonotonic(spark, root, tag, "merge")
+      require(updRaw.columns.toSet == tableCols.toSet,
+        s"updates schema ${updRaw.columns.toSet} != table ${tableCols.toSet}")
       // MERGE writes rows too: the update batch faces the same CHECK
       // gate as an append (one pass over the batch)
-      requireSatisfied(updates, m.constraints, "merge updates")
+      requireSatisfied(updRaw, m.constraints, "merge updates")
       // cast to the table's EXACT logged types: a name-matching batch
       // with drifted types (Int vs Long) would otherwise (a) hash to
-      // the wrong buckets in [[bucketPrune]] and (b) widen the
+      // the wrong buckets in [[keyTargets]] and (b) widen the
       // rewrite through the union into files the logged schema DDL
       // cannot read back. The cast must be LOSSLESS on the key
       // (duplicates stay allowed here — they all insert, the
       // documented multi-match semantics).
-      requireKeySane(updates, key, tableSchema(key).dataType,
+      requireKeySane(updRaw, key, tableSchema(key).dataType,
         refuseDups = false, "merge")
-      val upd = updates.select(tableSchema.fields.toSeq.map(f =>
+      val upd = updRaw.select(tableSchema.fields.toSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
-      val stats = statsOf(spark, root, m, statsCols)
-      requireStatsCoverage(spark, root, m, stats)
-      // touched = files whose [min,max] can contain SOME update key,
-      // plus no-stats files (conservative). The stats side is
-      // metadata-sized and broadcast; the scan side is the update
-      // keys — one pass, no shuffle of the table itself.
-      val k = upd.select(col(key).as("__mk"))
-        .filter(col("__mk").isNotNull).distinct()
-      val ranged = k.join(
-          org.apache.spark.sql.functions.broadcast(
-            stats.select(col("file"), col(s"min_$key"), col(s"max_$key"))),
-          col("__mk") >= col(s"min_$key") && col("__mk") <= col(s"max_$key"))
-        .select("file")
-      val touchedDf = bucketPrune(k,
-        ranged.unionByName(
-          stats.filter(col(s"min_$key").isNull || col(s"max_$key").isNull)
-            .select("file"))
-        .distinct(), m.bucket, key)
-      val touchedList = touchedDf.collect().map(_.getString(0)).sorted
-      // the untouched complement, its row sum, and its carried stats
-      // rows all derive in the DRIVER from the one collected stats
-      // snapshot — previously an anti-join job + an aggregate job +
-      // a collect job (each with its own broadcast build)
-      val touchedSet = touchedList.toSet
-      val statRows = stats.collect()
-      val fIdx = stats.schema.fieldIndex("file")
-      val nIdx = stats.schema.fieldIndex("n_rows")
-      val untouchedRows = statRows.filterNot(r => touchedSet(r.getString(fIdx)))
-      val untouched = localStats(spark, stats.schema,
-        untouchedRows.toIndexedSeq)
-      val untouchedPhysRows = untouchedRows.map(_.getLong(nIdx)).sum
-      val untouchedRel = untouchedRows
-        .map(r => relOf(spark, root, r.getString(fIdx))).sorted
-      // merge-on-read interplay: the rewrite reads touched files
-      // LOGICALLY (their deletion-vector rows must not resurrect),
-      // and the untouched files' vector entries ride into a new
-      // vector (their positions stay valid — the files are carried
-      // verbatim). Stats n_rows is per-file PHYSICAL, so the logical
-      // untouched count subtracts the carried vector size.
-      val dvPrior = dvOf(spark, root, m)
-      val (dvCarry, dvCarryN) =
-        if (m.dv.isEmpty) (None, 0L)
-        else {
-          val relDf = spark.createDataset(untouchedRel.toSeq)(
-            org.apache.spark.sql.Encoders.STRING).toDF("file")
-          val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
-          val n = kept.count()
-          if (n == 0L) (None, 0L)
-          else {
-            val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
-            kept.write.mode("overwrite")
-              .parquet(new Path(root, dvRel).toString)
-            (Some(dvRel), n)
-          }
-        }
-      val rewritten =
-        if (touchedList.isEmpty) upd
-        else applyDv(spark, root,
-            spark.read.schema(tableSchema).parquet(touchedList: _*), dvPrior)
-          .join(upd.select(col(key)).distinct(), Seq(key), "left_anti")
-          .unionByName(upd)
-      val (freshDir, freshRows) =
-        writeDataDir(spark, rewritten, root, m.parts, m.bucket)
-      val freshRel = listFreshRel(spark, root, freshDir)
-      val man = writeManifest(spark, root, untouchedRel ++ freshRel)
-      // the table schema rides the log forward — dropping it here
-      // would hand a post-evolution table back to footer inference,
-      // where a pre-evolution sample file wins and the added column
-      // silently vanishes
-      val ddl = org.apache.spark.sql.types.StructType(
-        tableSchema.fields.map(_.copy(nullable = true))).toDDL
-      fireRaceHook()
-      if (tryPublish(spark, root, v + 1,
-          manBody(v + 1, man, untouchedPhysRows - dvCarryN + freshRows,
-            tag, Some(ddl), dvCarry, m.constraints, m.parts, m.bucket))) {
-        val (newStatsSchema, newStatsRows) =
-          if (freshRel.isEmpty) (stats.schema, untouchedRows)
-          else {
-            val (fSchema, fRows) = StatsIndex.buildRows(spark,
-              new Path(root, freshDir).toString, statsCols)
-            unionStatsRows(stats.schema, untouchedRows, fSchema, fRows)
-          }
-        writeStatsRows(spark, root, manifestLayoutId(man),
-          newStatsSchema, newStatsRows)
-        return CowResult(v + 1, touchedList.size,
-          touchedList.size + untouchedRel.size, freshRows)
-      }
-      // lost the race: first try the generalized OCC re-base
-      // ([[rebaseDelta]]) — a file-disjoint interleaved commit keeps
-      // this staged rewrite and rebuilds only the tiny manifest
-      fs(spark, new Path(root, man)).delete(new Path(root, man), false)
-      attempts += 1
-      require(attempts < 100, s"$root: merge lost $attempts commit races")
-      val removedRel = touchedList.map(f => relOf(spark, root, f)).toSet
-      val rowsDelta = untouchedPhysRows - dvCarryN + freshRows - m.nRows
-      val rebased = publishRebased(spark, root, v, m, removedRel, statsCols,
-        addedKeyOverlap(k, key), freshDir, freshRel, rowsDelta,
-        dvCarry, tag, Some(ddl), "merge", () => {
-          attempts += 1
-          require(attempts < 100, s"$root: merge lost $attempts commit races")
-        })
-      rebased match {
-        case Some((nv, carried2)) =>
-          return CowResult(nv, touchedList.size,
-            touchedList.size + carried2.size, freshRows)
-        case None =>
-          // conflict shape — full re-stage against the new latest
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          dvCarry.foreach(d =>
-            fs(spark, new Path(root, d)).delete(new Path(root, d), true))
-          restages.incrementAndGet()
-      }
-    }
-    throw new IllegalStateException("unreachable")
+      val (k, touched) = keyTargets(base.stats, upd, key, m.bucket)
+      Right(CowPlan(touched.map(f => relOf(spark, root, f)),
+        dv =>
+          if (touched.isEmpty) upd
+          else applyDv(spark, root,
+              spark.read.schema(tableSchema).parquet(touched: _*), dv)
+            .join(upd.select(col(key)).distinct(), Seq(key), "left_anti")
+            .unionByName(upd),
+        // the table schema rides the log forward — dropping it here
+        // would hand a post-evolution table back to footer inference,
+        // where a pre-evolution sample file wins and the added column
+        // silently vanishes
+        Some(loggedDdl(tableSchema)),
+        addedKeyOverlap(k, key)))
+    } finally if (!preCached) updRaw.unpersist()
   }
 
   private def fireRaceHook(): Unit =
     racePublishHook.foreach { h => racePublishHook = None; h() }
-
-  /** The shared re-base-and-publish loop of the manifest-delta
-    * losers ([[merge]]/[[mergeClauses]]/[[deleteRange]]/[[optimize]]):
-    * while [[rebaseDelta]] admits the interleaved state, publish the
-    * staged delta on top of it (manifest = new latest's files −
-    * removed + fresh; rows compose additively; the already-written dv
-    * carry rides as-is). Maintains the skipping index exactly like
-    * the first-attempt path (carried rows transplanted verbatim +
-    * one build over the fresh dir). Returns (version, carriedRel) on
-    * success; None → the caller re-stages. Tagged writers re-check
-    * tag monotonicity against the rebased state; a refusal cleans the
-    * staged orphans before it propagates (the caller never runs).
-    */
-  private def publishRebased(spark: SparkSession, root: String,
-      readV: Long, m: VMeta, removedRel: Set[String],
-      physStatsCols: Seq[String], addedConflicts: DataFrame => Boolean,
-      freshDir: String, freshRel: Seq[String],
-      rowsDelta: Long, dv: Option[String], tag: Option[Long],
-      ddl: Option[String], what: String,
-      bumpAttempt: () => Unit): Option[(Long, Seq[String])] = {
-    while (true) {
-      val based = rebaseDelta(spark, root, readV, m, removedRel,
-        physStatsCols, addedConflicts)
-      if (based.isEmpty) return None
-      val (v2, carried2, stats2, rows2) = based.get
-      try requireTagMonotonic(spark, root, tag, what)
-      catch {
-        case e: Throwable =>
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          dv.foreach(d =>
-            fs(spark, new Path(root, d)).delete(new Path(root, d), true))
-          throw e
-      }
-      val man2 = writeManifest(spark, root, carried2 ++ freshRel)
-      if (tryPublish(spark, root, v2 + 1,
-          manBody(v2 + 1, man2, rows2 + rowsDelta, tag, ddl, dv,
-            m.constraints, m.parts, m.bucket, m.colmap))) {
-        if (physStatsCols.nonEmpty) {
-          val base = stats2.get
-          val bRows = base.collect()
-          val (newSchema, newRows) =
-            if (freshRel.isEmpty) (base.schema, bRows)
-            else {
-              val (fSchema, fRows) = StatsIndex.buildRows(spark,
-                new Path(root, freshDir).toString, physStatsCols)
-              unionStatsRows(base.schema, bRows, fSchema, fRows)
-            }
-          writeStatsRows(spark, root,
-            versionMeta(spark, root, v2 + 1).layoutId, newSchema, newRows)
-        }
-        rebases.incrementAndGet()
-        return Some((v2 + 1, carried2))
-      }
-      fs(spark, new Path(root, man2)).delete(new Path(root, man2), false)
-      bumpAttempt()
-    }
-    None // unreachable
-  }
 
   /** One `WHEN MATCHED` clause of a [[mergeClauses]] call, evaluated
     * in declaration order (SQL MERGE semantics: first clause whose
@@ -3194,7 +3244,7 @@ object Snapshots {
     * the update keys against the per-file min/max stats (broadcast,
     * one pass over the source, the table itself never shuffles),
     * refined by bucket ids on a key-bucketed table
-    * ([[bucketPrune]]); every file that cannot contain a source key
+    * ([[keyTargets]]); every file that cannot contain a source key
     * carries into the new version BY REFERENCE. Matched rows
     * evaluate the clauses in order — first condition that holds
     * wins, no clause → the row is kept; unmatched source rows insert
@@ -3324,20 +3374,12 @@ object Snapshots {
       case MatchedUpdate(_, None) => true
       case _ => false
     } || inserts.exists(_.set.isEmpty)
-    var attempts = 0
-    // first attempt reuses a caller-probed meta (see [[mergeBody]]) —
-    // one metadata read per statement; stale hints lose the race
-    var hintLeft = metaHint
-    while (true) {
-      val (v, m) = hintLeft match {
-        case Some(h) => hintLeft = None; h
-        case None =>
-          val lv = latestVersion(spark, root).getOrElse(
-            throw new IllegalArgumentException(
-              s"$root has no committed versions"))
-          (lv, versionMeta(spark, root, lv))
-      }
-      requireLive(m, root, "mergeClauses")
+    // the action counts of the attempt that committed: its rewrite's
+    // observed metrics, readable once its staging write ran
+    var receipt: () => (Long, Long, Long, Seq[Long]) = () => (0L, 0L, 0L, Nil)
+    val r = commitDelta(spark, root, "mergeClauses", statsCols, tag,
+        metaHint) { base =>
+      val (v, m) = (base.v, base.m)
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
         "materializeMapping before merge")
       val tableSchema = schemaOf(spark, root, v, m)
@@ -3426,7 +3468,6 @@ object Snapshots {
            else Nil))
       val outCols = outSchema.fieldNames.toSeq
       val tableColSet = tableCols.toSet
-      requireTagMonotonic(spark, root, tag, "mergeClauses")
       // SET targets must name real columns — matched with Spark's
       // case-insensitive resolution, and validated HERE so a typo'd
       // assignment errors instead of silently keeping the old value
@@ -3470,79 +3511,41 @@ object Snapshots {
           .map(f => col(f.name))
       val src = source.select(srcFields.map(f =>
         col(f.name).cast(f.dataType).as(f.name)) ++ passThru: _*)
-      val stats = statsOf(spark, root, m, statsCols)
-      requireStatsCoverage(spark, root, m, stats)
-      // file targeting — identical to [[merge]]. EXCEPT with
-      // WHEN NOT MATCHED BY SOURCE clauses: those evaluate on target
-      // rows ABSENT from the source, which any file can hold, so the
-      // statement is honestly O(table) — every file is a candidate
+      // file targeting — [[keyTargets]], shared with [[merge]]. EXCEPT
+      // with WHEN NOT MATCHED BY SOURCE clauses: those evaluate on
+      // target rows ABSENT from the source, which any file can hold, so
+      // the statement is honestly O(table) — every file is a candidate
       // and the receipt reports the full rewrite truthfully
       // (filesRewritten == filesTotal). That is the inherent cost of
       // the dimension-sync shape; no stats pruning can bound it.
-      val k = src.select(col(key).as("__mk"))
-        .filter(col("__mk").isNotNull).distinct()
-      val ranged = k.join(
-          org.apache.spark.sql.functions.broadcast(
-            stats.select(col("file"), col(s"min_$key"), col(s"max_$key"))),
-          col("__mk") >= col(s"min_$key") && col("__mk") <= col(s"max_$key"))
-        .select("file")
-      val touchedDf =
-        if (notMatchedBySource.nonEmpty) stats.select("file")
-        else bucketPrune(k,
-          ranged.unionByName(
-            stats.filter(col(s"min_$key").isNull || col(s"max_$key").isNull)
-              .select("file"))
-          .distinct(), m.bucket, key)
-      val touchedList = touchedDf.collect().map(_.getString(0)).sorted
-      // driver-side untouched complement from the collected stats
-      // snapshot — see [[mergeBody]]
-      val touchedSet = touchedList.toSet
-      val statRows = stats.collect()
-      val fIdx = stats.schema.fieldIndex("file")
-      val nIdx = stats.schema.fieldIndex("n_rows")
-      val untouchedRows = statRows.filterNot(r => touchedSet(r.getString(fIdx)))
-      val untouched = localStats(spark, stats.schema,
-        untouchedRows.toIndexedSeq)
-      val untouchedPhysRows = untouchedRows.map(_.getLong(nIdx)).sum
-      val untouchedRel = untouchedRows
-        .map(r => relOf(spark, root, r.getString(fIdx))).sorted
-      val dvPrior = dvOf(spark, root, m)
-      val (dvCarry, dvCarryN) =
-        if (m.dv.isEmpty) (None, 0L)
-        else {
-          val relDf = spark.createDataset(untouchedRel.toSeq)(
-            org.apache.spark.sql.Encoders.STRING).toDF("file")
-          val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
-          val n = kept.count()
-          if (n == 0L) (None, 0L)
-          else {
-            val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
-            kept.write.mode("overwrite")
-              .parquet(new Path(root, dvRel).toString)
-            (Some(dvRel), n)
-          }
-        }
-      // clause evaluation over the (touched × source) join — both
-      // sides presented under their statement aliases so conditions
-      // and assignments resolve exactly as the SQL analyzer would
-      // the churn-sized inputs are read by the count/check passes AND
-      // the final write — persist them so the touched parquet files
-      // and the source scan run ONCE, not once per pass
-      // touched files read under the WIDENED shared-column schema —
-      // the parquet readers up-convert the narrow physical types, so
-      // every image below is already widened (no mixed-type unions)
-      val touchedRows = (
-        if (touchedList.isEmpty)
-          read(spark, root, Some(v)).filter(lit(false))
-            .select(tableSchemaW.fields.toSeq.map(f =>
-              col(f.name).cast(f.dataType).as(f.name)): _*)
-        else applyDv(spark, root,
-          spark.read.schema(tableSchemaW).parquet(touchedList.toSeq: _*),
-          dvPrior).select(tableCols.map(col): _*)
-      ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // `src` is a cheap cast over the persisted raw source — every
-      // pass below reads cached partitions, never the source plan
-      val (freshDir, freshRows, nUpd, nDel, nIns, insPer) = try {
+      val targets =
+        if (notMatchedBySource.nonEmpty) None
+        else Some(keyTargets(base.stats, src, key, m.bucket))
+      val touchedList = targets.map(_._2).getOrElse(
+        base.stats.select("file").collect().map(_.getString(0)).sorted.toSeq)
+      var staged: Option[DataFrame] = None
+      Right(CowPlan(touchedList.map(f => relOf(spark, root, f)), dvPrior => {
+        // clause evaluation over the (touched × source) join — both
+        // sides presented under their statement aliases so conditions
+        // and assignments resolve exactly as the SQL analyzer would
+        // the churn-sized inputs are read by the count/check passes AND
+        // the final write — persist them so the touched parquet files
+        // and the source scan run ONCE, not once per pass
+        // touched files read under the WIDENED shared-column schema —
+        // the parquet readers up-convert the narrow physical types, so
+        // every image below is already widened (no mixed-type unions)
+        val touchedRows = (
+          if (touchedList.isEmpty)
+            read(spark, root, Some(v)).filter(lit(false))
+              .select(tableSchemaW.fields.toSeq.map(f =>
+                col(f.name).cast(f.dataType).as(f.name)): _*)
+          else applyDv(spark, root,
+            spark.read.schema(tableSchemaW).parquet(touchedList: _*),
+            dvPrior).select(tableCols.map(col): _*)
+        ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        staged = Some(touchedRows)
+        // `src` is a cheap cast over the persisted raw source — every
+        // pass below reads cached partitions, never the source plan
         val tgtA = touchedRows.alias(targetAlias)
         val srcA = src.alias(sourceAlias)
         // the matched side: UPDATE SET * takes the source's carried
@@ -3752,75 +3755,30 @@ object Snapshots {
           gateNmbs.foldLeft(gateMatched.unionByName(inserted))(
             _ unionByName _),
           m.constraints, "merge clauses")
-        val rewritten = matchedKept.unionByName(inserted)
-        val (fd, fr) = writeDataDir(spark, rewritten, root, m.parts, m.bucket)
         // the observed metrics are available once ANY action ran the
-        // plan — the write above at the latest
-        val (mUpd, mDel, nmbsUpd, nmbsDel) = counts()
-        val perClause = obsI.map(o => inserts.indices
-          .map(i => o.get(s"c$i").asInstanceOf[Long]))
-          .getOrElse(Seq.empty[Long])
-        (fd, fr, mUpd + nmbsUpd, mDel + nmbsDel, perClause.sum,
-          perClause)
-      } finally touchedRows.unpersist()
-      val freshRel = listFreshRel(spark, root, freshDir)
-      val man = writeManifest(spark, root, untouchedRel ++ freshRel)
+        // plan — the staging write at the latest
+        receipt = () => {
+          val (mUpd, mDel, nmbsUpd, nmbsDel) = counts()
+          val perClause = obsI.map(o => inserts.indices
+            .map(i => o.get(s"c$i").asInstanceOf[Long]))
+            .getOrElse(Seq.empty[Long])
+          (mUpd + nmbsUpd, mDel + nmbsDel, perClause.sum, perClause)
+        }
+        matchedKept.unionByName(inserted)
+      },
       // the EVOLVED schema rides the log — untouched files carried by
       // reference surface the new columns as NULL (by-name parquet
       // resolution), exactly append's ADD-only evolution
-      val ddl = org.apache.spark.sql.types.StructType(
-        outSchema.fields.map(_.copy(nullable = true))).toDDL
-      fireRaceHook()
-      if (tryPublish(spark, root, v + 1,
-          manBody(v + 1, man, untouchedPhysRows - dvCarryN + freshRows,
-            tag, Some(ddl), dvCarry, m.constraints, m.parts, m.bucket))) {
-        val (newStatsSchema, newStatsRows) =
-          if (freshRel.isEmpty) (stats.schema, untouchedRows)
-          else {
-            val (fSchema, fRows) = StatsIndex.buildRows(spark,
-              new Path(root, freshDir).toString, statsCols)
-            unionStatsRows(stats.schema, untouchedRows, fSchema, fRows)
-          }
-        writeStatsRows(spark, root, manifestLayoutId(man),
-          newStatsSchema, newStatsRows)
-        return MergeClausesResult(v + 1, touchedList.length,
-          touchedList.length + untouchedRel.length, nUpd, nDel, nIns,
-          insPer)
-      }
-      // lost the race — generalized OCC re-base before re-staging
-      // (see [[merge]]; same soundness gates, clause semantics ride
-      // the staged rewrite unchanged)
-      fs(spark, new Path(root, man)).delete(new Path(root, man), false)
-      attempts += 1
-      require(attempts < 100, s"$root: mergeClauses lost $attempts commit races")
-      val removedRel = touchedList.map(f => relOf(spark, root, f)).toSet
-      val rowsDelta = untouchedPhysRows - dvCarryN + freshRows - m.nRows
+      Some(loggedDdl(outSchema)),
       // a NOT-MATCHED-BY-SOURCE statement read the WHOLE table: any
       // interleaved added file holds rows it never evaluated, so a
       // re-base is never sound — always re-stage
-      val rebased = publishRebased(spark, root, v, m, removedRel, statsCols,
-        if (notMatchedBySource.nonEmpty) (_: DataFrame) => true
-        else addedKeyOverlap(k, key),
-        freshDir, freshRel, rowsDelta,
-        dvCarry, tag, Some(ddl), "mergeClauses", () => {
-          attempts += 1
-          require(attempts < 100,
-            s"$root: mergeClauses lost $attempts commit races")
-        })
-      rebased match {
-        case Some((nv, carried2)) =>
-          return MergeClausesResult(nv, touchedList.length,
-            touchedList.length + carried2.length, nUpd, nDel, nIns,
-            insPer)
-        case None =>
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          dvCarry.foreach(d =>
-            fs(spark, new Path(root, d)).delete(new Path(root, d), true))
-          restages.incrementAndGet()
-      }
+      targets.fold((_: DataFrame) => true)(t => addedKeyOverlap(t._1, key)),
+      release = () => staged.foreach(_.unpersist())))
     }
-    throw new IllegalStateException("unreachable")
+    val (nUpd, nDel, nIns, insPer) = receipt()
+    MergeClausesResult(r.version, r.filesRewritten, r.filesTotal, nUpd, nDel,
+      nIns, insPer)
   }
 
   /** COPY-ON-WRITE range DELETE (`DELETE WHERE lo <= c <= hi` — the
@@ -3838,106 +3796,28 @@ object Snapshots {
     require(statsCols.contains(c),
       s"delete column $c must be a stats column for file targeting")
     require(lo.nonEmpty || hi.nonEmpty, "need at least one bound")
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "deleteRange")
-      require(m.colmap.isIdentity, s"$root carries a column mapping — " +
+    val hit = StatsIndex.hitExpr(c, lo, hi)
+    val del = Seq(lo.map(l => col(c) >= l), hi.map(h => col(c) <= h))
+      .flatten.reduce(_ && _)
+    commitDelta(spark, root, "deleteRange", statsCols) { base =>
+      require(base.m.colmap.isIdentity, s"$root carries a column mapping — " +
         "materializeMapping before deleteRange")
-      val stats = statsOf(spark, root, m, statsCols)
-      requireStatsCoverage(spark, root, m, stats)
-      val hit = StatsIndex.hitExpr(c, lo, hi)
-      // both filters fold over the localized stats (no jobs); the row
-      // sum derives in the driver — see [[mergeBody]]
-      val untouched = stats.filter(!hit)
-      val touchedList = stats.filter(hit)
-        .select("file").collect().map(_.getString(0)).sorted
-      val fIdx = stats.schema.fieldIndex("file")
-      val nIdx = stats.schema.fieldIndex("n_rows")
-      val untouchedRows = untouched.collect()
-      val untouchedPhysRows = untouchedRows.map(_.getLong(nIdx)).sum
-      val untouchedRel = untouchedRows
-        .map(r => relOf(spark, root, r.getString(fIdx))).sorted
-      // same merge-on-read interplay as [[merge]]: touched files read
-      // logically, untouched files' vector entries carry forward
-      val dvPrior = dvOf(spark, root, m)
-      val (dvCarry, dvCarryN) =
-        if (m.dv.isEmpty) (None, 0L)
-        else {
-          val relDf = spark.createDataset(untouchedRel.toSeq)(
-            org.apache.spark.sql.Encoders.STRING).toDF("file")
-          val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
-          val n = kept.count()
-          if (n == 0L) (None, 0L)
-          else {
-            val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
-            kept.write.mode("overwrite")
-              .parquet(new Path(root, dvRel).toString)
-            (Some(dvRel), n)
-          }
-        }
-      val del = Seq(lo.map(l => col(c) >= l), hi.map(h => col(c) <= h))
-        .flatten.reduce(_ && _)
-      val tableSchema = read(spark, root, Some(v)).schema
-      val rewritten =
-        if (touchedList.isEmpty) read(spark, root, Some(v)).filter(lit(false))
-        else applyDv(spark, root,
-            spark.read.schema(tableSchema).parquet(touchedList: _*), dvPrior)
-          .filter(!coalesce(del, lit(false)))
-      val (freshDir, freshRows) =
-        writeDataDir(spark, rewritten, root, m.parts, m.bucket)
-      val freshRel = listFreshRel(spark, root, freshDir)
-      val man = writeManifest(spark, root, untouchedRel ++ freshRel)
-      val ddl = org.apache.spark.sql.types.StructType(
-        tableSchema.fields.map(_.copy(nullable = true))).toDDL
-      fireRaceHook()
-      if (tryPublish(spark, root, v + 1,
-          manBody(v + 1, man, untouchedPhysRows - dvCarryN + freshRows,
-            None, Some(ddl), dvCarry, m.constraints, m.parts, m.bucket))) {
-        val (newStatsSchema, newStatsRows) =
-          if (freshRel.isEmpty) (stats.schema, untouchedRows)
-          else {
-            val (fSchema, fRows) = StatsIndex.buildRows(spark,
-              new Path(root, freshDir).toString, statsCols)
-            unionStatsRows(stats.schema, untouchedRows, fSchema, fRows)
-          }
-        writeStatsRows(spark, root, manifestLayoutId(man),
-          newStatsSchema, newStatsRows)
-        return CowResult(v + 1, touchedList.size,
-          touchedList.size + untouchedRel.size, freshRows)
-      }
-      // lost the race — generalized OCC re-base (see [[merge]]): an
-      // interleaved added file may not intersect the deleted range
-      // (its rows would have faced this delete), conservative on
-      // null stats via the same hitExpr as the targeting itself
-      fs(spark, new Path(root, man)).delete(new Path(root, man), false)
-      attempts += 1
-      require(attempts < 100, s"$root: delete lost $attempts commit races")
-      val removedRel = touchedList.map(f => relOf(spark, root, f)).toSet
-      val rowsDelta = untouchedPhysRows - dvCarryN + freshRows - m.nRows
-      val rebased = publishRebased(spark, root, v, m, removedRel, statsCols,
-        added => added.filter(StatsIndex.hitExpr(c, lo, hi))
-          .limit(1).count() > 0,
-        freshDir, freshRel, rowsDelta, dvCarry, None, Some(ddl),
-        "deleteRange", () => {
-          attempts += 1
-          require(attempts < 100, s"$root: delete lost $attempts commit races")
-        })
-      rebased match {
-        case Some((nv, carried2)) =>
-          return CowResult(nv, touchedList.size,
-            touchedList.size + carried2.size, freshRows)
-        case None =>
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          dvCarry.foreach(d =>
-            fs(spark, new Path(root, d)).delete(new Path(root, d), true))
-          restages.incrementAndGet()
-      }
+      // the filter folds over the localized stats (no job)
+      val touched = base.stats.filter(hit)
+        .select("file").collect().map(_.getString(0)).sorted.toSeq
+      val tableSchema = read(spark, root, Some(base.v)).schema
+      Right(CowPlan(touched.map(f => relOf(spark, root, f)),
+        dv =>
+          if (touched.isEmpty) read(spark, root, Some(base.v)).filter(lit(false))
+          else applyDv(spark, root,
+              spark.read.schema(tableSchema).parquet(touched: _*), dv)
+            .filter(!coalesce(del, lit(false))),
+        Some(loggedDdl(tableSchema)),
+        // an interleaved added file may not intersect the deleted range
+        // (its rows would have faced this delete), conservative on null
+        // stats via the same hitExpr as the targeting itself
+        added => added.filter(hit).limit(1).count() > 0))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** PARTITION-SCOPED OVERWRITE — the "reload today's partition"
@@ -4156,205 +4036,78 @@ object Snapshots {
 
   /** Shared body of [[replacePartition]] (one static tuple) and
     * [[replacePartitions]] (the dynamic tuple set): validate against
-    * the live meta, classify the version's files by path, stage the
-    * batch plus the conservative remainder, publish with the
-    * partition-aware OCC re-base. `keepRemainder` filters a rewritten
-    * file's rows down to those OUTSIDE every replaced tuple — the two
-    * entries express membership differently (a spec-Column predicate
-    * vs a null-safe anti-join on the derived tuple frame).
+    * the live meta, classify the version's files by path, and stage
+    * the batch plus the conservative remainder through
+    * [[commitDelta]]. `keepRemainder` filters a rewritten file's rows
+    * down to those OUTSIDE every replaced tuple — the two entries
+    * express membership differently (a spec-Column predicate vs a
+    * null-safe anti-join on the derived tuple frame).
+    *
+    * PARTITION-AWARE OCC: two reloads of DISJOINT partitions — the
+    * commonest concurrent shape (yesterday's and today's daily reloads
+    * racing) — both commit with ONE staged write each. The loser
+    * re-bases when every file the interleaver added is path-proven to
+    * be of another partition: its fresh dir is then still exactly the
+    * replaced partitions' new content, and only the manifest rebuilds.
+    * A concurrent write INTO a replaced partition, or a file of unknown
+    * layout, re-stages (Delta's conflict checker admits exactly the
+    * same disjoint-file commits).
     */
   private def replaceTuplesBody(spark: SparkSession, df: DataFrame,
                                 root: String, specCols: Seq[String],
                                 tuples: Seq[Map[String, Option[String]]],
                                 keepRemainder: DataFrame => DataFrame,
                                 statsCols: Seq[String],
-                                op: String): CowResult = {
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, op)
+                                op: String): CowResult =
+    commitDelta(spark, root, op, statsCols) { base =>
+      val m = base.m
       specCols.foreach(c => require(m.parts.contains(c),
         s"$op: $c is not a partition column of $root (${m.parts})"))
-      val schema = schemaOf(spark, root, v, m)
+      val schema = schemaOf(spark, root, base.v, m)
       require(df.columns.toSet == schema.fieldNames.toSet,
         s"$op batch schema ${df.columns.toSet} != table ${schema.fieldNames.toSet}")
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
         s"materializeMapping before $op")
       val batch = df.select(schema.fieldNames.toSeq.map(col): _*)
       requireSatisfied(batch, m.constraints, s"$op batch")
-      // classify every file from its path segments
-      val rels = relFilesOf(spark, root, m)
-      val (carriedRel, droppedRel, touchedRel) =
-        classifyByTuples(rels, specCols, tuples)
-      val stats = statsOf(spark, root, m, statsCols)
-      requireStatsCoverage(spark, root, m, stats)
-      // driver-side carried split from the collected stats snapshot
-      // (see [[mergeBody]]) — previously a semi-join plus an
-      // aggregate job per statement
-      val carriedSet = carriedRel
-        .map(rel => normPath(new Path(root, rel).toString)).toSet
-      val statRows = stats.collect()
-      val fIdx = stats.schema.fieldIndex("file")
-      val nIdx = stats.schema.fieldIndex("n_rows")
-      val carriedRows = statRows
-        .filter(r => carriedSet(normPath(r.getString(fIdx))))
-      val carriedStats = localStats(spark, stats.schema,
-        carriedRows.toIndexedSeq)
-      val carriedPhys =
-        if (carriedRel.isEmpty) 0L else carriedRows.map(_.getLong(nIdx)).sum
-      // prior vector: carried files' entries ride forward; dropped and
-      // rewritten files' entries die with their files
-      val dvPrior = dvOf(spark, root, m)
-      val (dvCarry, dvCarryN) =
-        if (m.dv.isEmpty || carriedRel.isEmpty) (None, 0L)
-        else {
-          val relDf = spark.createDataset(carriedRel)(
-            org.apache.spark.sql.Encoders.STRING).toDF("file")
-          val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
-          val n = kept.count()
-          if (n == 0L) (None, 0L)
-          else {
-            val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
-            kept.write.mode("overwrite").parquet(new Path(root, dvRel).toString)
-            (Some(dvRel), n)
-          }
-        }
-      // conservative remainder: unknown-layout files rewritten with
-      // the replaced tuples' rows filtered OUT (logical read)
-      val remainder =
-        if (touchedRel.isEmpty) batch.filter(lit(false))
-        else keepRemainder(applyDv(spark, root,
-          spark.read.schema(schema).parquet(
-            touchedRel.map(rel => new Path(root, rel).toString): _*), dvPrior))
-      val (freshDir, freshRows) =
-        writeDataDir(spark, remainder.unionByName(batch), root, m.parts,
-          m.bucket)
-      val freshRel = listFreshRel(spark, root, freshDir)
-      val ddl = org.apache.spark.sql.types.StructType(
-        schema.fields.map(_.copy(nullable = true))).toDDL
-      // deterministic race injection for the OCC specs: fires ONCE,
-      // between this writer's staging and its first publish attempt
-      racePublishHook.foreach { h => racePublishHook = None; h() }
-      // PARTITION-AWARE OCC: publish, and on a lost race try to
-      // RE-BASE the manifest onto the new latest instead of
-      // re-staging the whole write. Two reloads of DISJOINT
-      // partitions — the commonest concurrent shape (yesterday's and
-      // today's daily reloads racing) — both commit with ONE staged
-      // write each: the loser re-classifies the new latest's file
-      // list by path; when every change between its read version and
-      // the new latest is provably of OTHER partitions (and schema /
-      // layout / constraints / vector are unchanged), its fresh dir
-      // is still exactly the replaced partition's new content, so
-      // only the tiny manifest (and the churn-sized dv carry)
-      // rebuild. Anything else — a concurrent write INTO the
-      // replaced partition, a layout change, vector churn — falls
-      // back to the full re-stage, which re-reads and re-validates
-      // (Delta's conflict-checker admits exactly the same
-      // disjoint-file commits).
-      var basedOn = (v, carriedRel, carriedStats, carriedPhys,
-        dvCarry, dvCarryN)
-      var rebasing = true
-      while (rebasing) {
-        val (bv, bCarried, bStats, bPhys, bDvCarry, bDvCarryN) = basedOn
-        val man = writeManifest(spark, root, bCarried ++ freshRel)
-        if (tryPublish(spark, root, bv + 1,
-            manBody(bv + 1, man, bPhys - bDvCarryN + freshRows,
-              None, Some(ddl), bDvCarry, m.constraints, m.parts, m.bucket))) {
-          // stats: carried rows verbatim + one build over the fresh dir
-          val bRows = bStats.collect()
-          val (newSchema, newRows) =
-            if (freshRel.isEmpty) (bStats.schema, bRows)
-            else {
-              val (fSchema, fRows) = StatsIndex.buildRows(spark,
-                new Path(root, freshDir).toString, statsCols)
-              unionStatsRows(bStats.schema, bRows, fSchema, fRows)
-            }
-          writeStatsRows(spark, root, manifestLayoutId(man),
-            newSchema, newRows)
-          return CowResult(bv + 1, touchedRel.size,
-            bCarried.size + droppedRel.size + touchedRel.size, freshRows)
-        }
-        fs(spark, new Path(root, man)).delete(new Path(root, man), false)
-        attempts += 1
-        require(attempts < 100,
-          s"$root: $op lost $attempts commit races")
-        rebasing = false
-        val v2 = latestVersion(spark, root).getOrElse(bv)
-        if (v2 > bv) {
-          val m2 = versionMeta(spark, root, v2)
-          val compatible = m2.parts == m.parts && m2.bucket == m.bucket &&
-            m2.colmap.isIdentity && m2.constraints == m.constraints &&
-            m2.schemaDdl == m.schemaDdl && m2.dv == m.dv
-          if (compatible) {
-            val rels2 = relFilesOf(spark, root, m2)
-            val (carried2, dropped2, touched2) =
-              classifyByTuples(rels2, specCols, tuples)
-            val stats2 = statsTableOf(spark, root, v2)
-            val covered = stats2.exists(st =>
-              st.select("file").distinct().count() == rels2.size)
-            if (touched2.toSet == touchedRel.toSet &&
-                dropped2.toSet == droppedRel.toSet && covered) {
-              val st2 = stats2.get
-              val carried2Abs = spark.createDataset(carried2.map(rel =>
-                  normPath(new Path(root, rel).toString)))(
-                org.apache.spark.sql.Encoders.STRING).toDF("__cf")
-              val carried2Stats = st2.join(carried2Abs,
-                org.apache.spark.sql.functions.regexp_replace(
-                  st2("file"), SchemeRe.regex, "/") === col("__cf"), "left_semi")
-              val phys2 =
-                if (carried2.isEmpty) 0L
-                else carried2Stats.agg(coalesce(sum("n_rows"), lit(0L)))
-                  .head().getLong(0)
-              val (dvCarry2, dvCarryN2) =
-                if (m2.dv.isEmpty || carried2.isEmpty) (None, 0L)
-                else {
-                  val relDf = spark.createDataset(carried2)(
-                    org.apache.spark.sql.Encoders.STRING).toDF("file")
-                  val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
-                  val n = kept.count()
-                  if (n == 0L) (None, 0L)
-                  else {
-                    val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
-                    kept.write.mode("overwrite")
-                      .parquet(new Path(root, dvRel).toString)
-                    (Some(dvRel), n)
-                  }
-                }
-              bDvCarry.foreach(d =>
-                fs(spark, new Path(root, d)).delete(new Path(root, d), true))
-              basedOn = (v2, carried2, carried2Stats, phys2,
-                dvCarry2, dvCarryN2)
-              rebases.incrementAndGet()
-              rebasing = true
-            }
-          }
-        }
-      }
-      // conflict shape — full re-stage against the new latest
-      fs(spark, new Path(root, freshDir)).delete(new Path(root, freshDir), true)
-      basedOn._5.foreach(d =>
-        fs(spark, new Path(root, d)).delete(new Path(root, d), true))
-      restages.incrementAndGet()
+      // classify every file from its path segments: carried files are
+      // never opened, dropped ones never read either
+      val (_, droppedRel, touchedRel) =
+        classifyByTuples(base.rels, specCols, tuples)
+      Right(CowPlan(touchedRel,
+        dv => {
+          // conservative remainder: unknown-layout files rewritten with
+          // the replaced tuples' rows filtered OUT (logical read)
+          val remainder =
+            if (touchedRel.isEmpty) batch.filter(lit(false))
+            else keepRemainder(applyDv(spark, root,
+              spark.read.schema(schema).parquet(
+                touchedRel.map(rel => new Path(root, rel).toString): _*), dv))
+          remainder.unionByName(batch)
+        },
+        Some(loggedDdl(schema)),
+        added => {
+          val addedRel = added.select("file").collect()
+            .map(r => relOf(spark, root, r.getString(0))).toSeq
+          val (_, d, t) = classifyByTuples(addedRel, specCols, tuples)
+          d.nonEmpty || t.nonEmpty
+        },
+        dropped = droppedRel))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
-  /** Test-observable OCC counters: manifest re-bases vs full
-    * re-stages across ALL the manifest-delta writers' conflict
-    * handling ([[replacePartition]], [[merge]], [[mergeClauses]],
-    * [[deleteRange]], [[optimize]]).
+  /** Test-observable OCC counters across every manifest-delta
+    * writer's conflict handling ([[commitDelta]]): `rebases` counts
+    * lost races published by a manifest re-base, `restages` those
+    * that discarded the staged write and re-planned.
     */
   private[graft] val rebases = new java.util.concurrent.atomic.AtomicLong
   private[graft] val restages = new java.util.concurrent.atomic.AtomicLong
 
-  /** GENERALIZED OCC RE-BASE for the manifest-delta writers (the
-    * [[replacePartition]] machinery, generalized): a loser of the
-    * readVersion+1 publish race whose delta is provably DISJOINT
-    * from the interleaved commits re-bases its manifest onto the new
-    * latest — one tiny manifest rewrite — instead of deleting its
-    * staged data and re-running the whole body. The commonest real
+  /** GENERALIZED OCC RE-BASE for the manifest-delta writers: a loser
+    * of the readVersion+1 publish race whose delta is provably
+    * DISJOINT from the interleaved commits re-bases its manifest onto
+    * the new latest — one tiny manifest rewrite — instead of deleting
+    * its staged data and re-running the whole body. The commonest real
     * collision (a nightly OPTIMIZE racing a streaming append) then
     * costs both writers one staged write each, exactly Delta's
     * conflict-checker outcome for file-disjoint commits.
@@ -4373,26 +4126,33 @@ object Snapshots {
     *    (for a keyed merge: no added file's key range covers any of
     *    our source keys, the same min/max logic as file targeting,
     *    so a concurrent insert of OUR key re-stages instead of
-    *    silently duplicating; for a layout-only optimize: never).
-    *  - when the writer maintains a skipping index, the new latest
-    *    HAS one, covering its files with the same columns (its
-    *    carried rows transplant verbatim; anything else re-stages
-    *    and self-heals as today).
+    *    silently duplicating; for a partition overwrite: every added
+    *    file is path-proven of another partition; for a layout-only
+    *    optimize: never);
+    *  - when the writer maintains a skipping index (`physStatsCols`
+    *    set), the new latest HAS one, covering its files with the same
+    *    columns (its carried rows transplant verbatim; anything else
+    *    re-stages and self-heals as today). Only a compaction, whose
+    *    rewrite never conflicts, runs without one.
     *
-    * Returns (newLatest, carriedRel, carriedStats, newLatestRows);
+    * Returns (newLatest, carriedRel, carried stats rows, newLatestRows);
     * the caller publishes at newLatest+1 with `carriedRel ++ its own
     * freshRel`, row count `newLatestRows + its own rows delta` (the
     * deltas compose because the file sets are disjoint), and its
     * ALREADY-WRITTEN dv carry (still exact: the vector is unchanged
     * and the interleaver's fresh files carry no entries). None →
-    * fall back to the always-correct full re-stage.
+    * fall back to the always-correct full re-stage. The index checks
+    * run on the driver over the collected rows — no Spark job beyond
+    * `addedConflicts`' own.
     */
   private def rebaseDelta(spark: SparkSession, root: String,
                           readV: Long, m: VMeta,
                           removedRel: Set[String],
-                          physStatsCols: Seq[String],
+                          physStatsCols: Option[Seq[String]],
                           addedConflicts: DataFrame => Boolean)
-      : Option[(Long, Seq[String], Option[DataFrame], Long)] = {
+      : Option[(Long, Seq[String],
+                Option[(org.apache.spark.sql.types.StructType,
+                        Array[org.apache.spark.sql.Row])], Long)] = {
     val v2 = latestVersion(spark, root) match {
       case Some(v) if v > readV => v
       case _ => return None
@@ -4403,39 +4163,28 @@ object Snapshots {
       m2.schemaDdl == m.schemaDdl && m2.dv == m.dv
     if (!compatible) return None
     val rels2 = relFilesOf(spark, root, m2)
-    val rels2Set = rels2.toSet
-    if (!removedRel.forall(rels2Set)) return None
+    if (!removedRel.forall(rels2.toSet)) return None
     val carried2 = rels2.filterNot(removedRel).sorted
-    val statsRestricted =
-      if (physStatsCols.isEmpty) None
-      else {
-        val expected = (Seq("file", "n_rows") ++ physStatsCols.flatMap(c =>
-          Seq(s"min_$c", s"max_$c", s"nulls_$c"))).toSet
-        statsTableOf(spark, root, v2) match {
-          case Some(st) if st.columns.toSet == expected &&
-              st.select("file").distinct().count() == rels2.size =>
-            // the interleaver's ADDED files (not in our read version)
-            // face the conflict predicate; null-stats files stay
-            // conservative (the predicate sees them and must conflict)
-            // removedRel ⊆ the read version's files by construction,
-            // so the read list alone names every file the added-set
-            // anti-join must exclude
-            val readAbs = relFilesOf(spark, root, m).map(rel =>
-              normPath(new Path(root, rel).toString))
-            val normFile = org.apache.spark.sql.functions.regexp_replace(
-              st("file"), SchemeRe.regex, "/")
-            val knownDf = spark.createDataset(readAbs)(
-              org.apache.spark.sql.Encoders.STRING).toDF("__kf")
-            val added = st.join(knownDf, normFile === col("__kf"), "left_anti")
-            if (addedConflicts(added)) return None
-            val carriedDf = spark.createDataset(carried2.map(rel =>
-                normPath(new Path(root, rel).toString)))(
-              org.apache.spark.sql.Encoders.STRING).toDF("__cf")
-            Some(st.join(carriedDf, normFile === col("__cf"), "left_semi"))
-          case _ => return None
-        }
+    val carriedStats = physStatsCols match {
+      case None => None
+      case Some(cols) => persistedStats(spark, root, m2.layoutId) match {
+        case Some((schema, rows)) if schema.fieldNames.toSet == statsColumns(cols) =>
+          val fIdx = schema.fieldIndex("file")
+          val byRel = rows.map(r => (relOf(spark, root, r.getString(fIdx)), r))
+          if (byRel.iterator.map(_._1).toSet.size != rels2.size) return None
+          // the interleaver's ADDED files (not in our read version) face
+          // the conflict predicate; null-stats files stay conservative
+          // (the predicate sees them and must conflict)
+          val read = relFilesOf(spark, root, m).toSet
+          val added = byRel.collect { case (rel, r) if !read(rel) => r }
+          if (addedConflicts(localStats(spark, schema, added.toIndexedSeq)))
+            return None
+          val keep = carried2.toSet
+          Some((schema, byRel.collect { case (rel, r) if keep(rel) => r }))
+        case _ => return None
       }
-    Some((v2, carried2, statsRestricted, m2.nRows))
+    }
+    Some((v2, carried2, carriedStats, m2.nRows))
   }
 
   /** [[rebaseDelta]] conflict predicate for a KEYED merge: an added
@@ -4452,9 +4201,11 @@ object Snapshots {
         "left_semi")
       .limit(1).count() > 0
 
-  /** Spec-only deterministic race injection: runs ONCE, inside the
-    * next [[replacePartition]] call, after its staging write and
-    * before its first publish attempt.
+  /** Spec-only deterministic race injection: runs ONCE, at the next
+    * publish point that fires it — every manifest-delta writer's
+    * ([[commitDelta]]: after the staging write, before the first
+    * publish attempt), [[create]]'s, [[cloneShallow]]'s and
+    * [[updateWhere]]'s.
     */
   private[graft] var racePublishHook: Option[() => Unit] = None
 
@@ -4480,6 +4231,15 @@ object Snapshots {
     * driver memory (the rows are the same file-count-sized metadata
     * every statement materializes transiently anyway). In-process
     * only: every run still derives the index from the parquet inputs.
+    *
+    * SINGLE-WRITER-PROCESS assumption: the memo trusts that nothing
+    * outside this process deletes or rewrites a `_stats/<layout>` dir
+    * while the layout is live. An externally deleted dir stays
+    * invisible to this process — [[readPruned]], [[statsTableOf]] and
+    * the copy-on-write writers keep serving the memoized rows instead
+    * of refusing or self-healing — until the entry is evicted or
+    * [[clearStatsCache]] runs. Another process's writers are safe: they
+    * publish new layouts under new ids and never touch existing dirs.
     */
   private val statsCache = new java.util.LinkedHashMap[
     (String, String),
@@ -4605,9 +4365,14 @@ object Snapshots {
           case b: java.lang.Byte => b.doubleValue()
           case x => x
         }
+        // the target scale never drops below a side's (the union only
+        // takes lossless widenings), so rescaling must stay exact —
+        // UNNECESSARY throws instead of silently rounding a min/max
         case dt: DecimalType => v match {
-          case bd: java.math.BigDecimal => bd.setScale(dt.scale)
-          case bd: scala.math.BigDecimal => bd.setScale(dt.scale).bigDecimal
+          case bd: java.math.BigDecimal =>
+            bd.setScale(dt.scale, java.math.RoundingMode.UNNECESSARY)
+          case bd: scala.math.BigDecimal =>
+            bd.bigDecimal.setScale(dt.scale, java.math.RoundingMode.UNNECESSARY)
           case x => x
         }
         case _ => v
@@ -4662,49 +4427,48 @@ object Snapshots {
     }
   }
 
+  /** The layout's persisted index as (schema, rows): from the memo,
+    * else read once and memoized; None when the layout has none.
+    */
+  private def persistedStats(spark: SparkSession, root: String,
+                             layoutId: String)
+      : Option[(org.apache.spark.sql.types.StructType,
+                Array[org.apache.spark.sql.Row])] =
+    statsCacheGet(rootPathOf(spark, root), layoutId).orElse {
+      val sp = statsPath(root, layoutId)
+      if (!fs(spark, sp).exists(sp)) None
+      else {
+        val df = spark.read.parquet(sp.toString)
+        val out = (df.schema, df.collect())
+        statsCachePut(rootPathOf(spark, root), layoutId, out._1, out._2)
+        Some(out)
+      }
+    }
+
   /** The version's stats table — read if persisted, else derived on
     * the spot (self-heal for a crash between a publish and its stats
     * write; the derived table is also persisted so the heal pays
     * once).
     *
-    * Returned LOCALIZED (r16): the rows are collected once and served
-    * as a LocalRelation. The table is file-count-sized METADATA — the
+    * Collected (r16): the table is file-count-sized METADATA — the
     * same cardinality the copy-on-write writers already collect as
-    * file lists (untouchedRel et al.), the driver-side FileIndex
-    * contract — and every consumer runs several passes over it
-    * (coverage check, targeting broadcast, untouched complement,
-    * carried-stats rewrite). Against the parquet-backed frame each
-    * pass was its own Spark job plus a broadcast-exchange job; over a
-    * LocalRelation, projections/filters constant-fold
-    * (ConvertToLocalRelation), `collect()` is a direct row handoff
-    * with NO job, and a broadcast builds from the local rows without
-    * a child job. A statement that needs driver-side sums or splits
-    * computes them from [[statsRowsOf]] directly.
-    */
-  private def statsOf(spark: SparkSession, root: String, m: VMeta,
-                      cols: Seq[String]): DataFrame = {
-    val (schema, rows) = statsRowsOf(spark, root, m, cols)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** [[statsOf]]'s collected form: (schema, rows), one stats-parquet
-    * read per call. File-count-sized metadata (see [[statsOf]]).
+    * file lists, the driver-side FileIndex contract — and every
+    * consumer runs several passes over it (coverage check, targeting
+    * broadcast, carried complement, carried-stats rewrite). Served as
+    * a LocalRelation ([[localStats]]), projections/filters
+    * constant-fold (ConvertToLocalRelation), `collect()` is a direct
+    * row handoff with NO job, and a broadcast builds from the local
+    * rows without a child job; against the parquet-backed frame each
+    * pass was its own Spark job plus a broadcast-exchange job.
     */
   private def statsRowsOf(spark: SparkSession, root: String, m: VMeta,
                           cols: Seq[String])
       : (org.apache.spark.sql.types.StructType,
          Array[org.apache.spark.sql.Row]) =
-    statsCacheGet(rootPathOf(spark, root), m.layoutId).getOrElse {
-      val sp = statsPath(root, m.layoutId)
+    persistedStats(spark, root, m.layoutId).getOrElse {
+      // the self-heal build memoizes what it writes
       ensureStats(spark, root, m, cols)
-      // a self-heal build above already populated the memo — re-check
-      // before paying the read
-      statsCacheGet(rootPathOf(spark, root), m.layoutId).getOrElse {
-        val df = spark.read.parquet(sp.toString)
-        val out = (df.schema, df.collect())
-        statsCachePut(rootPathOf(spark, root), m.layoutId, out._1, out._2)
-        out
-      }
+      persistedStats(spark, root, m.layoutId).get
     }
 
   /** Local-relation frame over already-collected stats rows. */
@@ -4756,14 +4520,9 @@ object Snapshots {
     require(!clusterDebtOnly || statsCols.contains(clusterBy.head),
       s"clusterDebtOnly targets files through per-file stats on " +
         s"'${clusterBy.headOption.getOrElse("")}' — include it in statsCols")
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "optimize")
-      val rels = relFilesOf(spark, root, m)
-      val statuses = fileStatusesOf(spark, root, rels)
+    commitDelta(spark, root, "optimize", statsCols) { base =>
+      val m = base.m
+      val statuses = fileStatusesOf(spark, root, base.rels)
       // dv-carrying files must rewrite regardless of size — their
       // logical read drops the vector's rows, materializing it away
       val dvFiles: Set[String] =
@@ -4796,13 +4555,11 @@ object Snapshots {
       // cannot bound (null min/max) join the rewrite conservatively;
       // pre-existing overlap BETWEEN carried files is preserved, not
       // worsened (only a full re-cluster removes it).
-      val (touched, carried) =
-        if (!clusterDebtOnly || touched0.isEmpty) (touched0, carried0)
+      val touched =
+        if (!clusterDebtOnly || touched0.isEmpty) touched0
         else {
           val ckey = clusterBy.head
-          val stats = statsOf(spark, root, m, statsCols)
-          requireStatsCoverage(spark, root, m, stats)
-          val ranges: Map[String, (Any, Any)] = stats
+          val ranges: Map[String, (Any, Any)] = base.stats
             .select(col("file"), col(s"min_$ckey"), col(s"max_$ckey"))
             .collect().map(r => (relOf(spark, root, r.getString(0)),
               (r.get(1), r.get(2)))).toMap
@@ -4823,7 +4580,7 @@ object Snapshots {
           val debtUnbounded = touched0.exists { case (rel, _) =>
             ranges.get(rel).forall(r => r._1 == null || r._2 == null)
           }
-          val (overlap, clean) = carried0.partition { case (rel, _) =>
+          touched0 ++ carried0.filter { case (rel, _) =>
             debtUnbounded || (ranges.get(rel) match {
               case Some((mn, mx)) if mn != null && mx != null =>
                 debtSpans.exists { case (dmn, dmx) =>
@@ -4832,122 +4589,53 @@ object Snapshots {
               case _ => true // unbounded full file: conservative rewrite
             })
           }
-          (touched0 ++ overlap, clean)
         }
       // a single small file with no vector has no debt to merge —
       // rewriting it buys nothing; publish nothing
       if (touched.isEmpty ||
           (touched.size == 1 && dvFiles.isEmpty && clusterBy.isEmpty))
-        return CowResult(v, 0, withRel.size, 0L)
-      val touchedRel = touched.map(_._1).sorted
-      val carriedRel = carried.map(_._1).sorted
-      val debtBytes = touched.map(_._2.getLen).sum
-      val nFiles = math.max(1, math.ceil(debtBytes.toDouble / targetBytes).toInt)
-      val schema = schemaOf(spark, root, v, m)
-      // touched files read LOGICALLY (vector rows must not resurrect);
-      // every dv file is in the touched set, so the new version
-      // carries NO vector
-      val df0 = applyDv(spark, root,
-        spark.read.schema(schema)
-          .parquet(touchedRel.map(rel => new Path(root, rel).toString): _*),
-        dvOf(spark, root, m))
-      // a bucketed table compacts WITHIN the bucket layout: the
-      // rewrite re-bins by the bucket function inside writeDataDir
-      // (debt rows land back in their buckets), so the file-count
-      // lever is the layout's n, not debt/targetBytes — and a range
-      // re-cluster would scramble bucket identity, so it refuses
-      require(m.bucket.isEmpty || clusterBy.isEmpty,
-        s"$root is bucketed (${m.bucket.get}) — clusterBy would break " +
-          "bucket identity; redefine the layout with a full commit instead")
-      // selective compaction composes with a column mapping (it works
-      // in physical names end to end and republishes the map), but
-      // clusterBy takes USER column names — ambiguous on a mapped
-      // table, so it refuses like the other name-contract writers
-      require(clusterBy.isEmpty || m.colmap.isIdentity,
-        s"$root carries a column mapping — materializeMapping before " +
-          "a clusterBy OPTIMIZE")
-      val physStatsCols = statsCols.map(m.colmap.physicalOf)
-      val df =
-        if (m.bucket.nonEmpty) df0
-        else if (clusterBy.isEmpty) df0.repartition(nFiles)
-        else df0.repartitionByRange(nFiles, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-      val (freshDir, freshRows) =
-        writeDataDir(spark, df, root, m.parts, m.bucket)
-      val ddl = m.schemaDdl // compaction preserves the logged schema
-      val freshRel = listFreshRel(spark, root, freshDir)
-      // logical rows are untouched by construction: carried files have
-      // no vector entries, and the rewrite only re-binned the rest
-      val (manOpt, body) =
-        if (carriedRel.isEmpty)
-          (None, dirBody(v + 1, freshDir, m.nRows, None, ddl, None,
-            m.constraints, m.parts, m.bucket, m.colmap))
-        else {
-          val man = writeManifest(spark, root, carriedRel ++ freshRel)
-          (Some(man), manBody(v + 1, man, m.nRows, None, ddl, None,
-            m.constraints, m.parts, m.bucket, m.colmap))
-        }
-      fireRaceHook()
-      if (tryPublish(spark, root, v + 1, body)) {
-        if (statsCols.nonEmpty) {
-          val newMeta = versionMeta(spark, root, v + 1)
-          val expectedCols = (Seq("file", "n_rows") ++ physStatsCols.flatMap(c =>
-            Seq(s"min_$c", s"max_$c", s"nulls_$c"))).toSet
-          val (pSchema, pRows) = statsRowsOf(spark, root, m, physStatsCols)
-          if (carriedRel.isEmpty) ensureStats(spark, root, newMeta, physStatsCols)
-          else if (pSchema.fieldNames.toSet != expectedCols)
-            // the prior index was built for DIFFERENT columns — its
-            // rows cannot union with a fresh build; rebuild the whole
-            // layout instead of crashing after the publish landed
-            ensureStats(spark, root, newMeta, physStatsCols)
-          else {
-            // carried stats rows reused verbatim (driver-side split of
-            // the collected snapshot — see [[mergeBody]]); only the
-            // fresh dir scans
-            val carriedSet = carriedRel
-              .map(rel => normPath(new Path(root, rel).toString)).toSet
-            val fIdx = pSchema.fieldIndex("file")
-            val carriedRows = pRows
-              .filter(r => carriedSet(normPath(r.getString(fIdx))))
-            val (fSchema, fRows) = StatsIndex.buildRows(spark,
-              new Path(root, freshDir).toString, physStatsCols)
-            val (nSchema, nRows) =
-              unionStatsRows(pSchema, carriedRows, fSchema, fRows)
-            writeStatsRows(spark, root, newMeta.layoutId, nSchema, nRows)
-          }
-        }
-        return CowResult(v + 1, touchedRel.size,
-          touchedRel.size + carriedRel.size, freshRows)
-      }
-      // lost the race — generalized OCC re-base: the commonest real
-      // collision is a streaming append landing during a nightly
-      // OPTIMIZE, and the compacted rewrite is layout-only (an
-      // interleaved added file never conflicts semantically — it is
-      // simply next pass's debt), so both commit with ONE staged
-      // write each instead of the loser re-reading and re-writing
-      // the whole debt set
-      manOpt.foreach(man =>
-        fs(spark, new Path(root, man)).delete(new Path(root, man), false))
-      attempts += 1
-      require(attempts < 100, s"$root: optimize lost $attempts commit races")
-      val rebased = publishRebased(spark, root, v, m, touchedRel.toSet,
-        physStatsCols, _ => false, freshDir, freshRel, 0L, None, None,
-        m.schemaDdl, "optimize", () => {
-          attempts += 1
-          require(attempts < 100,
-            s"$root: optimize lost $attempts commit races")
-        })
-      rebased match {
-        case Some((nv, carried2)) =>
-          return CowResult(nv, touchedRel.size,
-            touchedRel.size + carried2.size, freshRows)
-        case None =>
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          restages.incrementAndGet()
+        Left(CowResult(base.v, 0, withRel.size, 0L))
+      else {
+        // a bucketed table compacts WITHIN the bucket layout: the
+        // rewrite re-bins by the bucket function inside writeDataDir
+        // (debt rows land back in their buckets), so the file-count
+        // lever is the layout's n, not debt/targetBytes — and a range
+        // re-cluster would scramble bucket identity, so it refuses
+        require(m.bucket.isEmpty || clusterBy.isEmpty,
+          s"$root is bucketed (${m.bucket.get}) — clusterBy would break " +
+            "bucket identity; redefine the layout with a full commit instead")
+        // selective compaction composes with a column mapping (it works
+        // in physical names end to end and republishes the map), but
+        // clusterBy takes USER column names — ambiguous on a mapped
+        // table, so it refuses like the other name-contract writers
+        require(clusterBy.isEmpty || m.colmap.isIdentity,
+          s"$root carries a column mapping — materializeMapping before " +
+            "a clusterBy OPTIMIZE")
+        val touchedRel = touched.map(_._1).sorted
+        val debtBytes = touched.map(_._2.getLen).sum
+        val nFiles = math.max(1, math.ceil(debtBytes.toDouble / targetBytes).toInt)
+        val schema = schemaOf(spark, root, base.v, m)
+        Right(CowPlan(touchedRel,
+          dv => {
+            // touched files read LOGICALLY (vector rows must not
+            // resurrect); every dv file is in the touched set, so the
+            // new version carries NO vector
+            val df0 = applyDv(spark, root,
+              spark.read.schema(schema)
+                .parquet(touchedRel.map(rel => new Path(root, rel).toString): _*),
+              dv)
+            if (m.bucket.nonEmpty) df0
+            else if (clusterBy.isEmpty) df0.repartition(nFiles)
+            else df0.repartitionByRange(nFiles, clusterBy.map(col): _*)
+              .sortWithinPartitions(clusterBy.map(col): _*)
+          },
+          m.schemaDdl, // compaction preserves the logged schema
+          // layout-only: an interleaved added file never conflicts
+          // semantically — it is simply next pass's debt
+          _ => false,
+          compaction = true))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Time-travel read THROUGH the version's stats index: the file
@@ -4964,19 +4652,14 @@ object Snapshots {
     val m = versionMeta(spark, root, v)
     requireLive(m, root, "readPruned")
     // serve the skipping index from the process memo when present
-    // (zero jobs, zero reads — see [[statsRowsOf]]); the candidate
-    // filter and count below then fold over a LocalRelation
-    val stats = statsCacheGet(rootPathOf(spark, root), m.layoutId)
+    // (zero jobs, zero reads — see [[statsCache]], including its
+    // single-writer-process assumption: a memoized layout whose
+    // `_stats` dir was deleted externally still prunes here); the
+    // candidate filter and count below then fold over a LocalRelation
+    val stats = persistedStats(spark, root, m.layoutId)
       .map { case (schema, rows) => localStats(spark, schema, rows.toIndexedSeq) }
-      .getOrElse {
-        val sp = statsPath(root, m.layoutId)
-        require(fs(spark, sp).exists(sp),
-          s"version $v of $root has no stats index — commit via commitWithStats")
-        val df = spark.read.parquet(sp.toString)
-        val out = (df.schema, df.collect())
-        statsCachePut(rootPathOf(spark, root), m.layoutId, out._1, out._2)
-        localStats(spark, out._1, out._2.toIndexedSeq)
-      }
+      .getOrElse(throw new IllegalArgumentException(
+        s"version $v of $root has no stats index — commit via commitWithStats"))
     // merge-on-read composes with skipping: min/max prune on PHYSICAL
     // file contents, which over-approximate the logical rows (a
     // deletion vector only removes rows), so pruning stays sound and
@@ -5017,18 +4700,8 @@ object Snapshots {
     */
   def statsTableOf(spark: SparkSession, root: String,
                    v: Long): Option[DataFrame] = {
-    val layoutId = versionMeta(spark, root, v).layoutId
-    statsCacheGet(rootPathOf(spark, root), layoutId)
+    persistedStats(spark, root, versionMeta(spark, root, v).layoutId)
       .map { case (schema, rows) => localStats(spark, schema, rows.toIndexedSeq) }
-      .orElse {
-        val sp = statsPath(root, layoutId)
-        if (fs(spark, sp).exists(sp)) {
-          val df = spark.read.parquet(sp.toString)
-          val out = (df.schema, df.collect())
-          statsCachePut(rootPathOf(spark, root), layoutId, out._1, out._2)
-          Some(localStats(spark, out._1, out._2.toIndexedSeq))
-        } else None
-      }
   }
 
   /** The version as a PLANNER-INTEGRATED scan: a parquet relation

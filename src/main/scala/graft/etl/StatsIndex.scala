@@ -69,7 +69,7 @@ object StatsIndex {
                             files: Seq[String]): DataFrame = {
     val listing = spark.createDataset(files)(Encoders.STRING).toDF("__f")
     val missing = listing.join(stats,
-      normFile(col("__f")) === normFile(stats("file")), "left_anti")
+      normPath(col("__f")) === normPath(stats("file")), "left_anti")
     val padded = missing.select(
       col("__f").as("file") +:
         stats.columns.toSeq.filter(_ != "file").map(c =>
@@ -78,14 +78,22 @@ object StatsIndex {
     stats.unionByName(padded)
   }
 
-  /** In-plan path normalization shared by the stats side
-    * (`input_file_name()` URIs — "file:///x") and the listing side
-    * (`Path.toUri` — "file:/x"): strip the scheme, keep the path.
-    * Both sides run through the SAME expression, so the diff joins
-    * compare like with like.
+  private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+".r
+
+  /** Scheme-insensitive path identity ("file:///x" ≡ "file:/x" ≡
+    * "/x"): strip any URI scheme, keep the absolute path. The stats
+    * side records `input_file_name()` URIs, Hadoop listings
+    * `Path.toString`; every comparison between the two — on the
+    * driver through this form, in a plan through the Column form
+    * below — runs both sides through the SAME regex, so they compare
+    * like with like.
     */
-  private def normFile(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+", "/")
+  private[graft] def normPath(s: String): String =
+    SchemeRe.replaceFirstIn(s, "/")
+
+  /** [[normPath]] as an in-plan expression. */
+  private[graft] def normPath(c: Column): Column =
+    regexp_replace(c, SchemeRe.regex, "/")
 
   /** Recursive data-file listing: every `.parquet` file under
     * `dataPath`, descending into partition dirs, skipping hidden
@@ -177,17 +185,14 @@ object StatsIndex {
          Array[org.apache.spark.sql.Row]) = {
     val rows = agg.collect()
     val schema = agg.schema
-    def norm(s: String): String = SchemeStrip.replaceFirstIn(s, "/")
-    val have = rows.iterator.map(r => norm(r.getString(0))).toSet
-    val pad = files.filterNot(f => have(norm(f))).map { f =>
+    val have = rows.iterator.map(r => normPath(r.getString(0))).toSet
+    val pad = files.filterNot(f => have(normPath(f))).map { f =>
       org.apache.spark.sql.Row.fromSeq(
         f +: schema.fields.toSeq.tail.map(sf =>
           if (sf.name == "n_rows") 0L else null))
     }
     (schema, rows ++ pad)
   }
-
-  private val SchemeStrip = "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+".r
 
   /** [[build]] + persist the stats table beside the data (the
     * "index commit"). Returns the stats path.
@@ -216,15 +221,15 @@ object StatsIndex {
     val onDisk = listDataFiles(spark, dataPath)
     val onDiskDf = spark.createDataset(onDisk)(Encoders.STRING)
       .toDF("__disk_file")
-      .select(col("__disk_file"), normFile(col("__disk_file")).as("__nf"))
+      .select(col("__disk_file"), normPath(col("__disk_file")).as("__nf"))
     // survivors: files still on disk keep their stats rows verbatim
     val kept = stats.join(onDiskDf.select("__nf"),
-      normFile(stats("file")) === col("__nf"), "left_semi")
+      normPath(stats("file")) === col("__nf"), "left_semi")
     // fresh: on-disk files the stats table has no row for. The
     // collect is the fresh-path list the subset read needs — bounded
     // by the append batch in the steady state (the bootstrap case is
     // [[build]]'s full list, the object every scan plans with anyway)
-    val fresh = onDiskDf.join(stats.select(normFile(col("file")).as("__nf")),
+    val fresh = onDiskDf.join(stats.select(normPath(col("file")).as("__nf")),
         Seq("__nf"), "left_anti")
       .select("__disk_file").collect().map(_.getString(0)).sorted
     if (fresh.isEmpty) kept

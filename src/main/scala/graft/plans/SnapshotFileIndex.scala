@@ -129,9 +129,9 @@ final class SnapshotFileIndex(
         else {
           val hit = st.filter(conds.reduce(_ && _)).select("file")
             .collect().iterator
-            .map(r => SnapshotFileIndex.normPath(r.getString(0))).toSet
+            .map(r => StatsIndex.normPath(r.getString(0))).toSet
           afterPart.filter(f =>
-            hit.contains(SnapshotFileIndex.normPath(f.getPath.toString)))
+            hit.contains(StatsIndex.normPath(f.getPath.toString)))
         }
       case _ => afterPart
     }
@@ -141,13 +141,6 @@ final class SnapshotFileIndex(
 }
 
 object SnapshotFileIndex {
-
-  /** Scheme-insensitive path identity ("file:///x" ≡ "file:/x" ≡
-    * "/x") — the stats side records `input_file_name()` URIs, the
-    * listing side `Path.toString`; both normalize to the bare path.
-    */
-  private[graft] def normPath(s: String): String =
-    s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.\\-]*:/+", "/")
 
   /** Spark's own partition-path unescaping — the exact inverse of
     * what the parquet writer applied to the `k=v` segment.

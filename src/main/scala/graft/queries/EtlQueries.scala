@@ -2295,7 +2295,7 @@ object EtlQueries {
         .orderBy("o_orderstatus")
     }),
 
-    // q203 — BUCKET-TARGETED MERGE (Snapshots.bucketPrune inside the
+    // q203 — BUCKET-TARGETED MERGE (the bucket refinement inside the
     // merge file targeting): on a table bucketed on the merge key, an
     // update key's candidate files are NAMED by its bucket id —
     // pmod(hash(key), n) is both Spark's bucket function and the

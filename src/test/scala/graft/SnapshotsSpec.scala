@@ -2070,6 +2070,60 @@ class SnapshotsSpec extends SparkSpec {
     assert(after.filter(col("id") === 8000L).count() === 1L)
   }
 
+  test("OCC re-base: mergeClauses re-bases a key-disjoint append; same-key inserts and NMBS re-stage") {
+    val root = tmpDir("snap_occ_mc")
+    val base = (1L to 1000L).map(i => (i, i * 1.0)).toDF("id", "x")
+    Snapshots.commitWithStats(spark,
+      base.repartitionByRange(4, col("id")).sortWithinPartitions("id"),
+      root, Seq("id"))
+    val racer = (rows: Seq[(Long, Double)]) => Snapshots.racePublishHook =
+      Some(() => Snapshots.append(spark, rows.toDF("id", "x"), root,
+        statsCols = Seq("id")))
+    val upsert = (src: Seq[(Long, Double)]) => Snapshots.mergeClauses(spark,
+      src.toDF("id", "x"), root, "id", Seq("id"), "t", "u",
+      matched = Seq(Snapshots.MatchedUpdate(None, None)),
+      insertCond = Some(None))
+    // (1) the racer's keys are disjoint from the source's: re-base
+    val rb0 = Snapshots.rebases.get(); val rs0 = Snapshots.restages.get()
+    racer((5000L to 5010L).map(i => (i, 0.0)))
+    val r1 = upsert((10L to 20L).map(i => (i, i * 100.0)))
+    assert(r1.version === 3L && r1.rowsUpdated === 11L)
+    assert(Snapshots.rebases.get() === rb0 + 1, "one manifest re-base")
+    assert(Snapshots.restages.get() === rs0, "zero re-staged writes")
+    val after1 = Snapshots.read(spark, root)
+    assert(after1.count() === 1011L)
+    assert(after1.filter(col("id") === 15L).head().getDouble(1) === 1500.0)
+    // (2) the racer inserts a key the statement inserts too: a re-base
+    // would publish both rows; the re-staged statement matches the
+    // racer's row and updates it instead
+    val rb1 = Snapshots.rebases.get(); val rs1 = Snapshots.restages.get()
+    racer(Seq((2000L, -1.0)))
+    val r2 = upsert(Seq((2000L, 7.0)))
+    assert(r2.version === 5L)
+    assert(r2.rowsUpdated === 1L && r2.rowsInserted === 0L)
+    assert(Snapshots.restages.get() === rs1 + 1, "same-key race must re-stage")
+    assert(Snapshots.rebases.get() === rb1)
+    val k2000 = Snapshots.read(spark, root).filter(col("id") === 2000L)
+      .collect().map(_.getDouble(1)).toSeq
+    assert(k2000 === Seq(7.0))
+    // (3) NOT MATCHED BY SOURCE reads the whole table: even a
+    // key-disjoint racer re-stages, and its row faces the clause
+    val rb2 = Snapshots.rebases.get(); val rs2 = Snapshots.restages.get()
+    racer(Seq((6000L, 0.0)))
+    val r3 = Snapshots.mergeClauses(spark, Seq((100L, 1.0)).toDF("id", "x"),
+      root, "id", Seq("id"), "t", "u",
+      matched = Seq(Snapshots.MatchedUpdate(None, None)),
+      insertCond = None,
+      notMatchedBySource = Seq(Snapshots.MatchedDelete(Some(col("t.id") > 4000L))))
+    assert(r3.version === 7L && r3.rowsDeleted === 12L)
+    assert(Snapshots.restages.get() === rs2 + 1, "NMBS must always re-stage")
+    assert(Snapshots.rebases.get() === rb2)
+    val after3 = Snapshots.read(spark, root)
+    assert(after3.filter(col("id") > 4000L).count() === 0L)
+    assert(after3.count() === 1001L)
+    assert(after3.filter(col("id") === 100L).head().getDouble(1) === 1.0)
+  }
+
   test("latestVersion reads through the hint floor — no full listings on the hot path") {
     val root = tmpDir("snap_hint")
     val df = Seq((1L, "a")).toDF("id", "s")
