@@ -86,8 +86,8 @@ object Snapshots {
     *
     * Probing forward from the hint is CORRECT because version
     * numbers above any once-latest version are contiguous: every
-    * publish lands at latest+1 ([[publishNext]] / the
-    * readVersion+1 writers), so gaps only ever come from [[vacuum]]
+    * publish lands at latest+1 ([[publishNext]] /
+    * [[occPublish]]), so gaps only ever come from [[vacuum]]
     * deleting BELOW the retained tail — and vacuum refreshes the
     * hint to the true latest BEFORE deleting anything. A missing /
     * unparseable / vacuumed-away hint falls back to the full
@@ -173,16 +173,6 @@ object Snapshots {
       true
     } catch { case scala.util.control.NonFatal(_) => false }
 
-  /** Version metadata. Exactly one of `dataDir` / `manifest` is set:
-    * a WHOLE-DIR version ([[commit]]/[[optimize]] — the snapshot is
-    * one writer-unique immutable dir) or a MANIFEST version
-    * ([[append]]/[[merge]]/[[deleteRange]] — the snapshot is an
-    * explicit FILE LIST that can reference files across many older
-    * dirs, which is what makes copy-on-write metadata-only for the
-    * untouched fraction). `tag` is an optional idempotency token
-    * (the streaming ingest records its micro-batch id here — see
-    * [[lastTag]]).
-    */
   /** A bucket layout recorded in the version log — the table
     * property that makes repeated large-large joins and aggregations
     * on a stable key SHUFFLE-FREE: every data file of a bucketed
@@ -247,6 +237,16 @@ object Snapshots {
         .getOrElse(logical)
   }
 
+  /** Version metadata. Exactly one of `dataDir` / `manifest` is set:
+    * a WHOLE-DIR version ([[commit]]/[[optimize]] — the snapshot is
+    * one writer-unique immutable dir) or a MANIFEST version
+    * ([[append]]/[[merge]]/[[deleteRange]] — the snapshot is an
+    * explicit FILE LIST that can reference files across many older
+    * dirs, which is what makes copy-on-write metadata-only for the
+    * untouched fraction). `tag` is an optional idempotency token
+    * (the streaming ingest records its micro-batch id here — see
+    * [[lastTag]]).
+    */
   final case class VMeta(dataDir: Option[String], manifest: Option[String],
                          nRows: Long, tag: Option[Long],
                          schemaDdl: Option[String] = None,
@@ -266,15 +266,15 @@ object Snapshots {
       .getOrElse(throw new IllegalStateException("empty version meta"))
   }
 
-  /** Parse the metadata fields readers need without a JSON library:
-    * the version files are written by this object, so the field shape
-    * is fixed.
-    */
   /** Test-observable counter of version-file reads — the spec hook
     * pinning [[lastTag]]'s early-stop cost model.
     */
   private[graft] val metaReads = new java.util.concurrent.atomic.AtomicLong
 
+  /** Parse the metadata fields readers need without a JSON library:
+    * the version files are written by this object, so the field shape
+    * is fixed.
+    */
   def versionMeta(spark: SparkSession, root: String, v: Long): VMeta = {
     metaReads.incrementAndGet()
     val vf = versionFile(root, v)
@@ -614,24 +614,13 @@ object Snapshots {
     * reclaim is the EXISTING vacuum machinery — the tombstone pins no
     * data, so `vacuum(keepLast = 1)` reclaims everything below it.
     */
-  def dropTable(spark: SparkSession, root: String): Long = {
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      require(!versionMeta(spark, root, v).tombstone,
-        s"DROP TABLE: $root is already dropped")
+  def dropTable(spark: SparkSession, root: String): Long =
+    occPublish[Long](spark, root, "DROP TABLE") { at =>
+      at.m // refuses a table with no version (requireLive a dropped one)
       val man = writeManifest(spark, root, Nil)
-      if (tryPublish(spark, root, v + 1,
-          manBody(v + 1, man, 0L, None, None, None, Nil, Nil, None,
-            ColMap(), tombstone = true)))
-        return v + 1
-      fs(spark, new Path(root, man)).delete(new Path(root, man), false)
-      attempts += 1
-      require(attempts < 100, s"$root: dropTable lost $attempts races")
+      Right(Publish(VMeta(None, Some(man), 0L, None, tombstone = true),
+        identity, staged = Seq(man)))
     }
-    -1L // unreachable
-  }
 
   private[etl] def jsonEsc(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -817,10 +806,11 @@ object Snapshots {
   }
 
   /** Publish a version body at the next free version number, retrying
-    * past publish races (shared by commit and rollback — writers whose
-    * output does NOT depend on the version they read; state-dependent
-    * writers like [[optimize]]/[[merge]]/[[append]] conflict-check at
-    * exactly readVersion+1 instead).
+    * past publish races (shared by [[commit]], [[replaceTable]],
+    * [[rollback]] and the catalog — writers whose output does NOT
+    * depend on the version they read). Every state-dependent writer
+    * publishes at exactly readVersion+1 through [[occPublish]]
+    * instead.
     */
   private[etl] def publishNext(spark: SparkSession, root: String,
                           mkBody: Long => String): Long = {
@@ -833,6 +823,117 @@ object Snapshots {
     }
     v
   }
+
+  /** The version an [[occPublish]] attempt read as the latest. `meta`
+    * is None only on a table with no version yet, which [[append]]
+    * alone may start; every other writer reads [[m]], which refuses
+    * there.
+    */
+  private final class Latest(root: String, val v: Long,
+                             val meta: Option[VMeta]) {
+    def m: VMeta = meta.getOrElse(
+      throw new IllegalArgumentException(s"$root has no committed versions"))
+  }
+
+  /** What an [[occPublish]] attempt publishes at readVersion+1.
+    *
+    *  - `meta`: the new version;
+    *  - `done`: the writer's receipt, run once the publish has won
+    *    (post-publish work such as the stats index rides here);
+    *  - `staged`: this attempt's own files (a manifest, a vector),
+    *    deleted when the publish loses;
+    *  - `retained`: files a lost attempt hands to the next one (a
+    *    staged rewrite a re-base reuses, [[append]]'s fresh dir),
+    *    deleted when the statement ends without publishing them;
+    *  - `rebase`: offered the next attempt's latest first. Some = a
+    *    publish reusing `retained`; None = `retained` is deleted, the
+    *    re-stage counted, and the writer plans afresh.
+    */
+  private final case class Publish[R](meta: VMeta, done: Long => R,
+      staged: Seq[String] = Nil, retained: Seq[String] = Nil,
+      rebase: Option[VMeta => Option[Publish[R]]] = None)
+
+  /** THE readVersion+1 publish loop of every state-dependent writer
+    * (the copy-on-write [[commitDelta]] writers, [[append]],
+    * [[deleteWhere]]/[[updateWhere]], the metadata-only DDL verbs and
+    * [[dropTable]]). Per attempt it resolves the latest version (the
+    * first attempt reuses a caller's `hint` — one metadata read per
+    * statement; a stale hint just loses the race), refuses a dropped
+    * table ([[requireLive]]) and a stale `tag`
+    * ([[requireTagMonotonic]]), and lets the writer `plan` against
+    * it: `Left` is a no-op receipt, `Right` a [[Publish]]. The
+    * publish lands at EXACTLY readVersion+1 — what the writer planned
+    * is a function of the version it read, so a concurrent commit
+    * landing first fails the publish instead of being silently
+    * overwritten or dropped. A lost race deletes the attempt's staged
+    * files and re-plans against the new latest (after a re-base
+    * attempt, when the writer offers one); any refusal and the
+    * exhausted attempt budget delete what the writer retained.
+    */
+  private def occPublish[R](spark: SparkSession, root: String, what: String,
+      tag: Option[Long] = None, hint: Option[(Long, VMeta)] = None)
+      (plan: Latest => Either[R, Publish[R]]): R = {
+    def remove(rel: String): Unit =
+      fs(spark, new Path(root, rel)).delete(new Path(root, rel), true)
+    var first = hint
+    var lost: Option[Publish[R]] = None
+    var attempts = 0
+    while (true) {
+      val (v, step, rebased) = try {
+        val (v, meta) = first match {
+          case Some((hv, hm)) => (hv, Some(hm))
+          case None => latestVersion(spark, root) match {
+            case Some(lv) => (lv, Some(versionMeta(spark, root, lv)))
+            case None => (0L, None)
+          }
+        }
+        first = None
+        meta.foreach(requireLive(_, root, what))
+        requireTagMonotonic(spark, root, tag, what)
+        val based = for (l <- lost; rb <- l.rebase; m <- meta; p <- rb(m))
+          yield p
+        if (based.isEmpty) lost.filter(_.rebase.nonEmpty).foreach { l =>
+          l.retained.foreach(remove)
+          restages.incrementAndGet()
+          lost = None
+        }
+        val step: Either[R, Publish[R]] =
+          based.map(Right(_)).getOrElse(plan(new Latest(root, v, meta)))
+        (v, step, based.nonEmpty)
+      } catch {
+        case e: Throwable =>
+          lost.foreach(_.retained.foreach(remove))
+          throw e
+      }
+      step match {
+        case Left(noop) => return noop
+        case Right(p) =>
+          fireRaceHook()
+          if (tryPublish(spark, root, v + 1, bodyOf(v + 1, p.meta))) {
+            if (rebased) rebases.incrementAndGet()
+            return p.done(v + 1)
+          }
+          p.staged.foreach(remove)
+          attempts += 1
+          if (attempts >= 100) p.retained.foreach(remove)
+          require(attempts < 100, s"$root: $what lost $attempts commit races")
+          lost = Some(p)
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  private def fireRaceHook(): Unit =
+    racePublishHook.foreach { h => racePublishHook = None; h() }
+
+  /** Spec-only deterministic race injection: runs ONCE, at the next
+    * publish point that fires it — [[occPublish]]'s, after the
+    * writer's staging and before its readVersion+1 publish (so every
+    * state-dependent writer's lost-race path is reachable), and the
+    * exclusive first-slot publishes of [[create]] and
+    * [[cloneShallow]].
+    */
+  private[graft] var racePublishHook: Option[() => Unit] = None
 
   /** Attempt to publish version `v` pointing at `dataDir`: write to
     * a writer-unique temp name in the same dir, then promote with
@@ -967,14 +1068,6 @@ object Snapshots {
     * millions of files this is ~100 MB of metadata, the same object
     * every scan plans with.
     */
-  /** Layout id a freshly-published manifest version resolves to
-    * ([[VMeta.layoutId]]'s manifest arm) — computed locally so a
-    * publisher indexing its own stats does not re-read the version
-    * file it just wrote.
-    */
-  private def manifestLayoutId(man: String): String =
-    man.stripPrefix("manifests/").stripSuffix(".txt")
-
   private def writeManifest(spark: SparkSession, root: String,
                             relFiles: Seq[String]): String = {
     val rel = s"manifests/m-${java.util.UUID.randomUUID().toString.take(13)}.txt"
@@ -1274,13 +1367,9 @@ object Snapshots {
                    from: String, to: String): Long = {
     require(from != to, s"renameColumn: $from -> $to is a no-op")
     requireLoggable(to, "renameColumn target")
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "renameColumn")
-      val logical = logicalProjectNames(schemaOf(spark, root, v, m), m.colmap)
+    occPublish[Long](spark, root, "renameColumn") { at =>
+      val m = at.m
+      val logical = logicalProjectNames(schemaOf(spark, root, at.v, m), m.colmap)
       require(logical.contains(from), s"$root has no column $from")
       require(!logical.contains(to), s"$root already has a column $to")
       requireUnreferenced(m, from, "renameColumn")
@@ -1292,13 +1381,8 @@ object Snapshots {
       val newMap = m.colmap.copy(renames =
         m.colmap.renames.filterNot(_._1 == p) ++
           (if (p == to) Nil else Seq(p -> to)))
-      if (tryPublish(spark, root, v + 1,
-          bodyOf(v + 1, m.copy(tag = None, colmap = newMap))))
-        return v + 1
-      attempts += 1
-      require(attempts < 100, s"$root: renameColumn lost $attempts races")
+      Right(Publish(m.copy(tag = None, colmap = newMap), identity))
     }
-    -1L // unreachable
   }
 
   /** METADATA-ONLY column drop: the bytes stay in the immutable old
@@ -1309,14 +1393,10 @@ object Snapshots {
     * grade erasure of a COLUMN is a rewrite by nature — the mapping
     * makes the COMMON case, schema cleanup, free).
     */
-  def dropColumn(spark: SparkSession, root: String, name: String): Long = {
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "dropColumn")
-      val logical = logicalProjectNames(schemaOf(spark, root, v, m), m.colmap)
+  def dropColumn(spark: SparkSession, root: String, name: String): Long =
+    occPublish[Long](spark, root, "dropColumn") { at =>
+      val m = at.m
+      val logical = logicalProjectNames(schemaOf(spark, root, at.v, m), m.colmap)
       require(logical.contains(name), s"$root has no column $name")
       require(logical.size > 1, s"cannot drop the last column of $root")
       requireUnreferenced(m, name, "dropColumn")
@@ -1327,14 +1407,8 @@ object Snapshots {
       requireLoggable(p, "dropColumn target (physical name)")
       val newMap = ColMap(m.colmap.renames.filterNot(_._1 == p),
         m.colmap.dropped :+ p)
-      if (tryPublish(spark, root, v + 1,
-          bodyOf(v + 1, m.copy(tag = None, colmap = newMap))))
-        return v + 1
-      attempts += 1
-      require(attempts < 100, s"$root: dropColumn lost $attempts races")
+      Right(Publish(m.copy(tag = None, colmap = newMap), identity))
     }
-    -1L // unreachable
-  }
 
   private def logicalProjectNames(
       phys: org.apache.spark.sql.types.StructType,
@@ -1358,12 +1432,8 @@ object Snapshots {
     requireLoggable(name, "addColumn name")
     val parsed = StructType.fromDDL(s"`$name` $typeDdl")
     require(parsed.length == 1, s"addColumn: '$typeDdl' is not one type")
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "addColumn")
+    occPublish[Long](spark, root, "addColumn") { at =>
+      val m = at.m
       val old = m.schemaDdl.map(StructType.fromDDL).getOrElse(
         throw new IllegalStateException(
           s"$root records no schema — commit once with this library first"))
@@ -1375,13 +1445,8 @@ object Snapshots {
       require(!logicalProjectNames(old, m.colmap).contains(name),
         s"$root already has a column $name")
       val ddl = StructType(old.fields :+ parsed.fields.head.copy(nullable = true)).toDDL
-      if (tryPublish(spark, root, v + 1,
-          bodyOf(v + 1, m.copy(tag = None, schemaDdl = Some(ddl)))))
-        return v + 1
-      attempts += 1
-      require(attempts < 100, s"$root: addColumn lost $attempts races")
+      Right(Publish(m.copy(tag = None, schemaDdl = Some(ddl)), identity))
     }
-    -1L // unreachable
   }
 
   /** METADATA-ONLY `ALTER TABLE ... ALTER COLUMN c TYPE t` — explicit
@@ -1406,12 +1471,8 @@ object Snapshots {
     val parsed = StructType.fromDDL(s"`__t` $typeDdl")
     require(parsed.length == 1, s"alterColumnType: '$typeDdl' is not one type")
     val to = parsed.fields.head.dataType
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "alterColumnType")
+    occPublish[Long](spark, root, "alterColumnType") { at =>
+      val m = at.m
       val old = m.schemaDdl.map(StructType.fromDDL).getOrElse(
         throw new IllegalStateException(
           s"$root records no schema — commit once with this library first"))
@@ -1420,24 +1481,21 @@ object Snapshots {
       val p = m.colmap.physicalOf(name)
       val f = old.fields.find(_.name == p).getOrElse(
         throw new IllegalStateException(s"$root: no physical field $p"))
-      if (f.dataType == to) return v
-      require(isLosslessWidening(f.dataType, to),
-        s"alterColumnType: ${f.dataType.simpleString} -> ${to.simpleString} " +
-          "is not a lossless widening (integral chain, float->double, " +
-          "decimal growth) — a lossy type change needs an explicit rewrite")
-      require(!m.parts.contains(p) && !m.parts.contains(name) &&
-          !m.bucket.exists(b => b.cols.contains(p) || b.cols.contains(name)),
-        s"alterColumnType: cannot widen $name — it is a partition/bucket " +
-          "column (existing files were laid out under the narrower type)")
-      val ddl = StructType(old.fields.map(x =>
-        if (x.name == p) x.copy(dataType = to) else x)).toDDL
-      if (tryPublish(spark, root, v + 1,
-          bodyOf(v + 1, m.copy(tag = None, schemaDdl = Some(ddl)))))
-        return v + 1
-      attempts += 1
-      require(attempts < 100, s"$root: alterColumnType lost $attempts races")
+      if (f.dataType == to) Left(at.v)
+      else {
+        require(isLosslessWidening(f.dataType, to),
+          s"alterColumnType: ${f.dataType.simpleString} -> ${to.simpleString} " +
+            "is not a lossless widening (integral chain, float->double, " +
+            "decimal growth) — a lossy type change needs an explicit rewrite")
+        require(!m.parts.contains(p) && !m.parts.contains(name) &&
+            !m.bucket.exists(b => b.cols.contains(p) || b.cols.contains(name)),
+          s"alterColumnType: cannot widen $name — it is a partition/bucket " +
+            "column (existing files were laid out under the narrower type)")
+        val ddl = StructType(old.fields.map(x =>
+          if (x.name == p) x.copy(dataType = to) else x)).toDDL
+        Right(Publish(m.copy(tag = None, schemaDdl = Some(ddl)), identity))
+      }
     }
-    -1L // unreachable
   }
 
   /** Bake the column mapping into the data: one full-replace commit
@@ -1762,6 +1820,10 @@ object Snapshots {
     * Schema and constraints ride over; the idempotency tag does not
     * (a clone is not a re-ingest).
     *
+    * The stats copy lands in `_stats/<layout>__tmp` before its swap;
+    * a crash in between leaves that dir behind, and [[vacuum]] is the
+    * sweep that reclaims it past the orphan grace.
+    *
     * Caveats (both as in Delta): vacuuming the SOURCE can reclaim
     * files live clones still reference — source retention must
     * outlive clones; and a deletion-vector version must be
@@ -1882,30 +1944,22 @@ object Snapshots {
     * prior data — policy and data travel together.
     */
   def addConstraint(spark: SparkSession, root: String, name: String,
-                    exprSql: String): Long = {
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "addConstraint")
+                    exprSql: String): Long =
+    occPublish[Long](spark, root, "addConstraint") { at =>
+      val m = at.m
       require(!m.constraints.exists(_._1 == name),
         s"$root already has a constraint named $name")
-      val bad = read(spark, root, Some(v))
+      val bad = read(spark, root, Some(at.v))
         .filter(!coalesce(org.apache.spark.sql.functions.expr(exprSql), lit(true)))
         .count()
       require(bad == 0L,
         s"cannot add constraint $name: $bad existing rows violate it")
       // validated against v — publish at exactly v+1 so a concurrent
       // commit (whose rows we never checked) fails us into a re-check
-      if (tryPublish(spark, root, v + 1, bodyOf(v + 1,
-          m.copy(tag = None, constraints = m.constraints :+ ((name, exprSql))))))
-        return v + 1
-      attempts += 1
-      require(attempts < 100, s"$root: addConstraint lost $attempts races")
+      Right(Publish(
+        m.copy(tag = None, constraints = m.constraints :+ ((name, exprSql))),
+        identity))
     }
-    -1L // unreachable
-  }
 
   /** `ALTER TABLE ... DROP CONSTRAINT` — metadata-only. A
     * STATE-DEPENDENT writer like [[addConstraint]]: the published
@@ -1915,23 +1969,15 @@ object Snapshots {
     * stale file list as the new latest and silently drop that
     * commit's rows. A lost race re-reads and retries.
     */
-  def dropConstraint(spark: SparkSession, root: String, name: String): Long = {
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "dropConstraint")
+  def dropConstraint(spark: SparkSession, root: String, name: String): Long =
+    occPublish[Long](spark, root, "dropConstraint") { at =>
+      val m = at.m
       require(m.constraints.exists(_._1 == name),
         s"$root has no constraint named $name")
-      if (tryPublish(spark, root, v + 1, bodyOf(v + 1,
-          m.copy(tag = None, constraints = m.constraints.filterNot(_._1 == name)))))
-        return v + 1
-      attempts += 1
-      require(attempts < 100, s"$root: dropConstraint lost $attempts races")
+      Right(Publish(
+        m.copy(tag = None, constraints = m.constraints.filterNot(_._1 == name)),
+        identity))
     }
-    -1L // unreachable
-  }
 
   /** What an expectations-gated append did. */
   final case class ExpectResult(version: Long, rowsAppended: Long,
@@ -2060,13 +2106,9 @@ object Snapshots {
     * nothing and returns the current version.
     */
   def deleteWhere(spark: SparkSession, root: String,
-                  pred: Column): MorResult = {
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "deleteWhere")
+                  pred: Column): MorResult =
+    occPublish[MorResult](spark, root, "deleteWhere") { at =>
+      val (v, m) = (at.v, at.m)
       val schema = schemaOf(spark, root, v, m)
       val files = relFilesOf(spark, root, m)
         .map(rel => new Path(root, rel).toString)
@@ -2096,18 +2138,11 @@ object Snapshots {
       val freshN = total - priorN
       if (freshN == 0L) {
         fs(spark, new Path(root, dvRel)).delete(new Path(root, dvRel), true)
-        return MorResult(v, 0L, priorN)
-      }
-      val body = bodyOf(v + 1, m.copy(tag = None, nRows = m.nRows - freshN,
-        dv = Some(dvRel)))
-      if (tryPublish(spark, root, v + 1, body))
-        return MorResult(v + 1, freshN, total)
-      fs(spark, new Path(root, dvRel)).delete(new Path(root, dvRel), true)
-      attempts += 1
-      require(attempts < 100, s"$root: deleteWhere lost $attempts commit races")
+        Left(MorResult(v, 0L, priorN))
+      } else Right(Publish(
+        m.copy(tag = None, nRows = m.nRows - freshN, dv = Some(dvRel)),
+        nv => MorResult(nv, freshN, total), staged = Seq(dvRel)))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** What a merge-on-read UPDATE did: the new version, the rows it
     * rewrote, and the deletion-vector size the version now carries.
@@ -2134,26 +2169,32 @@ object Snapshots {
     * frame, so the table is read once. Assignments cast back to the
     * column's logged type (files stay schema-exact) and face the
     * table's CHECK constraints like any written rows. Row count is
-    * unchanged by construction. Publishes at readVersion+1 with the
-    * usual conflict check; a no-match update publishes nothing.
+    * unchanged by construction. Publishes at readVersion+1; a
+    * no-match update publishes nothing.
+    *
+    * A lost race re-bases through [[rebaseDelta]] — the staged rewrite
+    * and vector stay valid on an interleaved latest that is
+    * metadata-compatible, still holds every file the update read (the
+    * vector and the rewritten images reference them), and ADDED no
+    * file holding a row the predicate matches: the re-based commit
+    * serializes AFTER the interleaver, so a matching row it never
+    * evaluated would break write-serializability (Delta's conflict
+    * checker refuses the same shape). The check scans exactly the
+    * added files, never the table; any conflict re-runs the update.
     */
   def updateWhere(spark: SparkSession, root: String, pred: Column,
                   set: Seq[(String, Column)]): MorUpdateResult = {
     require(set.nonEmpty, "updateWhere needs at least one assignment")
-    var attempts = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"$root has no committed versions"))
-      val m = versionMeta(spark, root, v)
-      requireLive(m, root, "updateWhere")
+    occPublish[MorUpdateResult](spark, root, "updateWhere") { at =>
+      val (v, m) = (at.v, at.m)
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
         "materializeMapping before updateWhere")
       val schema = schemaOf(spark, root, v, m)
       val setMap = set.toMap
       setMap.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"updateWhere: $c is not a column of $root"))
-      val files = relFilesOf(spark, root, m)
-        .map(rel => new Path(root, rel).toString)
+      val readRels = relFilesOf(spark, root, m)
+      val files = readRels.map(rel => new Path(root, rel).toString)
       val prior = dvOf(spark, root, m)
       val priorN = m.dv.map(_ => prior.count()).getOrElse(0L)
       val scratch = s"data/u-${java.util.UUID.randomUUID().toString.take(13)}"
@@ -2172,115 +2213,44 @@ object Snapshots {
       val nUpd = obs.get("n").asInstanceOf[Long]
       if (nUpd == 0L) {
         dropScratch()
-        return MorUpdateResult(v, 0L, priorN)
-      }
-      val scr = spark.read.parquet(scratchPath.toString)
-      val updated = scr.select(schema.fields.toSeq.map { f =>
-        setMap.get(f.name).map(_.cast(f.dataType).as(f.name))
-          .getOrElse(col(f.name))
-      }: _*)
-      try requireSatisfied(updated, m.constraints, "updateWhere")
-      catch { case e: Throwable => dropScratch(); throw e }
-      val (freshDir, freshRows) =
-        writeDataDir(spark, updated, root, m.parts, m.bucket)
-      val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
-      prior.unionByName(scr.select(col("__file").as("file"),
-          col("__pos").as("pos")))
-        .write.mode("overwrite").parquet(new Path(root, dvRel).toString)
-      val freshRel = listFreshRel(spark, root, freshDir)
-      val man = writeManifest(spark, root,
-        relFilesOf(spark, root, m) ++ freshRel)
-      fireRaceHook()
-      if (tryPublish(spark, root, v + 1,
-          manBody(v + 1, man, m.nRows, None, m.schemaDdl, Some(dvRel),
-            m.constraints, m.parts, m.bucket))) {
-        dropScratch()
-        return MorUpdateResult(v + 1, freshRows, priorN + nUpd)
-      }
-      // lost the race — UPDATE's OCC re-base (the one manifest-delta
-      // writer the generalized [[rebaseDelta]] left out; a predicate
-      // update racing a streaming append is the same collision class)
-      fs(spark, new Path(root, man)).delete(new Path(root, man), false)
-      attempts += 1
-      rebaseUpdateWhere(spark, root, v, m, pred, schema, freshRel, dvRel,
-        () => { attempts += 1; attempts < 100 }) match {
-        case Some(nv) =>
-          dropScratch()
-          return MorUpdateResult(nv, freshRows, priorN + nUpd)
-        case None =>
-          // conflict shape (or attempts exhausted) — drop our own
-          // orphans FIRST, then refuse or recompute against the new
-          // latest (the scratch frame is stale too); exhaustion never
-          // strands staged dirs for the vacuum grace to mop up
-          dropScratch()
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          fs(spark, new Path(root, dvRel)).delete(new Path(root, dvRel), true)
-          require(attempts < 100,
-            s"$root: updateWhere lost $attempts commit races")
-          // counted AFTER the exhaustion gate: an attempts-exhausted
-          // refusal never re-ran the body, so it must not inflate
-          // the re-stage metric
-          restages.incrementAndGet()
+        Left(MorUpdateResult(v, 0L, priorN))
+      } else {
+        val scr = spark.read.parquet(scratchPath.toString)
+        val updated = scr.select(schema.fields.toSeq.map { f =>
+          setMap.get(f.name).map(_.cast(f.dataType).as(f.name))
+            .getOrElse(col(f.name))
+        }: _*)
+        try requireSatisfied(updated, m.constraints, "updateWhere")
+        catch { case e: Throwable => dropScratch(); throw e }
+        val (freshDir, freshRows) =
+          writeDataDir(spark, updated, root, m.parts, m.bucket)
+        val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
+        prior.unionByName(scr.select(col("__file").as("file"),
+            col("__pos").as("pos")))
+          .write.mode("overwrite").parquet(new Path(root, dvRel).toString)
+        val freshRel = listFreshRel(spark, root, freshDir)
+        // the conflict rule: an added file holding a row the predicate
+        // matches (see the doc)
+        def addedMatches(added: DataFrame): Boolean = {
+          val addedAbs = added.select("file").collect().map(_.getString(0)).toSeq
+          addedAbs.nonEmpty && spark.read.schema(schema).parquet(addedAbs: _*)
+            .filter(coalesce(pred, lit(false))).limit(1).count() > 0
+        }
+        // every read file stays listed (the new vector addresses them);
+        // a re-base lists the interleaver's files beside them
+        def publish(others: Seq[String], nRows: Long): Publish[MorUpdateResult] = {
+          val man = writeManifest(spark, root, others ++ readRels ++ freshRel)
+          Publish(VMeta(None, Some(man), nRows, None, m.schemaDdl, Some(dvRel),
+              m.constraints, m.parts, m.bucket),
+            nv => { dropScratch(); MorUpdateResult(nv, freshRows, priorN + nUpd) },
+            staged = Seq(man), retained = Seq(scratch, freshDir, dvRel),
+            rebase = Some(m2 => rebaseDelta(spark, root, m, readRels,
+                readRels.toSet, m2, None, addedMatches)
+              .map { case (others2, _) => publish(others2, m2.nRows) }))
+        }
+        Right(publish(Nil, m.nRows))
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** [[updateWhere]]'s OCC re-base: the staged churn-sized rewrite
-    * stays valid on the interleaved latest iff (a) the interleaver is
-    * METADATA-COMPATIBLE (schema/layouts/colmap/constraints AND the
-    * deletion-vector reference unchanged — our new vector extends
-    * that exact prior) and only ADDED files (every file the update
-    * read is still present: the staged dv positions and rewritten
-    * images reference them), and (b) no added file holds a row the
-    * update predicate MATCHES — the rebased commit serializes AFTER
-    * the interleaver, so a matching row it never evaluated would
-    * break write-serializability (Delta's conflict checker refuses
-    * the same shape). The added files are the interleaver's churn, so
-    * the predicate check is one bounded scan of exactly those files,
-    * never the table. A disjoint interleave costs this writer one
-    * tiny manifest rewrite instead of re-running the whole body.
-    */
-  private def rebaseUpdateWhere(spark: SparkSession, root: String,
-      readV: Long, m: VMeta, pred: Column,
-      schema: org.apache.spark.sql.types.StructType,
-      freshRel: Seq[String], dvRel: String,
-      canRetry: () => Boolean): Option[Long] = {
-    while (true) {
-      val v2 = latestVersion(spark, root) match {
-        case Some(x) if x > readV => x
-        case _ => return None
-      }
-      val m2 = versionMeta(spark, root, v2)
-      val compatible = !m2.tombstone && m2.parts == m.parts &&
-        m2.bucket == m.bucket && m2.colmap == m.colmap &&
-        m2.constraints == m.constraints && m2.schemaDdl == m.schemaDdl &&
-        m2.dv == m.dv
-      if (!compatible) return None
-      val rels2 = relFilesOf(spark, root, m2)
-      val relsRead = relFilesOf(spark, root, m).toSet
-      if (!relsRead.forall(rels2.toSet)) return None
-      val added = rels2.filterNot(relsRead)
-      if (added.nonEmpty) {
-        val addedAbs = added.map(rel => new Path(root, rel).toString)
-        val hits = spark.read.schema(schema).parquet(addedAbs: _*)
-          .filter(coalesce(pred, lit(false))).limit(1).count()
-        if (hits > 0) return None
-      }
-      val man2 = writeManifest(spark, root, rels2 ++ freshRel)
-      if (tryPublish(spark, root, v2 + 1,
-          manBody(v2 + 1, man2, m2.nRows, None, m.schemaDdl, Some(dvRel),
-            m.constraints, m.parts, m.bucket))) {
-        rebases.incrementAndGet()
-        return Some(v2 + 1)
-      }
-      fs(spark, new Path(root, man2)).delete(new Path(root, man2), false)
-      // exhaustion surfaces as None so the CALLER cleans its staged
-      // artifacts before refusing — a throw from here would strand them
-      if (!canRetry()) return None
-    }
-    None // unreachable
   }
 
   // --- copy-on-write writers: append / merge / deleteRange ---
@@ -2349,14 +2319,12 @@ object Snapshots {
                               copyRef: Option[String] = None): Long = {
     import org.apache.spark.sql.types.StructType
     // ONE metadata read resolves the partition layout (it must be
-    // known before the data write) AND seeds the first loop
-    // iteration — retries re-read. A racing full-replace that
-    // changes the layout only costs the fresh files their
-    // path-pruning precision — the planner keeps files without the
-    // `k=v` segment conservatively.
-    var cached: Option[(Long, VMeta)] = latestVersion(spark, root)
+    // known before the data write) AND seeds the first attempt —
+    // retries re-read. A racing full-replace that changes the layout
+    // only costs the fresh files their path-pruning precision — the
+    // planner keeps files without the `k=v` segment conservatively.
+    val cached: Option[(Long, VMeta)] = latestVersion(spark, root)
       .map(v => (v, versionMeta(spark, root, v)))
-    cached.foreach(c => requireLive(c._2, root, "append"))
     val tableParts = cached.map(_._2.parts).getOrElse(Nil)
     val tableBucket = cached.flatMap(_._2.bucket)
     // column mapping: the batch arrives under LOGICAL names and the
@@ -2390,40 +2358,18 @@ object Snapshots {
       case _ => dfPhys0
     }
     val physStatsCols = statsCols.map(tableMap.physicalOf)
-    val (freshDir, freshRows) =
+    // written ONCE, by the first attempt whose checks pass; a lost
+    // race hands it to the next attempt, which only rebuilds the
+    // manifest
+    lazy val (freshDir, freshRows) =
       writeDataDir(spark, dfPhys, root, tableParts, tableBucket)
-    val freshRel = listFreshRel(spark, root, freshDir)
+    lazy val freshRel = listFreshRel(spark, root, freshDir)
     var checked = checkedCons
-    var attempts = 0
-    while (true) {
-      // tag monotonicity enforced at the write boundary (see
-      // [[requireTagMonotonic]]) — re-checked on every retry, so the
-      // readVersion+1 publish makes check-then-commit atomic
-      try requireTagMonotonic(spark, root, tag, "append")
-      catch {
-        case e: Throwable =>
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          throw e
-      }
-      // first iteration reuses the pre-write read; retries re-read.
-      // A concurrent DROP TABLE landing mid-retry refuses HERE (with
-      // the staged dir cleaned up) — not deep inside the schema path
-      // under a misleading verb name
-      val cur = cached.orElse(latestVersion(spark, root)
-        .map(v => (v, versionMeta(spark, root, v))))
-      cached = None
-      cur.map(_._2).filter(_.tombstone).foreach { mm =>
-        fs(spark, new Path(root, freshDir))
-          .delete(new Path(root, freshDir), true)
-        requireLive(mm, root, "append")
-      }
-      val prior = cur.map(_._1)
-      val (oldRel, oldRows, priorMeta) = cur match {
-        case Some((_, m)) =>
-          (relFilesOf(spark, root, m), m.nRows, Some(m))
-        case None => (Seq.empty[String], 0L, None)
-      }
+    // tag monotonicity is re-checked by every attempt (see
+    // [[requireTagMonotonic]]), so the readVersion+1 publish makes
+    // check-then-commit atomic
+    occPublish[Long](spark, root, "append", tag, cached) { at =>
+      val priorMeta = at.meta
       // bucket-layout drift is a CORRECTNESS hazard, not a precision
       // loss like partition drift: the fresh files were shaped and
       // tagged for the layout read before the write, and publishing
@@ -2431,25 +2377,16 @@ object Snapshots {
       // rows (a silently wrong shuffle-free join later). Refuse
       // loudly — layout redefinition is a rare admin full-replace.
       val bucketNow = priorMeta.flatMap(_.bucket)
-      if (bucketNow != tableBucket) {
-        fs(spark, new Path(root, freshDir))
-          .delete(new Path(root, freshDir), true)
+      if (bucketNow != tableBucket)
         throw new IllegalStateException(
           s"$root: bucket layout changed concurrently " +
             s"($tableBucket -> $bucketNow) — retry the append")
-      }
       // constraint-set drift check (see doc): a concurrently added
       // constraint re-validates the batch before it can be recorded
       val consNow = priorMeta.map(_.constraints).getOrElse(Nil)
       if (consNow != checked) {
-        val added = consNow.filterNot(checked.contains)
-        try requireSatisfied(df, added, "append batch (constraint added concurrently)")
-        catch {
-          case e: Throwable =>
-            fs(spark, new Path(root, freshDir))
-              .delete(new Path(root, freshDir), true)
-            throw e
-        }
+        requireSatisfied(df, consNow.filterNot(checked.contains),
+          "append batch (constraint added concurrently)")
         checked = consNow
       }
       // schema-in-the-log: the new version records its schema so
@@ -2458,12 +2395,9 @@ object Snapshots {
       // nulls); shared columns must keep their type; without
       // `evolveSchema`, the batch must match the table exactly —
       // silent column drift in a daily feed is a bug, not evolution.
-      val oldSchema = priorMeta.map(m =>
-        m.schemaDdl.map(StructType.fromDDL)
-          .getOrElse(read(spark, root, prior).schema))
-      // a schema-drift refusal cleans the staged dir like the bucket/
-      // constraint refusals above — a refused append leaves no orphan
-      val newSchema = try oldSchema match {
+      val newSchema = priorMeta.map(m =>
+          m.schemaDdl.map(StructType.fromDDL)
+            .getOrElse(read(spark, root, Some(at.v)).schema)) match {
         case None => dfPhys.schema
         case Some(old) if !tableMap.isIdentity =>
           // mapped table: the batch must match the LOGICAL schema —
@@ -2500,47 +2434,24 @@ object Snapshots {
               s"append batch schema ${dfPhys.columns.toSet} != table $oldNames — " +
                 "pass evolveSchema=true to ADD columns")
           StructType(old.fields ++ extra)
-      } catch {
-        case e: Throwable =>
-          fs(spark, new Path(root, freshDir))
-            .delete(new Path(root, freshDir), true)
-          throw e
       }
-      val ddl = loggedDdl(newSchema)
+      val oldRel = priorMeta.map(relFilesOf(spark, root, _)).getOrElse(Nil)
       val man = writeManifest(spark, root, oldRel ++ freshRel)
-      val v = prior.getOrElse(0L) + 1
       // a prior deletion vector rides forward by reference: its
       // (file, pos) keys address files this append carries verbatim,
       // and the fresh files have no deleted positions
-      if (tryPublish(spark, root, v,
-          manBody(v, man, oldRows + freshRows, tag, Some(ddl),
-            priorMeta.flatMap(_.dv), consNow,
-            priorMeta.map(_.parts).getOrElse(Nil), bucketNow,
-            priorMeta.map(_.colmap).getOrElse(ColMap()),
-            copyRef = copyRef))) {
-        if (statsCols.nonEmpty) {
-          // one aggregation job over JUST the fresh dir; the prior
-          // rows come from the memoized snapshot and the union is a
-          // driver concat (previously a distributed unionByName write
-          // with its own schema-inference + pad-anti-join stage jobs)
-          val (fSchema, fRows) = StatsIndex.buildRows(spark,
-            new Path(root, freshDir).toString, physStatsCols)
-          val (schema, rows) = priorMeta match {
-            case Some(m) =>
-              val (pSchema, pRows) = statsRowsOf(spark, root, m, physStatsCols)
-              unionStatsRows(pSchema, pRows, fSchema, fRows)
-            case None => (fSchema, fRows)
-          }
-          writeStatsRows(spark, root,
-            versionMeta(spark, root, v).layoutId, schema, rows)
-        }
-        return v
-      }
-      fs(spark, new Path(root, man)).delete(new Path(root, man), false)
-      attempts += 1
-      require(attempts < 100, s"$root: append lost $attempts commit races")
+      val meta = VMeta(None, Some(man),
+        priorMeta.map(_.nRows).getOrElse(0L) + freshRows, tag,
+        Some(loggedDdl(newSchema)), priorMeta.flatMap(_.dv), consNow,
+        priorMeta.map(_.parts).getOrElse(Nil), bucketNow,
+        priorMeta.map(_.colmap).getOrElse(ColMap()), copyRef = copyRef)
+      Right(Publish(meta, nv => {
+          if (statsCols.nonEmpty)
+            writeIndex(spark, root, meta, physStatsCols, freshDir, freshRel,
+              priorMeta.map(statsRowsOf(spark, root, _, physStatsCols)))
+          nv
+        }, staged = Seq(man), retained = Seq(freshDir)))
     }
-    -1L // unreachable
   }
 
   /** What a COPY INTO did: the committed version (unchanged when
@@ -2770,26 +2681,24 @@ object Snapshots {
 
   /** The one copy-on-write commit of the manifest-delta writers
     * ([[merge]], [[mergeClauses]], [[deleteRange]],
-    * [[replacePartition]]/[[replacePartitions]], [[optimize]]). Per
-    * attempt it resolves the latest version (the FIRST attempt may
-    * reuse a caller-probed `metaHint` — one metadata read per
-    * statement; a stale hint just loses the publish race), re-checks
-    * the tag, and lets the writer `plan` against it (`Left` = nothing
-    * to do: that receipt returns as-is). Then, on the driver, the
-    * version splits into the carried complement and the removed files;
-    * the deletion vector's entries for carried files ride into a new
-    * vector (their positions stay valid — the files are carried
-    * verbatim; removed files' entries die with them); the rewrite
-    * stages into a fresh dir; and the new version — carried files BY
-    * REFERENCE plus the fresh dir — publishes at EXACTLY
+    * [[replacePartition]]/[[replacePartitions]], [[optimize]]), one
+    * [[occPublish]] plan: the read, tag and attempt budget are the
+    * routine's (the FIRST attempt may reuse a caller-probed
+    * `metaHint`). The writer `plans` against the version read (`Left`
+    * = nothing to do: that receipt returns as-is). Then, on the
+    * driver, the version splits into the carried complement and the
+    * removed files; the deletion vector's entries for carried files
+    * ride into a new vector (their positions stay valid — the files
+    * are carried verbatim; removed files' entries die with them); the
+    * rewrite stages into a fresh dir; and the new version — carried
+    * files BY REFERENCE plus the fresh dir — publishes at EXACTLY
     * readVersion+1.
     *
     * The skipping index on `statsCols` (logical names) rides the same
-    * commit: carried files' rows verbatim plus one build over the
-    * fresh dir. Row accounting derives from it too (stats `n_rows` is
-    * per-file PHYSICAL, so the carried vector's size is subtracted).
-    * Only a compaction may run without one — its row count is the
-    * read version's.
+    * commit ([[writeIndex]]). Row accounting derives from it too
+    * (stats `n_rows` is per-file PHYSICAL, so the carried vector's
+    * size is subtracted). Only a compaction may run without one — its
+    * row count is the read version's.
     *
     * A lost race first tries the generalized OCC re-base
     * ([[rebaseDelta]]): a delta provably disjoint from the interleaved
@@ -2800,147 +2709,107 @@ object Snapshots {
   private def commitDelta(spark: SparkSession, root: String, what: String,
       statsCols: Seq[String], tag: Option[Long] = None,
       metaHint: Option[(Long, VMeta)] = None)
-      (plan: CowBase => Either[CowResult, CowPlan]): CowResult = {
-    var attempts = 0
-    def lostRace(): Unit = {
-      attempts += 1
-      require(attempts < 100, s"$root: $what lost $attempts commit races")
-    }
-    def remove(rel: String): Unit =
-      fs(spark, new Path(root, rel)).delete(new Path(root, rel), true)
-    var hintLeft = metaHint
-    while (true) {
-      val (v, m) = hintLeft match {
-        case Some(h) => hintLeft = None; h
-        case None =>
-          val lv = latestVersion(spark, root).getOrElse(
-            throw new IllegalArgumentException(
-              s"$root has no committed versions"))
-          (lv, versionMeta(spark, root, lv))
-      }
-      requireLive(m, root, what)
-      requireTagMonotonic(spark, root, tag, what)
+      (plan: CowBase => Either[CowResult, CowPlan]): CowResult =
+    occPublish[CowResult](spark, root, what, tag, metaHint) { at =>
+      val (v, m) = (at.v, at.m)
       // the files and the index carry PHYSICAL names; every writer but
       // a compaction refuses a column-mapped table in its plan
       val physStatsCols = statsCols.map(m.colmap.physicalOf)
       val base = new CowBase(spark, root, v, m, physStatsCols)
-      val p = plan(base) match {
-        case Left(noop) => return noop
-        case Right(p) => p
-      }
-      val removed = (p.rewritten ++ p.dropped).toSet
-      val carried = base.rels.filterNot(removed).sorted
-      val indexed = physStatsCols.nonEmpty || !p.compaction
-      val carriedStats =
-        if (!indexed) None
-        else {
-          val (schema, rows) = base.statsRows
-          val keep = carried.toSet
-          val fIdx = schema.fieldIndex("file")
-          Some((schema,
-            rows.filter(r => keep(relOf(spark, root, r.getString(fIdx))))))
-        }
-      val dvPrior = dvOf(spark, root, m)
-      val (dvCarry, dvCarryN) =
-        if (m.dv.isEmpty || carried.isEmpty || p.compaction) (None, 0L)
-        else {
-          val relDf = spark.createDataset(carried)(
-            org.apache.spark.sql.Encoders.STRING).toDF("file")
-          val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
-          val n = kept.count()
-          if (n == 0L) (None, 0L)
+      plan(base).map { p =>
+        val removed = (p.rewritten ++ p.dropped).toSet
+        val carried = base.rels.filterNot(removed).sorted
+        val indexed = physStatsCols.nonEmpty || !p.compaction
+        val carriedStats =
+          if (!indexed) None
           else {
-            val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
-            kept.write.mode("overwrite").parquet(new Path(root, dvRel).toString)
-            (Some(dvRel), n)
+            val (schema, rows) = base.statsRows
+            val keep = carried.toSet
+            val fIdx = schema.fieldIndex("file")
+            Some((schema,
+              rows.filter(r => keep(relOf(spark, root, r.getString(fIdx))))))
           }
-        }
-      val (freshDir, freshRows) =
-        try writeDataDir(spark, p.rewrite(dvPrior), root, m.parts, m.bucket)
-        finally p.release()
-      val freshRel = listFreshRel(spark, root, freshDir)
-      val rows = carriedStats match {
-        case Some((schema, cRows)) if !p.compaction =>
-          val nIdx = schema.fieldIndex("n_rows")
-          cRows.iterator.map(_.getLong(nIdx)).sum - dvCarryN + freshRows
-        case _ => m.nRows
-      }
-      // the new version's index: carried rows verbatim + one build over
-      // the fresh dir. A prior index built for DIFFERENT columns cannot
-      // union with the fresh build — the whole layout rebuilds instead
-      // of failing after the publish landed.
-      def index(nv: Long, layoutId: String,
-                carriedIdx: (org.apache.spark.sql.types.StructType,
-                             Array[org.apache.spark.sql.Row])): Unit = {
-        val (cSchema, cRows) = carriedIdx
-        if (cSchema.fieldNames.toSet != statsColumns(physStatsCols))
-          ensureStats(spark, root, versionMeta(spark, root, nv), physStatsCols)
-        else {
-          val (schema, all) =
-            if (freshRel.isEmpty) carriedIdx
+        val dvPrior = dvOf(spark, root, m)
+        val (dvCarry, dvCarryN) =
+          if (m.dv.isEmpty || carried.isEmpty || p.compaction) (None, 0L)
+          else {
+            val relDf = spark.createDataset(carried)(
+              org.apache.spark.sql.Encoders.STRING).toDF("file")
+            val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
+            val n = kept.count()
+            if (n == 0L) (None, 0L)
             else {
-              val (fSchema, fRows) = StatsIndex.buildRows(spark,
-                new Path(root, freshDir).toString, physStatsCols)
-              unionStatsRows(cSchema, cRows, fSchema, fRows)
+              val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
+              kept.write.mode("overwrite").parquet(new Path(root, dvRel).toString)
+              (Some(dvRel), n)
             }
-          writeStatsRows(spark, root, layoutId, schema, all)
+          }
+        val (freshDir, freshRows) =
+          try writeDataDir(spark, p.rewrite(dvPrior), root, m.parts, m.bucket)
+          finally p.release()
+        val freshRel = listFreshRel(spark, root, freshDir)
+        val rows = carriedStats match {
+          case Some((schema, cRows)) if !p.compaction =>
+            val nIdx = schema.fieldIndex("n_rows")
+            cRows.iterator.map(_.getLong(nIdx)).sum - dvCarryN + freshRows
+          case _ => m.nRows
         }
+        // a re-base composes rows additively (the file sets are
+        // disjoint) and reuses the written vector carry as-is
+        def publish(meta: VMeta, nCarried: Int,
+                    stats: Option[(org.apache.spark.sql.types.StructType,
+                                   Array[org.apache.spark.sql.Row])])
+            : Publish[CowResult] =
+          Publish(meta, nv => {
+              stats.foreach(c => writeIndex(spark, root, meta, physStatsCols,
+                freshDir, freshRel, Some(c)))
+              CowResult(nv, p.rewritten.size, removed.size + nCarried, freshRows)
+            },
+            staged = meta.manifest.toSeq, retained = freshDir +: dvCarry.toSeq,
+            rebase = Some(m2 => rebaseDelta(spark, root, m, base.rels,
+                removed, m2, carriedStats.map(_ => physStatsCols),
+                p.addedConflicts)
+              .map { case (carried2, stats2) =>
+                publish(VMeta(None, Some(writeManifest(spark, root,
+                    carried2 ++ freshRel)), m2.nRows + rows - m.nRows, tag,
+                    p.ddl, dvCarry, m.constraints, m.parts, m.bucket, m.colmap),
+                  carried2.size, stats2)
+              }))
+        publish(
+          if (p.compaction && carried.isEmpty)
+            VMeta(Some(freshDir), None, rows, tag, p.ddl, None,
+              m.constraints, m.parts, m.bucket, m.colmap)
+          else VMeta(None, Some(writeManifest(spark, root, carried ++ freshRel)),
+            rows, tag, p.ddl, dvCarry, m.constraints, m.parts, m.bucket,
+            m.colmap),
+          carried.size, carriedStats)
       }
-      val man =
-        if (p.compaction && carried.isEmpty) None
-        else Some(writeManifest(spark, root, carried ++ freshRel))
-      val body = man match {
-        case None => dirBody(v + 1, freshDir, rows, tag, p.ddl, None,
-          m.constraints, m.parts, m.bucket, m.colmap)
-        case Some(mf) => manBody(v + 1, mf, rows, tag, p.ddl, dvCarry,
-          m.constraints, m.parts, m.bucket, m.colmap)
-      }
-      fireRaceHook()
-      if (tryPublish(spark, root, v + 1, body)) {
-        carriedStats.foreach(index(v + 1,
-          man.map(manifestLayoutId).getOrElse(freshDir.stripPrefix("data/")), _))
-        return CowResult(v + 1, p.rewritten.size, removed.size + carried.size,
-          freshRows)
-      }
-      man.foreach(remove)
-      lostRace()
-      // re-base while the interleaved state admits it: manifest = new
-      // latest's files − removed + fresh, rows compose additively (the
-      // file sets are disjoint), the written vector carry rides as-is
-      val rowsDelta = rows - m.nRows
-      def rebase() = rebaseDelta(spark, root, v, m, removed,
-        carriedStats.map(_ => physStatsCols), p.addedConflicts)
-      var based = rebase()
-      while (based.nonEmpty) {
-        val (v2, carried2, stats2, rows2) = based.get
-        // a refusal cleans the staged orphans before it propagates
-        try requireTagMonotonic(spark, root, tag, what)
-        catch {
-          case e: Throwable =>
-            remove(freshDir)
-            dvCarry.foreach(remove)
-            throw e
-        }
-        val man2 = writeManifest(spark, root, carried2 ++ freshRel)
-        if (tryPublish(spark, root, v2 + 1,
-            manBody(v2 + 1, man2, rows2 + rowsDelta, tag, p.ddl, dvCarry,
-              m.constraints, m.parts, m.bucket, m.colmap))) {
-          stats2.foreach(index(v2 + 1, manifestLayoutId(man2), _))
-          rebases.incrementAndGet()
-          return CowResult(v2 + 1, p.rewritten.size,
-            removed.size + carried2.size, freshRows)
-        }
-        remove(man2)
-        lostRace()
-        based = rebase()
-      }
-      // conflict shape — full re-stage against the new latest
-      remove(freshDir)
-      dvCarry.foreach(remove)
-      restages.incrementAndGet()
     }
-    throw new IllegalStateException("unreachable")
-  }
+
+  /** Write the skipping index of a just-published version `nm` on
+    * `physStatsCols`: the carried files' rows verbatim plus one build
+    * over the fresh dir. A carried index built for DIFFERENT columns
+    * cannot union with the fresh build — the whole layout rebuilds
+    * instead of failing after the publish landed.
+    */
+  private def writeIndex(spark: SparkSession, root: String, nm: VMeta,
+      physStatsCols: Seq[String], freshDir: String, freshRel: Seq[String],
+      carried: Option[(org.apache.spark.sql.types.StructType,
+                       Array[org.apache.spark.sql.Row])]): Unit =
+    if (carried.exists(_._1.fieldNames.toSet != statsColumns(physStatsCols)))
+      ensureStats(spark, root, nm, physStatsCols)
+    else {
+      val (schema, all) = carried match {
+        case Some(c) if freshRel.isEmpty => c
+        case _ =>
+          val (fSchema, fRows) = StatsIndex.buildRows(spark,
+            new Path(root, freshDir).toString, physStatsCols)
+          carried.fold((fSchema, fRows)) { case (cSchema, cRows) =>
+            unionStatsRows(cSchema, cRows, fSchema, fRows)
+          }
+      }
+      writeStatsRows(spark, root, nm.layoutId, schema, all)
+    }
 
   /** Merge file targeting, shared by [[merge]] and [[mergeClauses]]:
     * files whose [min,max] on `key` can contain SOME source key, plus
@@ -3106,9 +2975,6 @@ object Snapshots {
         addedKeyOverlap(k, key)))
     } finally if (!preCached) updRaw.unpersist()
   }
-
-  private def fireRaceHook(): Unit =
-    racePublishHook.foreach { h => racePublishHook = None; h() }
 
   /** One `WHEN MATCHED` clause of a [[mergeClauses]] call, evaluated
     * in declaration order (SQL MERGE semantics: first clause whose
@@ -4095,96 +3961,99 @@ object Snapshots {
         dropped = droppedRel))
     }
 
-  /** Test-observable OCC counters across every manifest-delta
-    * writer's conflict handling ([[commitDelta]]): `rebases` counts
-    * lost races published by a manifest re-base, `restages` those
-    * that discarded the staged write and re-planned.
+  /** Test-observable OCC counters across the conflict handling of
+    * the re-basing writers ([[commitDelta]]'s and [[updateWhere]],
+    * counted by [[occPublish]]): `rebases` counts lost races published
+    * by a manifest re-base, `restages` those that discarded the staged
+    * write and re-planned.
     */
   private[graft] val rebases = new java.util.concurrent.atomic.AtomicLong
   private[graft] val restages = new java.util.concurrent.atomic.AtomicLong
 
-  /** GENERALIZED OCC RE-BASE for the manifest-delta writers: a loser
-    * of the readVersion+1 publish race whose delta is provably
-    * DISJOINT from the interleaved commits re-bases its manifest onto
-    * the new latest — one tiny manifest rewrite — instead of deleting
-    * its staged data and re-running the whole body. The commonest real
-    * collision (a nightly OPTIMIZE racing a streaming append) then
-    * costs both writers one staged write each, exactly Delta's
-    * conflict-checker outcome for file-disjoint commits.
+  /** GENERALIZED OCC RE-BASE for the manifest-delta writers
+    * ([[commitDelta]]'s and [[updateWhere]]): a loser of the
+    * readVersion+1 publish race whose delta is provably DISJOINT from
+    * the interleaved commits re-bases its manifest onto the new latest
+    * `m2` — one tiny manifest rewrite — instead of deleting its staged
+    * data and re-running the whole body. The commonest real collision
+    * (a nightly OPTIMIZE racing a streaming append) then costs both
+    * writers one staged write each, exactly Delta's conflict-checker
+    * outcome for file-disjoint commits.
     *
     * A re-base is sound iff ALL of:
-    *  - the new latest is METADATA-COMPATIBLE: schema, partition and
-    *    bucket layouts, column mapping, constraints, and the deletion
-    *    vector reference are unchanged (a changed vector could hide
-    *    deletes on files we carry; an interleaved writer that touched
-    *    the vector always changes its reference);
-    *  - every file OUR delta removes is still present in the new
-    *    latest (the interleaver did not rewrite what we read and
-    *    replaced);
-    *  - the files the interleaver ADDED provably cannot interact
-    *    with our delta — `addedConflicts` inspects their stats rows
+    *  - the new latest is live and METADATA-COMPATIBLE: schema,
+    *    partition and bucket layouts, column mapping, constraints, and
+    *    the deletion vector reference are unchanged (a changed vector
+    *    could hide deletes on files we carry; an interleaved writer
+    *    that touched the vector always changes its reference);
+    *  - every file OUR delta `owns` of the read version `readRels` —
+    *    the files it replaces, or ([[updateWhere]]) the files its new
+    *    vector addresses — is still present in the new latest (the
+    *    interleaver did not rewrite what we depend on);
+    *  - the files the interleaver ADDED provably cannot interact with
+    *    our delta — `addedConflicts` inspects them as a frame with a
+    *    `file` column plus, for an indexed writer, their stats rows
     *    (for a keyed merge: no added file's key range covers any of
-    *    our source keys, the same min/max logic as file targeting,
-    *    so a concurrent insert of OUR key re-stages instead of
-    *    silently duplicating; for a partition overwrite: every added
-    *    file is path-proven of another partition; for a layout-only
-    *    optimize: never);
+    *    our source keys, the same min/max logic as file targeting, so
+    *    a concurrent insert of OUR key re-stages instead of silently
+    *    duplicating; for a partition overwrite: every added file is
+    *    path-proven of another partition; for an update: no added row
+    *    matches its predicate; for a layout-only optimize: never);
     *  - when the writer maintains a skipping index (`physStatsCols`
     *    set), the new latest HAS one, covering its files with the same
     *    columns (its carried rows transplant verbatim; anything else
     *    re-stages and self-heals as today). Only a compaction, whose
     *    rewrite never conflicts, runs without one.
     *
-    * Returns (newLatest, carriedRel, carried stats rows, newLatestRows);
-    * the caller publishes at newLatest+1 with `carriedRel ++ its own
-    * freshRel`, row count `newLatestRows + its own rows delta` (the
-    * deltas compose because the file sets are disjoint), and its
-    * ALREADY-WRITTEN dv carry (still exact: the vector is unchanged
-    * and the interleaver's fresh files carry no entries). None →
-    * fall back to the always-correct full re-stage. The index checks
-    * run on the driver over the collected rows — no Spark job beyond
+    * Returns the new latest's files outside the owned set and their
+    * stats rows; the caller publishes them beside its own files, with
+    * row count `m2.nRows + its own rows delta` (the deltas compose
+    * because the file sets are disjoint), and its ALREADY-WRITTEN
+    * vector (still exact: the vector reference is unchanged and the
+    * interleaver's fresh files carry no entries). None → fall back to
+    * the always-correct full re-stage. The index checks run on the
+    * driver over the collected rows — no Spark job beyond
     * `addedConflicts`' own.
     */
   private def rebaseDelta(spark: SparkSession, root: String,
-                          readV: Long, m: VMeta,
-                          removedRel: Set[String],
+                          m: VMeta, readRels: Seq[String],
+                          owned: Set[String], m2: VMeta,
                           physStatsCols: Option[Seq[String]],
                           addedConflicts: DataFrame => Boolean)
-      : Option[(Long, Seq[String],
+      : Option[(Seq[String],
                 Option[(org.apache.spark.sql.types.StructType,
-                        Array[org.apache.spark.sql.Row])], Long)] = {
-    val v2 = latestVersion(spark, root) match {
-      case Some(v) if v > readV => v
-      case _ => return None
-    }
-    val m2 = versionMeta(spark, root, v2)
-    val compatible = m2.parts == m.parts && m2.bucket == m.bucket &&
-      m2.colmap == m.colmap && m2.constraints == m.constraints &&
-      m2.schemaDdl == m.schemaDdl && m2.dv == m.dv
+                        Array[org.apache.spark.sql.Row])])] = {
+    val compatible = !m2.tombstone && m2.parts == m.parts &&
+      m2.bucket == m.bucket && m2.colmap == m.colmap &&
+      m2.constraints == m.constraints && m2.schemaDdl == m.schemaDdl &&
+      m2.dv == m.dv
     if (!compatible) return None
     val rels2 = relFilesOf(spark, root, m2)
-    if (!removedRel.forall(rels2.toSet)) return None
-    val carried2 = rels2.filterNot(removedRel).sorted
-    val carriedStats = physStatsCols match {
-      case None => None
+    if (!owned.forall(rels2.toSet)) return None
+    val others2 = rels2.filterNot(owned).sorted
+    val readSet = readRels.toSet
+    val otherStats = physStatsCols match {
+      case None =>
+        val added = rels2.filterNot(readSet).map(rel => new Path(root, rel).toString)
+        if (addedConflicts(spark.createDataset(added)(
+            org.apache.spark.sql.Encoders.STRING).toDF("file"))) return None
+        None
       case Some(cols) => persistedStats(spark, root, m2.layoutId) match {
         case Some((schema, rows)) if schema.fieldNames.toSet == statsColumns(cols) =>
           val fIdx = schema.fieldIndex("file")
           val byRel = rows.map(r => (relOf(spark, root, r.getString(fIdx)), r))
           if (byRel.iterator.map(_._1).toSet.size != rels2.size) return None
-          // the interleaver's ADDED files (not in our read version) face
-          // the conflict predicate; null-stats files stay conservative
-          // (the predicate sees them and must conflict)
-          val read = relFilesOf(spark, root, m).toSet
-          val added = byRel.collect { case (rel, r) if !read(rel) => r }
+          // null-stats added files stay conservative (the predicate
+          // sees them and must conflict)
+          val added = byRel.collect { case (rel, r) if !readSet(rel) => r }
           if (addedConflicts(localStats(spark, schema, added.toIndexedSeq)))
             return None
-          val keep = carried2.toSet
+          val keep = others2.toSet
           Some((schema, byRel.collect { case (rel, r) if keep(rel) => r }))
         case _ => return None
       }
     }
-    Some((v2, carried2, carriedStats, m2.nRows))
+    Some((others2, otherStats))
   }
 
   /** [[rebaseDelta]] conflict predicate for a KEYED merge: an added
@@ -4200,14 +4069,6 @@ object Snapshots {
           (col("__mk") >= col(s"min_$key") && col("__mk") <= col(s"max_$key")),
         "left_semi")
       .limit(1).count() > 0
-
-  /** Spec-only deterministic race injection: runs ONCE, at the next
-    * publish point that fires it — every manifest-delta writer's
-    * ([[commitDelta]]: after the staging write, before the first
-    * publish attempt), [[create]]'s, [[cloneShallow]]'s and
-    * [[updateWhere]]'s.
-    */
-  private[graft] var racePublishHook: Option[() => Unit] = None
 
   // --- per-version data skipping (Snapshots × StatsIndex) ---
 

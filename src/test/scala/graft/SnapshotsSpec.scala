@@ -2645,4 +2645,99 @@ class SnapshotsSpec extends SparkSpec {
       "only the unmatched originals sync; both matched id-20 rows keep")
     assert(after2.filter(col("id") === 20L).count() === 2L)
   }
+
+  test("append with stats columns unlike the prior index rebuilds it instead of failing after the publish") {
+    val root = tmpDir("snap_app_statscols")
+    // x is range-clustered per file, so an index on x can prune
+    Snapshots.commitWithStats(spark,
+      (1L to 400L).map(i => (i, i * 1.0)).toDF("id", "x")
+        .repartitionByRange(4, col("x")).sortWithinPartitions("x"),
+      root, Seq("id"))
+    val v2 = Snapshots.append(spark,
+      (401L to 420L).map(i => (i, i * 1.0)).toDF("id", "x"), root,
+      statsCols = Seq("x"))
+    assert(v2 === 2L)
+    val idx = Snapshots.statsTableOf(spark, root, v2)
+    assert(idx.exists(_.columns.contains("min_x")),
+      "the new version must carry an index on the requested column")
+    val (pr, nRead, nTotal) = Snapshots.readPruned(spark, root, Some(v2),
+      "x", Some(lit(10.0)), Some(lit(20.0)))
+    assert(pr.count() === 11L)
+    assert(nRead > 0 && nRead < nTotal, s"read $nRead of $nTotal")
+  }
+
+  test("lost races of the metadata-only and merge-on-read writers re-plan at the new latest") {
+    val root = tmpDir("snap_occ_meta")
+    Snapshots.commit(spark,
+      (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x"), root)
+    val racer = (id: Long) => Snapshots.racePublishHook = Some(() =>
+      Snapshots.append(spark, Seq((id, id * 1.0)).toDF("id", "x"), root))
+    // ADD CONSTRAINT validated v1, then a violating row lands at v2:
+    // the retry re-validates at v2 and refuses — a constraint is never
+    // recorded over rows nobody checked
+    racer(-1L)
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.addConstraint(spark, root, "pos", "id > 0")
+    }
+    assert(e.getMessage.contains("1 existing rows violate"))
+    assert(Snapshots.latestVersion(spark, root) === Some(2L))
+    assert(Snapshots.constraintsOf(spark, root).isEmpty)
+    assert(Snapshots.addConstraint(spark, root, "gt", "id > -5") === 3L)
+    // DROP CONSTRAINT republishes the read version's metadata: after
+    // a lost race it must carry the racer's files, not the stale list
+    racer(20L)
+    assert(Snapshots.dropConstraint(spark, root, "gt") === 5L)
+    assert(Snapshots.constraintsOf(spark, root).isEmpty)
+    assert(Snapshots.read(spark, root).filter(col("id") === 20L).count() === 1L)
+    // a merge-on-read delete re-runs at the new latest; the loser's
+    // staged vector is deleted, only the winner's stays
+    racer(21L)
+    val d = Snapshots.deleteWhere(spark, root, col("id") === 1L)
+    assert(d.version === 7L && d.rowsDeleted === 1L && d.dvRowsTotal === 1L)
+    assert(new java.io.File(s"$root/dv").listFiles().count(_.isDirectory) === 1,
+      "the lost attempt's staged vector must be deleted")
+    val afterDelete = Snapshots.read(spark, root)
+    assert(afterDelete.count() === 12L)
+    assert(afterDelete.filter(col("id") === 21L).count() === 1L)
+    // RENAME COLUMN likewise lands above the racer with its rows
+    racer(22L)
+    assert(Snapshots.renameColumn(spark, root, "x", "y") === 9L)
+    val renamed = Snapshots.read(spark, root)
+    assert(renamed.columns.toSeq === Seq("id", "y"))
+    assert(renamed.count() === 13L)
+    assert(renamed.filter(col("id") === 22L).head().getDouble(1) === 22.0)
+    // a same-type ALTER COLUMN TYPE is a no-op: the current version,
+    // no publish (the armed race hook is never reached)
+    racer(23L)
+    assert(Snapshots.alterColumnType(spark, root, "id", "bigint") === 9L)
+    assert(Snapshots.racePublishHook.nonEmpty)
+    Snapshots.racePublishHook = None
+    assert(Snapshots.latestVersion(spark, root) === Some(9L))
+  }
+
+  test("vacuum reclaims a crashed clone's stale stats temp dir; dry run lists it") {
+    val src = tmpDir("snap_statstmp_src")
+    val dst = tmpDir("snap_statstmp_dst")
+    Snapshots.commitWithStats(spark, df(5), src, Seq("id"))
+    Snapshots.cloneShallow(spark, src, dst)
+    val layout = Snapshots.versionMeta(spark, dst, 1L).layoutId
+    // the crash shape: the stats copy landed in `<layout>__tmp` and
+    // the swap never ran; aged past the orphan grace
+    val tmp = new java.io.File(s"$dst/_stats/${layout}__tmp")
+    assert(tmp.mkdirs())
+    java.nio.file.Files.write(new java.io.File(tmp, "part-0.parquet").toPath,
+      Array[Byte](1, 2, 3))
+    val grace = 3600L * 1000
+    assert(tmp.setLastModified(System.currentTimeMillis() - 2 * grace))
+    val planned = Snapshots.vacuumDryRun(spark, dst, keepLast = 1,
+      orphanGraceMs = grace).as[(String, String)].collect().toSet
+    assert(planned.contains(("stats", s"_stats/${layout}__tmp")), planned)
+    assert(!planned.exists(_._2 == s"_stats/$layout"), planned)
+    assert(tmp.exists(), "a dry run mutates nothing")
+    Snapshots.vacuum(spark, dst, keepLast = 1, orphanGraceMs = grace)
+    assert(!tmp.exists())
+    assert(new java.io.File(s"$dst/_stats/$layout").exists(),
+      "the live layout's index survives")
+    assert(Snapshots.read(spark, dst).count() === 5L)
+  }
 }
