@@ -56,6 +56,16 @@ object Snapshots {
 
   private val VFILE = """v(\d{8})\.json""".r
 
+  private val VBODY = """"version":(\d+)""".r
+
+  /** The version number a version file's BODY declares — the one
+    * parser of that field for readers that tail the log's contents
+    * (the streaming harnesses' version-log stream) instead of listing
+    * its file names.
+    */
+  private[graft] def versionOfBody(body: String): Option[Long] =
+    VBODY.findFirstMatchIn(body).map(_.group(1).toLong)
+
   /** All committed versions, ascending (a directory listing of the
     * version log — no file contents read).
     */

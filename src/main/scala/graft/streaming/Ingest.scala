@@ -3,7 +3,7 @@ package graft.streaming
 import graft.etl.{Load, ParquetUpsertSink, StatsIndex, Transform, UpsertSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** S1/S7/A7: streaming ingest — the Spark-native form of the
@@ -22,6 +22,13 @@ import org.apache.spark.sql.types.StructType
   * archives, per the documented intent (`README.md:92`).
   * `Trigger.AvailableNow` preserves the batch-cron operational model
   * while keeping the pipeline restartable and incremental.
+  *
+  * Every foreachBatch harness runs through ONE AvailableNow runner,
+  * [[drain]] (only [[curateDocsAvailableNow]]'s parquet file sink,
+  * whose `_spark_metadata` log is its exactly-once mechanism, starts
+  * its own), reads through [[fileStream]] and writes through
+  * [[writeOwnPartition]]; [[tailVersions]] and [[applyVersions]]
+  * are the one version-log tail and derived-table loop.
   */
 object Ingest {
 
@@ -35,6 +42,99 @@ object Ingest {
 
   /** Business key for upsert idempotency (FIXTURES.md §A). */
   val factKeys: Seq[String] = Seq("order_id", "items", "payment_time")
+
+  /** JSON-lines document schema (curation, drift, feature store). */
+  private val docDDL = "doc_id LONG, text STRING, lang STRING"
+
+  /** The one AvailableNow runner: run `stream` under `checkpointDir`
+    * with `foreachBatch(each)` until every available input is done.
+    * Checkpointed offsets plus an idempotent `each` are exactly-once.
+    */
+  private def drain(stream: DataFrame, checkpointDir: String,
+                    outputMode: String = "append")
+                   (each: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(each)
+      .start()
+      .awaitTermination()
+
+  /** A file-stream reader over `schemaDDL` (file streams never
+    * infer), bounded to `maxFiles` files per micro-batch when asked.
+    */
+  private def fileStream(spark: SparkSession, schemaDDL: String,
+                         maxFiles: Option[Int] = None): DataStreamReader = {
+    val reader = spark.readStream.schema(schemaDDL)
+    maxFiles.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader
+  }
+
+  /** The replay-idempotent sink write: `df` lands in its own
+    * `<partCol>=<id>` directory under `path` by DYNAMIC partition
+    * overwrite, so a replay rewrites exactly that directory.
+    */
+  private def writeOwnPartition(df: DataFrame, partCol: String, id: Long,
+                                path: String): Unit =
+    df.withColumn(partCol, lit(id))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol)
+      .parquet(path)
+
+  /** The snapshot VERSION LOG as a stream (Delta's streaming source
+    * tails its transaction log the same way): `each` gets a
+    * micro-batch's new versions ascending plus the log's committed
+    * set, listed once per micro-batch. The `collect()` is one tiny
+    * version-file line per commit, never data rows.
+    */
+  private def tailVersions(spark: SparkSession, root: String,
+                           checkpointDir: String, maxFiles: Option[Int])
+                          (each: (Seq[Long], Set[Long]) => Unit): Unit = {
+    val snap = graft.etl.Snapshots
+    drain(fileStream(spark, "value STRING", maxFiles).text(s"$root/_versions"),
+      checkpointDir) { (batch, _) =>
+      val vs = batch.collect().toSeq
+        .flatMap(r => snap.versionOfBody(r.getString(0))).sorted
+      each(vs, snap.versions(spark, root).toSet)
+    }
+  }
+
+  /** The loop of the harnesses that maintain a DERIVED snapshot
+    * table tagged with the SOURCE version: a version the tag covers
+    * is skipped (replays and fresh-checkpoint reruns are no-ops), the
+    * first into an EMPTY destination runs `bootstrap(v)`, and every
+    * later one runs `applyChange(v)` — or refuses when v-1 is gone
+    * from the log, since re-snapshotting onto a populated destination
+    * would duplicate its rows. Tag and emptiness are read once per
+    * micro-batch, then tracked locally.
+    */
+  private def applyVersions(spark: SparkSession, srcRoot: String,
+                            checkpointDir: String, dstRoot: String,
+                            maxFiles: Option[Int])
+                           (bootstrap: Long => Unit)
+                           (applyChange: Long => Unit): Unit = {
+    val snap = graft.etl.Snapshots
+    tailVersions(spark, srcRoot, checkpointDir, maxFiles) { (vs, committed) =>
+      var last = snap.lastTag(spark, dstRoot)
+      var empty = snap.latestVersion(spark, dstRoot).isEmpty
+      vs.foreach { v =>
+        if (!last.exists(_ >= v)) {
+          if (empty) bootstrap(v)
+          else {
+            require(committed.contains(v - 1),
+              s"$srcRoot: version ${v - 1} is gone from the log " +
+                s"(vacuumed?) — cannot derive version $v's changes; " +
+                "re-bootstrap the derived table")
+            applyChange(v)
+          }
+          last = Some(v)
+          empty = false
+        }
+      }
+    }
+  }
 
   /** Run one AvailableNow pass over the staging folder: transform
     * each micro-batch (E2), route clean/quarantine (F5), upsert the
@@ -56,24 +156,27 @@ object Ingest {
   def ingestAvailableNowTo(spark: SparkSession, stagingDir: String,
                            archiveDir: String, checkpointDir: String,
                            factSink: UpsertSink, quarantinePath: String,
-                           dim: DataFrame): Unit = {
-    val stream = spark.readStream
-      .schema(rawSchema)
-      .option("header", "true")
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", archiveDir)
-      .csv(stagingDir)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val split = Transform.run(batch, dim)
-        factSink.upsert(split.clean, factKeys)
-        Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
-      }
-      .start()
-    query.awaitTermination()
-  }
+                           dim: DataFrame): Unit =
+    routeToSinks(
+      fileStream(spark, rawSchema.toDDL)
+        .option("header", "true")
+        .option("cleanSource", "archive")
+        .option("sourceArchiveDir", archiveDir)
+        .csv(stagingDir),
+      checkpointDir, factSink, quarantinePath, dim)(identity)
+
+  /** The CSV and workbook ingest loop: `parse` a micro-batch into raw
+    * report rows, transform (E2), route (F5), upsert (S4), quarantine (S5).
+    */
+  private def routeToSinks(stream: DataFrame, checkpointDir: String,
+                           factSink: UpsertSink, quarantinePath: String,
+                           dim: DataFrame)
+                          (parse: DataFrame => DataFrame): Unit =
+    drain(stream, checkpointDir) { (batch, batchId) =>
+      val split = Transform.run(parse(batch), dim)
+      factSink.upsert(split.clean, factKeys)
+      Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
+    }
 
   /** Event time must be an INSTANT: a watermark on TIMESTAMP_NTZ is
     * rejected outright (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), and
@@ -105,11 +208,9 @@ object Ingest {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total"))
 
-  /** The binaryFile source's fixed schema (file streams require an
-    * explicit schema).
-    */
-  private val binaryFileSchema: StructType = StructType.fromDDL(
-    "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+  /** The binaryFile source's fixed schema. */
+  private val binaryFileDDL =
+    "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"
 
   /** S1/S3/S7 for WORKBOOKS, streaming form: Spark has no xlsx file
     * stream, but `binaryFile` is a regular file-stream format — so
@@ -124,28 +225,19 @@ object Ingest {
                              archiveDir: String, checkpointDir: String,
                              factSink: UpsertSink, quarantinePath: String,
                              dim: DataFrame,
-                             sheetName: String = "Paid order list"): Unit = {
-    val stream = spark.readStream
-      .format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.xlsx")
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", archiveDir)
-      .load(stagingDir)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val raw = graft.sources.Xlsx
-          .sheetsOf(batch, sheetName, rawSchema, skipCorrupt = true)
-          .drop("_src_file")
-        val split = Transform.run(raw, dim)
-        factSink.upsert(split.clean, factKeys)
-        Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
-      }
-      .start()
-    query.awaitTermination()
-  }
+                             sheetName: String = "Paid order list"): Unit =
+    routeToSinks(
+      fileStream(spark, binaryFileDDL)
+        .format("binaryFile")
+        .option("pathGlobFilter", "*.xlsx")
+        .option("cleanSource", "archive")
+        .option("sourceArchiveDir", archiveDir)
+        .load(stagingDir),
+      checkpointDir, factSink, quarantinePath, dim) { batch =>
+      graft.sources.Xlsx
+        .sheetsOf(batch, sheetName, rawSchema, skipCorrupt = true)
+        .drop("_src_file")
+    }
 
   /** One batch ingest pass through the pluggable sheet-source seam
     * (S3): read every staged sheet via `source` (CSV stand-in or the
@@ -260,8 +352,7 @@ object Ingest {
   def curateDocsAvailableNow(spark: SparkSession, stagingDir: String,
                              checkpointDir: String, outPath: String): Unit = {
     import graft.llm.{Pii, TextStats}
-    val schema = StructType.fromDDL("doc_id LONG, text STRING, lang STRING")
-    val curated = spark.readStream.schema(schema).json(stagingDir)
+    val curated = fileStream(spark, docDDL).json(stagingDir)
       .filter(TextStats.qualityScoreRaw(col("text")) >= 0.5)
       .withColumn("fp", TextStats.fingerprint(col("text")))
       .dropDuplicates("fp")
@@ -297,12 +388,9 @@ object Ingest {
     * oracle verifies. IngestSpec proves the final appended row
     * equals the batch `Drift.summary` over the same files.
     *
-    * Output idempotency: foreachBatch is at-least-once, so a retried
-    * batch would duplicate its summary row under a plain append. The
-    * sink therefore partitions by batch_id with DYNAMIC partition
-    * overwrite — a replayed batch rewrites exactly its own
-    * `batch_id=N` directory and no other, making the output
-    * exactly-once per batch_id end to end.
+    * Output idempotency: a retried batch would duplicate its summary
+    * row under a plain append, so each batch's row lands in its own
+    * `batch_id=N` directory ([[writeOwnPartition]]).
     */
   def driftMonitorAvailableNow(spark: SparkSession, stagingDir: String,
                                checkpointDir: String, refDocs: DataFrame,
@@ -311,28 +399,16 @@ object Ingest {
     import graft.llm.Drift
     val refCounts = Drift.sideCounts(refDocs, textCol, "a")
       .localCheckpoint(eager = true) // fixed side: evaluate once, reuse per batch
-    val schema = StructType.fromDDL("doc_id LONG, text STRING, lang STRING")
-    val reader = spark.readStream.schema(schema)
-    // bound files per micro-batch when asked (q137 uses 1 to force a
-    // genuine multi-batch accumulation through the state store)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val runningCounts = reader.json(stagingDir)
+    // q137 bounds files per micro-batch to 1 to force a genuine
+    // multi-batch accumulation through the state store
+    val runningCounts = fileStream(spark, docDDL, maxFilesPerTrigger)
+      .json(stagingDir)
       .select(explode(graft.llm.TextStats.tokens(col(textCol))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("b"))
-    val q = runningCounts.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Drift.summarize(Drift.deltasFromCounts(refCounts, batch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-      }
-      .start()
-    q.awaitTermination()
+    drain(runningCounts, checkpointDir, "complete") { (batch, batchId) =>
+      writeOwnPartition(Drift.summarize(Drift.deltasFromCounts(refCounts, batch)),
+        "batch_id", batchId, outPath)
+    }
   }
 
   /** STREAMING CDC apply behind a real AvailableNow run — the
@@ -342,9 +418,8 @@ object Ingest {
     * resolve per-key highest-version state through the checkpointed
     * state store across genuine micro-batches, and write each
     * batch's EMITTED changes (Update mode — only keys whose resolved
-    * state changed this batch) to a batch_id-partitioned parquet
-    * with dynamic partition overwrite, so a replayed batch rewrites
-    * exactly its own directory (exactly-once per batch_id).
+    * state changed this batch) to its own `batch_id=` directory
+    * ([[writeOwnPartition]]).
     *
     * Reading the result: cdcResolved emits a key only when its
     * state changes, so each key's HIGHEST-batch_id row is its final
@@ -357,23 +432,11 @@ object Ingest {
   def cdcResolvedAvailableNow(spark: SparkSession, stagingDir: String,
                               checkpointDir: String, outPath: String,
                               maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val schema = StructType.fromDDL("k LONG, ver LONG, op STRING, payload STRING")
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val resolved = Stateful.cdcResolved(reader.json(stagingDir))
-    val q = resolved.toDF().writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-      }
-      .start()
-    q.awaitTermination()
+    val resolved = Stateful.cdcResolved(
+      fileStream(spark, "k LONG, ver LONG, op STRING, payload STRING",
+        maxFilesPerTrigger).json(stagingDir))
+    drain(resolved.toDF(), checkpointDir, "update")(
+      (batch, batchId) => writeOwnPartition(batch, "batch_id", batchId, outPath))
   }
 
   /** Stage `slices` into `stagingDir` as one JSON file each, with
@@ -388,24 +451,8 @@ object Ingest {
     * One file per slice keeps the batch↔slice mapping exact.
     */
   def stageOrderedJson(spark: SparkSession, slices: Seq[DataFrame],
-                       stagingDir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(stagingDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(stagingDir))
-    val t0 = System.currentTimeMillis() - 3600L * 1000 * slices.size
-    slices.zipWithIndex.foreach { case (df, i) =>
-      val tmp = s"$stagingDir/__slice$i"
-      df.coalesce(1).write.mode("overwrite").json(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-      val dest = new org.apache.hadoop.fs.Path(stagingDir, f"slice$i%04d.json")
-      if (!fs.rename(part, dest))
-        throw new IllegalStateException(s"could not stage $dest")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dest, t0 + i * 60000L, -1)
-    }
-  }
+                       stagingDir: String): Unit =
+    stageOrdered(spark, slices, stagingDir, "json")
 
   /** [[stageOrderedJson]]'s parquet twin for BINARY-carrying rows
     * (JSON lines cannot stage image payloads): one parquet file per
@@ -413,18 +460,23 @@ object Ingest {
     * slices as separate micro-batches in order.
     */
   def stageOrderedParquet(spark: SparkSession, slices: Seq[DataFrame],
-                          stagingDir: String): Unit = {
+                          stagingDir: String): Unit =
+    stageOrdered(spark, slices, stagingDir, "parquet")
+
+  /** Both stagers' body: slice i is one `slice<NNNN>.<format>` file. */
+  private def stageOrdered(spark: SparkSession, slices: Seq[DataFrame],
+                           stagingDir: String, format: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(stagingDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(stagingDir))
     val t0 = System.currentTimeMillis() - 3600L * 1000 * slices.size
     slices.zipWithIndex.foreach { case (df, i) =>
       val tmp = s"$stagingDir/__slice$i"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      df.coalesce(1).write.mode("overwrite").format(format).save(tmp)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .map(_.getPath).find(_.getName.startsWith("part-"))
         .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
-      val dest = new org.apache.hadoop.fs.Path(stagingDir, f"slice$i%04d.parquet")
+      val dest = new org.apache.hadoop.fs.Path(stagingDir, f"slice$i%04d.$format")
       if (!fs.rename(part, dest))
         throw new IllegalStateException(s"could not stage $dest")
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
@@ -453,60 +505,45 @@ object Ingest {
   def phashDedupAvailableNow(spark: SparkSession, stagingDir: String,
                              checkpointDir: String, storeDir: String,
                              outDir: String,
-                             maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val schema = StructType.fromDDL("doc_id LONG, content BINARY")
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(stagingDir)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // cache the batch's signatures ONCE: the dedup join and the
-        // store append both consume them, and without the cache the
-        // second consumer would re-run the expensive ImageIO decode
-        // over the whole batch
-        val sigs = graft.sources.Multimodal
-          .decodeImages(batch, "content", grid = 8)
-          .select(col("doc_id"), col("ahash_hi"), col("ahash_lo"))
-          .persist()
-        // foreachBatch hands frames a CLONED session — barrier caches
-        // land under it, not the outer `spark`; mark both
-        val batchSession = batch.sparkSession
-        val cacheMark = graft.llm.BarrierCache.mark(spark)
-        val cacheMarkB = graft.llm.BarrierCache.mark(batchSession)
-        try {
-          val store =
-            if (Load.tableExists(spark, storeDir))
-              spark.read.parquet(storeDir)
-                .filter(col("batch_id") =!= batchId)
-                .select("doc_id", "ahash_hi", "ahash_lo")
-            else sigs.limit(0)
-          graft.llm.SigDedup.incrementalNearDups(
-              store, sigs, "doc_id", "ahash_hi", "ahash_lo", maxDist = 7)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(outDir)
-          sigs.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(storeDir)
-        } finally {
-          // a long-running stream must not accrete one batch's worth
-          // of cached plans per trigger: drop this batch's explicit
-          // cache AND the barrier caches SigDedup tracked for it —
-          // but ONLY this batch's (sweepSince): the session's shared
-          // caches outside the stream must survive the trigger
-          sigs.unpersist()
-          graft.llm.BarrierCache.sweepSince(spark, cacheMark)
-          if (!(batchSession eq spark))
-            graft.llm.BarrierCache.sweepSince(batchSession, cacheMarkB)
-        }
+                             maxFilesPerTrigger: Option[Int] = None): Unit =
+    drain(fileStream(spark, "doc_id LONG, content BINARY", maxFilesPerTrigger)
+      .parquet(stagingDir), checkpointDir) { (batch, batchId) =>
+      // cache the batch's signatures ONCE: the dedup join and the
+      // store append both consume them, and without the cache the
+      // second consumer would re-run the expensive ImageIO decode
+      // over the whole batch
+      val sigs = graft.sources.Multimodal
+        .decodeImages(batch, "content", grid = 8)
+        .select(col("doc_id"), col("ahash_hi"), col("ahash_lo"))
+        .persist()
+      // foreachBatch hands frames a CLONED session — barrier caches
+      // land under it, not the outer `spark`; mark both
+      val batchSession = batch.sparkSession
+      val cacheMark = graft.llm.BarrierCache.mark(spark)
+      val cacheMarkB = graft.llm.BarrierCache.mark(batchSession)
+      try {
+        val store =
+          if (Load.tableExists(spark, storeDir))
+            spark.read.parquet(storeDir)
+              .filter(col("batch_id") =!= batchId)
+              .select("doc_id", "ahash_hi", "ahash_lo")
+          else sigs.limit(0)
+        writeOwnPartition(graft.llm.SigDedup.incrementalNearDups(
+            store, sigs, "doc_id", "ahash_hi", "ahash_lo", maxDist = 7),
+          "batch_id", batchId, outDir)
+        writeOwnPartition(sigs, "batch_id", batchId, storeDir)
+      } finally {
+        // a long-running stream must not accrete one batch's worth
+        // of cached plans per trigger: drop this batch's explicit
+        // cache AND the barrier caches SigDedup tracked for it —
+        // but ONLY this batch's (sweepSince): the session's shared
+        // caches outside the stream must survive the trigger
+        sigs.unpersist()
+        graft.llm.BarrierCache.sweepSince(spark, cacheMark)
+        if (!(batchSession eq spark))
+          graft.llm.BarrierCache.sweepSince(batchSession, cacheMarkB)
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** STREAMING ingest that keeps its OWN data-skipping index fresh —
     * the production shape of [[graft.etl.StatsIndex]] maintenance:
@@ -530,31 +567,20 @@ object Ingest {
                                      checkpointDir: String, dataDir: String,
                                      statsDir: String, statsCols: Seq[String],
                                      schemaDDL: String,
-                                     maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.schema(StructType.fromDDL(schemaDDL))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(stagingDir)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(dataDir)
-        // a crash-replay OVERWRITES its partition (deleting files) —
-        // drop any cached listing before reconciling the stats
-        spark.catalog.refreshByPath(dataDir)
-        val updated =
-          if (Load.tableExists(spark, statsDir))
-            StatsIndex.updateFor(spark, dataDir,
-              Load.readTable(spark, statsDir), statsCols)
-          else StatsIndex.build(spark, dataDir, statsCols)
-        Load.writeAtomic(spark, updated, statsDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+                                     maxFilesPerTrigger: Option[Int] = None): Unit =
+    drain(fileStream(spark, schemaDDL, maxFilesPerTrigger).parquet(stagingDir),
+      checkpointDir) { (batch, batchId) =>
+      writeOwnPartition(batch, "batch_id", batchId, dataDir)
+      // a crash-replay OVERWRITES its partition (deleting files) —
+      // drop any cached listing before reconciling the stats
+      spark.catalog.refreshByPath(dataDir)
+      val updated =
+        if (Load.tableExists(spark, statsDir))
+          StatsIndex.updateFor(spark, dataDir,
+            Load.readTable(spark, statsDir), statsCols)
+        else StatsIndex.build(spark, dataDir, statsCols)
+      Load.writeAtomic(spark, updated, statsDir)
+    }
 
   /** STREAMING ingest that commits every micro-batch as a snapshot
     * VERSION — the exactly-once lakehouse sink ([[graft.etl.Snapshots]]
@@ -577,23 +603,13 @@ object Ingest {
   def snapshotIngestAvailableNow(spark: SparkSession, stagingDir: String,
                                  checkpointDir: String, tableRoot: String,
                                  statsCols: Seq[String], schemaDDL: String,
-                                 maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.schema(StructType.fromDDL(schemaDDL))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(stagingDir)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!graft.etl.Snapshots.lastTag(spark, tableRoot).exists(_ >= batchId)) {
-          graft.etl.Snapshots.append(spark, batch, tableRoot,
-            statsCols, tag = Some(batchId))
-          ()
-        }
-      }
-      .start()
-    q.awaitTermination()
-  }
+                                 maxFilesPerTrigger: Option[Int] = None): Unit =
+    drain(fileStream(spark, schemaDDL, maxFilesPerTrigger).parquet(stagingDir),
+      checkpointDir) { (batch, batchId) =>
+      if (!graft.etl.Snapshots.lastTag(spark, tableRoot).exists(_ >= batchId))
+        graft.etl.Snapshots.append(spark, batch, tableRoot,
+          statsCols, tag = Some(batchId))
+    }
 
   /** STREAMING CDC UPSERT into the snapshot tier — the lakehouse
     * form of the CDC-apply pipeline ([[graft.etl.Cdc]]'s semantics
@@ -616,30 +632,16 @@ object Ingest {
                                  checkpointDir: String, tableRoot: String,
                                  key: String, statsCols: Seq[String],
                                  schemaDDL: String,
-                                 maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.schema(StructType.fromDDL(schemaDDL))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(stagingDir)
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val snap = graft.etl.Snapshots
-        if (!snap.lastTag(spark, tableRoot).exists(_ >= batchId)) {
-          if (snap.latestVersion(spark, tableRoot).isEmpty) {
-            snap.append(spark, batch, tableRoot, statsCols,
-              tag = Some(batchId))
-            ()
-          } else {
-            snap.merge(spark, batch, tableRoot, key, statsCols,
-              tag = Some(batchId))
-            ()
-          }
-        }
+                                 maxFilesPerTrigger: Option[Int] = None): Unit =
+    drain(fileStream(spark, schemaDDL, maxFilesPerTrigger).parquet(stagingDir),
+      checkpointDir) { (batch, batchId) =>
+      val snap = graft.etl.Snapshots
+      if (!snap.lastTag(spark, tableRoot).exists(_ >= batchId)) {
+        if (snap.latestVersion(spark, tableRoot).isEmpty)
+          snap.append(spark, batch, tableRoot, statsCols, tag = Some(batchId))
+        else snap.merge(spark, batch, tableRoot, key, statsCols, tag = Some(batchId))
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** BRONZE→SILVER incremental table pipeline (the medallion step):
     * a DERIVED snapshot table maintained from a source snapshot
@@ -650,72 +652,50 @@ object Ingest {
     * table's idempotency tags record exactly which source commits it
     * embodies: crash replays and fresh-checkpoint reruns see their
     * source version already consumed and skip (exactly-once,
-    * checkpoint-loss-proof). Per-version cost is the churn
-    * (transform runs over feed rows only — the source table is never
-    * rescanned).
+    * checkpoint-loss-proof). The first version BOOTSTRAPS the
+    * destination from the full snapshot; after that, per-version
+    * cost is the churn (the source table is never rescanned).
     *
     * Contract: the source must be APPEND-ONLY over the consumed span
     * (the ingest steady state); a feed carrying deletes fails loudly
     * rather than silently dropping them — row-level source mutation
-    * needs the keyed feed and a merge-apply, a different pipeline.
+    * needs the keyed feed and a merge-apply, a different pipeline. A
+    * gap (source vacuumed past an unapplied version) refuses like
+    * [[snapshotCdcApplyAvailableNow]] ([[applyVersions]] is their one
+    * loop) instead of duplicating the destination's rows.
     */
   def snapshotPipelineAvailableNow(spark: SparkSession, srcRoot: String,
                                    checkpointDir: String, dstRoot: String,
                                    statsCols: Seq[String],
                                    transform: DataFrame => DataFrame,
                                    maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.text(s"$srcRoot/_versions")
-    val vre = """"version":(\d+)""".r
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val snap = graft.etl.Snapshots
-        val vs = batch.collect().toSeq
-          .flatMap(r => vre.findFirstMatchIn(r.getString(0)).map(_.group(1).toLong))
-          .sorted
-        // one log listing + one tag scan per micro-batch, not per
-        // version — the tag then advances locally with each append
-        val committed = snap.versions(spark, srcRoot).toSet
-        var last = snap.lastTag(spark, dstRoot)
-        vs.foreach { v =>
-          if (!last.exists(_ >= v)) {
-            val feed =
-              if (committed.contains(v - 1))
-                snap.changes(spark, srcRoot, v - 1, v).df
-              else snap.read(spark, srcRoot, Some(v))
-                .withColumn("_change_type", lit("insert"))
-            val feedC = feed.localCheckpoint()
-            require(feedC.filter(col("_change_type") =!= "insert").isEmpty,
-              s"$srcRoot version $v feed carries deletes — " +
-                "snapshotPipelineAvailableNow requires an append-only source")
-            snap.append(spark,
-              transform(feedC.filter(col("_change_type") === "insert")
-                .drop("_change_type")),
-              dstRoot, statsCols, tag = Some(v))
-            last = Some(v)
-          }
-        }
-      }
-      .start()
-    q.awaitTermination()
+    val snap = graft.etl.Snapshots
+    def land(v: Long, rows: DataFrame): Unit =
+      snap.append(spark, transform(rows), dstRoot, statsCols, tag = Some(v))
+    applyVersions(spark, srcRoot, checkpointDir, dstRoot, maxFilesPerTrigger)(
+      v => land(v, snap.read(spark, srcRoot, Some(v)))) { v =>
+      val feed = snap.changes(spark, srcRoot, v - 1, v).df.localCheckpoint()
+      require(feed.filter(col("_change_type") =!= "insert").isEmpty,
+        s"$srcRoot version $v feed carries deletes — " +
+          "snapshotPipelineAvailableNow requires an append-only source")
+      land(v, feed.filter(col("_change_type") === "insert").drop("_change_type"))
+    }
   }
 
   /** STREAMING CHANGE-FEED consumer — the read side of
     * [[snapshotIngestAvailableNow]]: the snapshot VERSION LOG ITSELF
-    * is the stream. Each commit publishes exactly one tiny
-    * `v<NNNNNNNN>.json`, so the file source tailing the log dir
-    * delivers new commits as micro-batches with checkpointed
-    * progress — no polling protocol beyond the one the log already
-    * provides (Delta's streaming source tails its transaction log
-    * the same way). Every version v in a batch emits its NET change
-    * frame ([[graft.etl.Snapshots.changes]](v-1, v) — file-granular,
+    * is the stream ([[tailVersions]]), with checkpointed progress — no
+    * polling protocol beyond the one the log already provides. Every
+    * version v in a batch emits its NET change frame
+    * ([[graft.etl.Snapshots.changes]](v-1, v) — file-granular,
     * churned-files-only) or, when v-1 is not in the log (consumer
     * attached mid-history / first commit), the full version as the
     * INITIAL SNAPSHOT, into `outDir/batch_v=<v>` with dynamic
     * partition overwrite.
+    *
+    * It keeps that re-snapshot, unlike [[applyVersions]]' gap refusal:
+    * it has no destination table whose tag could tell a first attach
+    * from a gap, and each version's output is its own partition.
     *
     * The VERSION number — not the stream's batch id — is the
     * idempotency key: per-version output is deterministic, so a
@@ -725,65 +705,42 @@ object Ingest {
     * union of all `batch_v` partitions ≡ initial snapshot +
     * changes(first, latest), however the commits were grouped into
     * micro-batches.
-    *
-    * The per-batch `collect()` is version-log LINES — one tiny JSON
-    * string per commit, metadata bounded by commit rate, never data
-    * rows.
     */
   def snapshotChangesAvailableNow(spark: SparkSession, tableRoot: String,
                                   checkpointDir: String, outDir: String,
                                   maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.text(s"$tableRoot/_versions")
-    val vre = """"version":(\d+)""".r
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val snap = graft.etl.Snapshots
-        val vs = batch.collect().toSeq
-          .flatMap(r => vre.findFirstMatchIn(r.getString(0)).map(_.group(1).toLong))
-          .sorted
-        // one log listing per micro-batch, not per version
-        val committed = snap.versions(spark, tableRoot).toSet
-        vs.foreach { v =>
-          val df =
-            if (committed.contains(v - 1))
-              snap.changes(spark, tableRoot, v - 1, v).df
-            else snap.read(spark, tableRoot, Some(v))
-              .withColumn("_change_type", lit("insert"))
-          df.withColumn("batch_v", lit(v))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_v")
-            .parquet(outDir)
-        }
+    val snap = graft.etl.Snapshots
+    tailVersions(spark, tableRoot, checkpointDir, maxFilesPerTrigger) { (vs, committed) =>
+      vs.foreach { v =>
+        val df =
+          if (committed.contains(v - 1))
+            snap.changes(spark, tableRoot, v - 1, v).df
+          else snap.read(spark, tableRoot, Some(v))
+            .withColumn("_change_type", lit("insert"))
+        writeOwnPartition(df, "batch_v", v, outDir)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** STREAMING KEYED CHANGE-FEED apply — Delta's `readChangeFeed` →
     * MERGE loop as ONE seam, maintaining a DERIVED snapshot table
     * from a source table's keyed changes: the source version log is
-    * the stream ([[snapshotChangesAvailableNow]]'s tailing shape, the
-    * checkpointed file source), each version's KEYED net change frame
-    * ([[graft.etl.Snapshots.changesKeyed]] — churn-only, the base
-    * table never rescanned) applies to the destination in ONE commit:
-    * postimages and inserts UPSERT, deletes DELETE — the explicit-
-    * clause MERGE with `_change_type` riding the source as a
+    * the stream ([[tailVersions]]), each version's KEYED net change
+    * frame ([[graft.etl.Snapshots.changesKeyed]] — churn-only, the
+    * base table never rescanned) applies to the destination in ONE
+    * commit: postimages and inserts UPSERT, deletes DELETE — the
+    * explicit-clause MERGE with `_change_type` riding the source as a
     * discriminator column (preimages drop; the postimage carries the
     * row's new state).
     *
     * Exactly-once: the SOURCE VERSION is the destination's
     * idempotency tag, so a crash replay, a checkpoint resume, or a
     * fresh-checkpoint rerun sees its version already applied and
-    * skips — the [[snapshotPipelineAvailableNow]] discipline, lifted
-    * from append-only feeds to full row-level mutation (the q180
-    * derived-store maintenance without the harness loop). The first
-    * consumed version BOOTSTRAPS the destination with the full
-    * snapshot.
+    * skips — the [[snapshotPipelineAvailableNow]] discipline
+    * ([[applyVersions]] is their one loop), lifted from append-only
+    * feeds to full row-level mutation (the q180 derived-store
+    * maintenance without the harness loop). The first consumed
+    * version BOOTSTRAPS the destination with the full snapshot.
     *
     * Contract: rows must be key-identified (the upsert contract —
     * non-null keys, unique per version; null-key churn cannot be
@@ -797,64 +754,28 @@ object Ingest {
                                    checkpointDir: String, dstRoot: String,
                                    key: String, statsCols: Seq[String],
                                    maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.text(s"$srcRoot/_versions")
-    val vre = """"version":(\d+)""".r
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val snap = graft.etl.Snapshots
-        // version-log LINES — one tiny JSON string per commit,
-        // metadata bounded by commit rate, never data rows
-        val vs = batch.collect().toSeq
-          .flatMap(r => vre.findFirstMatchIn(r.getString(0)).map(_.group(1).toLong))
-          .sorted
-        // one log listing + one tag read per micro-batch, not per
-        // version — the tag then advances locally with each apply
-        val committed = snap.versions(spark, srcRoot).toSet
-        var last = snap.lastTag(spark, dstRoot)
-        vs.foreach { v =>
-          if (!last.exists(_ >= v)) {
-            if (snap.latestVersion(spark, dstRoot).isEmpty) {
-              snap.append(spark, snap.read(spark, srcRoot, Some(v)),
-                dstRoot, statsCols, tag = Some(v))
-              ()
-            } else {
-              require(committed.contains(v - 1),
-                s"$srcRoot: version ${v - 1} is gone from the log " +
-                  s"(vacuumed?) — cannot derive version $v's changes; " +
-                  "re-bootstrap the derived table")
-              val feed = snap.changesKeyed(spark, srcRoot, v - 1, v, key).df
-                .filter(col("_change_type") =!= "update_preimage")
-                .persist()
-              try {
-                val dataCols = feed.columns.toSeq
-                  .filterNot(_ == "_change_type")
-                snap.mergeClauses(spark, feed, dstRoot, key, statsCols,
-                  "t", "u",
-                  matched = Seq(
-                    snap.MatchedDelete(
-                      Some(col("u._change_type") === "delete")),
-                    snap.MatchedUpdate(
-                      Some(col("u._change_type") =!= "delete"),
-                      Some(dataCols.filterNot(_ == key)
-                        .map(c => c -> col(s"u.$c"))))),
-                  insertCond = None,
-                  inserts = Seq(snap.InsertClause(
-                    Some(col("u._change_type") =!= "delete"),
-                    Some(dataCols.map(c => c -> col(s"u.$c"))))),
-                  tag = Some(v))
-                ()
-              } finally feed.unpersist()
-            }
-            last = Some(v)
-          }
-        }
-      }
-      .start()
-    q.awaitTermination()
+    val snap = graft.etl.Snapshots
+    applyVersions(spark, srcRoot, checkpointDir, dstRoot, maxFilesPerTrigger)(v =>
+      snap.append(spark, snap.read(spark, srcRoot, Some(v)),
+        dstRoot, statsCols, tag = Some(v))) { v =>
+      val feed = snap.changesKeyed(spark, srcRoot, v - 1, v, key).df
+        .filter(col("_change_type") =!= "update_preimage")
+        .persist()
+      try {
+        val dataCols = feed.columns.toSeq.filterNot(_ == "_change_type")
+        snap.mergeClauses(spark, feed, dstRoot, key, statsCols, "t", "u",
+          matched = Seq(
+            snap.MatchedDelete(Some(col("u._change_type") === "delete")),
+            snap.MatchedUpdate(
+              Some(col("u._change_type") =!= "delete"),
+              Some(dataCols.filterNot(_ == key).map(c => c -> col(s"u.$c"))))),
+          insertCond = None,
+          inserts = Seq(snap.InsertClause(
+            Some(col("u._change_type") =!= "delete"),
+            Some(dataCols.map(c => c -> col(s"u.$c"))))),
+          tag = Some(v))
+      } finally feed.unpersist()
+    }
   }
 
   /** STREAMING spike alerting behind a real AvailableNow run — the
@@ -862,9 +783,8 @@ object Ingest {
     * [[Stateful.spikeAlerts]]: watch a folder of JSON-lines reading
     * files (key, seq, cents), fold each key's exact integer baseline
     * (n, Σcents) through the checkpointed state store across genuine
-    * micro-batches, and write every batch's alerts to a
-    * batch_id-partitioned parquet with dynamic partition overwrite
-    * (exactly-once per batch_id, as the drift/CDC sinks).
+    * micro-batches, and write every batch's alerts to its own
+    * `batch_id=` directory ([[writeOwnPartition]]).
     *
     * Every reading emits exactly one alert in the batch that carried
     * it, so the union of all batch partitions IS the full alert
@@ -876,23 +796,11 @@ object Ingest {
                               checkpointDir: String, outPath: String,
                               factor: Double = 1.5,
                               maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val schema = StructType.fromDDL("key LONG, seq LONG, cents LONG")
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val alerts = Stateful.spikeAlerts(reader.json(stagingDir), factor)
-    val q = alerts.toDF().writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-      }
-      .start()
-    q.awaitTermination()
+    val alerts = Stateful.spikeAlerts(
+      fileStream(spark, "key LONG, seq LONG, cents LONG", maxFilesPerTrigger)
+        .json(stagingDir), factor)
+    drain(alerts.toDF(), checkpointDir, "update")(
+      (batch, batchId) => writeOwnPartition(batch, "batch_id", batchId, outPath))
   }
 
   /** STREAMING per-doc feature store behind a real AvailableNow run —
@@ -900,8 +808,7 @@ object Ingest {
     * of JSON-lines doc files (doc_id, text, lang), maintain the
     * fingerprint copy-count state across genuine micro-batches, and
     * write each batch's EMITTED feature rows (every doc of a group
-    * re-emits when its group grows) to a batch_id-partitioned parquet
-    * with dynamic partition overwrite.
+    * re-emits when its group grows) to its own `batch_id=` directory.
     *
     * Reading the result: each doc's HIGHEST-batch_id row is its
     * final feature row (emission order is irrelevant — the final
@@ -913,22 +820,9 @@ object Ingest {
   def docFeaturesAvailableNow(spark: SparkSession, stagingDir: String,
                               checkpointDir: String, outPath: String,
                               maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val schema = StructType.fromDDL("doc_id LONG, text STRING, lang STRING")
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val feats = Stateful.docFeatures(reader.json(stagingDir))
-    val q = feats.toDF().writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outPath)
-      }
-      .start()
-    q.awaitTermination()
+    val feats = Stateful.docFeatures(
+      fileStream(spark, docDDL, maxFilesPerTrigger).json(stagingDir))
+    drain(feats.toDF(), checkpointDir, "update")(
+      (batch, batchId) => writeOwnPartition(batch, "batch_id", batchId, outPath))
   }
 }

@@ -278,6 +278,55 @@ class IngestSpec extends SparkSpec {
     assert(finalState.find(_._1 == 2L).get._3 === "D")
   }
 
+  /** Run `harness` (two staged slices, one file per micro-batch), drop
+    * batch 1's commit entry and rerun it: batch 1 replays, commits
+    * again, and rewrites only its own `batch_id=1` partition, so the
+    * output is the same multiset of rows.
+    */
+  private def assertReplayRewritesOwnPartition(base: String)(harness: () => Unit): Unit = {
+    def rows() = spark.read.parquet(s"$base/out").collect().toSeq
+      .map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    harness()
+    val before = rows()
+    assert(spark.read.parquet(s"$base/out").select("batch_id").distinct()
+      .as[Long].collect().sorted === Array(0L, 1L))
+    val commits = Paths.get(base, "chk", "commits")
+    Files.delete(commits.resolve("1"))
+    Files.deleteIfExists(commits.resolve(".1.crc"))
+    harness()
+    assert(Files.exists(commits.resolve("1")), "the replayed batch must commit again")
+    assert(rows() === before)
+  }
+
+  test("spikeAlertsAvailableNow: a replayed micro-batch rewrites only its own partition") {
+    val base = tmpDir("graft_spike_replay")
+    // key 1's spike (5000) lands in batch 1 against batch 0's baseline
+    Ingest.stageOrderedJson(spark, Seq(
+      Seq((1L, 1L, 1000L), (1L, 2L, 1100L), (1L, 3L, 900L), (2L, 1L, 500L)),
+      Seq((1L, 4L, 5000L), (1L, 5L, 1000L), (2L, 2L, 600L))
+    ).map(_.toDF("key", "seq", "cents")), s"$base/staging")
+    assertReplayRewritesOwnPartition(base)(() =>
+      Ingest.spikeAlertsAvailableNow(spark, s"$base/staging", s"$base/chk",
+        s"$base/out", maxFilesPerTrigger = Some(1)))
+    val out = spark.read.parquet(s"$base/out")
+    assert(out.count() === 7L)
+    assert(out.filter(col("is_spike")).select("key", "seq").as[(Long, Long)]
+      .collect() === Array((1L, 4L)))
+  }
+
+  test("docFeaturesAvailableNow: a replayed micro-batch rewrites only its own partition") {
+    val base = tmpDir("graft_docfeat_replay")
+    val docs = Tables.documents(spark, sf).select("doc_id", "text", "lang")
+    Ingest.stageOrderedJson(spark,
+      Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 =!= 0)),
+      s"$base/staging")
+    assertReplayRewritesOwnPartition(base)(() =>
+      Ingest.docFeaturesAvailableNow(spark, s"$base/staging", s"$base/chk",
+        s"$base/out", maxFilesPerTrigger = Some(1)))
+    assert(spark.read.parquet(s"$base/out").select("doc_id").distinct().count() ===
+      docs.count())
+  }
+
   test("snapshotCdcApplyAvailableNow: keyed change feed maintains a derived table, resume + no double-apply") {
     import graft.etl.Snapshots
     val base = tmpDir("graft_cdc_apply")

@@ -1051,6 +1051,37 @@ class SnapshotsSpec extends SparkSpec {
     assert(chain(ex).exists(_.contains("append-only")))
   }
 
+  test("medallion pipeline and CDC apply refuse a vacuumed source gap instead of re-snapshotting") {
+    val base = tmpDir("snap_pipe_gap")
+    val src = s"$base/bronze"
+    Snapshots.append(spark, df(10), src)                              // v1
+    graft.streaming.Ingest.snapshotPipelineAvailableNow(spark, src,
+      s"$base/chkP", s"$base/silver", Seq("id"), identity)
+    graft.streaming.Ingest.snapshotCdcApplyAvailableNow(spark, src,
+      s"$base/chkC", s"$base/mirror", "id", Seq("id"))
+    Snapshots.append(spark, (11 to 15).map(i => (i.toLong, s"r$i")).toDF("id", "s"), src) // v2
+    Snapshots.append(spark, (16 to 20).map(i => (i.toLong, s"r$i")).toDF("id", "s"), src) // v3
+    // v2 leaves the log before either consumer applied it: v3's
+    // change from v2 cannot be derived, and a full v3 snapshot on top
+    // of the populated destination would duplicate ids 1-10
+    Snapshots.vacuum(spark, src, keepLast = 1)
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+    Seq(
+      "silver" -> (() => graft.streaming.Ingest.snapshotPipelineAvailableNow(spark,
+        src, s"$base/chkP", s"$base/silver", Seq("id"), identity)),
+      "mirror" -> (() => graft.streaming.Ingest.snapshotCdcApplyAvailableNow(spark,
+        src, s"$base/chkC", s"$base/mirror", "id", Seq("id")))
+    ).foreach { case (dst, run) =>
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+      assert(chain(ex).exists(_.contains("version 2 is gone from the log")), dst)
+      val rows = Snapshots.read(spark, s"$base/$dst")
+      assert(rows.count() === 10L, dst)
+      assert(rows.select("id").distinct().count() === 10L, dst)
+      assert(Snapshots.lastTag(spark, s"$base/$dst") === Some(1L), dst)
+    }
+  }
+
   test("streaming change feed attaches mid-history: initial snapshot, then deltas") {
     val root = tmpDir("snap_cdf_mid")
     val base = tmpDir("snap_cdf_mid_io")
