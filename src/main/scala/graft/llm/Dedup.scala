@@ -139,8 +139,8 @@ object Dedup {
 
   // --- MinHash + banded LSH ---
 
-  /** MinHash parameters: k seeded hash functions, banded b×r. */
-  /** 32 bands × 4 rows (not 16×8): at the 0.8 threshold the
+  /** MinHash parameters: k seeded hash functions, banded b×r.
+    * 32 bands × 4 rows (not 16×8): at the 0.8 threshold the
     * per-pair candidate-miss probability is (1−0.8⁴)³² ≈ 5e-8
     * versus ≈5% for 16×8 — the exact-verify stage prunes the extra
     * low-similarity candidates, so banding wider buys near-certain
@@ -170,50 +170,20 @@ object Dedup {
   }
 
   /** Banded-LSH candidate pairs: hash each band's signature slice to
-    * a bucket, explode (band, bucket), pair docs within a bucket.
-    * Never all-pairs: cost is Σ_bucket |bucket|².
-    *
-    * Signature-skew defense (the [[SigDedup.bandedNearDups]] shape):
-    * m IDENTICAL docs share the full MinHash signature — and hence
-    * every band's bucket — so a naive bucket self-join pays b·m²
-    * candidate rows for one boilerplate cluster. The bucket join
-    * here bands one REPRESENTATIVE per distinct signature (band
-    * occupancy bounded by distinct-signature count); same-signature
-    * groups emit their pairs once, through a single signature-keyed
-    * equi-join, linear in the emitted candidate count.
+    * a bucket and pair docs that share a (band, bucket) — never
+    * all-pairs. m IDENTICAL docs share the full signature and hence
+    * every bucket; [[SigDedup.bandedPairs]] bands one representative
+    * per distinct signature, so they cost C(m,2) output rows, not
+    * b·m² candidates. Output: (id_i, id_j), id_i < id_j.
     */
   def minhashCandidates(sigs: DataFrame, idCol: String, p: MinHashParams): DataFrame = {
-    // cache barrier: the group aggregate, the same-signature join and
-    // the band self-join all re-derive the signature frame otherwise
+    // cache barrier: the group aggregate and the member expansion
+    // both re-derive the signature frame otherwise
     val members = BarrierCache.track(sigs.select(col(idCol), col("sig")))
-    val groups = BarrierCache.track(
-      members.groupBy("sig").agg(min(col(idCol)).as("rep")))
-    val zero = members.select(col(idCol).as("id_i"), col("sig"))
-      .join(members.select(col(idCol).as("id_j"), col("sig")), Seq("sig"))
-      .filter(col("id_i") < col("id_j"))
-      .select("id_i", "id_j")
     val bandCols = array((0 until p.bands).map { bnd =>
       xxhash64(lit(bnd), slice(col("sig"), bnd * p.rowsPerBand + 1, p.rowsPerBand))
     }: _*)
-    val bands = BarrierCache.track(
-      groups.select(col("rep"), posexplode(bandCols))
-        .toDF("rep", "band", "bucket"))
-    val l = bands.toDF("rep_i", "band", "bucket")
-    val r = bands.toDF("rep_j", "band", "bucket")
-    val sigPairs = l.join(r, Seq("band", "bucket"))
-      .filter(col("rep_i") < col("rep_j"))
-      .select("rep_i", "rep_j").distinct()
-    // expand distinct-signature pairs to member pairs — each
-    // unordered pair lands exactly once (canonical sig pair, each
-    // member in exactly one signature group)
-    val repOf = members.join(groups, Seq("sig"))
-      .select(col(idCol), col("rep"))
-    val cross = sigPairs
-      .join(repOf.toDF("id_a", "rep_i"), Seq("rep_i"))
-      .join(repOf.toDF("id_b", "rep_j"), Seq("rep_j"))
-      .select(least(col("id_a"), col("id_b")).as("id_i"),
-        greatest(col("id_a"), col("id_b")).as("id_j"))
-    cross.unionByName(zero)
+    SigDedup.bandedPairs(members, idCol, Seq("sig"), _.withColumn("bands", bandCols))
   }
 
   /** MinHash near-dup: banded candidates, then exact Jaccard
@@ -270,40 +240,12 @@ object Dedup {
     val pScaled = if (bits == p.nBits) p else p.copy(nBits = bits)
     // candidate pairs on ids only (vectors through the bucket join
     // would dominate shuffle cost); vectors re-attached afterwards.
-    // Identical-vector defense (the SigDedup shape): m exact copies
-    // of one embedding share EVERY table's bucket, so a naive bucket
-    // self-join pays nTables·m² candidates for one duplicated asset.
-    // Bucket one REPRESENTATIVE per distinct vector and expand
-    // same-vector groups through a single vector-keyed join — the
-    // candidate SET is unchanged (copies share all buckets at any
-    // bit width), only its generation cost drops to linear.
-    val vecGroups = BarrierCache.track(
-      corpus.groupBy(col(vecCol)).agg(min(col(idCol)).as("rep")))
-    val repOf = BarrierCache.track(
-      corpus.select(col(idCol), col(vecCol))
-        .join(vecGroups, Seq(vecCol))
-        .select(col(idCol), col("rep")))
-    val b = BarrierCache.track(
-      Similarity.withBuckets(vecGroups.select(col("rep"), col(vecCol)),
-          vecCol, "__bk", pScaled)
-        .select(col("rep"), posexplode(col("__bk")))
-        .toDF("rep", "table", "bucket"))
-    val l = b.toDF("rep_i", "table", "bucket")
-    val r = b.toDF("rep_j", "table", "bucket")
-    val sigPairs = l.join(r, Seq("table", "bucket"))
-      .filter(col("rep_i") < col("rep_j"))
-      .select("rep_i", "rep_j")
-      .dropDuplicates("rep_i", "rep_j")
-    val cross = sigPairs
-      .join(repOf.toDF("id_a", "rep_i"), Seq("rep_i"))
-      .join(repOf.toDF("id_b", "rep_j"), Seq("rep_j"))
-      .select(least(col("id_a"), col("id_b")).as("id_i"),
-        greatest(col("id_a"), col("id_b")).as("id_j"))
-    val zero = repOf.toDF("id_i", "rep")
-      .join(repOf.toDF("id_j", "rep"), Seq("rep"))
-      .filter(col("id_i") < col("id_j"))
-      .select("id_i", "id_j")
-    val cands = cross.unionByName(zero)
+    // The vector itself is the signature: m exact copies share every
+    // table's bucket, and banding one representative per distinct
+    // vector leaves the candidate SET unchanged (copies share all
+    // buckets at any bit width) while its cost drops to linear.
+    val cands = SigDedup.bandedPairs(corpus.select(col(idCol), col(vecCol)),
+      idCol, Seq(vecCol), Similarity.withBuckets(_, vecCol, "bands", pScaled))
     val vec = corpus.select(col(idCol), col(vecCol),
       Similarity.qnorm2(col(vecCol)).as("n2"))
     cands
@@ -360,58 +302,30 @@ object Dedup {
     * the pigeonhole block trick: split the 64 bits into maxDist+1
     * blocks; any pair within maxDist must agree exactly on ≥1 block,
     * so candidates come from equi-joins on block values — never
-    * all-pairs.
-    *
-    * Signature-skew defense (the [[SigDedup.bandedNearDups]] shape):
-    * the block join bands one representative per DISTINCT signature,
-    * so band occupancy is bounded by the distinct-signature count —
-    * m boilerplate docs collapsing to one simhash contribute ONE row
-    * per band, not m² candidates per band. Identical-signature
-    * groups expand separately as dist-0 pairs through one equi-join
-    * keyed on the signature (linear in emitted pairs, paid once).
-    * `maxSigFreq` > 0 excludes signatures shared by more than that
-    * many docs from pairing entirely (the `maxDocFreq` analogue);
-    * excluded groups stay visible via a `groupBy(sig)` count.
+    * all-pairs. The join is [[SigDedup.bandedPairs]] (one
+    * representative per distinct signature; `maxSigFreq` > 0
+    * excludes signatures shared by more than that many docs, visible
+    * via a `groupBy(sig)` count). Output: (id_i, id_j, dist),
+    * id_i < id_j.
     */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxDist: Int = 3, maxSigFreq: Int = 0): DataFrame = {
+    require(maxDist >= 0 && maxDist <= 63,
+      s"maxDist=$maxDist: a 64-bit SimHash splits into maxDist+1 blocks of at least 1 bit")
     val nBlocks = maxDist + 1
     val width = 64 / nBlocks
+    // (1L << 64) is 1 on the JVM, so a full-width block takes the
+    // all-ones mask directly
+    val mask = if (width == 64) -1L else (1L << width) - 1
     // cache barrier: without it the simhash expression is inlined
     // into every block column and into the post-join hamming — the
     // signature would be recomputed per candidate pair.
     val withSig = BarrierCache.track(
       docs.select(col(idCol), simhash(col(textCol)).as("sig")))
-    val groupsAll = BarrierCache.track(
-      withSig.groupBy("sig").agg(min(col(idCol)).as("rep"), count(lit(1)).as("m")))
-    val groups =
-      if (maxSigFreq <= 0) groupsAll
-      else groupsAll.filter(col("m") <= maxSigFreq)
-    val members =
-      if (maxSigFreq <= 0) withSig
-      else withSig.join(groups.select("sig"), Seq("sig"), "left_semi")
-    val zero = members.select(col(idCol).as("id_i"), col("sig"))
-      .join(members.select(col(idCol).as("id_j"), col("sig")), Seq("sig"))
-      .filter(col("id_i") < col("id_j"))
-      .select(col("id_i"), col("id_j"), lit(0).as("dist"))
     val blockCols = array((0 until nBlocks).map { b =>
-      shiftrightunsigned(col("sig"), b * width).bitwiseAND(lit((1L << width) - 1))
+      shiftrightunsigned(col("sig"), b * width).bitwiseAND(lit(mask))
     }: _*)
-    val blocks = groups.select(col("rep"), col("sig"), posexplode(blockCols))
-      .toDF("rep", "sig", "block", "bval")
-    val l = blocks.toDF("rep_i", "sig_i", "block", "bval")
-    val r = blocks.toDF("rep_j", "sig_j", "block", "bval")
-    val sigPairs = l.join(r, Seq("block", "bval"))
-      .filter(col("rep_i") < col("rep_j"))
-      .select(col("sig_i"), col("sig_j"),
-        hamming(col("sig_i"), col("sig_j")).as("dist"))
-      .distinct()
-      .filter(col("dist") <= maxDist) // distinct sigs ⇒ dist ≥ 1
-    val cross = sigPairs
-      .join(members.select(col(idCol).as("id_a"), col("sig").as("sig_i")), Seq("sig_i"))
-      .join(members.select(col(idCol).as("id_b"), col("sig").as("sig_j")), Seq("sig_j"))
-      .select(least(col("id_a"), col("id_b")).as("id_i"),
-        greatest(col("id_a"), col("id_b")).as("id_j"), col("dist"))
-    cross.unionByName(zero)
+    SigDedup.bandedPairs(withSig, idCol, Seq("sig"), _.withColumn("bands", blockCols),
+      Some(maxDist), maxSigFreq)
   }
 }

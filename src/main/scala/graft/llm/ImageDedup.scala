@@ -3,39 +3,16 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Generic banded near-dup join over a 64-bit signature stored as
-  * two non-negative 32-bit halves — the shared engine behind the
-  * perceptual-fingerprint dedup family: images (aHash, q153), audio
-  * (zero-crossing fingerprint, q156) and video (time-average aHash,
-  * q157) all pair through this one implementation; only the hash
-  * columns differ.
-  *
-  * Scale shape — two layers, because real media corpora are wildly
-  * signature-skewed (solid-color thumbnails, letterboxed frames,
-  * silence-padded audio all collapse to ONE signature each):
-  *
-  *  1. ''Banding over DISTINCT signatures.'' The 64 bits split into
-  *     8 blocks of 8; any pair within Hamming distance ≤ 7 must
-  *     agree exactly on ≥ 1 block (pigeonhole), so CROSS-signature
-  *     candidates come from 8 equi-joins keyed on (block, value) —
-  *     one shuffle, never all-pairs — and the join operates on one
-  *     representative row per distinct signature, so band occupancy
-  *     is bounded by the DISTINCT-signature count: a million
-  *     byte-different files sharing one aHash contribute exactly ONE
-  *     row per band, not a million² candidate explosion.
-  *  2. ''Identical-signature groups expand separately as dist-0
-  *     pairs'' through one equi-join keyed on the signature itself —
-  *     linear in the emitted pair count (the output-inherent
-  *     minimum), paid once instead of once per band, with no
-  *     m²-row distinct() behind it.
-  *
-  * The optional `maxSigFreq` knob caps layer 2 the way
-  * [[Dedup.jaccardPairs]]'s `maxDocFreq` caps hot shingles: a
-  * signature shared by more than `maxSigFreq` rows is EXCLUDED from
-  * pairing entirely (its C(m,2) output rows are pure degenerate mass
-  * — "every blank thumbnail duplicates every other blank thumbnail"
-  * — while still quadratic in m). Never silent: callers read the
-  * excluded groups from [[sigGroupSizes]] and report them.
+/** The distinct-signature banded near-dup join ([[bandedPairs]]) —
+  * the one band engine behind every signature-keyed dedup operator:
+  * the perceptual-fingerprint family over a 64-bit signature stored
+  * as two non-negative 32-bit halves ([[bandedNearDups]]: images
+  * (aHash, q153), audio (zero-crossing fingerprint, q156) and video
+  * (time-average aHash, q157)), SimHash
+  * ([[Dedup.simhashNearDups]]), MinHash LSH candidates
+  * ([[Dedup.minhashCandidates]]) and embedding RP-LSH candidates
+  * ([[Dedup.embeddingNearDups]]). Callers supply only their band
+  * rows and, for the Hamming operators, the distance bound.
   */
 object SigDedup {
 
@@ -55,17 +32,25 @@ object SigDedup {
       df.filter(col(hiCol).isNotNull && col(loCol).isNotNull)
         .select(col(idCol), col(hiCol).as("hi"), col(loCol).as("lo")))
 
-  /** One row per (signature row, block): the 8 pigeonhole bands,
-    * 8 bits each — 4 from each half.
+  /** The 8 pigeonhole bands of an (hi, lo) signature, 8 bits each —
+    * 4 from each half.
     */
-  private def blocksOf(sig: DataFrame, idCol: String): DataFrame = {
-    val blockCols = array((0 until 8).map { b =>
-      val half = if (b < 4) col("lo") else col("hi")
-      shiftrightunsigned(half, (b % 4) * 8).bitwiseAND(lit(0xFFL))
-    }: _*)
+  private val blockCols: Column = array((0 until 8).map { b =>
+    val half = if (b < 4) col("lo") else col("hi")
+    shiftrightunsigned(half, (b % 4) * 8).bitwiseAND(lit(0xFFL))
+  }: _*)
+
+  /** One row per (signature row, block). */
+  private def blocksOf(sig: DataFrame, idCol: String): DataFrame =
     sig.select(col(idCol), col("hi"), col("lo"), posexplode(blockCols))
       .toDF(idCol, "hi", "lo", "block", "bval")
-  }
+
+  /** One row per distinct signature: (sigCols…, rep = min id, m =
+    * member count).
+    */
+  private def groupsOf(members: DataFrame, idCol: String, sigCols: Seq[String]): DataFrame =
+    members.groupBy(sigCols.map(col): _*)
+      .agg(min(col(idCol)).as("rep"), count(lit(1)).as("m"))
 
   /** One row per distinct signature: (hi, lo, rep = min id, m =
     * member count). The frame [[bandedNearDups]] bands over — and
@@ -74,15 +59,91 @@ object SigDedup {
     */
   def sigGroupSizes(signed: DataFrame, idCol: String,
                     hiCol: String, loCol: String): DataFrame =
-    sigOf(signed, idCol, hiCol, loCol)
-      .groupBy("hi", "lo")
-      .agg(min(col(idCol)).as("rep"), count(lit(1)).as("m"))
+    groupsOf(sigOf(signed, idCol, hiCol, loCol), idCol, Seq("hi", "lo"))
+
+  /** Distinct-signature banded pairs over `members` (idCol plus the
+    * `sigCols` signature columns). Output: (id_i, id_j) — plus
+    * `dist` when `maxDist` is set — with id_i < id_j, each unordered
+    * pair once.
+    *
+    * Scale shape — two layers, because real corpora are wildly
+    * signature-skewed (solid-color thumbnails, silence-padded audio,
+    * boilerplate documents and duplicated embeddings all collapse to
+    * ONE signature each):
+    *
+    *  1. ''Banding over DISTINCT signatures.'' `band` adds an array
+    *     column `bands` to one representative row (rep = min id) per
+    *     distinct signature; representatives sharing a (band index,
+    *     value) bucket pair through one equi-join, so band occupancy
+    *     is bounded by the DISTINCT-signature count: a million rows
+    *     sharing one signature contribute exactly ONE row per band,
+    *     not a million² candidate explosion. With `maxDist` set the
+    *     signature columns are 64-bit words, a representative pair
+    *     keeps its Hamming distance (Σ over the words) and pairs
+    *     beyond `maxDist` drop; distinct signatures are ≥ 1 apart.
+    *     Qualifying signature pairs expand to member pairs through
+    *     the representative — each unordered member pair lands once
+    *     (canonical representative pair, one group per member).
+    *  2. ''Identical-signature groups expand separately as dist-0
+    *     pairs'' through one equi-join keyed on the representative —
+    *     linear in the emitted pair count (the output-inherent
+    *     minimum), paid once instead of once per band.
+    *
+    * `maxSigFreq` > 0 caps layer 2 the way [[Dedup.jaccardPairs]]'s
+    * `maxDocFreq` caps hot shingles: a signature shared by more than
+    * `maxSigFreq` rows is EXCLUDED from pairing entirely (its C(m,2)
+    * output rows are pure degenerate mass — "every blank thumbnail
+    * duplicates every other blank thumbnail" — while still quadratic
+    * in m). Never silent: callers read the excluded groups from
+    * [[sigGroupSizes]] (or a `groupBy` of the signature) and report
+    * them.
+    */
+  private[llm] def bandedPairs(members: DataFrame, idCol: String, sigCols: Seq[String],
+                               band: DataFrame => DataFrame,
+                               maxDist: Option[Int] = None,
+                               maxSigFreq: Int = 0): DataFrame = {
+    val groupsAll = BarrierCache.track(groupsOf(members, idCol, sigCols))
+    val groups =
+      if (maxSigFreq <= 0) groupsAll
+      else groupsAll.filter(col("m") <= maxSigFreq)
+    // member → representative; the inner join drops capped groups
+    val repOf = BarrierCache.track(
+      members.join(groups, sigCols).select(col(idCol), col("rep")))
+    val carried = if (maxDist.isDefined) sigCols else Nil
+    val bands = BarrierCache.track(
+      band(groups.select(("rep" +: sigCols).map(col): _*))
+        .select((col("rep") +: carried.map(col)) :+ posexplode(col("bands")): _*)
+        .toDF(("rep" +: carried) ++ Seq("band", "bucket"): _*))
+    def side(s: String): DataFrame =
+      bands.toDF((s"rep_$s" +: carried.map(c => s"${c}_$s")) ++ Seq("band", "bucket"): _*)
+    val shared = side("i").join(side("j"), Seq("band", "bucket"))
+      .filter(col("rep_i") < col("rep_j"))
+    val repPairs = maxDist match {
+      case None => shared.select("rep_i", "rep_j").distinct()
+      case Some(d) =>
+        val hamming = sigCols.map(c => Dedup.hamming(col(s"${c}_i"), col(s"${c}_j")))
+        shared.select(col("rep_i"), col("rep_j"), hamming.reduce(_ + _).as("dist"))
+          .distinct().filter(col("dist") <= d)
+    }
+    val dist = if (maxDist.isDefined) Seq("dist") else Nil
+    val cross = repPairs
+      .join(repOf.toDF("id_a", "rep_i"), Seq("rep_i"))
+      .join(repOf.toDF("id_b", "rep_j"), Seq("rep_j"))
+      .select(Seq(least(col("id_a"), col("id_b")).as("id_i"),
+        greatest(col("id_a"), col("id_b")).as("id_j")) ++ dist.map(col): _*)
+    val zero = repOf.toDF("id_i", "rep")
+      .join(repOf.toDF("id_j", "rep"), Seq("rep"))
+      .filter(col("id_i") < col("id_j"))
+      .select(Seq(col("id_i"), col("id_j")) ++ dist.map(lit(0).as(_)): _*)
+    cross.unionByName(zero)
+  }
 
   /** Near-dup pairs with Hamming distance ≤ `maxDist` over the
     * 64-bit signature, exact by pigeonhole (requires maxDist ≤ 7:
     * 8 blocks of 8 bits ⇒ any qualifying pair shares a block).
     * Rows with null hashes (undecodable payloads) are skipped.
-    * Output: (id_i, id_j, dist), id_i < id_j, distinct.
+    * Output: (id_i, id_j, dist), id_i < id_j, distinct. The join is
+    * [[bandedPairs]].
     *
     * @param maxSigFreq when > 0, signatures shared by more than this
     *   many rows are excluded from pairing entirely (both their
@@ -96,44 +157,8 @@ object SigDedup {
                      maxDist: Int = 7, maxSigFreq: Int = 0): DataFrame = {
     require(maxDist >= 0 && maxDist <= 7,
       s"maxDist=$maxDist: 8×8-bit blocks guarantee recall only up to 7")
-    val sig = sigOf(signed, idCol, hiCol, loCol)
-    val groupsAll = BarrierCache.track(
-      sig.groupBy("hi", "lo").agg(min(col(idCol)).as("rep"), count(lit(1)).as("m")))
-    val groups =
-      if (maxSigFreq <= 0) groupsAll
-      else groupsAll.filter(col("m") <= maxSigFreq)
-    val members =
-      if (maxSigFreq <= 0) sig
-      else sig.join(groups.select("hi", "lo"), Seq("hi", "lo"), "left_semi")
-    // identical-signature pairs: ONE equi-join on the signature,
-    // linear in emitted pairs (never routed through the 8-band join)
-    val zero = members.select(col(idCol).as("id_i"), col("hi"), col("lo"))
-      .join(members.select(col(idCol).as("id_j"), col("hi"), col("lo")),
-        Seq("hi", "lo"))
-      .filter(col("id_i") < col("id_j"))
-      .select(col("id_i"), col("id_j"), lit(0).as("dist"))
-    // cross-signature candidates: band one representative per
-    // DISTINCT signature — occupancy bounded by distinct-sig count
-    val blocks = blocksOf(groups.select(col("rep"), col("hi"), col("lo")), "rep")
-    val l = blocks.toDF("rep_i", "hi_i", "lo_i", "block", "bval")
-    val r = blocks.toDF("rep_j", "hi_j", "lo_j", "block", "bval")
-    val sigPairs = l.join(r, Seq("block", "bval"))
-      .filter(col("rep_i") < col("rep_j"))
-      .select(col("hi_i"), col("lo_i"), col("hi_j"), col("lo_j"),
-        hamming(col("hi_i"), col("lo_i"), col("hi_j"), col("lo_j")).as("dist"))
-      .distinct()
-      .filter(col("dist") <= maxDist) // distinct sigs ⇒ dist ≥ 1
-    // expand qualifying signature pairs to member pairs — each
-    // unordered member pair lands exactly once (the signature pair is
-    // canonical and members belong to exactly one signature)
-    val cross = sigPairs
-      .join(members.select(col(idCol).as("id_a"),
-        col("hi").as("hi_i"), col("lo").as("lo_i")), Seq("hi_i", "lo_i"))
-      .join(members.select(col(idCol).as("id_b"),
-        col("hi").as("hi_j"), col("lo").as("lo_j")), Seq("hi_j", "lo_j"))
-      .select(least(col("id_a"), col("id_b")).as("id_i"),
-        greatest(col("id_a"), col("id_b")).as("id_j"), col("dist"))
-    cross.unionByName(zero)
+    bandedPairs(sigOf(signed, idCol, hiCol, loCol), idCol, Seq("hi", "lo"),
+      _.withColumn("bands", blockCols), Some(maxDist), maxSigFreq)
   }
 
   /** INCREMENTAL near-dup pairing for corpus appends — the daily
@@ -144,7 +169,7 @@ object SigDedup {
     * never existing×existing (that work was done when those rows
     * were themselves fresh). Candidate cost ∝ batch size × band
     * occupancy — and band occupancy is bounded by DISTINCT-signature
-    * counts here exactly as in [[bandedNearDups]], with
+    * counts here exactly as in [[bandedPairs]], with
     * identical-signature groups expanded separately through
     * fresh-side-keyed equi-joins (store-only groups are never even
     * scanned into the expansion, preserving the no-store×store
@@ -244,10 +269,6 @@ object SigDedup {
   * hash is 16 bytes/row; pairing is [[SigDedup.bandedNearDups]].
   */
 object ImageDedup {
-
-  /** Hamming distance between two (hi, lo) hash-half pairs. */
-  def hamming(hiA: Column, loA: Column, hiB: Column, loB: Column): Column =
-    SigDedup.hamming(hiA, loA, hiB, loB)
 
   /** Near-dup image pairs over the decode path's aHash halves —
     * see [[SigDedup.bandedNearDups]] for the contract.

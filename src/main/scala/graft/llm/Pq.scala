@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,9 +69,6 @@ object Pq {
                             shortlistCap: Int = 1024,
                             coarse: Option[Similarity.IvfParams] = None)
 
-  private def qi(x: Column): Column =
-    round(x.cast("double") * lit(1000000.0), 0).cast("long")
-
   /** Explode a vector frame into per-subspace rows:
     * (__id, sub, sv, svn2) — `m` rows per vector, each an exact
     * quantized-norm'd `dsub`-slice.
@@ -115,15 +112,13 @@ object Pq {
     // deterministic training sample: smallest-id-hash rows (a
     // distributed TakeOrdered — no global sort), barrier-cached
     // because init + every Lloyd round rescans it
-    val sample = BarrierCache.track(
-      corpus.select(col(idCol).as(idCol), col(vecCol).as(vecCol),
-          xxhash64(col(idCol)).as("__h"))
-        .orderBy("__h", idCol).limit(p.trainRows))
+    val sample = BarrierCache.track(Similarity.hashSample(
+      corpus.select(col(idCol), col(vecCol)), idCol, p.trainRows))
     val subs = BarrierCache.track(subRows(sample, idCol, vecCol, p.m, dsub))
     // init: the ksub smallest-hash sample vectors donate one
     // sub-centroid per subspace (one shared sample serves all m)
     var cents: Seq[(Int, Int, Seq[Float])] =
-      sample.orderBy("__h", idCol).limit(p.ksub)
+      Similarity.hashSample(sample, idCol, p.ksub)
         .select(col(idCol), col(vecCol))
         .collect().zipWithIndex.flatMap { case (r, c) =>
           val v = r.getSeq[Float](1)
@@ -133,36 +128,29 @@ object Pq {
       cs.toDF("sub", "code", "cv")
         .withColumn("cn2", Similarity.qnorm2(col("cv")))
     for (_ <- 1 to p.iters) {
-      // exact integer component sums per (sub, code, pos); the
-      // collect is m·ksub·dsub rows of bounded metadata
-      val sums = assignCodes(subs, centsDf(cents))
-        .join(subs.select(col("__id"), col("sub"), col("sv")), Seq("__id", "sub"))
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("sub", "code", "pos")
-        .agg(sum(qi(col("x"))).as("sq"), count(lit(1)).as("n"))
-        .collect()
-      val upd = sums.groupBy(r => (r.getInt(0), r.getInt(1))).map { case (k, rows) =>
-        val v = new Array[Float](dsub)
-        rows.foreach { r =>
-          v(r.getInt(2)) = (r.getLong(3).toDouble / (r.getLong(4) * 1000000.0)).toFloat
-        }
-        k -> v.toSeq
-      }
+      val upd = Similarity.cellMeans(assignCodes(subs, centsDf(cents))
+          .join(subs.select(col("__id"), col("sub"), col("sv")), Seq("__id", "sub")),
+        Seq("sub", "code"), "sv", dsub)
       // empty cells keep their previous centroid (determinism over
       // re-seeding; a dead code simply never wins an argmin)
-      cents = cents.map { case (s, c, v) => (s, c, upd.getOrElse((s, c), v)) }
+      cents = cents.map { case (s, c, v) => (s, c, upd.getOrElse(Row(s, c), v)) }
     }
     centsDf(cents)
   }
 
+  /** Subspace width of trained codebooks: a sub-centroid's length. */
+  private def dsubOf(cents: DataFrame): Int =
+    cents.select(size(col("cv"))).head().getInt(0)
+
   /** Encode a corpus: (id, codes array<int> of length m, n2). The
     * index artifact a production pipeline would persist — `m` small
-    * ints per vector instead of `dim` floats.
+    * ints per vector instead of `dim` floats. The subspace width
+    * comes from `cents`, so an empty corpus encodes to an empty
+    * frame.
     */
   def encode(corpus: DataFrame, idCol: String, vecCol: String,
              cents: DataFrame, p: PqParams): DataFrame = {
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-    val subs = subRows(corpus, idCol, vecCol, p.m, dim / p.m)
+    val subs = subRows(corpus, idCol, vecCol, p.m, dsubOf(cents))
     assignCodes(subs, cents)
       .groupBy("__id")
       .agg(transform(sort_array(collect_list(struct(col("sub"), col("code")))),
@@ -172,18 +160,6 @@ object Pq {
       .select(col("__id").as(idCol), col("codes"), col("n2"))
   }
 
-  /** PQ-ADC cosine top-k: train → encode → per-query LUT → ADC
-    * shortlist → exact re-rank. Output matches
-    * [[Similarity.bruteTopK]]: (query_id, rnk, cand_id, cosine).
-    *
-    * ADC estimate: adc_dot = Σ_sub LUT(sub, code) is the exact
-    * integer dot of the query against the candidate's RECONSTRUCTION
-    * (nearest sub-centroids); adc_cos normalizes by the
-    * reconstruction's norm (Σ_sub cn2 — exact, precomputable per
-    * candidate from its codes alone). Ranking on adc_cos with
-    * cand_id tie-break is deterministic; the exact re-rank then
-    * scores only `shortlist` true vectors per query.
-    */
   /** Per-query LUT: dot of each query subvector against each
     * sub-centroid, plus that centroid's exact norm contribution —
     * Q·m·ksub rows, broadcast.
@@ -197,11 +173,22 @@ object Pq {
         .select(col("query_id"), col("sub"), col("code"),
           Similarity.qdot(col("sv"), col("cv")).as("lut_dot"), col("cn2")))
 
+  /** PQ-ADC cosine top-k: train → encode → per-query LUT → ADC
+    * shortlist → exact re-rank. Output matches
+    * [[Similarity.bruteTopK]]: (query_id, rnk, cand_id, cosine).
+    *
+    * ADC estimate: adc_dot = Σ_sub LUT(sub, code) is the exact
+    * integer dot of the query against the candidate's RECONSTRUCTION
+    * (nearest sub-centroids); adc_cos normalizes by the
+    * reconstruction's norm (Σ_sub cn2 — exact, precomputable per
+    * candidate from its codes alone). Ranking on adc_cos with
+    * cand_id tie-break is deterministic; the exact re-rank then
+    * scores only `shortlist` true vectors per query.
+    */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, p: PqParams = PqParams()): DataFrame = {
     val cents = trainCodebooks(corpus, idCol, vecCol, p)
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
-    val dsub = dim / p.m
+    val dsub = dsubOf(cents)
     // code rows for the whole corpus (the "index"): (cand_id, sub, code)
     val codeRows = assignCodes(subRows(corpus, idCol, vecCol, p.m, dsub), cents)
       .select(col("__id").as("cand_id"), col("sub"), col("code"))
@@ -215,24 +202,8 @@ object Pq {
       case None => codeRows.join(lut, Seq("sub", "code"))
       case Some(ivf) =>
         val cells = Similarity.ivfCodebook(corpus, idCol, vecCol, ivf.nCells)
-        def route(df: DataFrame, outId: String, keep: Int): DataFrame = {
-          val routed = df
-            .select(col(idCol).as(outId), col(vecCol).as("v"),
-              Similarity.qnorm2(col(vecCol)).as("vn2"))
-            .crossJoin(broadcast(cells))
-            .withColumn("sim", Similarity.cosine(
-              Similarity.qdot(col("v"), col("centv")), col("vn2"), col("centn2")))
-          if (keep == 1)
-            routed.groupBy(outId)
-              .agg(expr("max_by(cent_id, struct(sim, -cent_id))").as("cent_id"))
-          else {
-            val w = Window.partitionBy(outId).orderBy(col("sim").desc, col("cent_id"))
-            routed.withColumn("rn", row_number().over(w)).filter(col("rn") <= keep)
-              .select(col(outId), col("cent_id"))
-          }
-        }
-        val pairs = route(queries, "query_id", ivf.nProbe)
-          .join(route(corpus, "cand_id", 1), Seq("cent_id"))
+        val pairs = Similarity.nearestCells(queries, idCol, vecCol, cells, "query_id", ivf.nProbe)
+          .join(Similarity.nearestCells(corpus, idCol, vecCol, cells, "cand_id", 1), Seq("cent_id"))
           .select("query_id", "cand_id")
         codeRows.join(pairs, Seq("cand_id"))
           .join(lut, Seq("query_id", "sub", "code"))
@@ -251,8 +222,8 @@ object Pq {
     * with the SAME stored codebooks, and serve queries against the
     * union — no drift between index generations, because assignment
     * is a pure function of (vector, codebooks).
-    */
-  /** @param excludeSelf drop the candidate whose id equals the query
+    *
+    * @param excludeSelf drop the candidate whose id equals the query
     *   id (true = the self-search convention [[pqTopK]] uses, right
     *   when queries ARE corpus rows, as in q154). Set false when the
     *   query set is EXTERNAL — ids live in a different space, and an
@@ -263,19 +234,19 @@ object Pq {
                 queries: DataFrame, idCol: String, vecCol: String, k: Int,
                 p: PqParams = PqParams(),
                 excludeSelf: Boolean = true): DataFrame = {
-    val dim = queries.select(size(col(vecCol))).head().getInt(0)
-    // m is baked into the stored artifact: dsub and the posexplode
-    // positions below both derive from it, so a caller-supplied p.m
-    // that disagrees with the persisted codebooks would silently
-    // mis-decode every code. Derive it from storage and refuse a
-    // mismatch instead. (ksub needs no check — scoring joins on the
-    // stored (sub, code) rows themselves, so a wrong p.ksub cannot
-    // change the result.)
-    val mStored = cents.agg(max(col("sub"))).head().getInt(0) + 1
+    // m and dsub are baked into the stored artifact: the query
+    // slicing and the posexplode positions below derive from them,
+    // so a caller-supplied p.m that disagrees with the persisted
+    // codebooks would silently mis-decode every code. Read both from
+    // storage in one aggregate and refuse a mismatch. (ksub needs no
+    // check — scoring joins on the stored (sub, code) rows
+    // themselves, so a wrong p.ksub cannot change the result.)
+    val stored = cents.agg(max(col("sub")), max(size(col("cv")))).head()
+    val mStored = stored.getInt(0) + 1
     require(mStored == p.m,
       s"stored codebooks have m=$mStored but params say m=${p.m} — " +
         "decoding with the wrong subspace count would mis-score every code")
-    val dsub = dim / p.m
+    val dsub = stored.getInt(1)
     // encode() writes codes sorted by sub, so the array position IS
     // the subspace id — posexplode restores (cand_id, sub, code)
     val codeRows = encoded.select(col(idCol).as("cand_id"),
@@ -320,17 +291,6 @@ object Pq {
       .filter(col("srn") <= col("__budget"))
       .select("query_id", "cand_id")
     // exact re-rank of the shortlist only
-    val cv = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cvv"),
-      Similarity.qnorm2(col(vecCol)).as("cn2x"))
-    val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qvv"), Similarity.qnorm2(col(vecCol)).as("qn2x")))
-    val wk = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    short.join(cv, Seq("cand_id")).join(qv, Seq("query_id"))
-      .withColumn("cos", Similarity.cosine(
-        Similarity.qdot(col("qvv"), col("cvv")), col("qn2x"), col("cn2x")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk").cast("long").as("rnk"),
-        col("cand_id"), round(col("cos"), 6).as("cosine"))
+    Similarity.topK(Similarity.rerank(short, corpus, queries, idCol, vecCol), k)
   }
 }

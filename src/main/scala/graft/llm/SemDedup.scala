@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,31 +43,28 @@ import org.apache.spark.sql.functions._
   */
 object SemDedup {
 
-  private def qi(x: Column): Column =
-    round(x.cast("double") * lit(1000000.0), 0).cast("long")
+  /** Per corpus row of `rows` (`__id`, carrying `__v`, `__n2`), the
+    * `cell` whose vector `cv` (squared norm `cn2`) has the highest
+    * exact-integer cosine, ties to the lowest cell id
+    * ([[Similarity.bestCells]]).
+    */
+  private def nearestOf(rows: DataFrame, cell: String, cv: String, cn2: String): DataFrame =
+    Similarity.bestCells(
+      rows.withColumn("sim", Similarity.cosine(Similarity.qdot(col("__v"), col(cv)),
+        col("__n2"), col(cn2))),
+      "__id", cell, "sim", carry = Seq("__v", "__n2"))
 
   /** One FLAT assignment pass: nearest centroid by exact-integer
     * cosine, ties to the lowest cent_id. `cents`: (cent_id, centv,
     * centn2). Argmax is a `max_by` hash aggregate, not a window:
     * partial aggregation collapses the n·k broadcast-product rows to
     * n map-side, where the row_number form shuffled and sorted all
-    * n·k. The (sim, −cent_id) struct key reproduces the
-    * (sim desc, cent_id asc) order exactly — keys never collide
-    * because cent_id is unique, so the argmax is deterministic.
-    * Right at small k; [[nearestRouted]] takes over above
+    * n·k. Right at small k; [[nearestRouted]] takes over above
     * `routeAbove` where n·k turns quadratic.
     */
-  private def nearest(corpusQ: DataFrame, cents: DataFrame): DataFrame = {
-    corpusQ
-      .crossJoin(broadcast(cents))
-      .withColumn("sim",
-        Similarity.cosine(Similarity.qdot(col("__v"), col("centv")),
-          col("__n2"), col("centn2")))
-      .groupBy("__id")
-      .agg(first(col("__v")).as("__v"), first(col("__n2")).as("__n2"),
-        expr("max_by(cent_id, struct(sim, -cent_id))").as("cluster"))
-      .select(col("__id"), col("__v"), col("__n2"), col("cluster"))
-  }
+  private def nearest(corpusQ: DataFrame, cents: DataFrame): DataFrame =
+    nearestOf(corpusQ.crossJoin(broadcast(cents)), "cent_id", "centv", "centn2")
+      .withColumnRenamed("cent_id", "cluster")
 
   /** TWO-LEVEL assignment (IVF coarse-quantizer routing): pick
     * ⌈√k⌉ coarse anchors from the fine codebook by smallest
@@ -95,46 +92,32 @@ object SemDedup {
     */
   private def nearestRouted(corpusQ: DataFrame, cents: DataFrame, k: Int): DataFrame = {
     val coarseK = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val coarse = broadcast(cents
-      .withColumn("__h", xxhash64(col("cent_id")))
-      .orderBy("__h", "cent_id").limit(coarseK)
+    val coarse = broadcast(Similarity.hashSample(cents, "cent_id", coarseK)
       .withColumn("coarse_id",
         row_number().over(Window.orderBy("__h", "cent_id")).cast("long"))
       .select(col("coarse_id"), col("cent_id").as("anchor_id"),
         col("centv").as("cv"), col("centn2").as("cn2")))
     // route the k fine centroids (k·√k dots, bounded), pin anchors
-    val fineRouted = cents.crossJoin(coarse.select("coarse_id", "cv", "cn2"))
-      .withColumn("csim",
-        Similarity.cosine(Similarity.qdot(col("centv"), col("cv")),
-          col("centn2"), col("cn2")))
-      .groupBy("cent_id")
-      .agg(first(col("centv")).as("centv"), first(col("centn2")).as("centn2"),
-        expr("max_by(coarse_id, struct(csim, -coarse_id))").as("routed"))
+    val fineRouted = Similarity.bestCells(
+        cents.crossJoin(coarse.select("coarse_id", "cv", "cn2"))
+          .withColumn("csim",
+            Similarity.cosine(Similarity.qdot(col("centv"), col("cv")),
+              col("centn2"), col("cn2"))),
+        "cent_id", "coarse_id", "csim", carry = Seq("centv", "centn2"))
       .join(coarse.select(col("anchor_id").as("cent_id"),
         col("coarse_id").as("own")), Seq("cent_id"), "left")
-      .select(coalesce(col("own"), col("routed")).as("coarse_id"),
+      .select(coalesce(col("own"), col("coarse_id")).as("coarse_id"),
         col("cent_id"), col("centv"), col("centn2"))
     // route the corpus (n·√k dots against the √k-row broadcast)
-    val corpusRouted = corpusQ.crossJoin(coarse.select("coarse_id", "cv", "cn2"))
-      .withColumn("csim",
-        Similarity.cosine(Similarity.qdot(col("__v"), col("cv")),
-          col("__n2"), col("cn2")))
-      .groupBy("__id")
-      .agg(first(col("__v")).as("__v"), first(col("__n2")).as("__n2"),
-        expr("max_by(coarse_id, struct(csim, -coarse_id))").as("coarse_id"))
+    val corpusRouted = nearestOf(corpusQ.crossJoin(coarse.select("coarse_id", "cv", "cn2")),
+      "coarse_id", "cv", "cn2")
     // exact argmax within the routed cell — equi-join, NOT broadcast:
     // at extreme k the fine codebook shuffles by coarse_id instead of
     // shipping O(k·dim) bytes to every task (AQE may still choose a
     // broadcast when the codebook is small — that is the right call
     // there, and it is the optimizer's to make)
-    corpusRouted.join(fineRouted, Seq("coarse_id"))
-      .withColumn("sim",
-        Similarity.cosine(Similarity.qdot(col("__v"), col("centv")),
-          col("__n2"), col("centn2")))
-      .groupBy("__id")
-      .agg(first(col("__v")).as("__v"), first(col("__n2")).as("__n2"),
-        expr("max_by(cent_id, struct(sim, -cent_id))").as("cluster"))
-      .select(col("__id"), col("__v"), col("__n2"), col("cluster"))
+    nearestOf(corpusRouted.join(fineRouted, Seq("coarse_id")), "cent_id", "centv", "centn2")
+      .withColumnRenamed("cent_id", "cluster")
   }
 
   private def assignPass(corpusQ: DataFrame, cents: DataFrame, k: Int,
@@ -152,9 +135,7 @@ object SemDedup {
   private def farthestInit(corpusQ: DataFrame, k: Int): Seq[(Long, Seq[Float], Long)] = {
     val spark = corpusQ.sparkSession
     import spark.implicits._
-    val seed0 = corpusQ
-      .withColumn("__h", xxhash64(col("__id")))
-      .orderBy("__h", "__id").limit(1)
+    val seed0 = Similarity.hashSample(corpusQ, "__id", 1)
       .select(col("__id"), col("__v"), col("__n2"))
       .as[(Long, Seq[Float], Long)].head()
     val seeds = scala.collection.mutable.ArrayBuffer(seed0)
@@ -205,10 +186,7 @@ object SemDedup {
     // refine join) replays a local relation, not a corpus scan
     val init: Seq[(Long, Seq[Float], Long)] =
       if (initHash)
-        corpusQ
-          .withColumn("__h", xxhash64(col("__id")))
-          .orderBy("__h", "__id")
-          .limit(k)
+        Similarity.hashSample(corpusQ, "__id", k)
           .withColumn("cent_id",
             row_number().over(Window.orderBy("__h", "__id")).cast("long"))
           .select(col("cent_id"), col("__v"), col("__n2"))
@@ -218,23 +196,9 @@ object SemDedup {
           .map { case ((_, v, n2), i) => (i + 1L, v, n2) }
     var cents = init.toDF("cent_id", "centv", "centn2")
     for (_ <- 1 to iters) {
-      val assigned = assignPass(corpusQ, cents, k, routeAbove)
-      // exact integer component sums per (cluster, position); the
-      // collected result is k·dim rows of bounded metadata, never
-      // corpus data
-      val sums = assigned
-        .select(col("cluster"), posexplode(col("__v")).as(Seq("pos", "x")))
-        .groupBy("cluster", "pos")
-        .agg(sum(qi(col("x"))).as("sq"), count(lit(1)).as("n"))
-        .collect()
-      val byCluster = sums.groupBy(_.getLong(0))
-      val newCents = byCluster.toSeq.sortBy(_._1).map { case (cid, rows) =>
-        val v = new Array[Float](dim)
-        rows.foreach { r =>
-          v(r.getInt(1)) = (r.getLong(2).toDouble / (r.getLong(3) * 1000000.0)).toFloat
-        }
-        (cid, v.toSeq)
-      }
+      val newCents = Similarity.cellMeans(assignPass(corpusQ, cents, k, routeAbove),
+          Seq("cluster"), "__v", dim)
+        .toSeq.map { case (key, v) => (key.getLong(0), v) }.sortBy(_._1)
       cents = newCents.toDF("cent_id", "centv")
         .withColumn("centn2", Similarity.qnorm2(col("centv")))
     }

@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`Array[Float]`).
@@ -24,11 +25,16 @@ import org.apache.spark.sql.functions._
   *    bucketed candidates, exact re-rank) prunes the scan for
   *    corpus×corpus or large-query workloads: candidates come from
   *    bucket equi-joins, never a cartesian product.
+  *
+  * These indexes, [[Pq]] and [[SemDedup]] share one set of
+  * `private[llm]` kernels: [[qi]], [[hashSample]], [[bestCells]],
+  * [[nearestCells]], [[cellMeans]], [[rerank]], [[topK]] and
+  * [[bucketRows]].
   */
 object Similarity {
 
   /** Quantize a float component to int64 at 1e-6 resolution. */
-  private def qi(x: Column): Column =
+  private[llm] def qi(x: Column): Column =
     round(x.cast("double") * lit(1000000.0), 0).cast("long")
 
   /** Exact integer dot product of two quantized vectors — a native
@@ -57,22 +63,44 @@ object Similarity {
     */
   def bruteTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cand = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-      qnorm2(col(vecCol)).as("cn2"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      qnorm2(col(vecCol)).as("qn2"))
-    val scored = cand.join(broadcast(q), col("cand_id") =!= col("query_id"))
+    val scored = candVecs(corpus, idCol, vecCol)
+      .join(broadcast(queryVecs(queries, idCol, vecCol)), col("cand_id") =!= col("query_id"))
       .withColumn("cos", cosine(qdot(col("qv"), col("cv")), col("qn2"), col("cn2")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
     // barrier: the result is k rows per probe while the scan above
     // reads the whole corpus — the exact-top-k query and both ANN
     // twins (whose recall flags join against this exact frame) build
     // the identical plan, so one materialization serves all three.
-    BarrierCache.track(scored.withColumn("rnk", row_number().over(w))
+    BarrierCache.track(topK(scored, k))
+  }
+
+  /** Corpus side of a scoring join: (cand_id, cv, cn2). */
+  private def candVecs(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"), qnorm2(col(vecCol)).as("cn2"))
+
+  /** Query side of a scoring join: (query_id, qv, qn2). */
+  private def queryVecs(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"), qnorm2(col(vecCol)).as("qn2"))
+
+  /** Exact re-rank input: the exact quantized cosine `cos` of every
+    * (query_id, cand_id) candidate pair. The corpus vectors join on
+    * cand_id first, then the broadcast query vectors on query_id.
+    */
+  private[llm] def rerank(pairs: DataFrame, corpus: DataFrame, queries: DataFrame,
+                          idCol: String, vecCol: String): DataFrame =
+    pairs.join(candVecs(corpus, idCol, vecCol), Seq("cand_id"))
+      .join(broadcast(queryVecs(queries, idCol, vecCol)), Seq("query_id"))
+      .withColumn("cos", cosine(qdot(col("qv"), col("cv")), col("qn2"), col("cn2")))
+
+  /** The top-k tail of every index: rank each query's scored
+    * candidates by (cos desc, cand_id asc) and keep k as
+    * (query_id, rnk, cand_id, cosine rounded to 6 places).
+    */
+  private[llm] def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
+    scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk").cast("long").as("rnk"),
-        col("cand_id"), round(col("cos"), 6).as("cosine")))
+        col("cand_id"), round(col("cos"), 6).as("cosine"))
   }
 
   /** Random-hyperplane LSH signature: `nBits` sign bits of
@@ -121,6 +149,13 @@ object Similarity {
     based.withColumn(out, array(tableBuckets: _*)).drop("__bits")
   }
 
+  /** One (out, table, bucket) row per vector and LSH table. */
+  private[llm] def bucketRows(df: DataFrame, idCol: String, vecCol: String,
+                              out: String, p: RpLshParams): DataFrame =
+    withBuckets(df, vecCol, "__bk", p)
+      .select(col(idCol).as(out), posexplode(col("__bk")))
+      .toDF(out, "table", "bucket")
+
   /** IVF-flat parameters: a FIXED-size codebook of `nCells` coarse
     * cells drawn as a deterministic uniform sample of corpus vectors
     * (the `nCells` smallest `xxhash64(id)` values — size-independent
@@ -132,18 +167,81 @@ object Similarity {
   final case class IvfParams(nCells: Int = 64, nProbe: Int = 8)
 
   /** Deterministic fixed-size codebook: the `nCells` corpus vectors
-    * with the smallest seeded id-hash. orderBy+limit plans as a
-    * distributed TakeOrdered (per-partition top-k, merged) — no
-    * global sort materialization.
+    * with the smallest seeded id-hash ([[hashSample]]).
     */
   def ivfCodebook(corpus: DataFrame, idCol: String, vecCol: String,
                   nCells: Int): DataFrame =
-    corpus
-      .select(col(idCol).as("cent_id"), col(vecCol).as("centv"),
-        qnorm2(col(vecCol)).as("centn2"), xxhash64(col(idCol)).as("__h"))
-      .orderBy("__h", "cent_id")
-      .limit(nCells)
+    hashSample(corpus.select(col(idCol).as("cent_id"), col(vecCol).as("centv"),
+        qnorm2(col(vecCol)).as("centn2")), "cent_id", nCells)
       .drop("__h")
+
+  /** The `n` rows of `df` with the smallest `xxhash64(id)`, ties by
+    * id — a deterministic uniform sample, independent of row order
+    * and partitioning. Keeps the hash as `__h` for callers that rank
+    * the sample. orderBy+limit plans as a distributed TakeOrdered
+    * (per-partition top-n, merged) — no global sort materialization.
+    */
+  private[llm] def hashSample(df: DataFrame, id: String, n: Int): DataFrame =
+    df.withColumn("__h", xxhash64(col(id))).orderBy("__h", id).limit(n)
+
+  /** Nearest-cell argmax: per `key`, the `keep` cells with the
+    * highest `score`, ties to the lowest `cell` id. keep = 1 is a
+    * `max_by` hash aggregate (partial aggregation collapses the
+    * key×cell rows map-side; the (score, −cell) struct reproduces
+    * the (score desc, cell asc) order exactly, and `carry` columns
+    * ride along as `first()`); keep > 1 is a window rank. Output:
+    * (key, carry…, cell).
+    */
+  private[llm] def bestCells(scored: DataFrame, key: String, cell: String,
+                             score: String, keep: Int = 1,
+                             carry: Seq[String] = Nil): DataFrame =
+    if (keep == 1) {
+      val aggs = carry.map(c => first(col(c)).as(c)) :+
+        expr(s"max_by($cell, struct($score, -$cell))").as(cell)
+      scored.groupBy(key).agg(aggs.head, aggs.tail: _*)
+    } else {
+      val w = Window.partitionBy(key).orderBy(col(score).desc, col(cell))
+      scored.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= keep)
+        .select((key +: carry :+ cell).map(col): _*)
+    }
+
+  /** The IVF router: each row of `df`, as `outId`, to its `keep`
+    * nearest cells of the broadcast codebook `cents` (cent_id, centv,
+    * centn2) by exact-integer cosine. Output: (outId, cent_id).
+    */
+  private[llm] def nearestCells(df: DataFrame, idCol: String, vecCol: String,
+                                cents: DataFrame, outId: String, keep: Int): DataFrame =
+    bestCells(
+      df.select(col(idCol).as(outId), col(vecCol).as("v"), qnorm2(col(vecCol)).as("n2"))
+        .crossJoin(broadcast(cents))
+        .withColumn("sim", cosine(qdot(col("v"), col("centv")), col("n2"), col("centn2"))),
+      outId, "cent_id", "sim", keep)
+
+  /** The Lloyd update: each `keys` group's mean of the `dim`-wide
+    * vector column `vec` — exact integer component sums of [[qi]],
+    * one IEEE division per component. The collected sums are
+    * (groups × dim) rows of bounded metadata, never corpus data.
+    * Keyed by the group's `keys` values as a Row; an empty group
+    * has no entry.
+    */
+  private[llm] def cellMeans(assigned: DataFrame, keys: Seq[String], vec: String,
+                             dim: Int): Map[Row, Seq[Float]] = {
+    val n = keys.size
+    assigned
+      .select(keys.map(col) :+ posexplode(col(vec)).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(sum(qi(col("x"))).as("sq"), count(lit(1)).as("n"))
+      .collect()
+      .groupBy(r => Row.fromSeq((0 until n).map(r.get)))
+      .map { case (key, rows) =>
+        val v = new Array[Float](dim)
+        rows.foreach { r =>
+          v(r.getInt(n)) = (r.getLong(n + 1).toDouble / (r.getLong(n + 2) * 1000000.0)).toFloat
+        }
+        key -> v.toSeq
+      }
+  }
 
   /** IVF-flat ANN top-k: assign every vector to its nearest sampled
     * centroid (broadcast codebook scan — the standard IVF build),
@@ -153,35 +251,12 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, p: IvfParams = IvfParams()): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = ivfCodebook(corpus, idCol, vecCol, p.nCells)
-    def nearestCells(df: DataFrame, outId: String, keep: Int): DataFrame = {
-      val w = Window.partitionBy(outId).orderBy(col("sim").desc, col("cent_id"))
-      df.select(col(idCol).as(outId), col(vecCol).as("v"), qnorm2(col(vecCol)).as("n2"))
-        .crossJoin(broadcast(cents))
-        .withColumn("sim", cosine(qdot(col("v"), col("centv")), col("n2"), col("centn2")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= keep)
-        .select(col(outId), col("cent_id"))
-    }
-    val cells = nearestCells(corpus, "cand_id", 1)
-    val probes = nearestCells(queries, "query_id", p.nProbe)
-    val pairs = probes.join(cells, Seq("cent_id"))
+    val pairs = nearestCells(queries, idCol, vecCol, cents, "query_id", p.nProbe)
+      .join(nearestCells(corpus, idCol, vecCol, cents, "cand_id", 1), Seq("cent_id"))
       .filter(col("query_id") =!= col("cand_id"))
       .select("query_id", "cand_id").distinct()
-    val cv = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-      qnorm2(col(vecCol)).as("cn2"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      qnorm2(col(vecCol)).as("qn2"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    pairs
-      .join(broadcast(qv), Seq("query_id"))
-      .join(cv, Seq("cand_id"))
-      .withColumn("cos", cosine(qdot(col("qv"), col("cv")), col("qn2"), col("cn2")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk").cast("long").as("rnk"),
-        col("cand_id"), round(col("cos"), 6).as("cosine"))
+    topK(rerank(pairs, corpus, queries, idCol, vecCol), k)
   }
 
   /** LSH-pruned cosine top-k: candidates share ≥1 bucket in ≥1
@@ -191,33 +266,15 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, p: RpLshParams = RpLshParams()): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // candidate generation on ids only — shuffling 64-float vectors
     // through the bucket join dominates cost otherwise; vectors are
-    // re-attached after pair dedup via broadcast lookups
-    val cand = withBuckets(corpus, vecCol, "__bk", p)
-      .select(col(idCol).as("cand_id"), posexplode(col("__bk")))
-      .toDF("cand_id", "table", "bucket")
-    val q = withBuckets(queries, vecCol, "__bk", p)
-      .select(col(idCol).as("query_id"), posexplode(col("__bk")))
-      .toDF("query_id", "table", "bucket")
-    val pairs = cand.join(broadcast(q), Seq("table", "bucket"))
+    // re-attached after pair dedup by the re-rank
+    val pairs = bucketRows(corpus, idCol, vecCol, "cand_id", p)
+      .join(broadcast(bucketRows(queries, idCol, vecCol, "query_id", p)), Seq("table", "bucket"))
       .filter(col("cand_id") =!= col("query_id"))
       .select("query_id", "cand_id")
       .dropDuplicates("query_id", "cand_id")
-    val cv = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-      qnorm2(col(vecCol)).as("cn2"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      qnorm2(col(vecCol)).as("qn2"))
-    val scored = pairs
-      .join(broadcast(qv), Seq("query_id"))
-      .join(cv, Seq("cand_id"))
-      .withColumn("cos", cosine(qdot(col("qv"), col("cv")), col("qn2"), col("cn2")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk").cast("long").as("rnk"),
-        col("cand_id"), round(col("cos"), 6).as("cosine"))
+    topK(rerank(pairs, corpus, queries, idCol, vecCol), k)
   }
 
   /** Symmetric per-vector int8 quantization: scale each vector by

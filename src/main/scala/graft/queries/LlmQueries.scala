@@ -919,11 +919,8 @@ object LlmQueries {
           .join(feed.filter(col("_change_type") === "delete")
             .select("vec_id"), Seq("vec_id"), "left_anti")
         val ins = feed.filter(col("_change_type") === "insert")
-        // a delete-only version (the purge) has nothing to encode —
-        // Pq.encode probes the vector dim from the frame's head
-        store = (if (ins.isEmpty) afterDel
-                 else afterDel.unionByName(
-                   Pq.encode(ins, "vec_id", "embedding", cents, p)))
+        // a delete-only version (the purge) encodes an empty batch
+        store = afterDel.unionByName(Pq.encode(ins, "vec_id", "embedding", cents, p))
           .localCheckpoint()
       }
       val corpus = Snapshots.read(s, root)

@@ -68,6 +68,52 @@ class DedupSpec extends SparkSpec {
     assert(precision >= 0.9, s"simhash precision $precision over ${sim.size} pairs")
   }
 
+  test("SimHash pairs ≡ the all-pairs Hamming ≤ maxDist filter over the same signatures") {
+    val sigs = docs.select(col("doc_id"), Dedup.simhash(col("text")).as("sig")).cache()
+    for (d <- Seq(0, 1, 3)) {
+      val want = sigs.toDF("id_i", "sig_i").crossJoin(sigs.toDF("id_j", "sig_j"))
+        .filter(col("id_i") < col("id_j"))
+        .select(col("id_i"), col("id_j"), Dedup.hamming(col("sig_i"), col("sig_j")).as("dist"))
+        .filter(col("dist") <= d)
+        .as[(Long, Long, Int)].collect().toSet
+      val got = Dedup.simhashNearDups(docs, "doc_id", "text", maxDist = d)
+        .as[(Long, Long, Int)].collect()
+      assert(got.length === got.toSet.size, s"maxDist=$d emitted a pair twice")
+      assert(got.toSet === want, s"maxDist=$d")
+    }
+    assert(sigs.select("sig").distinct().count() < sigs.count(),
+      "the corpus must carry identical signatures for maxDist=0 to mean anything")
+    sigs.unpersist()
+    graft.llm.BarrierCache.sweep(spark)
+  }
+
+  test("SimHash at maxDist = 0 joins only identical signatures") {
+    // one 64-bit block: a 0-bit mask would put every distinct
+    // signature in one bucket — C(distinct, 2) candidate pairs. The
+    // optimizer folds the distance filter into the band join's
+    // condition, so its output metric would count only survivors;
+    // keeping predicates where they are written makes it count every
+    // candidate the banding generates
+    val n = docs.count()
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(excluded)
+    spark.conf.set(excluded, "org.apache.spark.sql.catalyst.optimizer.PushDownPredicates")
+    try {
+      val (cnt, joinOut) = countWithJoinOutput(
+        Dedup.simhashNearDups(docs, "doc_id", "text", maxDist = 0))
+      assert(joinOut <= cnt + 10L * n,
+        s"joins emitted $joinOut rows for $cnt identical-signature pairs over $n docs")
+    } finally {
+      prev.fold(spark.conf.unset(excluded))(spark.conf.set(excluded, _))
+      graft.llm.BarrierCache.sweep(spark)
+    }
+  }
+
+  test("SimHash refuses a negative maxDist") {
+    intercept[IllegalArgumentException](
+      Dedup.simhashNearDups(docs, "doc_id", "text", maxDist = -1))
+  }
+
   test("hot-shingle cap bounds the join without losing identical dups") {
     val capped = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8, maxDocFreq = 50)
       .select("id_i", "id_j").as[(Long, Long)].collect().toSet

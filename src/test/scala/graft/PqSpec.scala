@@ -42,6 +42,15 @@ class PqSpec extends SparkSpec {
     }
   }
 
+  test("encode of an empty frame: no rows, the codes schema") {
+    val empty = Pq.encode(emb.filter(lit(false)), "vec_id", "embedding", cents, p)
+    assert(empty.count() === 0L)
+    val full = Pq.encode(emb, "vec_id", "embedding", cents, p)
+    assert(empty.schema.map(f => (f.name, f.dataType)) ===
+      full.schema.map(f => (f.name, f.dataType)))
+    assert(empty.columns.toSeq === Seq("vec_id", "codes", "n2"))
+  }
+
   test("encode of a centroid-aligned vector recovers its own codes") {
     // a vector stitched from one centroid per subspace must encode
     // to exactly those codes (distance 0 beats every other cell)
