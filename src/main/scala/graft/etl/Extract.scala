@@ -115,16 +115,22 @@ object Extract {
 
   /** R10: the reference's literal corrections dict (`main.py:177-182`).
     * pandas `Series.replace(dict)` without regex replaces EXACT full
-    * values only — so this is an exact-match `when` chain, not a
-    * substring rewrite. Small static map (no join needed at this
+    * values only, each value looked up once in the ORIGINAL series
+    * (`{a→b, b→c}` maps `a` to `b`, not on to `c`) — so this is one
+    * exact-match CASE over the input, one branch per entry, the input
+    * itself as the ELSE. Small static map (no join needed at this
     * cardinality).
     */
   val corrections: Map[String, String] =
     Map("Fruit Lemonade w/Popping Pearls" -> "Fruit Lemonade w/ Popping Pearls")
 
   def applyCorrections(c: Column, map: Map[String, String] = corrections): Column =
-    map.foldLeft(c) { case (acc, (from, to)) =>
-      when(acc === from, lit(to)).otherwise(acc)
+    map.toSeq match {
+      case Seq() => c
+      case (from, to) +: rest =>
+        rest.foldLeft(when(c === from, lit(to))) { case (cases, (f, t)) =>
+          cases.when(c === f, lit(t))
+        }.otherwise(c)
     }
 
   /** Clean item name: pastry rename where masked, else cleanup
@@ -133,12 +139,6 @@ object Extract {
   def cleanItem(item: Column): Column =
     applyCorrections(
       when(isPastry(item), pastryName(item)).otherwise(cleanupItem(item)))
-
-  /** R11: title-case normalize (`main.py:385`). `initcap` splits on
-    * whitespace; pandas `str.title()` splits on any non-alpha — see
-    * pandasTitle below for exact-parity cases.
-    */
-  def titleCase(c: Column): Column = initcap(c)
 
   /** Exact pandas `str.title()` semantics (`main.py:385`): a letter
     * is uppercased iff it follows a non-letter ("w/ popping" →

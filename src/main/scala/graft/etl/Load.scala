@@ -228,7 +228,11 @@ object Load {
     * derive dimension tables from the fact's natural keys with
     * stable hash surrogates (no driver-side sequence — xxhash64 of
     * the natural key distributes and is idempotent across runs),
-    * then broadcast-join the fact to an all-integer star schema.
+    * and an all-integer star fact. A surrogate IS the hash of its
+    * natural key, so the fact computes its keys inline — no join, no
+    * scan of the fact to build a dim first. Rows whose `items`,
+    * `payment_type` or `order_type` is null are dropped, as an inner
+    * join to the dims would drop them.
     */
   final case class Star(fact: DataFrame, dimItem: DataFrame, dimPayment: DataFrame,
                         dimOrderType: DataFrame)
@@ -237,17 +241,15 @@ object Load {
     def dim(c: String, idName: String) =
       clean.select(col(c)).distinct()
         .select(xxhash64(col(c)).as(idName), col(c))
-    val dItem = dim("items", "item_id")
-    val dPay = dim("payment_type", "payment_type_id")
-    val dOt = dim("order_type", "order_type_id")
     val fact = clean
-      .join(broadcast(dItem), Seq("items"))
-      .join(broadcast(dPay), Seq("payment_type"))
-      .join(broadcast(dOt), Seq("order_type"))
-      .select(col("order_id"), col("item_id"), col("payment_type_id"),
-        col("order_type_id"), col("quantity"), col("total_order_amount"),
-        col("received_amount"), col("payment_time"))
-    Star(fact, dItem, dPay, dOt)
+      .filter(col("items").isNotNull && col("payment_type").isNotNull &&
+        col("order_type").isNotNull)
+      .select(col("order_id"), xxhash64(col("items")).as("item_id"),
+        xxhash64(col("payment_type")).as("payment_type_id"),
+        xxhash64(col("order_type")).as("order_type_id"), col("quantity"),
+        col("total_order_amount"), col("received_amount"), col("payment_time"))
+    Star(fact, dim("items", "item_id"), dim("payment_type", "payment_type_id"),
+      dim("order_type", "order_type_id"))
   }
 
   /** S8: reprocess-quarantine — re-categorize quarantined rows
@@ -273,24 +275,20 @@ object Load {
         col("sub_category"), col("category"))
       .dropDuplicates("items")
     val recat = q.drop("sub_category", "category")
-    val mapped = recat.join(broadcast(dimT), Seq("items"), "left")
-    val valid = Validate.validExpr(
-      items = col("items"), subCategory = col("sub_category"),
-      category = col("category"), quantity = col("quantity"),
-      totalAmount = col("total_order_amount"), receivedAmount = col("received_amount"))
-    val s = Validate.split(mapped, valid)
-    val promoted = Categorize.fillUncategorized(s.clean).cache()
-    val remaining = s.quarantine.cache()
-    val nPromoted = promoted.count()
-    val nRemaining = remaining.count()
-    if (nPromoted > 0) upsert(spark, promoted, factPath, keys)
-    // rewrite the remainder in the quarantine's __batch layout (the
-    // reprocessed survivors all land in the batch-API partition)
-    val tmp = quarantinePath + "__tmp"
-    remaining.write.mode("overwrite").parquet(tmp + "/__batch=-1")
-    swap(spark, tmp, quarantinePath)
-    promoted.unpersist(); remaining.unpersist()
-    (nPromoted, nRemaining)
+    // cached once: both counts, the upsert and the rewrite read it
+    val mapped = recat.join(broadcast(dimT), Seq("items"), "left").cache()
+    try {
+      val valid = Transform.factValidity
+      val n = mapped.agg(count_if(valid), count_if(!valid)).head()
+      val s = Transform.route(mapped)
+      if (n.getLong(0) > 0) upsert(spark, s.clean, factPath, keys)
+      // rewrite the remainder in the quarantine's __batch layout (the
+      // reprocessed survivors all land in the batch-API partition)
+      val tmp = quarantinePath + "__tmp"
+      s.quarantine.write.mode("overwrite").parquet(tmp + "/__batch=-1")
+      swap(spark, tmp, quarantinePath)
+      (n.getLong(0), n.getLong(1))
+    } finally mapped.unpersist()
   }
 
   def tableExists(spark: SparkSession, path: String): Boolean = {

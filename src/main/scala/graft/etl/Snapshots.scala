@@ -500,10 +500,6 @@ object Snapshots {
       .toDF("version", "layout", "n_rows", "tag", "has_dv", "n_constraints")
   }
 
-  private def dataDirOf(spark: SparkSession, root: String, v: Long): String =
-    versionMeta(spark, root, v).dataDir.getOrElse(throw new IllegalStateException(
-      s"version $v of $root is a manifest version — use filesOfVersion"))
-
   /** Commit `df` as the next version of `root`; returns the new
     * version number. MULTI-WRITER SAFE (Delta-style optimistic
     * concurrency): the snapshot data lands under a writer-UNIQUE

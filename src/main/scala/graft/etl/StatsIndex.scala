@@ -138,16 +138,6 @@ object StatsIndex {
       listDataFiles(spark, dataPath))
   }
 
-  /** [[build]] over an explicit file list (the snapshot tier's
-    * manifest versions have no single root dir to scan).
-    */
-  private[etl] def buildForFiles(spark: SparkSession, files: Seq[String],
-                                 cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "need at least one stats column")
-    require(files.nonEmpty, "need at least one file")
-    padEmptyFiles(spark, statsFor(spark.read.parquet(files: _*), cols), files)
-  }
-
   /** [[build]] COLLECTED (r17): one aggregation job over the data,
     * with the empty-file padding done on the collected rows against
     * the driver-side listing — the DataFrame-shaped [[padEmptyFiles]]

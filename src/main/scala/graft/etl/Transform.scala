@@ -6,13 +6,18 @@ import org.apache.spark.sql.functions._
 /** E2: the reference's core transform (`main.py:95-407`) as one
   * declarative Catalyst plan — header strip → split/explode/filter →
   * regex extraction layer → clean-item rename → categorical
-  * broadcast joins → payment derivation → projection/rename →
+  * broadcast join → payment derivation → projection/rename →
   * numeric coercion → validation split.
   *
-  * Catalyst collapses the ~15 sequential projections into a single
-  * whole-stage-codegen'd stage over the scan; the only shuffle in
-  * the whole pipeline is the explode-free aggregation a caller adds
-  * afterwards (the dim joins broadcast).
+  * Every extract (R1–R10) and the M1+M2 category lookup is a pure
+  * function of the item string, and item strings are bounded by the
+  * menu, not by sales (587 distinct strings in a 35k-line drop). So
+  * the plan evaluates them once per DISTINCT item and broadcast-joins
+  * the result back to the exploded lines: the per-line side is only
+  * the scan, the explode and the amount/payment projections. The one
+  * shuffle is the distinct-item aggregate, map-side combined to a
+  * few dozen KB (one row per item per map task); the dim join and
+  * the join back both broadcast.
   *
   * Divergences from the reference, by design (SURVEY.md §2.7):
   *  - validation runs BEFORE the 'Uncategorized' fill, so
@@ -28,14 +33,6 @@ object Transform {
     */
   def dimDF(spark: SparkSession): DataFrame = Categorize.referenceDimDF(spark)
 
-  /** Raw POS frame → item-level fact frame (pre-validation).
-    *
-    * The dim join is on the EXACT `clean_item` string, pre-title-case
-    * — precisely the reference's `Clean_Item.map(dict)` at
-    * `main.py:356`, which runs before the `str.title()` at
-    * `main.py:385` (so "Biscoff tiramisu" maps, then displays
-    * title-cased).
-    */
   /** The raw-sheet input contract (post-header-strip names): exactly
     * the columns `transform` consumes. Enforced strictly at entry so
     * schema drift fails with a contract error naming the missing
@@ -45,34 +42,49 @@ object Transform {
     "Order ID", "Products", "Product amount", "Received amount",
     "Payment time", "Cash", "Gcash", "Type/Channel")
 
+  /** Raw POS frame → item-level fact frame (pre-validation).
+    *
+    * The dim join is on the EXACT `clean_item` string, pre-title-case
+    * — precisely the reference's `Clean_Item.map(dict)` at
+    * `main.py:356`, which runs before the `str.title()` at
+    * `main.py:385` (so "Biscoff tiramisu" maps, then displays
+    * title-cased).
+    */
   def transform(raw: DataFrame, dim: DataFrame): DataFrame = {
     // P1 then P3 (strict): enforce + prune to the contract columns,
     // so the scan reads only what the pipeline consumes.
     val stripped = Sanitize.project(Sanitize.stripHeaders(raw), rawContract)
     val exploded = ExplodeItems.explodeItems(stripped, "Products", "item")
-    val it = col("item")
-    val extracted = exploded
-      .withColumn("size", Extract.size(it))
-      .withColumn("variation", Extract.variation(it))
-      .withColumn("flavor", Extract.flavor(it))
-      .withColumn("sugar_level", Extract.sugarLevel(it))
-      .withColumn("spice_level", Extract.spiceLevel(it))
-      .withColumn("quantity", Extract.quantity(it))
-      // clean_item is the one EXPENSIVE extract (nested rlike +
-      // alternation extracts + corrections), referenced by the R12
-      // filter, the dim-join key, and the initcap display column.
-      // Spark 4.1's optimizer keeps ONE evaluating node (verified
-      // A/B: a forced non-deterministic barrier changes nothing at
-      // steady state); PlanQualitySpec pins that node count so an
-      // optimizer/plan change can't silently re-inline the chain
-      // into every consumer.
-      .withColumn("clean_item", Extract.cleanItem(it))
-    val mapped = Categorize.withCategories(extracted, dim, "clean_item")
-    mapped
+    // One row per distinct item, its extracts computed by the
+    // aggregate itself over `min(item)` (= the item): they are
+    // aggregate OUTPUTS, so a predicate over them (R12's clean_item
+    // filter) can neither sink below the aggregate nor be inferred
+    // onto the per-line side through the join on `item` — either
+    // would re-run the clean-item chain once per line. PlanQualitySpec
+    // pins the chain to this one node.
+    val it = min("item")
+    val perItem = exploded.groupBy("item").agg(
+      Extract.size(it).as("size"),
+      Extract.variation(it).as("variation"),
+      Extract.flavor(it).as("flavor"),
+      Extract.sugarLevel(it).as("sugar_level"),
+      Extract.spiceLevel(it).as("spice_level"),
+      Extract.quantity(it).as("quantity"),
+      Extract.cleanItem(it).as("clean_item"))
+    val attrs = Categorize.withCategories(perItem, dim, "clean_item")
       .filter(col("clean_item").isNotNull) // R12 (null-model form)
       .select(
-        col("Order ID").as("order_id"),
+        col("item"),
         initcap(col("clean_item")).as("items"), // R11
+        col("sub_category"), col("category"),
+        col("flavor"), col("variation"), col("size"),
+        col("quantity"),
+        col("sugar_level"), col("spice_level"))
+    // inner join: a line whose item has no clean name is R12-dropped
+    exploded.join(broadcast(attrs), Seq("item"))
+      .select(
+        col("Order ID").as("order_id"),
+        col("items"),
         col("sub_category"), col("category"),
         col("flavor"), col("variation"), col("size"),
         col("quantity"),

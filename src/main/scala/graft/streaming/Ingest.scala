@@ -166,16 +166,21 @@ object Ingest {
       checkpointDir, factSink, quarantinePath, dim)(identity)
 
   /** The CSV and workbook ingest loop: `parse` a micro-batch into raw
-    * report rows, transform (E2), route (F5), upsert (S4), quarantine (S5).
+    * report rows, transform (E2), route (F5), upsert (S4), quarantine
+    * (S5). The micro-batch's fact is cached once and both sinks read
+    * it — the upsert alone evaluates its input twice.
     */
   private def routeToSinks(stream: DataFrame, checkpointDir: String,
                            factSink: UpsertSink, quarantinePath: String,
                            dim: DataFrame)
                           (parse: DataFrame => DataFrame): Unit =
     drain(stream, checkpointDir) { (batch, batchId) =>
-      val split = Transform.run(parse(batch), dim)
-      factSink.upsert(split.clean, factKeys)
-      Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
+      val fact = Transform.transform(parse(batch), dim).cache()
+      try {
+        val split = Transform.route(fact)
+        factSink.upsert(split.clean, factKeys)
+        Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
+      } finally fact.unpersist()
     }
 
   /** Event time must be an INSTANT: a watermark on TIMESTAMP_NTZ is
@@ -242,10 +247,13 @@ object Ingest {
   /** One batch ingest pass through the pluggable sheet-source seam
     * (S3): read every staged sheet via `source` (CSV stand-in or the
     * real .xlsx reader), transform (E2), route (F5), upsert the
-    * fact (S4), append quarantine (S5). The streaming loop above
-    * covers incremental CSV; this covers formats Spark has no file
-    * stream for — the reference's daily-workbook cadence is a cron
-    * batch anyway (`main.py:419`).
+    * fact (S4), append quarantine (S5); returns the (clean,
+    * quarantine) row counts. The transformed fact is cached ONCE,
+    * counted in one aggregate, and both sinks are routed off that
+    * cache, so the transform is materialized once per drop, not once
+    * per sink. The streaming loop above covers incremental CSV; this
+    * covers formats Spark has no file stream for — the reference's
+    * daily-workbook cadence is a cron batch anyway (`main.py:419`).
     */
   def ingestBatch(spark: SparkSession, stagingDir: String,
                   source: graft.sources.FileSources.RawSheetSource,
@@ -253,13 +261,15 @@ object Ingest {
                   dim: DataFrame,
                   archiveDir: Option[String] = None): (Long, Long) = {
     val raw = source.read(spark, stagingDir, rawSchema)
-    val split = Transform.run(raw, dim)
-    val clean = split.clean.cache()
-    val quarantine = split.quarantine.cache()
-    val (nc, nq) = (clean.count(), quarantine.count())
-    factSink.upsert(clean, factKeys)
-    Load.appendQuarantine(quarantine, quarantinePath)
-    clean.unpersist(); quarantine.unpersist()
+    val fact = Transform.transform(raw, dim).cache()
+    val (nc, nq) = try {
+      val valid = Transform.factValidity
+      val n = fact.agg(count_if(valid), count_if(!valid)).head()
+      val split = Transform.route(fact)
+      factSink.upsert(split.clean, factKeys)
+      Load.appendQuarantine(split.quarantine, quarantinePath)
+      (n.getLong(0), n.getLong(1))
+    } finally fact.unpersist()
     // S7 for the batch path: move consumed staging files to the
     // archive AFTER both sinks committed (crash before this point
     // re-reads the files; the key-idempotent fact upsert converges,

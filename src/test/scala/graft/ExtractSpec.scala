@@ -80,6 +80,20 @@ class ExtractSpec extends SparkSpec {
       === Seq("Fruit Lemonade w/ Popping Pearls", "Soda w/Popping Pearls"))
   }
 
+  test("R10 corrections look each value up once, in one CASE (no chaining)") {
+    // pandas: Series(['a','b','x']).replace({'a':'b','b':'c'}) == ['b','c','x']
+    assert(one("a", "b", "x")(Extract.applyCorrections(col("item"), Map("a" -> "b", "b" -> "c")))
+      === Seq("b", "c", "x"))
+    // one branch per entry: the input appears once per branch + the ELSE
+    val m = (1 to 12).map(i => s"k$i" -> s"v$i").toMap
+    val plan = Seq("k3").toDF("item").select(Extract.applyCorrections(col("item"), m).as("v"))
+      .queryExecution.analyzed
+    val refs = plan.expressions.map(_.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference if a.name == "item" => a
+    }.size).sum
+    assert(refs === m.size + 1)
+  }
+
   test("R13 numeric coercion: comma strip + errors='coerce'") {
     assert(one("1,192.00", "73.5", "N/A", "12,345,678.99")(Extract.toNumber(col("item")))
       === Seq(1192.0, 73.5, null, 1.234567899e7))

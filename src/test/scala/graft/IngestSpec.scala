@@ -55,6 +55,68 @@ class IngestSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(staging, "day1.csv")))
   }
 
+  /** A one-sheet "Paid order list" workbook of the raw-report columns,
+    * every cell an inline string (values are not XML-escaped).
+    */
+  private def writeXlsx(dir: String, name: String, rows: Seq[Seq[String]]): Unit = {
+    val header = Seq("Order ID", "Products", "Product amount", "Received amount",
+      "Payment time", "Cash", "Gcash", "Type/Channel")
+    def cell(v: String) =
+      s"""<c t="inlineStr"><is><t>$v</t></is></c>"""
+    val sheet = (header +: rows).map(r => r.map(cell).mkString("<row>", "", "</row>"))
+      .mkString("""<?xml version="1.0"?><worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""",
+        "", "</sheetData></worksheet>")
+    val out = new java.util.zip.ZipOutputStream(Files.newOutputStream(Paths.get(dir, name)))
+    Seq(
+      "xl/workbook.xml" -> """<?xml version="1.0"?><workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets><sheet name="Paid order list" sheetId="1" r:id="rId1"/></sheets></workbook>""",
+      "xl/_rels/workbook.xml.rels" -> """<?xml version="1.0"?><Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships"><Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/></Relationships>""",
+      "xl/worksheets/sheet1.xml" -> sheet).foreach { case (part, xml) =>
+      out.putNextEntry(new java.util.zip.ZipEntry(part))
+      out.write(xml.getBytes("UTF-8"))
+      out.closeEntry()
+    }
+    out.close()
+  }
+
+  test("CSV and xlsx AvailableNow ingests route both sinks and leave no cached plan") {
+    // start from an empty cache manager, as Bench's reset does
+    graft.queries.PosQueries.clearCache()
+    graft.llm.BarrierCache.sweep(spark)
+    spark.catalog.clearCache()
+    val cm = spark.sharedState.cacheManager
+    assert(cm.isEmpty)
+    val rows = Seq(
+      Seq("1", "Spanish Latte (Solo) (Hot) x2, Biscoff Croffle x1", "150.00", "150.00", "t1", "150.00", "-", "Dine-in"),
+      Seq("2", "Halo-Halo Special x1", "50.00", "50.00", "t2", "-", "50.00", "Take-out"),
+      Seq("3", "Americano (Duo) (Cold) x1", "-70.00", "70.00", "t3", "70.00", "-", "Delivery"))
+    val want = Transform.run(
+      rows.map { case Seq(a, b, c, d, e, f, g, h) => (a, b, c, d, e, f, g, h) }
+        .toDF(Transform.rawContract: _*), Transform.dimDF(spark))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select(want.clean.columns.map(col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+    def sortedQ(df: org.apache.spark.sql.DataFrame) =
+      df.select(want.quarantine.columns.map(col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+    Seq("csv", "xlsx").foreach { kind =>
+      val base = tmpDir(s"ingest-$kind")
+      val staging = base + "/staging"; val fact = base + "/fact"; val q = base + "/quar"
+      Files.createDirectories(Paths.get(staging))
+      if (kind == "csv")
+        writeCsv(staging, "day1.csv", rows.map(_.map(v =>
+          if (v.contains(",")) "\"" + v + "\"" else v).mkString(",")))
+      else writeXlsx(staging, "day1.xlsx", rows)
+      if (kind == "csv")
+        Ingest.ingestAvailableNow(spark, staging, base + "/archive", base + "/chk",
+          fact, q, Transform.dimDF(spark))
+      else
+        Ingest.ingestXlsxAvailableNow(spark, staging, base + "/archive", base + "/chk",
+          new graft.etl.ParquetUpsertSink(spark, fact), q, Transform.dimDF(spark))
+      assert(cm.isEmpty, s"$kind ingest left a cached plan")
+      assert(sorted(graft.etl.Load.readTable(spark, fact)) === sorted(want.clean), kind)
+      assert(sortedQ(spark.read.parquet(q)) === sortedQ(want.quarantine), kind)
+    }
+    assert(want.clean.count() === 2 && want.quarantine.count() === 2)
+  }
+
   test("S3: permissive CSV capture routes malformed rows, keeps good ones") {
     val dir = tmpDir("csv")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("a INT, b DOUBLE, c STRING")

@@ -167,6 +167,30 @@ class LoadSpec extends SparkSpec {
       === again.dimItem.orderBy("items").collect().toSeq)
   }
 
+  test("S6/J1 inline star keys equal the three dim joins as a multiset, nulls dropped") {
+    import spark.implicits._
+    val clean = Seq(
+      ("1", "Latte", 2.0, 10.0, 10.0, "t1", "Cash", "Dine-in"),
+      ("1", "Latte", 2.0, 10.0, 10.0, "t1", "Cash", "Dine-in"),
+      ("2", "Latte", 1.0, 5.0, 5.0, "t2", "Gcash", "Take-out"),
+      ("3", "Croffle", 1.0, 5.0, 5.0, "t3", "Gcash", "Dine-in"),
+      ("4", null, 1.0, 5.0, 5.0, "t4", "Cash", "Dine-in"),
+      ("5", "Croffle", 1.0, 5.0, 5.0, "t5", null, "Dine-in"),
+      ("6", "Latte", 1.0, 5.0, 5.0, "t6", "Cash", null))
+      .toDF("order_id", "items", "quantity", "total_order_amount",
+        "received_amount", "payment_time", "payment_type", "order_type")
+    val star = Load.normalizeStar(clean)
+    // the derivation the inline keys replace: inner joins to the dims
+    val joined = clean
+      .join(broadcast(star.dimItem), Seq("items"))
+      .join(broadcast(star.dimPayment), Seq("payment_type"))
+      .join(broadcast(star.dimOrderType), Seq("order_type"))
+      .select(star.fact.columns.map(col).toIndexedSeq: _*)
+    assert(star.fact.count() === 4)
+    assert(star.fact.exceptAll(joined).count() === 0)
+    assert(joined.exceptAll(star.fact).count() === 0)
+  }
+
   test("S8 reprocess: quarantined rows promote after the dim learns the item") {
     import spark.implicits._
     val base = tmpDir("reproc")

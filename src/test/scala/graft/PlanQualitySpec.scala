@@ -44,20 +44,55 @@ class PlanQualitySpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
-  test("transform evaluates the clean_item chain in at most 2 plan nodes") {
+  test("transform evaluates the clean_item chain once, over the distinct items") {
     import graft.etl.{Pos, Transform}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join, LogicalPlan}
     val df = Transform.transform(Pos.rawReport(spark, sf), Transform.dimDF(spark))
     val opt = df.queryExecution.optimizedPlan
-    // The expensive R7-R10 chain has three consumers (R12 filter,
-    // dim-join key, initcap display column). The optimizer must keep
-    // it materialized in one Project (+ at most the pushed null
-    // filter) — if a plan change ever re-inlines it into every
-    // consumer this count jumps and the whole pipeline pays ~3x
-    // regex cost.
-    val nodes = opt.collect {
-      case p if p.expressions.mkString.contains("croissant|croffle") => p
-    }.size
-    assert(nodes <= 2, s"clean_item chain inlined into $nodes nodes\n${opt.toString.take(2000)}")
+    def mentions(p: LogicalPlan, pats: Seq[String]) = {
+      val e = p.expressions.mkString
+      pats.exists(e.contains)
+    }
+    // R7 (the head of the R7-R10 clean-item chain) and the R1-R6
+    // extract patterns, as they print in a plan
+    val chain = Seq("croissant|croffle")
+    val extracts = Seq("solo|duo|medio|familia", "hot|cold", "fries|lemonade",
+      "sugar 20%", "mild \\(1/4\\)", "x\\s*(\\d+)")
+    def itemAgg(p: LogicalPlan) = p.collect {
+      case a: Aggregate if a.groupingExpressions.exists {
+        case r: Attribute => r.name == "item"; case _ => false } => a
+    }.nonEmpty
+    // The chain has three consumers (R12 filter, dim-join key, initcap
+    // display column): exactly one node may evaluate it, and it must
+    // be the distinct-item aggregate or sit above it — a pushed-down
+    // or re-inlined copy pays the regex cost once per line again.
+    val nodes = opt.collect { case p if mentions(p, chain) => p }
+    assert(nodes.size === 1,
+      s"clean_item chain in ${nodes.size} nodes:\n${nodes.map(_.simpleString(2000)).mkString("\n")}")
+    assert(itemAgg(nodes.head), s"chain not above the item aggregate\n${opt.toString.take(3000)}")
+    // the join back: one side is the per-item relation, the other the
+    // exploded lines, which must evaluate no extract at all
+    val lineSides = opt.collect {
+      case j: Join if itemAgg(j.right) && !itemAgg(j.left) &&
+        j.left.collect { case g: Generate => g }.nonEmpty => j.left
+      case j: Join if itemAgg(j.left) && !itemAgg(j.right) &&
+        j.right.collect { case g: Generate => g }.nonEmpty => j.right
+    }
+    assert(lineSides.size === 1, opt.toString.take(3000))
+    val leaked = lineSides.head.collect { case p if mentions(p, chain ++ extracts) => p }
+    assert(leaked.isEmpty, s"per-line side evaluates extracts\n${opt.toString.take(3000)}")
+  }
+
+  test("star fact computes its surrogate keys inline: no join") {
+    import graft.etl.{Load, Pos, Transform}
+    // over a stored fact table, as the star refresh reads it
+    val path = tmpDir("star-plan") + "/fact"
+    Transform.run(Pos.rawReport(spark, sf), Transform.dimDF(spark))
+      .clean.write.parquet(path)
+    val opt = Load.normalizeStar(spark.read.parquet(path)).fact.queryExecution.optimizedPlan
+    assert(opt.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty,
+      opt.toString.take(3000))
   }
 
   test("q53: sessions build inside one user_id hash partitioning") {
