@@ -40,13 +40,6 @@ object Catalog {
     */
   final case class Pin(root: String, version: Long)
 
-  // escape-aware groups: commit writes name/root through
-  // Snapshots.jsonEsc, so a quote or backslash in either must
-  // round-trip (the constraints parser in Snapshots.versionMeta uses
-  // the same shape)
-  private val PinRe =
-    """\{"name":"((?:[^"\\]|\\.)*)","root":"((?:[^"\\]|\\.)*)","version":(\d+)\}""".r
-
   /** Publish a catalog version pinning `pins` atomically. Every
     * pinned (root, version) must already be committed — the catalog
     * never points at data that is not yet readable (the same
@@ -70,19 +63,14 @@ object Catalog {
         s"$catRoot: catalog advanced to $cur past expected $exp — " +
           "re-read the pins and retry")
     }
-    val body = (v: Long) => {
-      val ps = pins.toSeq.sortBy(_._1).map { case (n, p) =>
-        s"""{"name":"${Snapshots.jsonEsc(n)}","root":"${Snapshots.jsonEsc(p.root)}","version":${p.version}}"""
-      }.mkString("[", ",", "]")
-      s"""{"version":$v,"pins":$ps}"""
-    }
+    val body = VersionLog.encodePins(_: Long, pins)
     // under expectedLatest the publish must land at EXACTLY exp+1 or
     // not at all — a retry at a later number would be the lost update
     // the parameter exists to prevent
     expectedLatest match {
       case Some(exp) =>
         val v = exp + 1
-        require(Snapshots.tryPublish(spark, catRoot, v, body(v)),
+        require(Snapshots.tryPublish(spark, catRoot, v, body(v), None),
           s"$catRoot: lost the catalog publish race at version $v — " +
             "re-read the pins and retry")
         v
@@ -101,13 +89,7 @@ object Catalog {
     val vf = Snapshots.versionFile(catRoot, cv)
     val f = vf.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(vf), s"$catRoot has no catalog version $cv")
-    val in = f.open(vf)
-    val bodyStr =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    PinRe.findAllMatchIn(bodyStr).map(m =>
-      Snapshots.unesc(m.group(1)) ->
-        Pin(Snapshots.unesc(m.group(2)), m.group(3).toLong)).toMap
+    VersionLog.decodePins(Snapshots.readUtf8(f, vf), vf.toString)
   }
 
   /** The MULTI-TABLE TRANSACTION helper — stage N table commits,

@@ -15,8 +15,17 @@ import org.apache.spark.sql.functions.{abs, array_repeat, coalesce, col, explode
   *
   * {{{
   *   <root>/_versions/v00000001.json   // version log (commit points)
+  *   <root>/_versions/_latest_hint     // "<latest> [<max tag>]" listing floor
+  *   <root>/_versions/_ckpt            // audit checkpoint, one row per version
   *   <root>/data/c-<nonce>/ ...        // immutable snapshot data
+  *   <root>/manifests/m-<nonce>.txt    // a manifest version's file list
+  *   <root>/dv/d-<nonce>/ ...          // deletion vectors (merge-on-read)
+  *   <root>/_stats/<layout>/ ...       // per-layout file stats index
+  *   <root>/_copy/c-<nonce>.txt        // COPY INTO ledgers (k- once vacuumed)
   * }}}
+  *
+  * [[VersionLog]] is the one codec of the version bodies, the
+  * `_ckpt` lines and the catalog's bodies.
   *
   * Commit protocol (MULTI-writer, any number of readers — Delta-
   * style optimistic concurrency):
@@ -51,20 +60,16 @@ object Snapshots {
 
   private def versionsDir(root: String) = new Path(root, "_versions")
 
+  private[etl] def readUtf8(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
   private[etl] def versionFile(root: String, v: Long) =
     new Path(versionsDir(root), f"v$v%08d.json")
 
   private val VFILE = """v(\d{8})\.json""".r
-
-  private val VBODY = """"version":(\d+)""".r
-
-  /** The version number a version file's BODY declares — the one
-    * parser of that field for readers that tail the log's contents
-    * (the streaming harnesses' version-log stream) instead of listing
-    * its file names.
-    */
-  private[graft] def versionOfBody(body: String): Option[Long] =
-    VBODY.findFirstMatchIn(body).map(_.group(1).toLong)
 
   /** All committed versions, ascending (a directory listing of the
     * version log — no file contents read).
@@ -135,9 +140,7 @@ object Snapshots {
     try {
       if (!f.exists(hf)) None
       else {
-        val in = f.open(hf)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+        val body = readUtf8(f, hf)
         // ASCII digits only (Char.isDigit admits Unicode digits
         // toLong rejects), then Try for the overflow edge — ANY
         // unreadable field must mean "drop this field", never an
@@ -205,16 +208,12 @@ object Snapshots {
     (cols ++ sort).foreach(requireLoggable(_, "bucket column"))
   }
 
-  /** Reject identifiers the version-log's array parser cannot
-    * round-trip: the `cols`/`parts`/`colmap` arrays are read back
-    * with a `[^\]]*` group, so a literal ']' inside a name (legal in
-    * Spark via backticks) would serialize fine but silently truncate
-    * the parse on read — a dropped column's bytes resurrecting, or a
-    * bucket layout degrading to None so a later append writes
-    * untagged files into a tagged layout. Refusing at the API
-    * boundary keeps the log format simple AND round-trip-exact.
-    * Newlines are rejected for the same reason (the log is one line;
-    * [[jsonEsc]] does not escape them).
+  /** The version log's identifier rule: a partition, bucket or
+    * mapped column name may not contain ']' or a line break.
+    * [[VersionLog]] round-trips any string; the rule stays because
+    * readers older than that codec parse these arrays with a `[^\]]*`
+    * group and do not unescape `\n`, so they would mis-read a newer
+    * log holding such a name. Lifting it is a change of its own.
     */
   private[etl] def requireLoggable(name: String, what: String): Unit =
     require(!name.exists(ch => ch == ']' || ch == '\n' || ch == '\r'),
@@ -281,85 +280,16 @@ object Snapshots {
     */
   private[graft] val metaReads = new java.util.concurrent.atomic.AtomicLong
 
-  /** Parse the metadata fields readers need without a JSON library:
-    * the version files are written by this object, so the field shape
-    * is fixed.
+  /** The metadata of committed version `v`, decoded by
+    * [[VersionLog.decode]] (which refuses a malformed body or one
+    * demanding an unknown format feature).
     */
   def versionMeta(spark: SparkSession, root: String, v: Long): VMeta = {
     metaReads.incrementAndGet()
     val vf = versionFile(root, v)
     val f = fs(spark, vf)
     require(f.exists(vf), s"$root has no committed version $v")
-    val in = f.open(vf)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val dir = """"data_dir":"([^"]+)"""".r.findFirstMatchIn(body).map(_.group(1))
-    val man = """"manifest":"([^"]+)"""".r.findFirstMatchIn(body).map(_.group(1))
-    if (dir.isEmpty == man.isEmpty)
-      throw new IllegalStateException(s"$vf is not a version file")
-    // reader-version gate: a version whose correct interpretation
-    // requires a feature this library does not know must refuse, not
-    // silently mis-read (see [[SupportedFeatures]])
-    var tombstone = false
-    """"features":\[([^\]]*)\]""".r.findFirstMatchIn(body).foreach { fm =>
-      val demanded = """"([^"]+)"""".r.findAllMatchIn(fm.group(1))
-        .map(_.group(1)).toSet
-      val unknown = demanded -- SupportedFeatures
-      require(unknown.isEmpty,
-        s"$vf requires format features ${unknown.mkString(", ")} this " +
-          "reader does not support — upgrade the library to read this version")
-      tombstone = demanded.contains("tombstone")
-    }
-    // missing n_rows is as malformed as a missing data_dir — a silent
-    // -1 would be re-published verbatim by rollback into a version
-    // file the \d+ regex can never re-parse
-    val n = """"n_rows":(\d+)""".r.findFirstMatchIn(body) match {
-      case Some(m) => m.group(1).toLong
-      case None => throw new IllegalStateException(s"$vf is not a version file")
-    }
-    val tag = """"tag":(\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
-    val schema = """"schema":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(body)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    val dv = """"dv":"([^"]+)"""".r.findFirstMatchIn(body).map(_.group(1))
-    // partition column names are identifiers (no quotes/brackets), so
-    // the non-greedy bracket group is unambiguous
-    val parts = """"parts":\[([^\]]*)\]""".r.findFirstMatchIn(body)
-      .map(m => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-        .map(pm => unesc(pm.group(1))).toSeq)
-      .getOrElse(Nil)
-    // bucket cols are identifiers too; the object shape is fixed by
-    // [[extras]], so the anchored literal keys are unambiguous
-    val bucket = """"bucket":\{"n":(\d+),"cols":\[([^\]]*)\],"sort":\[([^\]]*)\]\}""".r
-      .findFirstMatchIn(body).map { bm =>
-        def names(s: String): Seq[String] =
-          """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(s)
-            .map(nm => unesc(nm.group(1))).toSeq
-        Bucketing(bm.group(1).toInt, names(bm.group(2)), names(bm.group(3)))
-      }
-    val colmap = """"colmap":\{"renames":\[([^\]]*)\],"dropped":\[([^\]]*)\]\}""".r
-      .findFirstMatchIn(body).map { cmMatch =>
-        val rn = """\{"p":"((?:[^"\\]|\\.)*)","l":"((?:[^"\\]|\\.)*)"\}""".r
-          .findAllMatchIn(cmMatch.group(1))
-          .map(rm => (unesc(rm.group(1)), unesc(rm.group(2)))).toSeq
-        val dr = """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(cmMatch.group(2))
-          .map(dm => unesc(dm.group(1))).toSeq
-        ColMap(rn, dr)
-      }.getOrElse(ColMap())
-    // constraints is serialized LAST, so the greedy group ends at the
-    // array's own closing bracket even when an expr contains ']'
-    val cons = """"constraints":\[(.*)\]""".r.findFirstMatchIn(body)
-      .map { am =>
-        """\{"name":"((?:[^"\\]|\\.)*)","expr":"((?:[^"\\]|\\.)*)"\}""".r
-          .findAllMatchIn(am.group(1))
-          .map(cm => (unesc(cm.group(1)), unesc(cm.group(2)))).toSeq
-      }.getOrElse(Nil)
-    // COPY INTO ledger ref — ignorable metadata (no feature gate: a
-    // reader unaware of it still reads every row correctly; only the
-    // copy-idempotency bookkeeping needs it)
-    val copyRef = """"copy":"([^"]+)"""".r.findFirstMatchIn(body)
-      .map(_.group(1))
-    VMeta(dir, man, n, tag, schema, dv, cons, parts, bucket, colmap,
-      tombstone, copyRef)
+    VersionLog.decode(readUtf8(f, vf), vf.toString)
   }
 
   /** Refuse an operation on a DROPPED table (latest version is a
@@ -372,9 +302,6 @@ object Snapshots {
       s"$op: $root is DROPPED (tombstone at the latest version) — " +
         "RESTORE to a pre-drop version, or CREATE [OR REPLACE] it anew")
 
-  private[etl] def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
   // --- aggregate history checkpoint: O(tail) audit reads ---
 
   /** One version's rolled-up audit row — everything [[history]] and
@@ -382,7 +309,7 @@ object Snapshots {
     * `ref` is the layout reference (data dir or manifest, root-
     * relative); `layout` is `dir`/`manifest`/`unsupported(features)`.
     */
-  private final case class CkptRow(v: Long, layout: String, ref: String,
+  private[graft] final case class CkptRow(v: Long, layout: String, ref: String,
                                    nRows: Long, tag: Option[Long],
                                    hasDv: Boolean, nCons: Int,
                                    copyRef: Option[String] = None)
@@ -409,16 +336,6 @@ object Snapshots {
         CkptRow(v, "unsupported(features)", "", -1L, None, false, 0)
     }
 
-  // the `copy` field is REQUIRED by this line shape (empty = none):
-  // pre-copy-era checkpoint lines deliberately fail the parse, so
-  // their versions re-derive from the version files (which DO carry
-  // the ref) and the next write re-checkpoints them in the new shape
-  // — a missed ref here would silently re-load already-copied files
-  private val CkptLineRe =
-    ("""\{"v":(\d+),"layout":"(dir|manifest|tombstone)","ref":"([^"]*)",""" +
-      """"n_rows":(-?\d+)(?:,"tag":(\d+))?,"dv":(0|1),"n_cons":(\d+),""" +
-      """"copy":"([^"]*)"\}""").r
-
   /** Read the rolled-up rows — per-LINE tolerant: a torn or
     * unparseable line is simply absent from the map (its version
     * re-derives from the version file), never an error.
@@ -428,16 +345,8 @@ object Snapshots {
       val cf = ckptFile(root)
       if (!f.exists(cf)) Map.empty
       else {
-        val in = f.open(cf)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        body.split('\n').iterator.flatMap {
-          case CkptLineRe(v, layout, ref, n, tag, dv, nc, cp) =>
-            Iterator.single(v.toLong -> CkptRow(v.toLong, layout, ref,
-              n.toLong, Option(tag).map(_.toLong), dv == "1", nc.toInt,
-              Some(cp).filter(_.nonEmpty)))
-          case _ => Iterator.empty
-        }.toMap
+        readUtf8(f, cf).split('\n').iterator.flatMap(VersionLog.decodeCkpt)
+          .map(r => r.v -> r).toMap
       }
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
@@ -449,12 +358,7 @@ object Snapshots {
   private def writeCkpt(f: FileSystem, root: String,
                         rows: Seq[CkptRow]): Unit =
     try {
-      val body = rows.sortBy(_.v).map { r =>
-        s"""{"v":${r.v},"layout":"${r.layout}","ref":"${r.ref}",""" +
-          s""""n_rows":${r.nRows}${r.tag.map(t => s""","tag":$t""")
-            .getOrElse("")},"dv":${if (r.hasDv) 1 else 0},"n_cons":${r.nCons},""" +
-          s""""copy":"${r.copyRef.getOrElse("")}"}"""
-      }.mkString("\n")
+      val body = rows.sortBy(_.v).map(VersionLog.encodeCkpt).mkString("\n")
       val out = f.create(ckptFile(root), true)
       try out.write(body.getBytes("UTF-8"))
       finally out.close()
@@ -545,9 +449,9 @@ object Snapshots {
     // and every append's schema check — plans from the version
     // metadata instead of sampling parquet footers
     val ddl = loggedDdl(df.schema)
-    publishNext(spark, root,
-      v => dirBody(v, dataDir, nRows, None, Some(ddl), None, cons,
-        effParts, effBucket))
+    publishNext(spark, root, VersionLog.encode(_, VMeta(Some(dataDir), None,
+      nRows, None, Some(ddl), constraints = cons, parts = effParts,
+      bucket = effBucket)))
   }
 
   /** EXCLUSIVE birth verb (`CREATE TABLE` semantics): commit `df` as
@@ -576,9 +480,9 @@ object Snapshots {
     val ddl = loggedDdl(df.schema)
     val target = prior.getOrElse(0L) + 1
     fireRaceHook()
-    if (!tryPublish(spark, root, target,
-        dirBody(target, dataDir, nRows, None, Some(ddl), None, Nil,
-          partitionBy, bucketBy))) {
+    if (!tryPublish(spark, root, target, VersionLog.encode(target,
+        VMeta(Some(dataDir), None, nRows, None, Some(ddl),
+          parts = partitionBy, bucket = bucketBy)), None)) {
       fs(spark, new Path(root, dataDir)).delete(new Path(root, dataDir), true)
       throw new IllegalStateException(
         s"CREATE TABLE: $root was created concurrently (version $target " +
@@ -604,9 +508,8 @@ object Snapshots {
     partitionBy.foreach(requireLoggable(_, "partition column"))
     val (dataDir, nRows) = writeDataDir(spark, df, root, partitionBy, bucketBy)
     val ddl = loggedDdl(df.schema)
-    publishNext(spark, root,
-      v => dirBody(v, dataDir, nRows, None, Some(ddl), None, Nil,
-        partitionBy, bucketBy))
+    publishNext(spark, root, VersionLog.encode(_, VMeta(Some(dataDir), None,
+      nRows, None, Some(ddl), parts = partitionBy, bucket = bucketBy)))
   }
 
   /** `DROP TABLE` — a TOMBSTONE version: metadata-only death, exactly
@@ -627,94 +530,6 @@ object Snapshots {
       Right(Publish(VMeta(None, Some(man), 0L, None, tombstone = true),
         identity, staged = Seq(man)))
     }
-
-  private[etl] def jsonEsc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  /** Format features THIS library understands. A version file lists
-    * the features its correct interpretation REQUIRES (`"features"`,
-    * derived in [[extras]] — never hand-passed): `dv` (ignoring the
-    * deletion vector resurrects deleted rows), `colmap` (ignoring
-    * the mapping presents dropped/renamed physical names), `bucket`
-    * (a writer ignoring the layout breaks bucket identity for every
-    * later shuffle-free read). [[versionMeta]] refuses a version
-    * demanding a feature outside this set — the Delta
-    * reader-version discipline: when a FUTURE writer adds a feature
-    * with correctness semantics, today's binary fails loudly
-    * instead of silently mis-reading the table.
-    */
-  private[etl] val SupportedFeatures: Set[String] =
-    Set("dv", "colmap", "bucket", "tombstone")
-
-  private def extras(tag: Option[Long], schema: Option[String],
-                     dv: Option[String] = None,
-                     cons: Seq[(String, String)] = Nil,
-                     parts: Seq[String] = Nil,
-                     bucket: Option[Bucketing] = None,
-                     colmap: ColMap = ColMap(),
-                     tombstone: Boolean = false,
-                     copyRef: Option[String] = None): String =
-    (Seq(dv.map(_ => "dv"), bucket.map(_ => "bucket"),
-        if (colmap.isIdentity) None else Some("colmap"),
-        if (tombstone) Some("tombstone") else None).flatten match {
-      case Nil => ""
-      case fs => ""","features":[""" +
-        fs.map(f => s""""$f"""").mkString(",") + "]"
-    }) +
-    tag.map(t => s""","tag":$t""").getOrElse("") +
-      schema.map(d => s""","schema":"${jsonEsc(d)}"""").getOrElse("") +
-      dv.map(d => s""","dv":"$d"""").getOrElse("") +
-      (if (parts.isEmpty) ""
-       else ""","parts":[""" +
-         parts.map(p => s""""${jsonEsc(p)}"""").mkString(",") + "]") +
-      bucket.map { b =>
-        def arr(cs: Seq[String]) =
-          cs.map(c => s""""${jsonEsc(c)}"""").mkString(",")
-        s""","bucket":{"n":${b.n},"cols":[${arr(b.cols)}],"sort":[${arr(b.sort)}]}"""
-      }.getOrElse("") +
-      (if (colmap.isIdentity) ""
-       else {
-         val rn = colmap.renames.map { case (p, l) =>
-           s"""{"p":"${jsonEsc(p)}","l":"${jsonEsc(l)}"}"""
-         }.mkString(",")
-         val dr = colmap.dropped.map(d => s""""${jsonEsc(d)}"""").mkString(",")
-         s""","colmap":{"renames":[$rn],"dropped":[$dr]}"""
-       }) +
-      copyRef.map(r => s""","copy":"${jsonEsc(r)}"""").getOrElse("") +
-      (if (cons.isEmpty) ""
-       else ""","constraints":[""" + cons.map { case (n, e) =>
-         s"""{"name":"${jsonEsc(n)}","expr":"${jsonEsc(e)}"}"""
-       }.mkString(",") + "]")
-
-  private def dirBody(v: Long, dataDir: String, nRows: Long,
-                      tag: Option[Long], schema: Option[String] = None,
-                      dv: Option[String] = None,
-                      cons: Seq[(String, String)] = Nil,
-                      parts: Seq[String] = Nil,
-                      bucket: Option[Bucketing] = None,
-                      colmap: ColMap = ColMap()): String =
-    s"""{"version":$v,"data_dir":"$dataDir","n_rows":$nRows${extras(tag, schema, dv, cons, parts, bucket, colmap)}}"""
-
-  private def manBody(v: Long, manifest: String, nRows: Long,
-                      tag: Option[Long], schema: Option[String] = None,
-                      dv: Option[String] = None,
-                      cons: Seq[(String, String)] = Nil,
-                      parts: Seq[String] = Nil,
-                      bucket: Option[Bucketing] = None,
-                      colmap: ColMap = ColMap(),
-                      tombstone: Boolean = false,
-                      copyRef: Option[String] = None): String =
-    s"""{"version":$v,"manifest":"$manifest","n_rows":$nRows${extras(tag, schema, dv, cons, parts, bucket, colmap, tombstone, copyRef)}}"""
-
-  private def bodyOf(v: Long, m: VMeta): String = m.dataDir match {
-    case Some(d) =>
-      dirBody(v, d, m.nRows, m.tag, m.schemaDdl, m.dv, m.constraints,
-        m.parts, m.bucket, m.colmap)
-    case None =>
-      manBody(v, m.manifest.get, m.nRows, m.tag, m.schemaDdl, m.dv,
-        m.constraints, m.parts, m.bucket, m.colmap, m.tombstone,
-        m.copyRef)
-  }
 
   /** Path key a partition column is laid out under. The partition
     * value is DUPLICATED into this path-only column at write time
@@ -822,7 +637,7 @@ object Snapshots {
                           mkBody: Long => String): Long = {
     var v = latestVersion(spark, root).getOrElse(0L) + 1
     var attempts = 0
-    while (!tryPublish(spark, root, v, mkBody(v))) {
+    while (!tryPublish(spark, root, v, mkBody(v), None)) {
       attempts += 1
       require(attempts < 1000, s"$root: lost $attempts publish races — livelock?")
       v = math.max(v + 1, latestVersion(spark, root).getOrElse(0L) + 1)
@@ -915,7 +730,8 @@ object Snapshots {
         case Left(noop) => return noop
         case Right(p) =>
           fireRaceHook()
-          if (tryPublish(spark, root, v + 1, bodyOf(v + 1, p.meta))) {
+          if (tryPublish(spark, root, v + 1, VersionLog.encode(v + 1, p.meta),
+              p.meta.tag)) {
             if (rebased) rebases.incrementAndGet()
             return p.done(v + 1)
           }
@@ -941,12 +757,13 @@ object Snapshots {
     */
   private[graft] var racePublishHook: Option[() => Unit] = None
 
-  /** Attempt to publish version `v` pointing at `dataDir`: write to
-    * a writer-unique temp name in the same dir, then promote with
+  /** Attempt to publish `body` as version `v`: write to a
+    * writer-unique temp name in the same dir, then promote with
     * CREATE-EXCLUSIVE semantics — exactly one writer wins a version
     * number; readers see either no version or a complete one.
     * Returns false on a lost race (destination already committed by
-    * another writer).
+    * another writer). `tag` is the idempotency tag `body` carries,
+    * which a won publish records in the hint.
     *
     * The promote step is filesystem-aware because plain rename is
     * NOT create-exclusive everywhere: POSIX rename(2) — what the
@@ -959,7 +776,7 @@ object Snapshots {
     * and stays the promote step.
     */
   private[etl] def tryPublish(spark: SparkSession, root: String, v: Long,
-                         body: String): Boolean = {
+                         body: String, tag: Option[Long]): Boolean = {
     val vf = versionFile(root, v)
     val f = fs(spark, vf)
     f.mkdirs(vf.getParent)
@@ -1010,9 +827,7 @@ object Snapshots {
         // drops the claim (never a wrong one); [[lastTag]] then
         // degrades to the listing walk until a tagged publish
         // re-seeds it.
-        val ownTag = """"tag":(\d+)""".r.findFirstMatchIn(body)
-          .map(_.group(1).toLong)
-        val hintTag = ownTag.orElse(prior match {
+        val hintTag = tag.orElse(prior match {
           case Some((h, Some(t))) if h == v - 1 => Some(t)
           case Some((h, Some(t))) if h < v - 1 && v - 1 - h <= 64 =>
             try {
@@ -1091,10 +906,7 @@ object Snapshots {
     val p = new Path(root, rel)
     val f = fs(spark, p)
     require(f.exists(p), s"missing manifest $p")
-    val in = f.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    body.split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
+    readUtf8(f, p).split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   /** The version's data files as root-RELATIVE paths: a dir version
@@ -1223,7 +1035,7 @@ object Snapshots {
     // metadata-only all the way: the target version file already
     // records its n_rows, so the undo triggers no read of the data
     val m = versionMeta(spark, root, to)
-    publishNext(spark, root, v => bodyOf(v, m.copy(tag = None)))
+    publishNext(spark, root, VersionLog.encode(_, m.copy(tag = None)))
   }
 
   /** Make [[lastTag]]'s early-stop invariant REAL at the write
@@ -1862,12 +1674,12 @@ object Snapshots {
     val absFiles = filesOfVersion(spark, srcRoot, v).map(f => StatsIndex.normPath(f))
     val man = writeManifest(spark, dstRoot, absFiles)
     val ddl = m.schemaDdl.getOrElse(loggedDdl(read(spark, srcRoot, Some(v)).schema))
+    val meta = VMeta(None, Some(man), m.nRows, None, Some(ddl), None,
+      m.constraints, m.parts, m.bucket, m.colmap)
     val nv =
       if (orReplace)
         // the replace verb takes any next slot (publishNext semantics)
-        publishNext(spark, dstRoot, n =>
-          manBody(n, man, m.nRows, None, Some(ddl), None, m.constraints,
-            m.parts, m.bucket, m.colmap))
+        publishNext(spark, dstRoot, VersionLog.encode(_, meta))
       else {
         // a CREATE-shaped verb publishes at EXACTLY the first free
         // slot — racing clones/creates must yield one winner and one
@@ -1875,9 +1687,7 @@ object Snapshots {
         // would be one)
         val slot = dstPrior.getOrElse(0L) + 1
         fireRaceHook()
-        if (!tryPublish(spark, dstRoot, slot,
-            manBody(slot, man, m.nRows, None, Some(ddl), None, m.constraints,
-              m.parts, m.bucket, m.colmap))) {
+        if (!tryPublish(spark, dstRoot, slot, VersionLog.encode(slot, meta), None)) {
           fs(spark, new Path(dstRoot, man)).delete(new Path(dstRoot, man), false)
           throw new IllegalStateException(
             s"SHALLOW CLONE: $dstRoot was created concurrently — refusing " +
@@ -2607,10 +2417,7 @@ object Snapshots {
     val f = fs(spark, p)
     if (!f.exists(p)) Nil
     else {
-      val in = f.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.split('\n').toSeq.filter(_.nonEmpty).map(_.split('\t')(0))
+      readUtf8(f, p).split('\n').toSeq.filter(_.nonEmpty).map(_.split('\t')(0))
     }
   }
 
@@ -3100,10 +2907,10 @@ object Snapshots {
     * * NULL-fills the missing ones; extra columns refuse WHEN any
     * star action could silently absorb them — a statement whose every
     * action is explicit may carry source-only discriminator columns
-    * (the CDC-apply `_change_type` idiom). An explicit
-    * `insertSet` (the column-list insert) builds inserted rows from
-    * its expressions and NULL-fills unnamed columns; the general
-    * `inserts` list takes SEVERAL conditional insert clauses,
+    * (the CDC-apply `_change_type` idiom). An insert clause with
+    * explicit assignments (the column-list insert) builds inserted
+    * rows from its expressions and NULL-fills unnamed columns; the
+    * general `inserts` list takes SEVERAL conditional insert clauses,
     * evaluated first-match-wins in declaration order (SQL MERGE's
     * multi-insert rule), with per-clause counts in the receipt. With
     * `evolveSchema`, NEW source columns extend the logged schema
@@ -3147,7 +2954,6 @@ object Snapshots {
                    notMatchedBySource: Seq[MatchedClause] = Nil,
                    tag: Option[Long] = None,
                    evolveSchema: Boolean = false,
-                   insertSet: Option[Seq[(String, Column)]] = None,
                    inserts: Seq[InsertClause] = Nil,
                    metaHint: Option[(Long, VMeta)] = None)
       : MergeClausesResult = {
@@ -3156,15 +2962,13 @@ object Snapshots {
     require(targetAlias != sourceAlias,
       s"target and source aliases must differ, both are '$targetAlias'")
     // two spellings of the insert side: `inserts` is the general
-    // ORDERED clause list (first-match-wins); insertCond/insertSet is
-    // the single-clause sugar older callers use. Exactly one form.
-    require(inserts.isEmpty || (insertCond.isEmpty && insertSet.isEmpty),
-      "give ordered `inserts` OR the single insertCond/insertSet form")
-    require(insertSet.isEmpty || insertCond.nonEmpty,
-      "insert assignments need a WHEN NOT MATCHED ... THEN INSERT clause")
+    // ORDERED clause list (first-match-wins); insertCond is the
+    // single INSERT * clause older callers use. Exactly one form.
+    require(inserts.isEmpty || insertCond.isEmpty,
+      "give ordered `inserts` OR the single insertCond form")
     val ins: Seq[InsertClause] =
       if (inserts.nonEmpty) inserts
-      else insertCond.map(c => InsertClause(c, insertSet)).toSeq
+      else insertCond.map(c => InsertClause(c, None)).toSeq
     require(matched.nonEmpty || ins.nonEmpty || notMatchedBySource.nonEmpty,
       "mergeClauses needs at least one WHEN clause")
     // the COLUMN-LIST insert (`INSERT (cols) VALUES (exprs)` — the

@@ -86,18 +86,18 @@ object Ingest {
   /** The snapshot VERSION LOG as a stream (Delta's streaming source
     * tails its transaction log the same way): `each` gets a
     * micro-batch's new versions ascending plus the log's committed
-    * set, listed once per micro-batch. The `collect()` is one tiny
-    * version-file line per commit, never data rows.
+    * set, listed once per micro-batch. Each version file is read
+    * whole, so the codec always sees a complete body; the `collect()`
+    * is one tiny body per commit, never data rows.
     */
   private def tailVersions(spark: SparkSession, root: String,
                            checkpointDir: String, maxFiles: Option[Int])
                           (each: (Seq[Long], Set[Long]) => Unit): Unit = {
-    val snap = graft.etl.Snapshots
-    drain(fileStream(spark, "value STRING", maxFiles).text(s"$root/_versions"),
-      checkpointDir) { (batch, _) =>
+    drain(fileStream(spark, "value STRING", maxFiles).option("wholetext", "true")
+        .text(s"$root/_versions"), checkpointDir) { (batch, _) =>
       val vs = batch.collect().toSeq
-        .flatMap(r => snap.versionOfBody(r.getString(0))).sorted
-      each(vs, snap.versions(spark, root).toSet)
+        .flatMap(r => graft.etl.VersionLog.versionOf(r.getString(0))).sorted
+      each(vs, graft.etl.Snapshots.versions(spark, root).toSet)
     }
   }
 

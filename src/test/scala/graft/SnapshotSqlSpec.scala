@@ -1282,6 +1282,20 @@ class SnapshotSqlSpec extends SparkSpec {
       "a clause-form MERGE statement must read the version meta once")
   }
 
+  test("ALTER TABLE ADD CONSTRAINT with a CHECK over two lines survives the version log") {
+    val root = tmpDir("sqlsnap_multiline_check")
+    Snapshots.commit(spark, ids(1, 10), root)
+    SnapshotSql.sql(spark,
+      s"ALTER TABLE snap.`$root` ADD CONSTRAINT c CHECK (id > 0\n AND id < 100)")
+    assert(Snapshots.constraintsOf(spark, root) === Seq(("c", "id > 0\n AND id < 100")))
+    val last = Snapshots.history(spark, root).orderBy(desc("version")).head()
+    assert(last.getAs[Int]("n_constraints") === 1)
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.append(spark, ids(500, 500), root)
+    }
+    assert(e.getMessage.contains("violate table constraints"), e.getMessage)
+  }
+
   test("canHit translation: And keeps the provable half; Or requires both") {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.LongType

@@ -294,6 +294,20 @@ class SnapshotsSpec extends SparkSpec {
     intercept[IllegalStateException] { Snapshots.rollback(spark, root, 1L) }
   }
 
+  test("a CHECK constraint written over two lines survives the version log") {
+    val root = tmpDir("snap_multiline_check")
+    Snapshots.commit(spark, df(5), root)
+    val expr = "id > 0\n AND id < 100"
+    Snapshots.addConstraint(spark, root, "c", expr)
+    assert(Snapshots.constraintsOf(spark, root) === Seq(("c", expr)))
+    val last = Snapshots.history(spark, root).orderBy(desc("version")).head()
+    assert(last.getAs[Int]("n_constraints") === 1)
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.append(spark, Seq((500L, "x")).toDF("id", "s"), root)
+    }
+    assert(e.getMessage.contains("violate table constraints"), e.getMessage)
+  }
+
   // --- copy-on-write tier: append / merge / deleteRange ---
 
   private def kv(ids: Seq[Long], tagS: String) =
