@@ -1,9 +1,15 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructType}
+
+import scala.util.Try
 
 /** S4/S5/S6/S8: sink layer. The reference upserts row-dict JSON over
   * HTTP from driver memory (`main.py:27-59`) — its scalability
@@ -13,6 +19,12 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * written by executors — nothing is ever collected to the driver.
   * One parameterized writer serves both fact and quarantine
   * (collapsing the reference's S4/S5 duplication).
+  *
+  * Every table read here is opened by [[openTable]]: the file listing
+  * is made on the driver and the schema comes from one footer, so
+  * opening a table runs no Spark job (`spark.read.parquet` runs a
+  * listing job past 32 partition directories and a schema job on
+  * every open).
   */
 object Load {
 
@@ -56,7 +68,9 @@ object Load {
     * O(touched buckets / total buckets · table), not O(table) —
     * at 100 TB an incremental batch touching 3 of 64 buckets reads
     * ~5% of the table instead of all of it. Untouched partitions'
-    * files are never opened (asserted byte-identical in LoadSpec).
+    * files are never opened (asserted byte-identical in LoadSpec),
+    * nor listed: only the touched `__bucket=` directories are. The
+    * merge shuffles once ([[latestWins]]).
     */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
              keys: Seq[String]): Unit = {
@@ -65,11 +79,8 @@ object Load {
       .withColumn("__bucket", bucketOf(keys))
       .withColumn("__v", lit(1L))
     if (!tableExists(spark, path)) {
-      val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)
-      val first = inc.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__v", "__rn")
       val tmp = path + "__tmp"
-      first.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+      latestWins(inc, keys).write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
       swap(spark, tmp, path)
       return
     }
@@ -78,23 +89,16 @@ object Load {
     val touched = inc.select("__bucket").distinct()
       .collect().map(_.getLong(0)).sorted
     if (touched.isEmpty) return
-    // partition pruning: only the touched buckets' files are read
-    val cur = spark.read.parquet(path)
+    // only the touched buckets' directories are listed; the filter
+    // prunes the whole-table read of the spark.read.parquet fallback,
+    // or of a cached read of the table that stands in for this one
+    val cur = openTable(spark, path, touched.map(b => s"__bucket=$b").toSet)
       .filter(col("__bucket").isin(touched: _*))
       .withColumn("__v", lit(0L))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)
-    val merged = cur.unionByName(inc, allowMissingColumns = true)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__v", "__rn")
     // write merged buckets beside the table, then swap ONLY those
     // partition directories — untouched buckets are never rewritten.
-    // repartition on the bucket first: otherwise every shuffle task
-    // writes a sliver into every touched bucket dir (tasks × buckets
-    // small files per batch — the classic 100 TB small-files trap);
-    // this way each bucket gets one writer and one file per batch.
     val tmp = path + "__tmp"
-    merged.repartition(col("__bucket"))
+    latestWins(cur.unionByName(inc, allowMissingColumns = true), keys)
       .write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
     // Crash-safe swap: the old generation is MOVED ASIDE (a sibling
     // dir, invisible to partition discovery), never deleted before
@@ -106,21 +110,21 @@ object Load {
     // metadata renames (not a recursive delete); a zero-window
     // commit would need a manifest/generation pointer, which the
     // plain-parquet read contract here deliberately avoids.
-    val fs = new org.apache.hadoop.fs.Path(path)
+    val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(asideDir(path))
+    val aside = new Path(asideDir(path))
     fs.mkdirs(aside)
     // phase 1: old generation aside
     touched.foreach { b =>
-      val dst = new org.apache.hadoop.fs.Path(s"$path/__bucket=$b")
+      val dst = new Path(s"$path/__bucket=$b")
       if (fs.exists(dst))
-        renameOrAbort(fs, dst, new org.apache.hadoop.fs.Path(aside, s"__bucket=$b"))
+        renameOrAbort(fs, dst, new Path(aside, s"__bucket=$b"))
     }
     // phase 2: new generation in
     touched.foreach { b =>
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/__bucket=$b")
+      val src = new Path(s"$tmp/__bucket=$b")
       if (fs.exists(src))
-        renameOrAbort(fs, src, new org.apache.hadoop.fs.Path(s"$path/__bucket=$b"))
+        renameOrAbort(fs, src, new Path(s"$path/__bucket=$b"))
     }
     // phase 3: the swap is complete — only now drop the old copies.
     // (Reached only if every rename above succeeded: Hadoop rename
@@ -128,7 +132,25 @@ object Load {
     // unconditional delete after a silent rename failure would drop
     // the only remaining copy of that bucket.)
     fs.delete(aside, true)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    fs.delete(new Path(tmp), true)
+  }
+
+  /** Latest `__v` wins per key, in one shuffle. Hash-partitioning on
+    * `__bucket`, a function of the keys, already meets the window's
+    * distribution over (`__bucket`, keys…), and the window's sort
+    * meets the writer's ordering on `__bucket`, so Spark adds no
+    * second exchange and no second sort. It also gives each bucket
+    * one writer: without it every task would write a sliver into
+    * every bucket directory (tasks × buckets small files per batch,
+    * the classic 100 TB small-files trap); this way each bucket gets
+    * one file per batch.
+    */
+  private def latestWins(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(("__bucket" +: keys).map(col): _*).orderBy(col("__v").desc)
+    df.repartition(col("__bucket"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__v", "__rn")
   }
 
   private def asideDir(path: String): String = path + "__swap"
@@ -140,9 +162,7 @@ object Load {
     * rename failure must abort the swap (leaving the aside/__prev
     * dirs in place for [[recoverSwap]]) before any delete runs.
     */
-  private[etl] def renameOrAbort(fs: org.apache.hadoop.fs.FileSystem,
-                                 src: org.apache.hadoop.fs.Path,
-                                 dst: org.apache.hadoop.fs.Path): Unit =
+  private[etl] def renameOrAbort(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst (swap aborted; run recovery)")
 
@@ -157,27 +177,27 @@ object Load {
     * always starts from a complete table.
     */
   private[etl] def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
+    val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverPrev(fs, path)
-    val aside = new org.apache.hadoop.fs.Path(asideDir(path))
+    val aside = new Path(asideDir(path))
     if (fs.exists(aside)) {
       fs.listStatus(aside).foreach { st =>
-        val dst = new org.apache.hadoop.fs.Path(path + "/" + st.getPath.getName)
+        val dst = new Path(path + "/" + st.getPath.getName)
         if (!fs.exists(dst)) renameOrAbort(fs, st.getPath, dst)
       }
       fs.delete(aside, true)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(path + "__tmp"), true)
+    fs.delete(new Path(path + "__tmp"), true)
   }
 
   /** Restore a table whose whole-table [[swap]] crashed between the
     * aside rename and the new-generation rename (path missing, old
     * generation parked at `__prev`).
     */
-  private def recoverPrev(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val prev = new org.apache.hadoop.fs.Path(path + "__prev")
+  private def recoverPrev(fs: FileSystem, path: String): Unit = {
+    val p = new Path(path)
+    val prev = new Path(path + "__prev")
     if (!fs.exists(p) && fs.exists(prev)) renameOrAbort(fs, prev, p)
   }
 
@@ -187,9 +207,9 @@ object Load {
     * aside present → restore).
     */
   private[etl] def swap(spark: SparkSession, tmp: String, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val prev = new org.apache.hadoop.fs.Path(path + "__prev")
+    val p = new Path(path)
+    val t = new Path(tmp)
+    val prev = new Path(path + "__prev")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverPrev(fs, path)
     if (fs.exists(p)) {
@@ -200,9 +220,57 @@ object Load {
     fs.delete(prev, true)
   }
 
-  /** Read an upsert table without its internal bucket column. */
+  /** Read an upsert table without its internal bucket column. The
+    * table is opened by [[openTable]]: listed on the driver, its
+    * schema taken from one footer, no Spark job.
+    */
   def readTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("__bucket")
+    openTable(spark, path).drop("__bucket")
+
+  /** The one table opener of this object: what `spark.read.parquet`
+    * gives, without its jobs. The leaf files are listed with Hadoop
+    * `listStatus` on the driver, skipping the names Spark skips (`_*`
+    * without `=`, `.*`, `*._COPYING_`); `keep` narrows the top-level
+    * entries (the upsert keeps its touched `__bucket=` directories).
+    * The data schema is the Spark row schema in the footer of the
+    * first file by path, the file `spark.read.parquet` reads it from
+    * when `mergeSchema` is off; Spark still infers the partition
+    * columns from the directories. With no file, or a first file
+    * Spark did not write, the table is opened by `spark.read.parquet`.
+    */
+  private[graft] def openTable(spark: SparkSession, path: String,
+                               keep: String => Boolean = _ => true): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val dir = fs.makeQualified(root)
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    }
+    def leaves(d: Path, take: FileStatus => Boolean): Seq[FileStatus] =
+      fs.listStatus(d).toSeq.filter(take).flatMap { st =>
+        if (st.isDirectory) leaves(st.getPath, visible) else Seq(st)
+      }
+    val files =
+      try leaves(dir, st => visible(st) && keep(st.getPath.getName)).sortBy(_.getPath.toString)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    files.headOption.flatMap(sparkSchema(_, conf)) match {
+      case Some(schema) => GraftShim.parquetTable(spark, dir, files, schema)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The Spark row schema a Spark writer keeps in the parquet footer. */
+  private def sparkSchema(file: FileStatus,
+                          conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+    finally reader.close()
+  }
 
   /** S5: quarantine sink — append semantics (schema-on-read,
     * constraint-free; `README.md:118`). The table is laid out as
@@ -263,7 +331,7 @@ object Load {
     // — without this, the exists check below would silently no-op
     recoverSwap(spark, quarantinePath)
     if (!tableExists(spark, quarantinePath)) return (0L, 0L)
-    val q = spark.read.parquet(quarantinePath).drop("__batch")
+    val q = openTable(spark, quarantinePath).drop("__batch")
     // Quarantined rows store the POST-title-case item (`main.py:385`
     // runs before the fact select), while dim keys are the vendor's
     // original casing — so the reprocess lookup title-cases the dim
@@ -292,7 +360,7 @@ object Load {
   }
 
   def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p)
   }
@@ -333,7 +401,7 @@ object Load {
     val rows =
       if (empty) Array.empty[String]
       else {
-        val landed = spark.read.parquet(tmp)
+        val landed = openTable(spark, tmp)
         val stats = tokCol match {
           case Some(t) => landed.groupBy(shardCol)
             .agg(count(lit(1)).as("n_docs"), sum(col(t)).as("n_tokens"))
@@ -345,7 +413,7 @@ object Load {
           s"""{"shard":${r.get(0)},"n_docs":${r.getLong(1)},"n_tokens":$toks}"""
         }
       }
-    val manifest = new org.apache.hadoop.fs.Path(tmp, "_MANIFEST.json")
+    val manifest = new Path(tmp, "_MANIFEST.json")
     val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // JSON-lines (one shard per line): streamable, appendable in
     // spirit, and directly readable by spark.read.json
@@ -362,11 +430,11 @@ object Load {
     */
   def readSharded(spark: SparkSession, path: String): DataFrame = {
     recoverSwap(spark, path)
-    val manifest = new org.apache.hadoop.fs.Path(path, "_MANIFEST.json")
+    val manifest = new Path(path, "_MANIFEST.json")
     val fs = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(manifest),
       s"$path has no _MANIFEST.json — uncommitted or partial shard dataset")
-    spark.read.parquet(path)
+    openTable(spark, path)
   }
 
   /** Small-file compaction: rewrite a parquet table into
@@ -391,7 +459,7 @@ object Load {
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L * 1024 * 1024): Unit = {
     recoverSwap(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = fs.listStatus(p)
     require(!entries.exists(_.getPath.getName == "_MANIFEST.json"),
@@ -405,7 +473,7 @@ object Load {
     } else {
       val bytes = fs.getContentSummary(p).getLength
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      writeAtomic(spark, spark.read.parquet(path).repartition(nFiles), path)
+      writeAtomic(spark, openTable(spark, path).repartition(nFiles), path)
     }
   }
 

@@ -1,9 +1,9 @@
 package org.apache.spark.sql
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
@@ -51,6 +51,34 @@ object GraftShim {
       fileFormat = new ParquetFileFormat,
       options = Map.empty[String, String])(cs(spark))
     LogicalRelation(rel, isStreaming = false)
+  }
+
+  /** A parquet table over leaf files the caller listed itself, so
+    * opening it runs no Spark job: the `InMemoryFileIndex` finds
+    * `files` (the leaves under the qualified directory `root`) in its
+    * `FileStatusCache` instead of listing, and Spark's own partition
+    * inference still turns their `name=value` directories into
+    * partition columns. `dataSchema` replaces schema inference and is
+    * made nullable, as `spark.read.parquet` makes an inferred one.
+    * A `refresh` clears the cache and lists `root` the Spark way.
+    */
+  def parquetTable(spark: SparkSession, root: Path, files: Seq[FileStatus],
+                   dataSchema: StructType): DataFrame = {
+    val cache = new FileStatusCache {
+      @volatile private var leaves = Map(root -> files.toArray)
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = leaves.get(p)
+      override def putLeafFiles(p: Path, fs: Array[FileStatus]): Unit = leaves += p -> fs
+      override def invalidateAll(): Unit = leaves = Map.empty
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, None, cache)
+    val rel = HadoopFsRelation(
+      location = index,
+      partitionSchema = index.partitionSchema,
+      dataSchema = dataSchema.asNullable,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = Map.empty[String, String])(cs(spark))
+    ofRows(spark, LogicalRelation(rel, isStreaming = false))
   }
 
   /** The analyzed plan of a DataFrame (classic queryExecution). */

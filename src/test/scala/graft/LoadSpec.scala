@@ -346,4 +346,189 @@ class LoadSpec extends SparkSpec {
     // and the data survives intact
     assert(spark.read.parquet(path).count() === Tables.documents(spark, sf).count())
   }
+
+  /** (result of `body`, Spark jobs `body` started on this thread). The
+    * listener counts the jobs of a job group set for `body` alone; a
+    * marker job in the same group, run after it, flushes the
+    * asynchronous listener bus (one listener sees jobs in order).
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"load-open-${System.nanoTime}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "open", interruptOnCancel = false)
+      val r = try body finally sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (!seen.contains("marker") && System.nanoTime < deadline) Thread.sleep(10)
+      assert(seen.contains("marker"), "the listener never saw the marker job")
+      (r, seen.size - 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The opener against `spark.read.parquet` on one layout: the same
+    * schema (nullability and partition types included), rows as a
+    * multiset and input files; no hidden file among them; no job to
+    * open, where the reference open runs at least its schema job.
+    */
+  private def assertOpensLikeSpark(path: String, hidden: Seq[String]): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val names = Files.walk(Paths.get(path)).iterator().asScala
+      .map(_.getFileName.toString).toSet
+    hidden.foreach(h => assert(names.exists(_.endsWith(h)), s"no $h file under $path"))
+    val (ref, refJobs) = jobsDuring(spark.read.parquet(path))
+    val (got, jobs) = jobsDuring(Load.openTable(spark, path))
+    assert(jobs === 0, s"opening $path ran $jobs jobs")
+    assert(refJobs > 0)
+    assert(got.schema === ref.schema)
+    assert(got.inputFiles.toSet === ref.inputFiles.toSet)
+    assert(got.inputFiles.nonEmpty)
+    assert(!got.inputFiles.exists(f => hidden.exists(f.endsWith)))
+    assert(got.count() === ref.count())
+    assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty)
+  }
+
+  test("openTable equals spark.read.parquet on a 64-bucket upsert table, with no job") {
+    val path = tmpDir("open-upsert") + "/t"
+    val rows = (1 to 1000).map(i => (s"o$i", s"i${i % 7}", i * 0.5, if (i % 3 == 0) null else s"n$i"))
+    Load.upsert(spark, rows.toDF("order_id", "items", "amount", "note"), path,
+      Seq("order_id", "items"))
+    val buckets = new java.io.File(path).listFiles().count(_.getName.startsWith("__bucket="))
+    assert(buckets === Load.UpsertBuckets)
+    assertOpensLikeSpark(path, Seq("_SUCCESS", ".crc"))
+    // the partition column comes out as Spark infers it
+    assert(Load.openTable(spark, path).schema("__bucket").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("openTable equals spark.read.parquet on a flat writeAtomic table, with no job") {
+    val path = tmpDir("open-flat") + "/t"
+    Load.writeAtomic(spark, (1 to 50).map(i => (i.toLong, s"v$i", i % 2 == 0))
+      .toDF("k", "v", "even").repartition(3), path)
+    assertOpensLikeSpark(path, Seq("_SUCCESS", ".crc"))
+  }
+
+  test("openTable equals spark.read.parquet on a 40-batch quarantine, with no job") {
+    val path = tmpDir("open-quarantine") + "/q"
+    (0 until 40).foreach { b =>
+      Load.appendQuarantineIdempotent(Seq((s"o$b", b * 1.0)).toDF("Order ID", "Amount"),
+        path, b.toLong)
+    }
+    assertOpensLikeSpark(path, Seq("_SUCCESS", ".crc"))
+    assert(Load.openTable(spark, path).schema("__batch").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("openTable equals spark.read.parquet on a writeSharded dataset, with no job") {
+    val path = tmpDir("open-shards") + "/s"
+    val docs = (1 to 200).map(i => (i.toLong, i % 5, i.toLong * 3)).toDF("doc_id", "shard", "tok")
+    Load.writeSharded(spark, docs, "shard", Some("tok"), path)
+    assertOpensLikeSpark(path, Seq("_SUCCESS", ".crc", "_MANIFEST.json"))
+  }
+
+  test("openTable falls back to spark.read.parquet: empty directory, footer without Spark schema") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // a directory with no data file: both refuse the same way
+    val empty = tmpDir("open-empty") + "/t"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(empty, "_SUCCESS"))
+    val refErr = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(empty))
+    val err = intercept[org.apache.spark.sql.AnalysisException](Load.openTable(spark, empty))
+    assert(err.getCondition === refErr.getCondition)
+    // a file written without Spark: its schema is Spark's own inference
+    val foreign = tmpDir("open-foreign") + "/t"
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary name (UTF8); }")
+    val writer = ExampleParquetWriter.builder(new Path(foreign + "/part-0.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new SimpleGroupFactory(schema)
+    try (1 to 5).foreach(i => writer.write(groups.newGroup().append("id", i.toLong)
+      .append("name", s"n$i")))
+    finally writer.close()
+    val got = Load.openTable(spark, foreign)
+    val ref = spark.read.parquet(foreign)
+    assert(got.schema === ref.schema)
+    assert(got.orderBy("id").collect().toSeq === ref.orderBy("id").collect().toSeq)
+  }
+
+  /** Shuffle exchanges in the executed plan of the write under `path`
+    * that `body` runs, captured by a QueryExecutionListener.
+    */
+  private def writeExchanges(path: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }).flatMap(flatten)
+    def writesUnder(p: SparkPlan) = flatten(p).exists {
+      case w: DataWritingCommandExec => w.cmd match {
+        case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString.contains(path)
+        case _ => false
+      }
+      case _ => false
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      def writes = plans.toArray(Array.empty[SparkPlan]).filter(writesUnder).toSeq
+      while (writes.isEmpty && System.nanoTime < deadline) Thread.sleep(10)
+      assert(writes.size === 1, s"expected one write under $path")
+      flatten(writes.head).count(_.isInstanceOf[ShuffleExchangeLike])
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("upsert of one row into a populated 64-bucket table runs one exchange") {
+    val path = tmpDir("upsert-plan") + "/t"
+    val keys = Seq("order_id", "items")
+    Load.upsert(spark, (1 to 1000).map(i => (s"o$i", s"i$i", 1.0))
+      .toDF("order_id", "items", "amount"), path, keys)
+    val one = Seq(("o1", "i1", 9.0)).toDF("order_id", "items", "amount")
+    assert(writeExchanges(path)(Load.upsert(spark, one, path, keys)) === 1)
+    val t = Load.readTable(spark, path)
+    assert(t.count() === 1000)
+    assert(t.filter(col("order_id") === "o1").select("amount").as[Double].head() === 9.0)
+  }
+
+  test("a first load writes one file per bucket directory, in one exchange") {
+    val path = tmpDir("first-load") + "/t"
+    val rows = (1 to 1000).map(i => (s"o$i", s"i$i", 1.0)).toDF("order_id", "items", "amount")
+    // keep all 4 shuffle partitions: coalesced into one task, this
+    // little data would land one file per bucket whatever the plan
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try assert(writeExchanges(path)(Load.upsert(spark, rows, path, Seq("order_id", "items"))) === 1)
+    finally spark.conf.set(coalesce, was)
+    val dirs = new java.io.File(path).listFiles().filter(_.getName.startsWith("__bucket="))
+    assert(dirs.length === Load.UpsertBuckets)
+    dirs.foreach(d => assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1,
+      s"${d.getName} holds more than one file"))
+    assert(Load.readTable(spark, path).count() === 1000)
+  }
 }
