@@ -297,7 +297,7 @@ object Snapshots {
     * by explicit version until [[vacuum]] reclaims them; RESTORE
     * (rollback to a pre-drop version) is the undrop.
     */
-  private def requireLive(m: VMeta, root: String, op: String): Unit =
+  private[graft] def requireLive(m: VMeta, root: String, op: String): Unit =
     require(!m.tombstone,
       s"$op: $root is DROPPED (tombstone at the latest version) — " +
         "RESTORE to a pre-drop version, or CREATE [OR REPLACE] it anew")
@@ -1867,10 +1867,12 @@ object Snapshots {
   }
 
   /** The version's deletion vector as a (file, pos) frame — empty
-    * when the version carries none.
+    * when the version carries none. Opened by [[Load.openTable]]:
+    * the vector is the engine's own parquet, so its schema comes from
+    * the footer and opening it runs no Spark job.
     */
   private def dvOf(spark: SparkSession, root: String, m: VMeta): DataFrame =
-    m.dv.map(rel => spark.read.parquet(new Path(root, rel).toString))
+    m.dv.map(rel => Load.openTable(spark, new Path(root, rel).toString))
       .getOrElse(emptyDv(spark))
 
   /** Merge-on-read scan: drop the rows whose (file, position) appears
@@ -3911,6 +3913,8 @@ object Snapshots {
     * of refusing or self-healing — until the entry is evicted or
     * [[clearStatsCache]] runs. Another process's writers are safe: they
     * publish new layouts under new ids and never touch existing dirs.
+    * This process's own [[vacuum]] evicts the entry of every layout
+    * whose `_stats/<layout>` dir it deletes, in the same step.
     */
   private val statsCache = new java.util.LinkedHashMap[
     (String, String),
@@ -3963,6 +3967,10 @@ object Snapshots {
   }
   private[graft] def clearStatsCache(): Unit =
     statsCache.synchronized { statsCache.clear() }
+  /** Whether the memo holds `layoutId`'s index of `root` (a probe). */
+  private[graft] def statsCached(spark: SparkSession, root: String,
+                                 layoutId: String): Boolean =
+    statsCacheGet(rootPathOf(spark, root), layoutId).isDefined
 
   /** Persist a stats snapshot from its collected rows and remember it:
     * ONE single-task local-relation write (the previous distributed
@@ -4099,7 +4107,8 @@ object Snapshots {
   }
 
   /** The layout's persisted index as (schema, rows): from the memo,
-    * else read once and memoized; None when the layout has none.
+    * else read once (opened by [[Load.openTable]], no schema job) and
+    * memoized; None when the layout has none.
     */
   private def persistedStats(spark: SparkSession, root: String,
                              layoutId: String)
@@ -4109,7 +4118,7 @@ object Snapshots {
       val sp = statsPath(root, layoutId)
       if (!fs(spark, sp).exists(sp)) None
       else {
-        val df = spark.read.parquet(sp.toString)
+        val df = Load.openTable(spark, sp.toString)
         val out = (df.schema, df.collect())
         statsCachePut(rootPathOf(spark, root), layoutId, out._1, out._2)
         Some(out)
@@ -4672,17 +4681,23 @@ object Snapshots {
         }
     }
     plan.dropVersions.foreach(v => f.delete(versionFile(root, v), false))
+    // a reclaimed layout's skipping index is dead weight too, and its
+    // memo entry must not outlive the deleted `_stats/<layout>` dir
+    val rootKey = rootPathOf(spark, root)
+    def dropStats(id: String): Unit = {
+      statsCache.synchronized { statsCache.remove((rootKey, id)) }
+      f.delete(statsPath(root, id), true)
+    }
     plan.dataDirs.foreach { rel =>
       f.delete(new Path(root, rel), true)
-      // a reclaimed dir's skipping index is dead weight too
-      f.delete(statsPath(root, rel.stripPrefix("data/")), true)
+      dropStats(rel.stripPrefix("data/"))
     }
     plan.manifests.foreach { rel =>
       f.delete(new Path(root, rel), false)
-      f.delete(statsPath(root, rel.split('/').last.stripSuffix(".txt")), true)
+      dropStats(rel.split('/').last.stripSuffix(".txt"))
     }
     plan.dvs.foreach(rel => f.delete(new Path(root, rel), true))
-    plan.statsIds.foreach(id => f.delete(statsPath(root, id), true))
+    plan.statsIds.foreach(dropStats)
     plan.copyLedgers.foreach(rel => f.delete(new Path(root, rel), false))
   }
 

@@ -146,13 +146,15 @@ object StatsIndex {
     * holds. The snapshot tier consumes stats as collected rows anyway
     * ([[graft.etl.Snapshots]]'s localized stats snapshots), so this is
     * the collect it was already going to do, moved before the pad.
+    * The data dir is opened by [[Load.openTable]] (the engine wrote
+    * it, so its footer holds the schema): no schema job.
     */
   private[etl] def buildRows(spark: SparkSession, dataPath: String,
                              cols: Seq[String])
       : (org.apache.spark.sql.types.StructType,
          Array[org.apache.spark.sql.Row]) = {
     require(cols.nonEmpty, "need at least one stats column")
-    padRows(statsFor(spark.read.parquet(dataPath), cols),
+    padRows(statsFor(Load.openTable(spark, dataPath), cols),
       listDataFiles(spark, dataPath))
   }
 

@@ -102,36 +102,35 @@ object Ingest {
   }
 
   /** The loop of the harnesses that maintain a DERIVED snapshot
-    * table tagged with the SOURCE version: a version the tag covers
-    * is skipped (replays and fresh-checkpoint reruns are no-ops), the
-    * first into an EMPTY destination runs `bootstrap(v)`, and every
-    * later one runs `applyChange(v)` — or refuses when v-1 is gone
+    * table tagged with the SOURCE version. Each micro-batch hands
+    * `applySpan(first, last, empty)` its PENDING span once: the versions
+    * the log gained past the checkpointed offset, minus those the
+    * destination tag already covers (replays and fresh-checkpoint
+    * reruns pend nothing and skip). `empty` says the destination has
+    * no version yet, so the span bootstraps it. A populated
+    * destination mirrors the source at `first - 1`; the span refuses
+    * when that version, or any predecessor inside the span, is gone
     * from the log, since re-snapshotting onto a populated destination
     * would duplicate its rows. Tag and emptiness are read once per
-    * micro-batch, then tracked locally.
+    * micro-batch, so the loop's own cost is per micro-batch, not per
+    * version; `maxFiles = Some(1)` makes every span one version.
     */
   private def applyVersions(spark: SparkSession, srcRoot: String,
                             checkpointDir: String, dstRoot: String,
                             maxFiles: Option[Int])
-                           (bootstrap: Long => Unit)
-                           (applyChange: Long => Unit): Unit = {
+                           (applySpan: (Long, Long, Boolean) => Unit): Unit = {
     val snap = graft.etl.Snapshots
     tailVersions(spark, srcRoot, checkpointDir, maxFiles) { (vs, committed) =>
-      var last = snap.lastTag(spark, dstRoot)
-      var empty = snap.latestVersion(spark, dstRoot).isEmpty
-      vs.foreach { v =>
-        if (!last.exists(_ >= v)) {
-          if (empty) bootstrap(v)
-          else {
-            require(committed.contains(v - 1),
-              s"$srcRoot: version ${v - 1} is gone from the log " +
-                s"(vacuumed?) — cannot derive version $v's changes; " +
-                "re-bootstrap the derived table")
-            applyChange(v)
-          }
-          last = Some(v)
-          empty = false
-        }
+      val tag = snap.lastTag(spark, dstRoot)
+      val pending = vs.filterNot(v => tag.exists(_ >= v))
+      if (pending.nonEmpty) {
+        val empty = snap.latestVersion(spark, dstRoot).isEmpty
+        (if (empty) pending.tail else pending).foreach(v =>
+          require(committed.contains(v - 1),
+            s"$srcRoot: version ${v - 1} is gone from the log " +
+              s"(vacuumed?) — cannot derive version $v's changes; " +
+              "re-bootstrap the derived table"))
+        applySpan(pending.head, pending.last, empty)
       }
     }
   }
@@ -682,13 +681,17 @@ object Ingest {
     val snap = graft.etl.Snapshots
     def land(v: Long, rows: DataFrame): Unit =
       snap.append(spark, transform(rows), dstRoot, statsCols, tag = Some(v))
-    applyVersions(spark, srcRoot, checkpointDir, dstRoot, maxFilesPerTrigger)(
-      v => land(v, snap.read(spark, srcRoot, Some(v)))) { v =>
-      val feed = snap.changes(spark, srcRoot, v - 1, v).df.localCheckpoint()
-      require(feed.filter(col("_change_type") =!= "insert").isEmpty,
-        s"$srcRoot version $v feed carries deletes — " +
-          "snapshotPipelineAvailableNow requires an append-only source")
-      land(v, feed.filter(col("_change_type") === "insert").drop("_change_type"))
+    applyVersions(spark, srcRoot, checkpointDir, dstRoot, maxFilesPerTrigger) {
+      (first, last, empty) =>
+        if (empty) land(first, snap.read(spark, srcRoot, Some(first)))
+        // one append per source version, so each keeps its own tag
+        ((if (empty) first + 1 else first) to last).foreach { v =>
+          val feed = snap.changes(spark, srcRoot, v - 1, v).df.localCheckpoint()
+          require(feed.filter(col("_change_type") =!= "insert").isEmpty,
+            s"$srcRoot version $v feed carries deletes — " +
+              "snapshotPipelineAvailableNow requires an append-only source")
+          land(v, feed.filter(col("_change_type") === "insert").drop("_change_type"))
+        }
     }
   }
 
@@ -735,56 +738,77 @@ object Ingest {
   /** STREAMING KEYED CHANGE-FEED apply — Delta's `readChangeFeed` →
     * MERGE loop as ONE seam, maintaining a DERIVED snapshot table
     * from a source table's keyed changes: the source version log is
-    * the stream ([[tailVersions]]), each version's KEYED net change
-    * frame ([[graft.etl.Snapshots.changesKeyed]] — churn-only, the
-    * base table never rescanned) applies to the destination in ONE
-    * commit: postimages and inserts UPSERT, deletes DELETE — the
+    * the stream ([[tailVersions]]), and each micro-batch's pending
+    * span `[first, last]` ([[applyVersions]]) applies to the
+    * destination in ONE commit tagged `last` (group commit, the unit
+    * of exactly-once delivery being the micro-batch, as in Structured
+    * Streaming and Delta's change-feed MERGE). The commit is the span's
+    * KEYED net change frame ([[graft.etl.Snapshots.changesKeyed]]
+    * from `first - 1` to `last` — churn-only, the base table never
+    * rescanned): postimages and inserts UPSERT, deletes DELETE — the
     * explicit-clause MERGE with `_change_type` riding the source as a
     * discriminator column (preimages drop; the postimage carries the
-    * row's new state).
+    * row's new state). The destination mirrors the source at
+    * `first - 1`, and the net diff to `last` takes it to the state
+    * applying the versions one by one would reach; a file rewritten
+    * twice inside the span is read once, and every touched
+    * destination file is rewritten once.
     *
-    * Exactly-once: the SOURCE VERSION is the destination's
-    * idempotency tag, so a crash replay, a checkpoint resume, or a
-    * fresh-checkpoint rerun sees its version already applied and
-    * skips — the [[snapshotPipelineAvailableNow]] discipline
-    * ([[applyVersions]] is their one loop), lifted from append-only
-    * feeds to full row-level mutation (the q180 derived-store
-    * maintenance without the harness loop). The first consumed
-    * version BOOTSTRAPS the destination with the full snapshot.
+    * Exactly-once: the span's LAST source version is the
+    * destination's idempotency tag, so a crash replay, a checkpoint
+    * resume, or a fresh-checkpoint rerun sees its versions already
+    * applied and skips — the [[snapshotPipelineAvailableNow]]
+    * discipline ([[applyVersions]] is their one loop), lifted from
+    * append-only feeds to full row-level mutation (the q180
+    * derived-store maintenance without the harness loop). An EMPTY
+    * destination bootstraps with the full snapshot at `last`.
+    * `maxFilesPerTrigger = Some(1)` gives one commit per source
+    * version.
     *
     * Contract: rows must be key-identified (the upsert contract —
     * non-null keys, unique per version; null-key churn cannot be
     * applied BY KEY and such feeds need the un-keyed pipeline). A gap
     * in the consumed span (source history vacuumed past an unapplied
-    * version) refuses loudly rather than silently re-snapshotting.
-    * Per-version cost: the churn read + a stats-targeted merge that
-    * rewrites only the files the churn keys touch.
+    * version) refuses loudly rather than silently re-snapshotting,
+    * and so does a span holding a DROP TABLE tombstone. Cost per
+    * MICRO-BATCH, not per version: one churn read of the span's net
+    * change + one stats-targeted merge that rewrites only the files
+    * the churn keys touch.
     */
   def snapshotCdcApplyAvailableNow(spark: SparkSession, srcRoot: String,
                                    checkpointDir: String, dstRoot: String,
                                    key: String, statsCols: Seq[String],
                                    maxFilesPerTrigger: Option[Int] = None): Unit = {
     val snap = graft.etl.Snapshots
-    applyVersions(spark, srcRoot, checkpointDir, dstRoot, maxFilesPerTrigger)(v =>
-      snap.append(spark, snap.read(spark, srcRoot, Some(v)),
-        dstRoot, statsCols, tag = Some(v))) { v =>
-      val feed = snap.changesKeyed(spark, srcRoot, v - 1, v, key).df
-        .filter(col("_change_type") =!= "update_preimage")
-        .persist()
-      try {
-        val dataCols = feed.columns.toSeq.filterNot(_ == "_change_type")
-        snap.mergeClauses(spark, feed, dstRoot, key, statsCols, "t", "u",
-          matched = Seq(
-            snap.MatchedDelete(Some(col("u._change_type") === "delete")),
-            snap.MatchedUpdate(
-              Some(col("u._change_type") =!= "delete"),
-              Some(dataCols.filterNot(_ == key).map(c => c -> col(s"u.$c"))))),
-          insertCond = None,
-          inserts = Seq(snap.InsertClause(
-            Some(col("u._change_type") =!= "delete"),
-            Some(dataCols.map(c => c -> col(s"u.$c"))))),
-          tag = Some(v))
-      } finally feed.unpersist()
+    applyVersions(spark, srcRoot, checkpointDir, dstRoot, maxFilesPerTrigger) {
+      (first, last, empty) =>
+        // the net diff checks only its endpoints for a DROP TABLE
+        // tombstone; the versions inside the span are checked here,
+        // as applying them one by one would
+        (first until last).foreach(v => snap.requireLive(
+          snap.versionMeta(spark, srcRoot, v), srcRoot, "changes(to)"))
+        if (empty)
+          snap.append(spark, snap.read(spark, srcRoot, Some(last)),
+            dstRoot, statsCols, tag = Some(last))
+        else {
+          val feed = snap.changesKeyed(spark, srcRoot, first - 1, last, key).df
+            .filter(col("_change_type") =!= "update_preimage")
+            .persist()
+          try {
+            val dataCols = feed.columns.toSeq.filterNot(_ == "_change_type")
+            snap.mergeClauses(spark, feed, dstRoot, key, statsCols, "t", "u",
+              matched = Seq(
+                snap.MatchedDelete(Some(col("u._change_type") === "delete")),
+                snap.MatchedUpdate(
+                  Some(col("u._change_type") =!= "delete"),
+                  Some(dataCols.filterNot(_ == key).map(c => c -> col(s"u.$c"))))),
+              insertCond = None,
+              inserts = Seq(snap.InsertClause(
+                Some(col("u._change_type") =!= "delete"),
+                Some(dataCols.map(c => c -> col(s"u.$c"))))),
+              tag = Some(last))
+          } finally feed.unpersist()
+        }
     }
   }
 

@@ -414,10 +414,10 @@ class IngestSpec extends SparkSpec {
       Seq((3L, 333.0, "upd"), (99L, 9.0, "new")).toDF("id", "x", "s"),
       src, "id", Seq("id"))
     Snapshots.deleteWhere(spark, src, col("id") % 5 === 0)
-    // checkpoint RESUME: only v3/v4 flow (one dst commit per source
-    // version — 2 new versions, tags advance to 4)
+    // checkpoint RESUME: only v3/v4 flow, in one micro-batch, so one
+    // dst commit tagged with the span's last source version
     Ingest.snapshotCdcApplyAvailableNow(spark, src, chk, dst, "id", Seq("id"))
-    assert(Snapshots.versions(spark, dst) === (1L to 4L))
+    assert(Snapshots.versions(spark, dst) === (1L to 3L))
     assert(Snapshots.lastTag(spark, dst) === Some(4L))
     assert(equiv(), "updates, inserts and deletes must all propagate")
     assert(Snapshots.read(spark, dst).filter(col("id") === 3L)
@@ -427,8 +427,117 @@ class IngestSpec extends SparkSpec {
     // SKIPS on its tag — zero new dst versions (no double-apply)
     Ingest.snapshotCdcApplyAvailableNow(spark, src, s"$base/chk2", dst,
       "id", Seq("id"))
-    assert(Snapshots.versions(spark, dst) === (1L to 4L),
+    assert(Snapshots.versions(spark, dst) === (1L to 3L),
       "a replayed feed must not double-apply")
     assert(equiv())
+  }
+
+  /** `dst` holds the rows of `src` as a multiset. */
+  private def mirrors(src: String, dst: String): Boolean = {
+    import graft.etl.Snapshots
+    val s0 = Snapshots.read(spark, src); val d0 = Snapshots.read(spark, dst)
+    s0.exceptAll(d0).isEmpty && d0.exceptAll(s0).isEmpty
+  }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("snapshotCdcApplyAvailableNow: one commit per micro-batch equals one commit per version") {
+    import graft.etl.Snapshots
+    val base = tmpDir("graft_cdc_span")
+    val src = s"$base/src"
+    val rng = new scala.util.Random(20261019L)
+    var nextId = 41L
+    def fresh(n: Int): Seq[Long] = { val ids = nextId until nextId + n; nextId += n; ids }
+    def ids(): Seq[Long] = Snapshots.read(spark, src).select("id").as[Long].collect().toSeq
+    def pick(n: Int): Seq[Long] = rng.shuffle(ids()).take(n)
+    def rows(ks: Seq[Long], tagS: String) =
+      ks.map(k => (k, k * 1.5 + rng.nextInt(100), tagS)).toDF("id", "x", "s")
+    val statements: Map[String, () => Unit] = Map(
+      "merge" -> (() => Snapshots.merge(spark,
+        rows(pick(4), "upd").unionByName(rows(fresh(3), "ins")), src, "id", Seq("id"))),
+      "delete" -> (() => {
+        val gone = pick(3)
+        Snapshots.deleteWhere(spark, src, col("id").isin(gone: _*))
+      }),
+      "append" -> (() => Snapshots.append(spark, rows(fresh(5), "app"), src, Seq("id"))),
+      "optimize" -> (() => Snapshots.optimize(spark, src, statsCols = Seq("id"))),
+      "rollback" -> (() => Snapshots.rollback(spark, src,
+        math.max(1L, Snapshots.latestVersion(spark, src).get - 1 - rng.nextInt(2)))))
+    Snapshots.commitWithStats(spark, (1L to 40L).map(i => (i, i * 1.0, "base"))
+      .toDF("id", "x", "s").repartition(4), src, Seq("id"))
+    // every kind twice, in a seeded order, cut into runs of 0-3
+    // statements (a run with nothing pending must add no commit)
+    val order = rng.shuffle(statements.keys.toSeq.sorted.flatMap(k => Seq(k, k)))
+    val runs = Iterator.unfold(order) { rest =>
+      if (rest.isEmpty) None
+      else { val n = rng.nextInt(4); Some((rest.take(n), rest.drop(n))) }
+    }.toSeq
+    assert(runs.exists(_.isEmpty) && runs.exists(_.size > 1))
+    val consumers = Seq("a" -> Some(1), "b" -> None)
+    def apply(chk: String): Unit = consumers.foreach { case (c, maxFiles) =>
+      Ingest.snapshotCdcApplyAvailableNow(spark, src, s"$base/$chk-$c", s"$base/$c",
+        "id", Seq("id"), maxFilesPerTrigger = maxFiles)
+    }
+    def commits(c: String): Int = Snapshots.versions(spark, s"$base/$c").size
+    // the first run bootstraps both from a two-version span
+    statements("append")()
+    apply("chk")
+    assert(commits("a") === 2 && commits("b") === 1)
+    runs.foreach { run =>
+      run.foreach(statements(_)())
+      val before = commits("b")
+      apply("chk")
+      val latest = Snapshots.latestVersion(spark, src)
+      consumers.foreach { case (c, _) =>
+        assert(mirrors(src, s"$base/$c"), s"$c after $run")
+        assert(Snapshots.lastTag(spark, s"$base/$c") === latest, s"$c after $run")
+      }
+      assert(commits("b") === before + (if (run.isEmpty) 0 else 1), s"b after $run")
+    }
+    val settled = consumers.map { case (c, _) => commits(c) }
+    apply("fresh")
+    assert(consumers.map { case (c, _) => commits(c) } === settled)
+    consumers.foreach { case (c, _) => assert(mirrors(src, s"$base/$c")) }
+  }
+
+  test("snapshotCdcApplyAvailableNow: a multi-version span refuses a vacuumed predecessor, untouched") {
+    import graft.etl.Snapshots
+    val base = tmpDir("graft_cdc_span_gap")
+    val src = s"$base/src"; val dst = s"$base/dst"
+    Snapshots.commitWithStats(spark, (1L to 10L).map(i => (i, s"r$i")).toDF("id", "s"),
+      src, Seq("id"))                                                  // v1
+    Ingest.snapshotCdcApplyAvailableNow(spark, src, s"$base/chk", dst, "id", Seq("id"))
+    (2 to 5).foreach(v => Snapshots.append(spark,
+      Seq((100L + v, s"r$v")).toDF("id", "s"), src, Seq("id")))        // v2-v5
+    // v3 and v4 leave the log: the pending span is [2, 5], whose v5
+    // cannot be derived from v4
+    Snapshots.vacuum(spark, src, keepLast = 1, protectedVersions = Set(1L, 2L))
+    assert(Snapshots.versions(spark, src) === Seq(1L, 2L, 5L))
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Ingest.snapshotCdcApplyAvailableNow(spark, src, s"$base/chk", dst, "id", Seq("id")))
+    assert(messages(ex).exists(_.contains("version 4 is gone from the log")))
+    assert(Snapshots.versions(spark, dst) === Seq(1L))
+    assert(Snapshots.lastTag(spark, dst) === Some(1L))
+    assert(Snapshots.read(spark, dst).count() === 10L)
+  }
+
+  test("snapshotCdcApplyAvailableNow: a span holding a DROP TABLE tombstone refuses") {
+    import graft.etl.Snapshots
+    val base = tmpDir("graft_cdc_span_drop")
+    val src = s"$base/src"; val dst = s"$base/dst"
+    Snapshots.commitWithStats(spark, (1L to 10L).map(i => (i, s"r$i")).toDF("id", "s"),
+      src, Seq("id"))                                                  // v1
+    Ingest.snapshotCdcApplyAvailableNow(spark, src, s"$base/chk", dst, "id", Seq("id"))
+    Snapshots.append(spark, Seq((11L, "r11")).toDF("id", "s"), src, Seq("id")) // v2
+    Snapshots.dropTable(spark, src)                                    // v3
+    Snapshots.rollback(spark, src, 2L)                                 // v4: RESTORE
+    // the net diff v1 -> v4 is live at both ends; the tombstone
+    // inside the span still refuses, as applying v3 alone did
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Ingest.snapshotCdcApplyAvailableNow(spark, src, s"$base/chk", dst, "id", Seq("id")))
+    assert(messages(ex).exists(_.contains("is DROPPED")))
+    assert(Snapshots.versions(spark, dst) === Seq(1L))
+    assert(Snapshots.read(spark, dst).count() === 10L)
   }
 }

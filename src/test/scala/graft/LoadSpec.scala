@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.{Load, Transform}
+import graft.etl.{Load, Snapshots, Transform}
 import org.apache.spark.sql.functions._
 
 /** S4/S5/S6/S8 sink semantics over the parquet-backed table
@@ -433,6 +433,45 @@ class LoadSpec extends SparkSpec {
     val docs = (1 to 200).map(i => (i.toLong, i % 5, i.toLong * 3)).toDF("doc_id", "shard", "tok")
     Load.writeSharded(spark, docs, "shard", Some("tok"), path)
     assertOpensLikeSpark(path, Seq("_SUCCESS", ".crc", "_MANIFEST.json"))
+  }
+
+  // the snapshot tier's own parquet, opened by the same opener: a
+  // deletion vector, a skipping index, a partitioned and a bucketed
+  // data dir
+  private def snapshotTable(name: String, partitionBy: Seq[String] = Nil,
+                            bucketBy: Option[Snapshots.Bucketing] = None): String = {
+    val root = tmpDir(name) + "/t"
+    Snapshots.commitWithStats(spark,
+      (1 to 200).map(i => (i.toLong, s"p${i % 3}", i * 0.25)).toDF("id", "p", "x")
+        .repartition(3), root, Seq("id"), partitionBy, bucketBy)
+    root
+  }
+
+  test("openTable equals spark.read.parquet on a snapshot deletion-vector file, with no job") {
+    val root = snapshotTable("open-dv")
+    Snapshots.deleteWhere(spark, root, col("id") % 7 === 0)
+    val dv = Snapshots.versionMeta(spark, root, 2L).dv
+    assert(dv.isDefined, "the delete wrote no deletion vector")
+    assertOpensLikeSpark(s"$root/${dv.get}", Seq(".crc"))
+  }
+
+  test("openTable equals spark.read.parquet on a snapshot _stats/<layout> dir, with no job") {
+    val root = snapshotTable("open-stats")
+    assertOpensLikeSpark(
+      s"$root/_stats/${Snapshots.versionMeta(spark, root, 1L).layoutId}", Seq(".crc"))
+  }
+
+  test("openTable equals spark.read.parquet on a partitioned snapshot data dir, with no job") {
+    val root = snapshotTable("open-parts", partitionBy = Seq("p"))
+    val dir = s"$root/${Snapshots.versionMeta(spark, root, 1L).dataDir.get}"
+    assertOpensLikeSpark(dir, Seq(".crc"))
+    assert(Load.openTable(spark, dir).schema.fieldNames.contains(Snapshots.partKey("p")))
+  }
+
+  test("openTable equals spark.read.parquet on a bucketed snapshot data dir, with no job") {
+    val root = snapshotTable("open-buckets", bucketBy = Some(Snapshots.Bucketing(4, Seq("id"))))
+    assertOpensLikeSpark(s"$root/${Snapshots.versionMeta(spark, root, 1L).dataDir.get}",
+      Seq(".crc"))
   }
 
   test("openTable falls back to spark.read.parquet: empty directory, footer without Spark schema") {

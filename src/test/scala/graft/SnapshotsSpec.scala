@@ -2785,4 +2785,19 @@ class SnapshotsSpec extends SparkSpec {
       "the live layout's index survives")
     assert(Snapshots.read(spark, dst).count() === 5L)
   }
+
+  test("vacuum evicts the stats memo of every layout whose _stats dir it deletes") {
+    val root = tmpDir("snap_vacuum_memo")
+    Snapshots.commitWithStats(spark, df(20), root, Seq("id"))          // v1
+    Snapshots.commitWithStats(spark, df(30), root, Seq("id"))          // v2
+    val Seq(l1, l2) = Seq(1L, 2L).map(Snapshots.versionMeta(spark, root, _).layoutId)
+    assert(Snapshots.statsCached(spark, root, l1) && Snapshots.statsCached(spark, root, l2))
+    Snapshots.vacuum(spark, root, keepLast = 1, orphanGraceMs = 0)
+    assert(!new java.io.File(s"$root/_stats/$l1").exists())
+    assert(!Snapshots.statsCached(spark, root, l1),
+      "the memo outlived the _stats dir vacuum deleted")
+    assert(Snapshots.statsCached(spark, root, l2))
+    assert(Snapshots.readPruned(spark, root, None, "id", Some(lit(3L)), Some(lit(3L)))
+      ._1.count() === 1L)
+  }
 }
