@@ -70,7 +70,10 @@ object Load {
     * ~5% of the table instead of all of it. Untouched partitions'
     * files are never opened (asserted byte-identical in LoadSpec),
     * nor listed: only the touched `__bucket=` directories are. The
-    * merge shuffles once ([[latestWins]]).
+    * merge shuffles once ([[latestWins]]). The batch may leave columns
+    * out (they merge as NULL) but not add one: the table's columns are
+    * the touched buckets' schema, and an upsert carrying any other
+    * column refuses before writing.
     */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
              keys: Seq[String]): Unit = {
@@ -95,6 +98,14 @@ object Load {
     val cur = openTable(spark, path, touched.map(b => s"__bucket=$b").toSet)
       .filter(col("__bucket").isin(touched: _*))
       .withColumn("__v", lit(0L))
+    // a column the table lacks would land only in the rewritten
+    // buckets, and readers (schema from the first file) would never
+    // see it: refuse before anything is written. Missing columns stay
+    // legal (NULL-filled by the merge's union).
+    val known = cur.columns.map(_.toLowerCase).toSet
+    val extra = inc.columns.filterNot(c => known(c.toLowerCase))
+    require(extra.isEmpty, s"upsert: the batch carries columns $path lacks " +
+      s"(${extra.mkString(", ")}) — an upsert cannot add columns")
     // write merged buckets beside the table, then swap ONLY those
     // partition directories — untouched buckets are never rewritten.
     val tmp = path + "__tmp"
@@ -262,7 +273,7 @@ object Load {
   }
 
   /** The Spark row schema a Spark writer keeps in the parquet footer. */
-  private def sparkSchema(file: FileStatus,
+  private[etl] def sparkSchema(file: FileStatus,
                           conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
     try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData

@@ -217,8 +217,9 @@ object Snapshots {
     */
   private[etl] def requireLoggable(name: String, what: String): Unit =
     require(!name.exists(ch => ch == ']' || ch == '\n' || ch == '\r'),
-      s"$what '$name' contains ']' or a line break — the version-log " +
-        "parser cannot round-trip it; rename the column first")
+      s"$what '$name' contains ']' or a line break — version-log " +
+        "readers older than the JSON codec cannot round-trip it; rename " +
+        "the column first")
 
   /** COLUMN MAPPING — metadata-only RENAME/DROP COLUMN (Delta's
     * column-mapping 'name' mode): the log records how the PHYSICAL
@@ -951,16 +952,106 @@ object Snapshots {
     // probing the schema of a dropped table must refuse as MERGE,
     // not under this helper's name
     requireLive(m, root, op)
-    val phys = schemaOf(spark, root, v, m)
+    val phys = schemaOf(spark, root, m)
     org.apache.spark.sql.types.StructType(
       phys.fields.flatMap(f => m.colmap.logicalOf(f.name)
         .map(l => f.copy(name = l))))
   }
 
+  // --- the one opener of a version's data files ---
+
+  /** Version `m`'s physical schema: the logged one, or — for a
+    * version written before schema-in-the-log — the Spark schema in
+    * its first data file's footer (never through [[openScan]], which
+    * needs this schema).
+    */
+  private def schemaOf(spark: SparkSession, root: String,
+                       m: VMeta): org.apache.spark.sql.types.StructType =
+    m.schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL).getOrElse {
+      val first = fileStatusesOf(spark, root, relFilesOf(spark, root, m).take(1))
+      first.headOption
+        .flatMap(Load.sparkSchema(_, spark.sparkContext.hadoopConfiguration))
+        .map(asNullable)
+        .getOrElse(throw new IllegalArgumentException(
+          s"$root: layout ${m.layoutId} logs no schema and has no Spark-written data file"))
+    }
+
+  /** THE opener of a version's data files — every reader and writer
+    * of the tier scans through it. A parquet relation over a
+    * [[graft.plans.SnapshotFileIndex]] of exactly `rels` (statuses
+    * from [[fileStatusesOf]]: one listing RPC per parent dir) under
+    * `schema`, the version's logged schema ([[schemaOf]]; a caller
+    * reading a set of files under a newer version's schema passes
+    * that one). Opening therefore runs no listing job and no schema
+    * job at any file count; files written before an evolution surface
+    * added columns as NULL and narrower types read up (parquet by-name
+    * resolution). Zero files open as an empty frame under `schema`
+    * whose `_metadata` columns still resolve. `stats`, `parts` and
+    * `bucket` are [[sqlScan]]'s planner extras.
+    *
+    * These rows are PHYSICAL: the rows the files hold, deletion vector
+    * ignored — what a stats build counts (`n_rows` is per-file
+    * physical). [[logical]] applies a version's vector on top.
+    */
+  private def openScan(spark: SparkSession, root: String,
+      schema: org.apache.spark.sql.types.StructType, rels: Seq[String],
+      stats: Option[DataFrame] = None, parts: Seq[String] = Nil,
+      bucket: Option[Bucketing] = None)
+      : (DataFrame, graft.plans.SnapshotFileIndex) = {
+    import org.apache.spark.sql.GraftShim
+    val idx = new graft.plans.SnapshotFileIndex(spark,
+      new Path(rootPathOf(spark, root)), fileStatusesOf(spark, root, rels),
+      stats, parts)
+    val spec = bucket.map(b =>
+      org.apache.spark.sql.catalyst.catalog.BucketSpec(b.n, b.cols, b.sort))
+    (GraftShim.ofRows(spark, GraftShim.parquetScanPlan(spark, idx, schema, spec)),
+      idx)
+  }
+
+  /** [[openScan]]'s physical rows of `rels`. */
+  private def physical(spark: SparkSession, root: String,
+                       schema: org.apache.spark.sql.types.StructType,
+                       rels: Seq[String]): DataFrame =
+    openScan(spark, root, schema, rels)._1
+
+  /** `raw` (an [[openScan]] frame) plus each row's identity: `__file`
+    * (root-relative, from `_metadata.file_path`) and `__pos`
+    * (`_metadata.row_index`, stable because the files are immutable) —
+    * the key deletion vectors are stored under.
+    */
+  private def withRowId(spark: SparkSession, root: String,
+                        raw: DataFrame): DataFrame =
+    raw.withColumn("__file", org.apache.spark.sql.functions.regexp_replace(
+        StatsIndex.normPath(col("_metadata.file_path")),
+        "^" + java.util.regex.Pattern.quote(rootPathOf(spark, root) + "/"), ""))
+      .withColumn("__pos", col("_metadata.row_index"))
+
+  /** The LOGICAL rows of `raw` (an [[openScan]] frame) as of version
+    * `m`: merge-on-read drops the rows whose identity ([[withRowId]])
+    * the version's deletion vector names — an anti-join keyed on scan
+    * metadata (Delta's DV application in the scan; AQE broadcasts the
+    * small vector side), so no data column is sacrificed and the files
+    * stay byte-identical. `keepId` keeps `__file`/`__pos` after the
+    * data columns, for callers that address rows by position.
+    */
+  private def logical(spark: SparkSession, root: String, m: VMeta,
+                      raw: DataFrame, keepId: Boolean = false): DataFrame =
+    if (m.dv.isEmpty && !keepId) raw
+    else {
+      val ided = withRowId(spark, root, raw)
+      val live = if (m.dv.isEmpty) ided
+        else ided.join(dvOf(spark, root, m).select(col("file").as("__file"),
+          col("pos").as("__pos")), Seq("__file", "__pos"), "left_anti")
+      live.select((raw.columns.toSeq ++
+        (if (keepId) Seq("__file", "__pos") else Nil)).map(col): _*)
+    }
+
   /** Read the table at `version` (default: latest). Old versions
     * remain readable after later commits — the time-travel read.
     * Manifest versions read exactly their file list (untouched files
-    * from older dirs plus the version's own rewritten files).
+    * from older dirs plus the version's own rewritten files); an empty
+    * one (a zero-row CTAS, a SHOW CREATE replay) reads as its logged
+    * schema.
     */
   def read(spark: SparkSession, root: String,
            version: Option[Long] = None): DataFrame = {
@@ -968,39 +1059,10 @@ object Snapshots {
       throw new IllegalArgumentException(s"$root has no committed versions"))
     val m = versionMeta(spark, root, v)
     requireLive(m, root, "read")
-    // schema-in-the-log (Delta-style): a version that RECORDS its
-    // schema is read with it — no footer sampling/merging at plan
-    // time, and files written BEFORE a schema evolution surface the
-    // new columns as nulls (parquet by-name resolution)
-    val reader = m.schemaDdl.map(d =>
-      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(d)))
-      .getOrElse(spark.read)
-    val raw = m.dataDir match {
-      // a partitioned dir reads by EXPLICIT file list: a dir read
-      // would partition-discover the `__p_*=` path keys into extra
-      // columns, and the data files already carry every real column
-      case Some(d) if m.parts.isEmpty =>
-        reader.parquet(new Path(root, d).toString)
-      case _ =>
-        val files = relFilesOf(spark, root, m)
-          .map(rel => new Path(root, rel).toString)
-        if (files.isEmpty) {
-          // a freshly created empty table (zero-row CTAS / SHOW CREATE
-          // replay) is READABLE as its logged schema, not an error
-          require(m.schemaDdl.isDefined,
-            s"version $v of $root has an empty manifest and no logged schema")
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl.get))
-        } else reader.parquet(files: _*)
-    }
-    // merge-on-read: a version carrying a deletion vector applies it
-    // in the scan ([[deleteWhere]]); the column mapping presents the
-    // version's LOGICAL names on top ([[renameColumn]]/[[dropColumn]])
-    logicalProject(
-      m.dv.map(_ => applyDv(spark, root, raw, dvOf(spark, root, m)))
-        .getOrElse(raw),
-      m.colmap)
+    // the column mapping presents the version's LOGICAL names on top
+    // ([[renameColumn]]/[[dropColumn]])
+    logicalProject(logical(spark, root, m, physical(spark, root,
+      schemaOf(spark, root, m), relFilesOf(spark, root, m))), m.colmap)
   }
 
   /** `TIMESTAMP AS OF` time travel: the largest committed version
@@ -1116,11 +1178,6 @@ object Snapshots {
                                 * exist), the append-only norm. */
                               oneSided: Option[String] = None)
 
-  private def schemaOf(spark: SparkSession, root: String, v: Long,
-                       m: VMeta): org.apache.spark.sql.types.StructType =
-    m.schemaDdl.map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(read(spark, root, Some(v)).schema)
-
   // --- column mapping (metadata-only RENAME/DROP COLUMN) ---
 
   /** Present a physically-named frame under the mapping's logical
@@ -1187,7 +1244,7 @@ object Snapshots {
     requireLoggable(to, "renameColumn target")
     occPublish[Long](spark, root, "renameColumn") { at =>
       val m = at.m
-      val logical = logicalProjectNames(schemaOf(spark, root, at.v, m), m.colmap)
+      val logical = logicalProjectNames(schemaOf(spark, root, m), m.colmap)
       require(logical.contains(from), s"$root has no column $from")
       require(!logical.contains(to), s"$root already has a column $to")
       requireUnreferenced(m, from, "renameColumn")
@@ -1214,7 +1271,7 @@ object Snapshots {
   def dropColumn(spark: SparkSession, root: String, name: String): Long =
     occPublish[Long](spark, root, "dropColumn") { at =>
       val m = at.m
-      val logical = logicalProjectNames(schemaOf(spark, root, at.v, m), m.colmap)
+      val logical = logicalProjectNames(schemaOf(spark, root, m), m.colmap)
       require(logical.contains(name), s"$root has no column $name")
       require(logical.size > 1, s"cannot drop the last column of $root")
       requireUnreferenced(m, name, "dropColumn")
@@ -1370,20 +1427,14 @@ object Snapshots {
     val toRel = relFilesOf(spark, root, mTo)
     val fromSet = fromRel.toSet
     val toSet = toRel.toSet
-    val schema = schemaOf(spark, root, toV, mTo)
+    val schema = schemaOf(spark, root, mTo)
     val dataCols = schema.fieldNames.toSeq
-    def empty(): DataFrame = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    def readRel(rels: Seq[String]): DataFrame =
-      if (rels.isEmpty) empty()
-      else spark.read.schema(schema)
-        .parquet(rels.map(rel => new Path(root, rel).toString): _*)
     // each side reads LOGICALLY under its own version's deletion
-    // vector (merge-on-read composes with CDF)
+    // vector (merge-on-read composes with CDF); an empty side scans
+    // nothing, so its vector is never opened
     def readLogical(rels: Seq[String], m: VMeta): DataFrame = {
-      val raw = readRel(rels)
-      if (m.dv.isEmpty || rels.isEmpty) raw
-      else applyDv(spark, root, raw, dvOf(spark, root, m))
+      val raw = physical(spark, root, schema, rels)
+      if (rels.isEmpty) raw else logical(spark, root, m, raw)
     }
     val added = readLogical(toRel.filterNot(fromSet), mTo)
     val removed = readLogical(fromRel.filterNot(toSet), mFrom)
@@ -1419,10 +1470,9 @@ object Snapshots {
         val fl = posNet.select("file").distinct().collect().map(_.getString(0))
         dvChurnFiles += fl.length
         if (fl.isEmpty) None
-        else Some(spark.read.schema(schema)
-          .parquet(fl.map(rel => new Path(root, rel).toString).toSeq: _*)
-          .withColumn("__file", relFileCol(rootPathOf(spark, root)))
-          .withColumn("__pos", col("_metadata.row_index"))
+        // the churn files' PHYSICAL rows: a churned position is live
+        // in one of the two versions, whose vectors the net encodes
+        else Some(withRowId(spark, root, physical(spark, root, schema, fl.toSeq))
           .join(posNet.select(col("file").as("__file"),
             col("pos").as("__pos"), col(w)),
             Seq("__file", "__pos"), "inner")
@@ -1604,17 +1654,11 @@ object Snapshots {
       throw new IllegalArgumentException(s"$root has no committed versions"))
     val m = versionMeta(spark, root, v)
     requireLive(m, root, "readWithLineage")
-    val schema = schemaOf(spark, root, v, m)
+    val schema = schemaOf(spark, root, m)
     val dataCols = schema.fieldNames.toSeq
-    val files = relFilesOf(spark, root, m)
-      .map(rel => new Path(root, rel).toString)
     val lin = fileLineage(spark, root, Some(v))
-    val dv = dvOf(spark, root, m)
-    spark.read.schema(schema).parquet(files: _*)
-      .withColumn("__file", relFileCol(rootPathOf(spark, root)))
-      .withColumn("__pos", col("_metadata.row_index"))
-      .join(dv.select(col("file").as("__file"), col("pos").as("__pos")),
-        Seq("__file", "__pos"), "left_anti")
+    logical(spark, root, m,
+        physical(spark, root, schema, relFilesOf(spark, root, m)), keepId = true)
       .join(org.apache.spark.sql.functions.broadcast(
         lin.withColumnRenamed("file", "__file")), Seq("__file"), "left")
       .select(dataCols.map(col) :+
@@ -1673,7 +1717,7 @@ object Snapshots {
         "REPLACE ... SHALLOW CLONE to re-point it")
     val absFiles = filesOfVersion(spark, srcRoot, v).map(f => StatsIndex.normPath(f))
     val man = writeManifest(spark, dstRoot, absFiles)
-    val ddl = m.schemaDdl.getOrElse(loggedDdl(read(spark, srcRoot, Some(v)).schema))
+    val ddl = m.schemaDdl.getOrElse(loggedDdl(schemaOf(spark, srcRoot, m)))
     val meta = VMeta(None, Some(man), m.nRows, None, Some(ddl), None,
       m.constraints, m.parts, m.bucket, m.colmap)
     val nv =
@@ -1849,17 +1893,6 @@ object Snapshots {
 
   // --- merge-on-read deletes: positional deletion vectors ---
 
-  /** Root-relative file path of the row being scanned, derived from
-    * the parquet `_metadata.file_path` hidden column — the join key
-    * deletion vectors are stored under (with `_metadata.row_index`
-    * as the position: stable because snapshot data files are
-    * immutable).
-    */
-  private def relFileCol(rootAbs: String): Column =
-    org.apache.spark.sql.functions.regexp_replace(
-      StatsIndex.normPath(col("_metadata.file_path")),
-      "^" + java.util.regex.Pattern.quote(rootAbs + "/"), "")
-
   private def emptyDv(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -1874,24 +1907,6 @@ object Snapshots {
   private def dvOf(spark: SparkSession, root: String, m: VMeta): DataFrame =
     m.dv.map(rel => Load.openTable(spark, new Path(root, rel).toString))
       .getOrElse(emptyDv(spark))
-
-  /** Merge-on-read scan: drop the rows whose (file, position) appears
-    * in the deletion vector. An anti-join keyed on (file, pos) — the
-    * declarative form of Delta's DV application in the scan; AQE
-    * broadcasts the DV side when it is small (the point-delete norm).
-    * The join key is computed per-row from parquet scan metadata, so
-    * no data column is sacrificed and the physical files stay
-    * byte-identical.
-    */
-  private def applyDv(spark: SparkSession, root: String,
-                      df: DataFrame, dv: DataFrame): DataFrame = {
-    val dataCols = df.columns.toSeq
-    df.withColumn("__file", relFileCol(rootPathOf(spark, root)))
-      .withColumn("__pos", col("_metadata.row_index"))
-      .join(dv.select(col("file").as("__file"), col("pos").as("__pos")),
-        Seq("__file", "__pos"), "left_anti")
-      .select(dataCols.map(col): _*)
-  }
 
   /** What a merge-on-read delete did: the new version, the rows it
     * logically removed, and the total deletion-vector size the
@@ -1927,24 +1942,18 @@ object Snapshots {
                   pred: Column): MorResult =
     occPublish[MorResult](spark, root, "deleteWhere") { at =>
       val (v, m) = (at.v, at.m)
-      val schema = schemaOf(spark, root, v, m)
-      val files = relFilesOf(spark, root, m)
-        .map(rel => new Path(root, rel).toString)
       val prior = dvOf(spark, root, m)
       val priorN = m.dv.map(_ => prior.count()).getOrElse(0L)
-      // (file, pos) identity materializes BEFORE the logical
-      // projection (scan metadata is only resolvable on the scan
-      // output); the predicate evaluates over the LOGICAL view, so
-      // mapped tables delete by the names users see — the filter
-      // still pushes through the alias projection to the scan
-      val fresh = logicalProject(
-          spark.read.schema(schema).parquet(files: _*)
-            .withColumn("__gf", relFileCol(rootPathOf(spark, root)))
-            .withColumn("__gp", col("_metadata.row_index")),
+      // the live rows with their (file, pos) identity — an already
+      // deleted position never re-enters the vector; the predicate
+      // evaluates over the LOGICAL view, so mapped tables delete by
+      // the names users see (the identity columns pass the mapping,
+      // and the filter still pushes through it to the scan)
+      val fresh = logicalProject(logical(spark, root, m, physical(spark, root,
+          schemaOf(spark, root, m), relFilesOf(spark, root, m)), keepId = true),
           m.colmap)
         .filter(coalesce(pred, lit(false)))
-        .select(col("__gf").as("file"), col("__gp").as("pos"))
-        .join(prior, Seq("file", "pos"), "left_anti")
+        .select(col("__file").as("file"), col("__pos").as("pos"))
       val dvRel = s"dv/d-${java.util.UUID.randomUUID().toString.take(13)}"
       val dvPath = new Path(root, dvRel).toString
       val obs = org.apache.spark.sql.Observation(
@@ -2007,22 +2016,18 @@ object Snapshots {
       val (v, m) = (at.v, at.m)
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
         "materializeMapping before updateWhere")
-      val schema = schemaOf(spark, root, v, m)
+      val schema = schemaOf(spark, root, m)
       val setMap = set.toMap
       setMap.keys.foreach(c => require(schema.fieldNames.contains(c),
         s"updateWhere: $c is not a column of $root"))
       val readRels = relFilesOf(spark, root, m)
-      val files = readRels.map(rel => new Path(root, rel).toString)
       val prior = dvOf(spark, root, m)
       val priorN = m.dv.map(_ => prior.count()).getOrElse(0L)
       val scratch = s"data/u-${java.util.UUID.randomUUID().toString.take(13)}"
       val scratchPath = new Path(root, scratch)
       def dropScratch(): Unit = fs(spark, scratchPath).delete(scratchPath, true)
-      val matched = spark.read.schema(schema).parquet(files: _*)
-        .withColumn("__file", relFileCol(rootPathOf(spark, root)))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(prior.select(col("file").as("__file"), col("pos").as("__pos")),
-          Seq("__file", "__pos"), "left_anti")
+      val matched = logical(spark, root, m, physical(spark, root, schema, readRels),
+          keepId = true)
         .filter(coalesce(pred, lit(false)))
       val obs = org.apache.spark.sql.Observation(
         s"graft_upd_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -2033,7 +2038,8 @@ object Snapshots {
         dropScratch()
         Left(MorUpdateResult(v, 0L, priorN))
       } else {
-        val scr = spark.read.parquet(scratchPath.toString)
+        val scr = physical(spark, root, asNullable(matched.schema),
+          listFreshRel(spark, root, scratch))
         val updated = scr.select(schema.fields.toSeq.map { f =>
           setMap.get(f.name).map(_.cast(f.dataType).as(f.name))
             .getOrElse(col(f.name))
@@ -2050,8 +2056,9 @@ object Snapshots {
         // the conflict rule: an added file holding a row the predicate
         // matches (see the doc)
         def addedMatches(added: DataFrame): Boolean = {
-          val addedAbs = added.select("file").collect().map(_.getString(0)).toSeq
-          addedAbs.nonEmpty && spark.read.schema(schema).parquet(addedAbs: _*)
+          val addedRel = added.select("file").collect()
+            .map(r => relOf(spark, root, r.getString(0))).toSeq
+          addedRel.nonEmpty && physical(spark, root, schema, addedRel)
             .filter(coalesce(pred, lit(false))).limit(1).count() > 0
         }
         // every read file stays listed (the new vector addresses them);
@@ -2213,9 +2220,7 @@ object Snapshots {
       // nulls); shared columns must keep their type; without
       // `evolveSchema`, the batch must match the table exactly —
       // silent column drift in a daily feed is a bug, not evolution.
-      val newSchema = priorMeta.map(m =>
-          m.schemaDdl.map(StructType.fromDDL)
-            .getOrElse(read(spark, root, Some(at.v)).schema)) match {
+      val newSchema = priorMeta.map(schemaOf(spark, root, _)) match {
         case None => dfPhys.schema
         case Some(old) if !tableMap.isIdentity =>
           // mapped table: the batch must match the LOGICAL schema —
@@ -2265,7 +2270,7 @@ object Snapshots {
         priorMeta.map(_.colmap).getOrElse(ColMap()), copyRef = copyRef)
       Right(Publish(meta, nv => {
           if (statsCols.nonEmpty)
-            writeIndex(spark, root, meta, physStatsCols, freshDir, freshRel,
+            writeIndex(spark, root, meta, physStatsCols, freshRel,
               priorMeta.map(statsRowsOf(spark, root, _, physStatsCols)))
           nv
         }, staged = Seq(man), retained = Seq(freshDir)))
@@ -2353,7 +2358,7 @@ object Snapshots {
     val fresh = files.filterNot(t => loaded.contains(t._1))
     if (fresh.isEmpty)
       return CopyResult(v0, 0, files.size, 0L)
-    val schema = schemaOf(spark, root, v0, m0)
+    val schema = schemaOf(spark, root, m0)
     val paths = fresh.map(_._1)
     val raw = fmt match {
       case "parquet" => spark.read.options(options).parquet(paths: _*)
@@ -2429,9 +2434,10 @@ object Snapshots {
     *
     *  - `rewritten`: the read version's files (root-relative) the
     *    rewrite re-reads and replaces;
-    *  - `rewrite`: the rows to stage, given the read version's deletion
-    *    vector (re-read files read LOGICALLY, or its deleted rows would
-    *    resurrect);
+    *  - `rewrite`: the rows to stage, given the LOGICAL rows of
+    *    `rewritten` — [[commitDelta]] opens them under the read
+    *    version's schema with its deletion vector applied, so a deleted
+    *    row never resurrects;
     *  - `ddl`: the schema the new version logs;
     *  - `addedConflicts`: [[rebaseDelta]]'s predicate over the stats
     *    rows of the files an interleaved commit added;
@@ -2491,8 +2497,11 @@ object Snapshots {
     * before an evolution genuinely yield nulls for added columns.
     */
   private def loggedDdl(schema: org.apache.spark.sql.types.StructType): String =
-    org.apache.spark.sql.types.StructType(
-      schema.fields.map(_.copy(nullable = true))).toDDL
+    asNullable(schema).toDDL
+
+  private def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(schema.fields.map(_.copy(nullable = true)))
 
   /** The one copy-on-write commit of the manifest-delta writers
     * ([[merge]], [[mergeClauses]], [[deleteRange]],
@@ -2505,7 +2514,9 @@ object Snapshots {
     * removed files; the deletion vector's entries for carried files
     * ride into a new vector (their positions stay valid — the files
     * are carried verbatim; removed files' entries die with them); the
-    * rewrite stages into a fresh dir; and the new version — carried
+    * rewritten files open LOGICALLY through [[logical]] and the
+    * writer's `rewrite` of those rows stages into a fresh dir (no
+    * writer re-reads a file itself); and the new version — carried
     * files BY REFERENCE plus the fresh dir — publishes at EXACTLY
     * readVersion+1.
     *
@@ -2544,13 +2555,12 @@ object Snapshots {
             Some((schema,
               rows.filter(r => keep(relOf(spark, root, r.getString(fIdx))))))
           }
-        val dvPrior = dvOf(spark, root, m)
         val (dvCarry, dvCarryN) =
           if (m.dv.isEmpty || carried.isEmpty || p.compaction) (None, 0L)
           else {
             val relDf = spark.createDataset(carried)(
               org.apache.spark.sql.Encoders.STRING).toDF("file")
-            val kept = dvPrior.join(relDf, Seq("file"), "left_semi")
+            val kept = dvOf(spark, root, m).join(relDf, Seq("file"), "left_semi")
             val n = kept.count()
             if (n == 0L) (None, 0L)
             else {
@@ -2560,7 +2570,8 @@ object Snapshots {
             }
           }
         val (freshDir, freshRows) =
-          try writeDataDir(spark, p.rewrite(dvPrior), root, m.parts, m.bucket)
+          try writeDataDir(spark, p.rewrite(logical(spark, root, m, physical(spark,
+              root, schemaOf(spark, root, m), p.rewritten))), root, m.parts, m.bucket)
           finally p.release()
         val freshRel = listFreshRel(spark, root, freshDir)
         val rows = carriedStats match {
@@ -2577,7 +2588,7 @@ object Snapshots {
             : Publish[CowResult] =
           Publish(meta, nv => {
               stats.foreach(c => writeIndex(spark, root, meta, physStatsCols,
-                freshDir, freshRel, Some(c)))
+                freshRel, Some(c)))
               CowResult(nv, p.rewritten.size, removed.size + nCarried, freshRows)
             },
             staged = meta.manifest.toSeq, retained = freshDir +: dvCarry.toSeq,
@@ -2603,12 +2614,12 @@ object Snapshots {
 
   /** Write the skipping index of a just-published version `nm` on
     * `physStatsCols`: the carried files' rows verbatim plus one build
-    * over the fresh dir. A carried index built for DIFFERENT columns
+    * over the fresh files. A carried index built for DIFFERENT columns
     * cannot union with the fresh build — the whole layout rebuilds
     * instead of failing after the publish landed.
     */
   private def writeIndex(spark: SparkSession, root: String, nm: VMeta,
-      physStatsCols: Seq[String], freshDir: String, freshRel: Seq[String],
+      physStatsCols: Seq[String], freshRel: Seq[String],
       carried: Option[(org.apache.spark.sql.types.StructType,
                        Array[org.apache.spark.sql.Row])]): Unit =
     if (carried.exists(_._1.fieldNames.toSet != statsColumns(physStatsCols)))
@@ -2617,8 +2628,8 @@ object Snapshots {
       val (schema, all) = carried match {
         case Some(c) if freshRel.isEmpty => c
         case _ =>
-          val (fSchema, fRows) = StatsIndex.buildRows(spark,
-            new Path(root, freshDir).toString, physStatsCols)
+          val (fSchema, fRows) = StatsIndex.buildRows(
+            physical(spark, root, schemaOf(spark, root, nm), freshRel), physStatsCols)
           carried.fold((fSchema, fRows)) { case (cSchema, cRows) =>
             unionStatsRows(cSchema, cRows, fSchema, fRows)
           }
@@ -2756,7 +2767,7 @@ object Snapshots {
       val m = base.m
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
         "materializeMapping before merge")
-      val tableSchema = schemaOf(spark, root, base.v, m)
+      val tableSchema = schemaOf(spark, root, m)
       val tableCols = tableSchema.fieldNames
       require(updRaw.columns.toSet == tableCols.toSet,
         s"updates schema ${updRaw.columns.toSet} != table ${tableCols.toSet}")
@@ -2776,11 +2787,11 @@ object Snapshots {
         col(f.name).cast(f.dataType).as(f.name)): _*)
       val (k, touched) = keyTargets(base.stats, upd, key, m.bucket)
       Right(CowPlan(touched.map(f => relOf(spark, root, f)),
-        dv =>
+        // nothing touched: the updates are the rewrite (an anti-join
+        // against the empty scan would still plan the key distinct)
+        rows =>
           if (touched.isEmpty) upd
-          else applyDv(spark, root,
-              spark.read.schema(tableSchema).parquet(touched: _*), dv)
-            .join(upd.select(col(key)).distinct(), Seq(key), "left_anti")
+          else rows.join(upd.select(col(key)).distinct(), Seq(key), "left_anti")
             .unionByName(upd),
         // the table schema rides the log forward — dropping it here
         // would hand a post-evolution table back to footer inference,
@@ -3057,10 +3068,10 @@ object Snapshots {
     var receipt: () => (Long, Long, Long, Seq[Long]) = () => (0L, 0L, 0L, Nil)
     val r = commitDelta(spark, root, "mergeClauses", statsCols, tag,
         metaHint) { base =>
-      val (v, m) = (base.v, base.m)
+      val m = base.m
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
         "materializeMapping before merge")
-      val tableSchema = schemaOf(spark, root, v, m)
+      val tableSchema = schemaOf(spark, root, m)
       val tableCols = tableSchema.fieldNames.toSeq
       // COLUMN-SUBSET sources (the real upsert-feed shape: (key,
       // changed-cols) only): the source may carry any subset of the
@@ -3202,25 +3213,18 @@ object Snapshots {
       val touchedList = targets.map(_._2).getOrElse(
         base.stats.select("file").collect().map(_.getString(0)).sorted.toSeq)
       var staged: Option[DataFrame] = None
-      Right(CowPlan(touchedList.map(f => relOf(spark, root, f)), dvPrior => {
+      Right(CowPlan(touchedList.map(f => relOf(spark, root, f)), rows => {
         // clause evaluation over the (touched × source) join — both
         // sides presented under their statement aliases so conditions
         // and assignments resolve exactly as the SQL analyzer would
         // the churn-sized inputs are read by the count/check passes AND
         // the final write — persist them so the touched parquet files
         // and the source scan run ONCE, not once per pass
-        // touched files read under the WIDENED shared-column schema —
-        // the parquet readers up-convert the narrow physical types, so
+        // touched rows cast to the WIDENED shared-column schema, so
         // every image below is already widened (no mixed-type unions)
-        val touchedRows = (
-          if (touchedList.isEmpty)
-            read(spark, root, Some(v)).filter(lit(false))
-              .select(tableSchemaW.fields.toSeq.map(f =>
-                col(f.name).cast(f.dataType).as(f.name)): _*)
-          else applyDv(spark, root,
-            spark.read.schema(tableSchemaW).parquet(touchedList: _*),
-            dvPrior).select(tableCols.map(col): _*)
-        ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val touchedRows = rows.select(tableSchemaW.fields.toSeq.map(f =>
+            col(f.name).cast(f.dataType).as(f.name)): _*)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         staged = Some(touchedRows)
         // `src` is a cheap cast over the persisted raw source — every
         // pass below reads cached partitions, never the source plan
@@ -3483,14 +3487,9 @@ object Snapshots {
       // the filter folds over the localized stats (no job)
       val touched = base.stats.filter(hit)
         .select("file").collect().map(_.getString(0)).sorted.toSeq
-      val tableSchema = read(spark, root, Some(base.v)).schema
       Right(CowPlan(touched.map(f => relOf(spark, root, f)),
-        dv =>
-          if (touched.isEmpty) read(spark, root, Some(base.v)).filter(lit(false))
-          else applyDv(spark, root,
-              spark.read.schema(tableSchema).parquet(touched: _*), dv)
-            .filter(!coalesce(del, lit(false))),
-        Some(loggedDdl(tableSchema)),
+        _.filter(!coalesce(del, lit(false))),
+        Some(loggedDdl(schemaOf(spark, root, base.m))),
         // an interleaved added file may not intersect the deleted range
         // (its rows would have faced this delete), conservative on null
         // stats via the same hitExpr as the targeting itself
@@ -3705,10 +3704,7 @@ object Snapshots {
     val candidates = droppedRel ++ touchedRel
     if (candidates.isEmpty) return false
     val pred = spec.map { case (c, value) => col(c) <=> value }.reduce(_ && _)
-    applyDv(spark, root,
-      spark.read.schema(schemaOf(spark, root, v, m)).parquet(
-        candidates.map(rel => new Path(root, rel).toString): _*),
-      dvOf(spark, root, m))
+    logical(spark, root, m, physical(spark, root, schemaOf(spark, root, m), candidates))
       .filter(coalesce(pred, lit(false))).limit(1).count() > 0L
   }
 
@@ -3741,7 +3737,7 @@ object Snapshots {
       val m = base.m
       specCols.foreach(c => require(m.parts.contains(c),
         s"$op: $c is not a partition column of $root (${m.parts})"))
-      val schema = schemaOf(spark, root, base.v, m)
+      val schema = schemaOf(spark, root, m)
       require(df.columns.toSet == schema.fieldNames.toSet,
         s"$op batch schema ${df.columns.toSet} != table ${schema.fieldNames.toSet}")
       require(m.colmap.isIdentity, s"$root carries a column mapping — " +
@@ -3753,16 +3749,12 @@ object Snapshots {
       val (_, droppedRel, touchedRel) =
         classifyByTuples(base.rels, specCols, tuples)
       Right(CowPlan(touchedRel,
-        dv => {
-          // conservative remainder: unknown-layout files rewritten with
-          // the replaced tuples' rows filtered OUT (logical read)
-          val remainder =
-            if (touchedRel.isEmpty) batch.filter(lit(false))
-            else keepRemainder(applyDv(spark, root,
-              spark.read.schema(schema).parquet(
-                touchedRel.map(rel => new Path(root, rel).toString): _*), dv))
-          remainder.unionByName(batch)
-        },
+        // conservative remainder: unknown-layout files rewritten with
+        // the replaced tuples' rows filtered OUT; a cleanly partitioned
+        // table has none (and the anti-join would still plan its
+        // broadcast)
+        rows => if (touchedRel.isEmpty) batch
+          else keepRemainder(rows).unionByName(batch),
         Some(loggedDdl(schema)),
         added => {
           val addedRel = added.select("file").collect()
@@ -4095,13 +4087,11 @@ object Snapshots {
                           m: VMeta, cols: Seq[String]): Unit = {
     val sp = statsPath(root, m.layoutId)
     if (!fs(spark, sp).exists(sp)) {
-      val (schema, rows) = m.dataDir match {
-        case Some(d) =>
-          StatsIndex.buildRows(spark, new Path(root, d).toString, cols)
-        case None =>
-          StatsIndex.buildRowsForFiles(spark, relFilesOf(spark, root, m)
-            .map(rel => new Path(root, rel).toString), cols)
-      }
+      // PHYSICAL rows under the logged schema: `n_rows` counts what each
+      // file holds, and files a widening left narrower read up
+      val (schema, rows) = StatsIndex.buildRows(
+        physical(spark, root, schemaOf(spark, root, m), relFilesOf(spark, root, m)),
+        cols)
       writeStatsRows(spark, root, m.layoutId, schema, rows)
     }
   }
@@ -4294,21 +4284,14 @@ object Snapshots {
         val touchedRel = touched.map(_._1).sorted
         val debtBytes = touched.map(_._2.getLen).sum
         val nFiles = math.max(1, math.ceil(debtBytes.toDouble / targetBytes).toInt)
-        val schema = schemaOf(spark, root, base.v, m)
         Right(CowPlan(touchedRel,
-          dv => {
-            // touched files read LOGICALLY (vector rows must not
-            // resurrect); every dv file is in the touched set, so the
-            // new version carries NO vector
-            val df0 = applyDv(spark, root,
-              spark.read.schema(schema)
-                .parquet(touchedRel.map(rel => new Path(root, rel).toString): _*),
-              dv)
-            if (m.bucket.nonEmpty) df0
-            else if (clusterBy.isEmpty) df0.repartition(nFiles)
-            else df0.repartitionByRange(nFiles, clusterBy.map(col): _*)
-              .sortWithinPartitions(clusterBy.map(col): _*)
-          },
+          // every dv file is in the touched set, so the logical rows
+          // materialize the vector and the new version carries none
+          rows =>
+            if (m.bucket.nonEmpty) rows
+            else if (clusterBy.isEmpty) rows.repartition(nFiles)
+            else rows.repartitionByRange(nFiles, clusterBy.map(col): _*)
+              .sortWithinPartitions(clusterBy.map(col): _*),
           m.schemaDdl, // compaction preserves the logged schema
           // layout-only: an interleaved added file never conflicts
           // semantically — it is simply next pass's debt
@@ -4320,9 +4303,9 @@ object Snapshots {
 
   /** Time-travel read THROUGH the version's stats index: the file
     * list prunes from metadata alone, then only candidate files
-    * open ([[StatsIndex.prunedRead]]'s contract, against the
-    * version's immutable data dir). Returns (frame, files read,
-    * files total).
+    * open ([[StatsIndex.prunedRead]]'s contract, under the version's
+    * logged schema like [[read]]). Returns (frame, files read, files
+    * total).
     */
   def readPruned(spark: SparkSession, root: String, version: Option[Long],
                  c: String, lo: Option[Column], hi: Option[Column])
@@ -4335,43 +4318,28 @@ object Snapshots {
     // (zero jobs, zero reads — see [[statsCache]], including its
     // single-writer-process assumption: a memoized layout whose
     // `_stats` dir was deleted externally still prunes here); the
-    // candidate filter and count below then fold over a LocalRelation
-    val stats = persistedStats(spark, root, m.layoutId)
-      .map { case (schema, rows) => localStats(spark, schema, rows.toIndexedSeq) }
+    // candidate filter below then folds over a LocalRelation, and the
+    // total is the row count on the driver (one row per file)
+    val (sSchema, sRows) = persistedStats(spark, root, m.layoutId)
       .getOrElse(throw new IllegalArgumentException(
         s"version $v of $root has no stats index — commit via commitWithStats"))
-    // merge-on-read composes with skipping: min/max prune on PHYSICAL
-    // file contents, which over-approximate the logical rows (a
-    // deletion vector only removes rows), so pruning stays sound and
-    // the vector applies on whatever survives it
-    def logical(df: DataFrame): DataFrame =
-      m.dv.map(_ => applyDv(spark, root, df, dvOf(spark, root, m))).getOrElse(df)
     // the caller names the LOGICAL column; stats rows and file
-    // contents carry the physical one
+    // contents carry the physical one. The candidates come from the
+    // stats rows (whose `file` URIs are the version's files), open
+    // through [[openScan]], and the range re-applies to their rows
+    // (the stats decide which files to open, never which rows
+    // qualify). Merge-on-read composes with skipping: min/max prune on
+    // PHYSICAL file contents, which over-approximate the logical rows
+    // (a deletion vector only removes rows), so pruning stays sound
+    // and the vector applies on whatever survives it.
     val pc = m.colmap.physicalOf(c)
-    m.dataDir match {
-      case Some(d) if m.parts.isEmpty =>
-        val (df, nRead, nTotal) =
-          StatsIndex.prunedRead(spark, new Path(root, d).toString, stats, pc, lo, hi)
-        (logicalProject(logical(df), m.colmap), nRead, nTotal)
-      case _ =>
-        // manifest layout: the candidate list comes straight from the
-        // stats rows (whose `file` URIs are the manifest's files);
-        // there is no single base dir, and snapshot data is flat, so
-        // the subset read needs no basePath
-        val total = stats.select("file").count().toInt
-        val files = StatsIndex.candidateFiles(stats, pc, lo, hi)
-        val bounded = Seq(lo.map(l => col(pc) >= l), hi.map(h => col(pc) <= h))
-          .flatten.reduceOption(_ && _).getOrElse(lit(true))
-        val reader = m.schemaDdl.map(d => spark.read.schema(
-            org.apache.spark.sql.types.StructType.fromDDL(d)))
-          .getOrElse(spark.read)
-        val df =
-          if (files.isEmpty) read(spark, root, Some(v)).filter(lit(false))
-          else logicalProject(logical(reader.parquet(files: _*))
-            .filter(bounded), m.colmap)
-        (df, files.size, total)
-    }
+    val files = StatsIndex.candidateFiles(localStats(spark, sSchema, sRows.toIndexedSeq),
+      pc, lo, hi)
+    val bounded = Seq(lo.map(l => col(pc) >= l), hi.map(h => col(pc) <= h))
+      .flatten.reduceOption(_ && _).getOrElse(lit(true))
+    val df = logical(spark, root, m, physical(spark, root, schemaOf(spark, root, m),
+      files.map(f => relOf(spark, root, f)))).filter(bounded)
+    (logicalProject(df, m.colmap), files.size, sRows.length)
   }
 
   /** The version's persisted stats table, when one exists (a version
@@ -4401,38 +4369,27 @@ object Snapshots {
   def sqlScan(spark: SparkSession, root: String,
               version: Option[Long] = None)
       : (DataFrame, graft.plans.SnapshotFileIndex) = {
-    import org.apache.spark.sql.GraftShim
     val v = version.orElse(latestVersion(spark, root)).getOrElse(
       throw new IllegalArgumentException(s"$root has no committed versions"))
     val m = versionMeta(spark, root, v)
     requireLive(m, root, "sqlScan")
-    val schema = schemaOf(spark, root, v, m)
-    val rels = relFilesOf(spark, root, m)
-    val idx = new graft.plans.SnapshotFileIndex(spark,
-      new Path(rootPathOf(spark, root)),
-      fileStatusesOf(spark, root, rels),
-      statsTableOf(spark, root, v), m.parts)
     // a logged bucket layout surfaces as a real BucketSpec: the scan
     // reports HashPartitioning(cols, n) and co-bucketed joins/aggs
     // plan with no exchange (see [[Bucketing]])
-    val spec = m.bucket.map(b =>
-      org.apache.spark.sql.catalyst.catalog.BucketSpec(b.n, b.cols, b.sort))
-    val raw = GraftShim.ofRows(spark,
-      GraftShim.parquetScanPlan(spark, idx, schema, spec))
+    val (raw, idx) = openScan(spark, root, schemaOf(spark, root, m),
+      relFilesOf(spark, root, m), statsTableOf(spark, root, v), m.parts, m.bucket)
     // column mapping: SQL sees the logical names; predicates push
     // through the alias projection to the physical scan, so stats
     // skipping and parquet pushdown keep working on the file names
-    val df = logicalProject(
-      m.dv.map(_ => applyDv(spark, root, raw, dvOf(spark, root, m)))
-        .getOrElse(raw),
-      m.colmap)
-    (df, idx)
+    (logicalProject(logical(spark, root, m, raw), m.colmap), idx)
   }
 
   /** FileStatuses for a manifest's files — ONE listing RPC per
     * distinct parent dir, never a getFileStatus round trip per file
     * (at a million-file manifest that is the difference between a
-    * listing and a day of metadata calls).
+    * listing and a day of metadata calls). A listed file that is gone
+    * (deleted outside the log, or a clone's source vacuumed) refuses:
+    * a scan must not silently lose its rows.
     */
   private[graft] def fileStatusesOf(spark: SparkSession, root: String,
                              rels: Seq[String])
@@ -4440,8 +4397,11 @@ object Snapshots {
     val byDir = rels.map(rel => new Path(root, rel)).groupBy(_.getParent)
     byDir.toSeq.sortBy(_._1.toString).flatMap { case (dir, paths) =>
       val want = paths.map(_.getName).toSet
-      fs(spark, dir).listStatus(dir).filter(st => want(st.getPath.getName))
-        .sortBy(_.getPath.getName)
+      val found = fs(spark, dir).listStatus(dir).filter(st => want(st.getPath.getName))
+      if (found.length != want.size)
+        throw new IllegalStateException(s"$root: ${want.size - found.length} " +
+          s"listed data file(s) missing under $dir — deleted outside the log?")
+      found.sortBy(_.getPath.getName)
     }
   }
 
@@ -4483,7 +4443,7 @@ object Snapshots {
       throw new IllegalArgumentException(s"$root has no committed versions"))
     val m = versionMeta(spark, root, v)
     requireLive(m, root, "createTableStmts")
-    val schema = schemaOf(spark, root, v, m)
+    val schema = schemaOf(spark, root, m)
     val logical = org.apache.spark.sql.types.StructType(
       schema.fields.flatMap(f =>
         m.colmap.logicalOf(f.name).map(l => f.copy(name = l))))

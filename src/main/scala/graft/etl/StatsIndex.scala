@@ -138,34 +138,22 @@ object StatsIndex {
       listDataFiles(spark, dataPath))
   }
 
-  /** [[build]] COLLECTED (r17): one aggregation job over the data,
-    * with the empty-file padding done on the collected rows against
-    * the driver-side listing — the DataFrame-shaped [[padEmptyFiles]]
-    * anti-join cost its own AQE stage jobs per build, for a join whose
-    * both sides are file-count-sized metadata the driver already
-    * holds. The snapshot tier consumes stats as collected rows anyway
-    * ([[graft.etl.Snapshots]]'s localized stats snapshots), so this is
-    * the collect it was already going to do, moved before the pad.
-    * The data dir is opened by [[Load.openTable]] (the engine wrote
-    * it, so its footer holds the schema): no schema job.
+  /** [[build]] COLLECTED over an already-opened dataset (r17): one
+    * aggregation job over the data, with the empty-file padding done
+    * on the collected rows against the frame's own input files — the
+    * DataFrame-shaped [[padEmptyFiles]] anti-join cost its own AQE
+    * stage jobs per build, for a join whose both sides are
+    * file-count-sized metadata the driver already holds. The snapshot
+    * tier consumes stats as collected rows anyway
+    * ([[graft.etl.Snapshots]]'s localized stats snapshots), and opens
+    * `data` through its one version-file opener (no listing job, no
+    * schema job, the logged schema).
     */
-  private[etl] def buildRows(spark: SparkSession, dataPath: String,
-                             cols: Seq[String])
+  private[etl] def buildRows(data: DataFrame, cols: Seq[String])
       : (org.apache.spark.sql.types.StructType,
          Array[org.apache.spark.sql.Row]) = {
     require(cols.nonEmpty, "need at least one stats column")
-    padRows(statsFor(Load.openTable(spark, dataPath), cols),
-      listDataFiles(spark, dataPath))
-  }
-
-  /** [[buildRows]] over an explicit file list. */
-  private[etl] def buildRowsForFiles(spark: SparkSession, files: Seq[String],
-                                     cols: Seq[String])
-      : (org.apache.spark.sql.types.StructType,
-         Array[org.apache.spark.sql.Row]) = {
-    require(cols.nonEmpty, "need at least one stats column")
-    require(files.nonEmpty, "need at least one file")
-    padRows(statsFor(spark.read.parquet(files: _*), cols), files)
+    padRows(statsFor(data, cols), data.inputFiles.toSeq.sorted)
   }
 
   /** Driver-side twin of [[padEmptyFiles]]: same normalization, same

@@ -33,10 +33,15 @@ import graft.etl.StatsIndex
   * cost a scan, false negatives would cost correctness, so there are
   * none by construction.
   *
-  * The stats evaluation is itself a Spark plan over the metadata
-  * table (one tiny job per planning pass, the Delta data-skipping
-  * shape) — never a driver loop over file entries, so it holds at a
-  * million-file manifest.
+  * The stats evaluation is a filter over the metadata table (the
+  * Delta data-skipping shape). The snapshot tier hands the stats in
+  * as a local relation, so the filter folds on the driver and a
+  * planning pass runs no Spark job.
+  *
+  * [[graft.etl.Snapshots]] opens every read and write of a version's
+  * files through this index (its one opener; stats only for the SQL
+  * scan), so no open of a snapshot version lists a directory or
+  * samples a footer.
   */
 final class SnapshotFileIndex(
     spark: SparkSession,

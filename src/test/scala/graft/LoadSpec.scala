@@ -347,33 +347,6 @@ class LoadSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() === Tables.documents(spark, sf).count())
   }
 
-  /** (result of `body`, Spark jobs `body` started on this thread). The
-    * listener counts the jobs of a job group set for `body` alone; a
-    * marker job in the same group, run after it, flushes the
-    * asynchronous listener bus (one listener sees jobs in order).
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"load-open-${System.nanoTime}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "open", interruptOnCancel = false)
-      val r = try body finally sc.setJobDescription("marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
-      while (!seen.contains("marker") && System.nanoTime < deadline) Thread.sleep(10)
-      assert(seen.contains("marker"), "the listener never saw the marker job")
-      (r, seen.size - 1)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** The opener against `spark.read.parquet` on one layout: the same
     * schema (nullability and partition types included), rows as a
     * multiset and input files; no hidden file among them; no job to
@@ -507,18 +480,11 @@ class LoadSpec extends SparkSpec {
     */
   private def writeExchanges(path: String)(body: => Unit): Int = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.util.QueryExecutionListener
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case _ => p.children
-    }).flatMap(flatten)
-    def writesUnder(p: SparkPlan) = flatten(p).exists {
+    def writesUnder(p: SparkPlan) = flattenPlan(p).exists {
       case w: DataWritingCommandExec => w.cmd match {
         case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString.contains(path)
         case _ => false
@@ -538,7 +504,7 @@ class LoadSpec extends SparkSpec {
       def writes = plans.toArray(Array.empty[SparkPlan]).filter(writesUnder).toSeq
       while (writes.isEmpty && System.nanoTime < deadline) Thread.sleep(10)
       assert(writes.size === 1, s"expected one write under $path")
-      flatten(writes.head).count(_.isInstanceOf[ShuffleExchangeLike])
+      flattenPlan(writes.head).count(_.isInstanceOf[ShuffleExchangeLike])
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -569,5 +535,32 @@ class LoadSpec extends SparkSpec {
     dirs.foreach(d => assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1,
       s"${d.getName} holds more than one file"))
     assert(Load.readTable(spark, path).count() === 1000)
+  }
+
+  test("an upsert carrying a column the table lacks refuses before writing; a missing one merges as NULL") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val path = tmpDir("upsert-extra") + "/t"
+    val keys = Seq("order_id", "items")
+    Load.upsert(spark, (1 to 1000).map(i => (s"o$i", s"i$i", 1.0))
+      .toDF("order_id", "items", "amount"), path, keys)
+    def files(): Map[String, Long] =
+      Files.walk(Paths.get(path)).iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+    val before = files()
+    val e = intercept[IllegalArgumentException] {
+      Load.upsert(spark, Seq(("o1", "i1", 9.0, "late")).toDF("order_id", "items", "amount", "note"),
+        path, keys)
+    }
+    assert(e.getMessage.contains("note"), e.getMessage)
+    assert(files() === before, "the refused upsert changed the table")
+    assert(!Files.exists(Paths.get(path + "__tmp")))
+    assert(Load.readTable(spark, path).columns.toSet === Set("order_id", "items", "amount"))
+    // a batch leaving a column out stays legal: it merges as NULL
+    Load.upsert(spark, Seq(("o2", "i2")).toDF("order_id", "items"), path, keys)
+    val t = Load.readTable(spark, path)
+    assert(t.count() === 1000)
+    assert(t.filter(col("order_id") === "o2").select("amount").head().isNullAt(0))
   }
 }

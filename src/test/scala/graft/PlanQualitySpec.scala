@@ -432,6 +432,42 @@ class PlanQualitySpec extends SparkSpec {
       s"column pruning lost through the custom relation: $rs")
   }
 
+  test("every scan of a snapshot version's data files plans over SnapshotFileIndex") {
+    // the one-opener claim made physical: reads, the change feed, the
+    // lineage read and the copy-on-write writers (merge, optimize and
+    // the index builds they run) all scan the version's files through
+    // the manifest-listed index, never a path-listed InMemoryFileIndex
+    import graft.etl.Snapshots
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val root = tmpDir("snapscan")
+    Snapshots.commitWithStats(spark, (1 to 80).map(i => (i.toLong, i * 2L)).toDF("id", "v")
+      .repartitionByRange(4, col("id")).sortWithinPartitions("id"), root, Seq("id"))
+    Snapshots.deleteWhere(spark, root, col("id") === 3L)
+    val v = Snapshots.append(spark, (81 to 120).map(i => (i.toLong, i * 2L)).toDF("id", "v"),
+      root, statsCols = Seq("id"))
+    val verbs: Seq[(String, () => Unit)] = Seq(
+      "read" -> (() => Snapshots.read(spark, root).collect()),
+      "readPruned" -> (() => Snapshots.readPruned(spark, root, None, "id",
+        Some(lit(10L)), Some(lit(30L)))._1.collect()),
+      "changes" -> (() => Snapshots.changes(spark, root, v - 1, v).df.collect()),
+      "readWithLineage" -> (() => Snapshots.readWithLineage(spark, root).collect()),
+      "merge" -> (() => Snapshots.merge(spark, Seq((5L, 0L), (500L, 1L)).toDF("id", "v"),
+        root, "id", Seq("id"))),
+      "optimize" -> (() => Snapshots.optimize(spark, root, statsCols = Seq("id"))))
+    verbs.foreach { case (name, run) =>
+      val scans = plansDuring(run()).flatMap(flattenPlan).collect {
+        case s: FileSourceScanExec if (s.relation.location.inputFiles.toSeq ++
+            s.relation.location.rootPaths.map(_.toString)).exists(_.contains(s"$root/data/")) => s
+      }
+      assert(scans.nonEmpty, s"$name scanned no data file")
+      scans.foreach(s => assert(
+        s.relation.location.isInstanceOf[graft.plans.SnapshotFileIndex],
+        s"$name scanned through ${s.relation.location.getClass.getSimpleName}"))
+    }
+  }
+
   test("q155: the pruned scan opens only the candidate files") {
     // the data-skipping claim made physical: the pruned read's scan
     // node holds exactly the stats-selected file list, not the full

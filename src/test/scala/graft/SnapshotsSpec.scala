@@ -2800,4 +2800,107 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.readPruned(spark, root, None, "id", Some(lit(3L)), Some(lit(3L)))
       ._1.count() === 1L)
   }
+
+  test("a version that logs no schema reads under its first data file's footer schema") {
+    import org.apache.spark.sql.types._
+    val root = tmpDir("snap_no_schema")
+    Snapshots.commit(spark, df(4), root)
+    val p = java.nio.file.Paths.get(s"$root/_versions/v00000001.json")
+    val body = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      .replaceAll(""","schema":"[^"]*"""", "")
+    assert(!body.contains("schema"), body)
+    java.nio.file.Files.write(p, body.getBytes("UTF-8"))
+    val got = Snapshots.read(spark, root)
+    assert(got.schema.map(f => (f.name, f.dataType)) === Seq(("id", LongType), ("s", StringType)))
+    assert(got.orderBy("id").as[(Long, String)].collect().toSeq === (1 to 4).map(i => (i.toLong, s"r$i")))
+  }
+
+  test("a version whose listed data file is gone refuses to open instead of losing its rows") {
+    val root = tmpDir("snap_missing_file")
+    Snapshots.commit(spark, df(10).repartition(2), root)
+    val v = Snapshots.append(spark, df(4), root)
+    val gone = new java.io.File(new org.apache.hadoop.fs.Path(
+      Snapshots.filesOfVersion(spark, root, v).head).toUri.getPath)
+    assert(gone.delete())
+    val e = intercept[IllegalStateException](Snapshots.read(spark, root))
+    assert(e.getMessage.contains("missing"), e.getMessage)
+  }
+
+  test("readPruned reads under the logged schema: a metadata-only addColumn and alterColumnType show") {
+    import org.apache.spark.sql.types._
+    val root = tmpDir("snap_pruned_schema")
+    Snapshots.commitWithStats(spark, (1 to 40).map(i => (i, i * 10L)).toDF("id", "v")
+      .repartitionByRange(4, col("id")).sortWithinPartitions("id"), root, Seq("id"))
+    Snapshots.addColumn(spark, root, "note", "STRING")
+    Snapshots.alterColumnType(spark, root, "id", "BIGINT")
+    val full = Snapshots.read(spark, root)
+    assert(full.schema.map(f => (f.name, f.dataType)) ===
+      Seq(("id", LongType), ("v", LongType), ("note", StringType)))
+    val (pruned, nRead, nTotal) =
+      Snapshots.readPruned(spark, root, None, "id", Some(lit(10)), Some(lit(20)))
+    assert(pruned.schema === full.schema)
+    assert(nRead < nTotal, s"no pruning: $nRead of $nTotal")
+    val want = full.filter(col("id").between(10, 20))
+    assert(pruned.count() === 11L)
+    assert(pruned.exceptAll(want).isEmpty && want.exceptAll(pruned).isEmpty)
+    assert(pruned.filter(col("note").isNotNull).isEmpty)
+  }
+
+  test("a stats rebuild over a widened manifest neither fails nor strands the table") {
+    import org.apache.spark.sql.types._
+    // whether the rebuild's first file is a narrow (INT) one follows
+    // the random dir names, so fresh tables run until both orders ran
+    var narrowFirst = Set.empty[Boolean]
+    var tables = 0
+    while (narrowFirst.size < 2 && tables < 24) {
+      tables += 1
+      val root = tmpDir("snap_widen_rebuild")
+      Snapshots.commitWithStats(spark, (1 to 40).map(i => (i, i * 10L)).toDF("id", "v")
+        .repartitionByRange(2, col("id")).sortWithinPartitions("id"), root, Seq("id"))
+      val narrowDir = Snapshots.versionMeta(spark, root, 1L).dataDir.get
+      Snapshots.mergeClauses(spark, Seq((5L, 55L), (100L, 1000L)).toDF("id", "v"), root,
+        "id", Seq("id"), "t", "u", matched = Seq(Snapshots.MatchedUpdate(None, None)),
+        insertCond = Some(None), evolveSchema = true)
+      assert(Snapshots.read(spark, root).schema("id").dataType === LongType)
+      // new stats columns: the append rebuilds the whole layout's index
+      val v = Snapshots.append(spark, Seq((200L, 2000L)).toDF("id", "v"), root,
+        statsCols = Seq("id", "v"))
+      narrowFirst += Snapshots.filesOfVersion(spark, root, v).sorted.head.contains(narrowDir)
+      assert(Snapshots.statsTableOf(spark, root, v).exists(_.columns.contains("min_v")),
+        "the append published without its index")
+      Snapshots.merge(spark, Seq((7L, 77L)).toDF("id", "v"), root, "id", Seq("id", "v"))
+      Snapshots.optimize(spark, root, statsCols = Seq("id"))
+      val got = Snapshots.read(spark, root)
+      assert(got.count() === 42L)
+      assert(got.filter(col("id").isin(5L, 7L, 100L, 200L)).orderBy("id")
+        .as[(Long, Long)].collect().toSeq ===
+        Seq((5L, 55L), (7L, 77L), (100L, 1000L), (200L, 2000L)))
+    }
+    assert(narrowFirst === Set(true, false), s"file orders seen in $tables tables: $narrowFirst")
+  }
+
+  test("read, readPruned, changes and readWithLineage open a 40-file manifest version with no job") {
+    val root = tmpDir("snap_jobfree")
+    Snapshots.commitWithStats(spark, (1 to 80).map(i => (i.toLong, s"a$i")).toDF("id", "s")
+      .repartitionByRange(4, col("id")).sortWithinPartitions("id"), root, Seq("id"))
+    Snapshots.deleteWhere(spark, root, col("id") === 3L)
+    val v = Snapshots.append(spark, (81 to 440).map(i => (i.toLong, s"b$i")).toDF("id", "s")
+      .repartitionByRange(36, col("id")).sortWithinPartitions("id"), root, statsCols = Seq("id"))
+    assert(Snapshots.filesOfVersion(spark, root, v).size === 40)
+    // build the frame and plan it: no listing job, no schema job
+    def planned(df: org.apache.spark.sql.DataFrame) = { df.queryExecution.executedPlan; df }
+    val opens = Seq(
+      "read" -> (() => Snapshots.read(spark, root)),
+      "readPruned" -> (() =>
+        Snapshots.readPruned(spark, root, None, "id", Some(lit(100L)), Some(lit(300L)))._1),
+      "changes" -> (() => Snapshots.changes(spark, root, v - 1, v).df),
+      "readWithLineage" -> (() => Snapshots.readWithLineage(spark, root)))
+    val counts = opens.map { case (name, open) =>
+      val (df, jobs) = jobsDuring(planned(open()))
+      assert(jobs === 0, s"$name ran $jobs jobs to open and plan")
+      name -> df.count()
+    }.toMap
+    assert(counts === Map("read" -> 439L, "readPruned" -> 201L, "changes" -> 360L,
+      "readWithLineage" -> 439L))
+  }
 }
