@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.functions.{CentroidMath, Centroids, PqBook}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,20 +34,28 @@ import org.apache.spark.sql.functions._
   *  - codebooks are bounded metadata (m·ksub·dsub ≈ 1k floats):
   *    trained on a deterministic hash-sample of ≤ `trainRows`
   *    vectors (the standard PQ practice — FAISS trains on a slice),
-  *    driver-resident like the SemDeDup Lloyd update, broadcast to
-  *    every join that needs them;
-  *  - encode is one scan: N·m subvector rows against the broadcast
-  *    m·ksub codebook, argmin as a `max_by` hash aggregate (partial
-  *    aggregation collapses map-side — no window, no sort);
-  *  - ADC scoring joins the N·m code rows against a broadcast
-  *    per-query LUT (Q·m·ksub rows) and hash-aggregates to one row
-  *    per (query, candidate) — map-side partial aggregation again,
-  *    no shuffle of raw vectors;
+  *    collected in one job; init and the fixed Lloyd rounds then run
+  *    on the driver with the same integer sums and single division
+  *    as [[Similarity.cellMeans]];
+  *  - every later use loads the codebook to the driver once and hands
+  *    it to a native kernel as a constructor field
+  *    ([[graft.functions.Centroids]]): encode is one projection (the
+  *    m per-subspace argmins of each row, no shuffle), and a query's
+  *    m·ksub lookup table is one projection of the broadcast query
+  *    set;
+  *  - ADC scoring pairs each candidate's codes with each broadcast
+  *    query table and sums m lookups per pair in the same projection
+  *    (no exploded code rows, no (query, candidate) aggregate); the
+  *    per-query shortlist window is the scoring's one exchange;
   *  - with `coarse` set, only the probed cells' candidates are
   *    scored (candidate cost ∝ nProbe/nCells of the corpus);
   *  - the exact re-rank touches raw vectors for a per-query budget
   *    bounded above by `shortlistCap` (equi-join on cand_id) — the
   *    per-query cost is O(cap), independent of index size.
+  *
+  * Ids are unique in [[encode]], [[pqTopK]] and [[indexTopK]], as in
+  * [[Packing.packShards]]: each row is encoded and scored on its own,
+  * where an aggregate by id would merge rows that share one.
   */
 object Pq {
 
@@ -63,115 +72,104 @@ object Pq {
     * uncapped recall profile at proportional re-rank expense
     * (PqSpec pins a recall floor with the cap binding).
     * `coarse` switches on IVF routing (IVFADC).
+    *
+    * Training holds its sample on the driver: `trainRows × dim`
+    * floats plus their quantized longs (4096 × 64 at the defaults,
+    * about 3 MB).
     */
   final case class PqParams(m: Int = 8, ksub: Int = 16, iters: Int = 2,
                             shortlist: Int = 50, trainRows: Int = 4096,
                             shortlistCap: Int = 1024,
                             coarse: Option[Similarity.IvfParams] = None)
 
-  /** Explode a vector frame into per-subspace rows:
-    * (__id, sub, sv, svn2) — `m` rows per vector, each an exact
-    * quantized-norm'd `dsub`-slice.
-    */
-  private def subRows(df: DataFrame, idCol: String, vecCol: String,
-                      m: Int, dsub: Int): DataFrame = {
-    val pieces = array((0 until m).map { i =>
-      struct(lit(i).as("sub"), slice(col(vecCol), i * dsub + 1, dsub).as("sv"))
-    }: _*)
-    df.select(col(idCol).as("__id"), explode(pieces).as("s"))
-      .select(col("__id"), col("s.sub").as("sub"), col("s.sv").as("sv"),
-        Similarity.qnorm2(col("s.sv")).as("svn2"))
-  }
-
-  /** Assign every (__id, sub) row to its nearest sub-centroid by
-    * exact integer squared-L2 (d = svn2 − 2·qdot + cn2; the common
-    * svn2 term cancels in the argmin but is kept so `d` is a true
-    * distance for the spec). Ties go to the lowest code. One hash
-    * aggregate — the SemDeDup `max_by` idiom, no window.
-    */
-  private def assignCodes(subs: DataFrame, cents: DataFrame): DataFrame =
-    subs.join(broadcast(cents), Seq("sub"))
-      .withColumn("d",
-        col("svn2") - lit(2L) * Similarity.qdot(col("sv"), col("cv")) + col("cn2"))
-      .groupBy("__id", "sub")
-      .agg(expr("max_by(code, struct(-d, -code))").as("code"),
-        expr("min(struct(d, code))").getField("d").as("d"))
-
   /** Train per-subspace codebooks on a deterministic hash-sample.
     * Returns a LOCAL (driver-built) frame (sub, code, cv, cn2) of
     * m·ksub rows — bounded metadata, like the SemDeDup codebook.
-    * ksub clamps to the sample size (tiny-corpus edge).
+    * ksub clamps to the sample size (tiny-corpus edge). The sample —
+    * the ≤ `trainRows` smallest-id-hash rows, a distributed
+    * TakeOrdered — is the one job; the ksub smallest-hash sample
+    * vectors donate the initial sub-centroids, and each Lloyd round
+    * assigns every sample subvector to its nearest sub-centroid
+    * (exact-integer squared L2, ties to the lowest code) and moves
+    * each non-empty cell to its members' mean. Empty cells keep
+    * their previous centroid (determinism over re-seeding; a dead
+    * code simply never wins an argmin).
     */
   def trainCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                      p: PqParams): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
+    val sample = Similarity.hashSample(corpus.select(col(idCol), col(vecCol)), idCol, p.trainRows)
+      .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
+    require(sample.nonEmpty, "trainCodebooks: the corpus is empty, so there is nothing to train on")
+    val dim = sample.head.length
     require(dim % p.m == 0, s"dim $dim not divisible by m=${p.m}")
     val dsub = dim / p.m
-    // deterministic training sample: smallest-id-hash rows (a
-    // distributed TakeOrdered — no global sort), barrier-cached
-    // because init + every Lloyd round rescans it
-    val sample = BarrierCache.track(Similarity.hashSample(
-      corpus.select(col(idCol), col(vecCol)), idCol, p.trainRows))
-    val subs = BarrierCache.track(subRows(sample, idCol, vecCol, p.m, dsub))
-    // init: the ksub smallest-hash sample vectors donate one
-    // sub-centroid per subspace (one shared sample serves all m)
-    var cents: Seq[(Int, Int, Seq[Float])] =
-      Similarity.hashSample(sample, idCol, p.ksub)
-        .select(col(idCol), col(vecCol))
-        .collect().zipWithIndex.flatMap { case (r, c) =>
-          val v = r.getSeq[Float](1)
-          (0 until p.m).map(i => (i, c + 1, v.slice(i * dsub, (i + 1) * dsub)))
-        }.toSeq
-    def centsDf(cs: Seq[(Int, Int, Seq[Float])]): DataFrame =
-      cs.toDF("sub", "code", "cv")
-        .withColumn("cn2", Similarity.qnorm2(col("cv")))
-    for (_ <- 1 to p.iters) {
-      val upd = Similarity.cellMeans(assignCodes(subs, centsDf(cents))
-          .join(subs.select(col("__id"), col("sub"), col("sv")), Seq("__id", "sub")),
-        Seq("sub", "code"), "sv", dsub)
-      // empty cells keep their previous centroid (determinism over
-      // re-seeding; a dead code simply never wins an argmin)
-      cents = cents.map { case (s, c, v) => (s, c, upd.getOrElse(Row(s, c), v)) }
+    val q = sample.map(v => CentroidMath.quantize(v))
+    // cents(sub)(code - 1)
+    var cents = Array.tabulate(p.m, math.min(p.ksub, sample.length)) { (s, c) =>
+      sample(c).slice(s * dsub, (s + 1) * dsub)
     }
-    centsDf(cents)
+    for (_ <- 1 to p.iters)
+      cents = cents.zipWithIndex.map { case (sc, s) => lloyd(q, sc, s * dsub, dsub) }
+    cents.head.indices.flatMap(c => (0 until p.m).map(s => (s, c + 1, cents(s)(c).toSeq)))
+      .toDF("sub", "code", "cv")
+      .withColumn("cn2", Similarity.qnorm2(col("cv")))
   }
 
-  /** Subspace width of trained codebooks: a sub-centroid's length. */
-  private def dsubOf(cents: DataFrame): Int =
-    cents.select(size(col("cv"))).head().getInt(0)
+  /** One Lloyd round of one subspace (`from` is its first component)
+    * over the quantized sample `q`.
+    */
+  private def lloyd(q: Array[Array[Long]], cents: Array[Array[Float]],
+                    from: Int, dsub: Int): Array[Array[Float]] = {
+    val cq = cents.map(v => CentroidMath.quantize(v))
+    val cn2 = cq.map(CentroidMath.norm2)
+    val sums = Array.ofDim[Long](cents.length, dsub)
+    val counts = Array.ofDim[Long](cents.length, dsub)
+    q.foreach { v =>
+      val len = CentroidMath.subLen(v, from, dsub)
+      val j = CentroidMath.nearestSub(cq, cn2, v, from, len)
+      for (i <- 0 until len) {
+        sums(j)(i) = Math.addExact(sums(j)(i), v(from + i))
+        counts(j)(i) += 1
+      }
+    }
+    cents.indices.map { j =>
+      if (counts(j)(0) == 0) cents(j)
+      else Array.tabulate(dsub)(i =>
+        if (counts(j)(i) == 0) 0f else CentroidMath.mean(sums(j)(i), counts(j)(i)))
+    }.toArray
+  }
+
+  /** The codebook `cents` on the driver, refused when it is empty or
+    * its subspace count disagrees with `p.m`. ksub needs no check:
+    * scoring looks codes up in the stored codebook itself.
+    */
+  private def bookOf(cents: DataFrame, p: PqParams): PqBook = {
+    val rows = cents.select(col("sub"), col("code"), col("cv"), col("cn2")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2), r.getLong(3)))
+    require(rows.nonEmpty, "the PQ codebook is empty: train it on a non-empty corpus")
+    val book = PqBook(rows.toSeq)
+    // m is baked into the stored artifact: a caller-supplied p.m that
+    // disagrees would slice and decode every vector wrongly
+    require(book.m == p.m,
+      s"stored codebooks have m=${book.m} but params say m=${p.m} — " +
+        "decoding with the wrong subspace count would mis-score every code")
+    book
+  }
 
   /** Encode a corpus: (id, codes array<int> of length m, n2). The
     * index artifact a production pipeline would persist — `m` small
-    * ints per vector instead of `dim` floats. The subspace width
-    * comes from `cents`, so an empty corpus encodes to an empty
-    * frame.
+    * ints per vector instead of `dim` floats. One projection through
+    * the codebook kernel; an empty corpus encodes to an empty frame,
+    * an empty codebook is refused.
     */
   def encode(corpus: DataFrame, idCol: String, vecCol: String,
              cents: DataFrame, p: PqParams): DataFrame = {
-    val subs = subRows(corpus, idCol, vecCol, p.m, dsubOf(cents))
-    assignCodes(subs, cents)
-      .groupBy("__id")
-      .agg(transform(sort_array(collect_list(struct(col("sub"), col("code")))),
-        s => s.getField("code")).as("codes"))
-      .join(corpus.select(col(idCol).as("__id"),
-        Similarity.qnorm2(col(vecCol)).as("n2")), Seq("__id"))
-      .select(col("__id").as(idCol), col("codes"), col("n2"))
+    val book = bookOf(cents, p)
+    corpus.select(col(idCol), Centroids.pqEncode(col(vecCol), book).as("codes"),
+      Similarity.qnorm2(col(vecCol)).as("n2"))
   }
-
-  /** Per-query LUT: dot of each query subvector against each
-    * sub-centroid, plus that centroid's exact norm contribution —
-    * Q·m·ksub rows, broadcast.
-    */
-  private def lutOf(queries: DataFrame, idCol: String, vecCol: String,
-                    cents: DataFrame, m: Int, dsub: Int): DataFrame =
-    broadcast(
-      subRows(queries, idCol, vecCol, m, dsub)
-        .select(col("__id").as("query_id"), col("sub"), col("sv"))
-        .join(cents, Seq("sub"))
-        .select(col("query_id"), col("sub"), col("code"),
-          Similarity.qdot(col("sv"), col("cv")).as("lut_dot"), col("cn2")))
 
   /** PQ-ADC cosine top-k: train → encode → per-query LUT → ADC
     * shortlist → exact re-rank. Output matches
@@ -187,28 +185,19 @@ object Pq {
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, p: PqParams = PqParams()): DataFrame = {
-    val cents = trainCodebooks(corpus, idCol, vecCol, p)
-    val dsub = dsubOf(cents)
-    // code rows for the whole corpus (the "index"): (cand_id, sub, code)
-    val codeRows = assignCodes(subRows(corpus, idCol, vecCol, p.m, dsub), cents)
-      .select(col("__id").as("cand_id"), col("sub"), col("code"))
-    val lut = lutOf(queries, idCol, vecCol, cents, p.m, dsub)
-    // candidate × query fan-out comes from the LUT hash join itself
-    // (the broadcast LUT holds one row per (query, sub, code), so a
-    // plain equi-join on (sub, code) emits every query's term — no
-    // nested-loop node); with IVF coarse routing the scored set is
-    // first restricted to the query's probed cells (IVFADC)
-    val adcTerms = p.coarse match {
-      case None => codeRows.join(lut, Seq("sub", "code"))
-      case Some(ivf) =>
-        val cells = Similarity.ivfCodebook(corpus, idCol, vecCol, ivf.nCells)
-        val pairs = Similarity.nearestCells(queries, idCol, vecCol, cells, "query_id", ivf.nProbe)
-          .join(Similarity.nearestCells(corpus, idCol, vecCol, cells, "cand_id", 1), Seq("cent_id"))
-          .select("query_id", "cand_id")
-        codeRows.join(pairs, Seq("cand_id"))
-          .join(lut, Seq("query_id", "sub", "code"))
+    val book = bookOf(trainCodebooks(corpus, idCol, vecCol, p), p)
+    // the corpus codes (the "index"): (cand_id, codes)
+    val codes = corpus.select(col(idCol).as("cand_id"),
+      Centroids.pqEncode(col(vecCol), book).as("codes"))
+    // with IVF coarse routing the scored set is first restricted to
+    // the query's probed cells (IVFADC)
+    val pairs = p.coarse.map { ivf =>
+      val cells = Similarity.ivfCodebook(corpus, idCol, vecCol, ivf.nCells)
+      Similarity.nearestCells(queries, idCol, vecCol, cells, "query_id", ivf.nProbe)
+        .join(Similarity.nearestCells(corpus, idCol, vecCol, cells, "cand_id", 1), Seq("cent_id"))
+        .select("query_id", "cand_id")
     }
-    adcRank(adcTerms, corpus, queries, idCol, vecCol, k, p)
+    adcRank(book, codes, pairs, corpus, queries, idCol, vecCol, k, p)
   }
 
   /** ADC top-k against a PREBUILT index — the persisted-artifact
@@ -221,7 +210,9 @@ object Pq {
     * table (the 32×-compressed index), encode incremental batches
     * with the SAME stored codebooks, and serve queries against the
     * union — no drift between index generations, because assignment
-    * is a pure function of (vector, codebooks).
+    * is a pure function of (vector, codebooks). The codebook loads
+    * to the driver once (one job for a stored one); an empty one, or
+    * one whose m disagrees with `p.m`, is refused.
     *
     * @param excludeSelf drop the candidate whose id equals the query
     *   id (true = the self-search convention [[pqTopK]] uses, right
@@ -233,47 +224,29 @@ object Pq {
   def indexTopK(cents: DataFrame, encoded: DataFrame, corpus: DataFrame,
                 queries: DataFrame, idCol: String, vecCol: String, k: Int,
                 p: PqParams = PqParams(),
-                excludeSelf: Boolean = true): DataFrame = {
-    // m and dsub are baked into the stored artifact: the query
-    // slicing and the posexplode positions below derive from them,
-    // so a caller-supplied p.m that disagrees with the persisted
-    // codebooks would silently mis-decode every code. Read both from
-    // storage in one aggregate and refuse a mismatch. (ksub needs no
-    // check — scoring joins on the stored (sub, code) rows
-    // themselves, so a wrong p.ksub cannot change the result.)
-    val stored = cents.agg(max(col("sub")), max(size(col("cv")))).head()
-    val mStored = stored.getInt(0) + 1
-    require(mStored == p.m,
-      s"stored codebooks have m=$mStored but params say m=${p.m} — " +
-        "decoding with the wrong subspace count would mis-score every code")
-    val dsub = stored.getInt(1)
-    // encode() writes codes sorted by sub, so the array position IS
-    // the subspace id — posexplode restores (cand_id, sub, code)
-    val codeRows = encoded.select(col(idCol).as("cand_id"),
-      posexplode(col("codes")).as(Seq("sub", "code")))
-    val lut = lutOf(queries, idCol, vecCol, broadcast(cents), p.m, dsub)
-    adcRank(codeRows.join(lut, Seq("sub", "code")), corpus, queries,
-      idCol, vecCol, k, p, excludeSelf)
-  }
+                excludeSelf: Boolean = true): DataFrame =
+    adcRank(bookOf(cents, p), encoded.select(col(idCol).as("cand_id"), col("codes")), None,
+      corpus, queries, idCol, vecCol, k, p, excludeSelf)
 
-  /** Shared ADC tail: aggregate LUT terms to (query, cand) scores,
+  /** Shared ADC tail: score every (candidate, query) pair — or only
+    * the routed `pairs` — against the query's broadcast lookup table,
     * take the budgeted shortlist, exact-re-rank against raw vectors.
     */
-  private def adcRank(adcTerms: DataFrame, corpus: DataFrame,
-                      queries: DataFrame, idCol: String, vecCol: String,
-                      k: Int, p: PqParams,
+  private def adcRank(book: PqBook, codes: DataFrame, pairs: Option[DataFrame],
+                      corpus: DataFrame, queries: DataFrame, idCol: String,
+                      vecCol: String, k: Int, p: PqParams,
                       excludeSelf: Boolean = true): DataFrame = {
-    // ADC: one hash aggregate to (query, cand) — partial aggregation
-    // collapses the m rows map-side
-    val qn = broadcast(queries.select(col(idCol).as("query_id"),
+    // one row per query: its m·ksub lookup table and exact norm
+    val luts = broadcast(queries.select(col(idCol).as("query_id"),
+      Centroids.adcTable(col(vecCol), book).as("lut"),
       Similarity.qnorm2(col(vecCol)).as("qn2")))
-    val adc = adcTerms
-      .groupBy("query_id", "cand_id")
-      .agg(sum(col("lut_dot")).as("adc_dot"), sum(col("cn2")).as("cn2_hat"))
-      .join(qn, Seq("query_id"))
-      .withColumn("adc_cos",
-        Similarity.cosine(col("adc_dot"), col("qn2"), col("cn2_hat")))
+    val adc = pairs.fold(codes.crossJoin(luts))(
+        codes.join(_, Seq("cand_id")).join(luts, Seq("query_id")))
       .filter(if (excludeSelf) col("cand_id") =!= col("query_id") else lit(true))
+      .select(col("query_id"), col("cand_id"), col("qn2"),
+        Centroids.adcScore(col("codes"), col("lut"), book).as("adc"))
+      .withColumn("adc_cos",
+        Similarity.cosine(col("adc.adc_dot"), col("qn2"), col("adc.cn2_hat")))
     // refinement budget: grows with the QUERY's candidate count (1%
     // — recall decays if a fixed shortlist covers an ever-thinner
     // slice of a growing index) but is hard-capped at shortlistCap so

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.{CellBook, CentroidMath, Centroids}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,7 +23,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale: the codebook is k rows of bounded metadata (it is ALREADY
   * driver-resident every Lloyd update via the integer component-sum
-  * collect). With [[semanticDups]]'s occupancy-targeted k ≈ N/512,
+  * collect), so at or below `routeAbove` centroids the flat
+  * assignment and the farthest-first seeding hand it to the
+  * nearest-cell expression ([[graft.functions.Centroids]]) as a
+  * constructor field: one projection per pass, no cross join and no
+  * argmax shuffle. With [[semanticDups]]'s occupancy-targeted k ≈ N/512,
   * a flat assignment scan would be n·k = n²/512 dot products per
   * iteration against an O(k·dim) broadcast — quadratic. Assignment
   * therefore goes TWO-LEVEL above `routeAbove` centroids (the IVF
@@ -40,8 +45,15 @@ import org.apache.spark.sql.functions._
   * equi-join on cluster id; k ≈ N/targetCell keeps Σ|cluster|² at
   * ~N·targetCell — linear in corpus rows — the documented SemDeDup
   * trade. At 100 TB nothing in the shape changes.
+  *
+  * Ids are unique in [[kmeansAssign]] and [[semanticDups]], as in
+  * [[Packing.packShards]]: each row is assigned on its own, where an
+  * aggregate by id would merge rows that share one.
   */
 object SemDedup {
+
+  /** A centroid on the driver: (id, vector, exact squared norm). */
+  private type Cent = (Long, Seq[Float], Long)
 
   /** Per corpus row of `rows` (`__id`, carrying `__v`, `__n2`), the
     * `cell` whose vector `cv` (squared norm `cn2`) has the highest
@@ -54,17 +66,16 @@ object SemDedup {
         col("__n2"), col(cn2))),
       "__id", cell, "sim", carry = Seq("__v", "__n2"))
 
-  /** One FLAT assignment pass: nearest centroid by exact-integer
-    * cosine, ties to the lowest cent_id. `cents`: (cent_id, centv,
-    * centn2). Argmax is a `max_by` hash aggregate, not a window:
-    * partial aggregation collapses the n·k broadcast-product rows to
-    * n map-side, where the row_number form shuffled and sorted all
-    * n·k. Right at small k; [[nearestRouted]] takes over above
-    * `routeAbove` where n·k turns quadratic.
+  /** One FLAT assignment pass: each row's nearest centroid by
+    * exact-integer cosine, ties to the lowest cent_id — the
+    * nearest-cell kernel over the driver-resident codebook in one
+    * projection (no cross join, no argmax shuffle). Right at small k;
+    * [[nearestRouted]] takes over above `routeAbove` where n·k turns
+    * quadratic.
     */
-  private def nearest(corpusQ: DataFrame, cents: DataFrame): DataFrame =
-    nearestOf(corpusQ.crossJoin(broadcast(cents)), "cent_id", "centv", "centn2")
-      .withColumnRenamed("cent_id", "cluster")
+  private def nearest(corpusQ: DataFrame, cents: Seq[Cent]): DataFrame =
+    corpusQ.withColumn("cluster",
+      Centroids.nearestCell(col("__v"), CellBook(cents.map(c => (c._1, c._2)))).getField("id"))
 
   /** TWO-LEVEL assignment (IVF coarse-quantizer routing): pick
     * ⌈√k⌉ coarse anchors from the fine codebook by smallest
@@ -90,7 +101,7 @@ object SemDedup {
     * identical sims and tie-breaks at every level and therefore
     * always co-route and co-assign.
     */
-  private def nearestRouted(corpusQ: DataFrame, cents: DataFrame, k: Int): DataFrame = {
+  private[llm] def nearestRouted(corpusQ: DataFrame, cents: DataFrame, k: Int): DataFrame = {
     val coarseK = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
     val coarse = broadcast(Similarity.hashSample(cents, "cent_id", coarseK)
       .withColumn("coarse_id",
@@ -120,38 +131,35 @@ object SemDedup {
       .withColumnRenamed("cent_id", "cluster")
   }
 
-  private def assignPass(corpusQ: DataFrame, cents: DataFrame, k: Int,
+  private def assignPass(corpusQ: DataFrame, cents: Seq[Cent], k: Int,
                          routeAbove: Int): DataFrame =
-    if (k > routeAbove) nearestRouted(corpusQ, cents, k)
-    else nearest(corpusQ, cents)
+    if (k > routeAbove) {
+      val spark = corpusQ.sparkSession
+      import spark.implicits._
+      nearestRouted(corpusQ, cents.toDF("cent_id", "centv", "centn2"), k)
+    } else nearest(corpusQ, cents)
 
   /** Deterministic farthest-first seeding (Gonzalez 1985): seed 1 is
     * the smallest id-hash; each next seed is the point with the
     * LOWEST best-cosine to the chosen seeds (ties to the lowest id)
-    * — one bounded scan of the cached working set per seed, so well-
-    * separated groups each get a seed and Lloyd cannot start from a
-    * one-group degenerate codebook. k seeds of driver metadata.
+    * — one job per seed: the nearest-cell kernel's best cosine of
+    * every unchosen row against the driver-resident seeds, and a
+    * TakeOrdered of the farthest, so well-separated groups each get a
+    * seed and Lloyd cannot start from a one-group degenerate
+    * codebook. k seeds of driver metadata; an empty corpus has none.
     */
-  private def farthestInit(corpusQ: DataFrame, k: Int): Seq[(Long, Seq[Float], Long)] = {
+  private def farthestInit(corpusQ: DataFrame, k: Int): Seq[Cent] = {
     val spark = corpusQ.sparkSession
     import spark.implicits._
-    val seed0 = Similarity.hashSample(corpusQ, "__id", 1)
-      .select(col("__id"), col("__v"), col("__n2"))
-      .as[(Long, Seq[Float], Long)].head()
-    val seeds = scala.collection.mutable.ArrayBuffer(seed0)
-    while (seeds.size < k) {
-      val cents = broadcast(seeds.toSeq.toDF("cent_id", "centv", "centn2"))
-      val next = corpusQ
-        .join(cents.select(col("cent_id").as("__id")), Seq("__id"), "left_anti")
-        .crossJoin(cents)
-        .withColumn("sim",
-          Similarity.cosine(Similarity.qdot(col("__v"), col("centv")),
-            col("__n2"), col("centn2")))
-        .groupBy("__id").agg(max(col("sim")).as("best"), first(col("__v")).as("__v"),
-          first(col("__n2")).as("__n2"))
-        .orderBy(col("best").asc, col("__id").asc).limit(1)
-        .select(col("__id"), col("__v"), col("__n2"))
-        .as[(Long, Seq[Float], Long)].collect()
+    def take(df: DataFrame): Array[Cent] =
+      df.select(col("__id"), col("__v"), col("__n2")).as[Cent].collect()
+    val seeds = scala.collection.mutable.ArrayBuffer.from(
+      take(Similarity.hashSample(corpusQ, "__id", 1)))
+    while (seeds.nonEmpty && seeds.size < k) {
+      val book = CellBook(seeds.toSeq.map(c => (c._1, c._2)))
+      val next = take(corpusQ.filter(!col("__id").isin(seeds.map(_._1).toSeq: _*))
+        .withColumn("best", Centroids.nearestCell(col("__v"), book).getField("sim"))
+        .orderBy(col("best").asc, col("__id").asc).limit(1))
       if (next.isEmpty) return seeds.toSeq // corpus smaller than k
       seeds += next.head
     }
@@ -179,28 +187,31 @@ object SemDedup {
     val corpusQ = BarrierCache.track(
       corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"),
         Similarity.qnorm2(col(vecCol)).as("__n2")))
-    val dim = corpus.select(size(col(vecCol))).head().getInt(0)
     // the init codebook collects to the driver either way — k·dim of
     // bounded metadata, the same budget the Lloyd update already
-    // spends — so every later use (coarse anchor pick, fine routing,
-    // refine join) replays a local relation, not a corpus scan
-    val init: Seq[(Long, Seq[Float], Long)] =
+    // spends — so every later use (flat kernel, coarse anchor pick,
+    // fine routing, refine join) replays driver data, not a corpus
+    // scan
+    val init: Seq[Cent] =
       if (initHash)
         Similarity.hashSample(corpusQ, "__id", k)
           .withColumn("cent_id",
             row_number().over(Window.orderBy("__h", "__id")).cast("long"))
           .select(col("cent_id"), col("__v"), col("__n2"))
-          .as[(Long, Seq[Float], Long)].collect().toSeq
+          .as[Cent].collect().toSeq
       else
         farthestInit(corpusQ, k).zipWithIndex
           .map { case ((_, v, n2), i) => (i + 1L, v, n2) }
-    var cents = init.toDF("cent_id", "centv", "centn2")
+    require(init.nonEmpty, "kmeansAssign: the corpus is empty, so there is nothing to cluster")
+    // the first seed's width is the dimension: no probe job of its own
+    val dim = init.head._2.size
+    var cents = init
     for (_ <- 1 to iters) {
-      val newCents = Similarity.cellMeans(assignPass(corpusQ, cents, k, routeAbove),
+      cents = Similarity.cellMeans(assignPass(corpusQ, cents, k, routeAbove),
           Seq("cluster"), "__v", dim)
-        .toSeq.map { case (key, v) => (key.getLong(0), v) }.sortBy(_._1)
-      cents = newCents.toDF("cent_id", "centv")
-        .withColumn("centn2", Similarity.qnorm2(col("centv")))
+        .toSeq.map { case (key, v) =>
+          (key.getLong(0), v, CentroidMath.norm2(CentroidMath.quantize(v)))
+        }.sortBy(_._1)
     }
     assignPass(corpusQ, cents, k, routeAbove)
       .select(col("__id").as(idCol), col("cluster"))

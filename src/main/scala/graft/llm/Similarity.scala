@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.{CellBook, CentroidMath, Centroids}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,7 +30,13 @@ import org.apache.spark.sql.functions._
   * These indexes, [[Pq]] and [[SemDedup]] share one set of
   * `private[llm]` kernels: [[qi]], [[hashSample]], [[bestCells]],
   * [[nearestCells]], [[cellMeans]], [[rerank]], [[topK]] and
-  * [[bucketRows]].
+  * [[bucketRows]]. Where a codebook is bounded metadata they assign
+  * through the native nearest-centroid expressions of
+  * [[graft.functions.Centroids]] instead of a cross join plus an
+  * argmax aggregate: the nearest cell by cosine (the IVF corpus side,
+  * SemDeDup's flat assignment and farthest-first init), a vector's
+  * PQ codes, a query's ADC lookup table and a candidate's ADC sums,
+  * each holding its driver-resident codebook as a constructor field.
   */
 object Similarity {
 
@@ -207,12 +214,23 @@ object Similarity {
     }
 
   /** The IVF router: each row of `df`, as `outId`, to its `keep`
-    * nearest cells of the broadcast codebook `cents` (cent_id, centv,
-    * centn2) by exact-integer cosine. Output: (outId, cent_id).
+    * nearest cells of the codebook `cents` (cent_id, centv, centn2)
+    * by exact-integer cosine, ties to the lowest cell. keep = 1 (a
+    * corpus side) loads the fixed-size codebook to the driver in one
+    * job and assigns with the nearest-cell kernel in one projection;
+    * keep > 1 (the query probes) ranks the broadcast cross product
+    * with [[bestCells]]' window. Output: (outId, cent_id). Ids are
+    * unique in `df` (one row, one assignment).
     */
   private[llm] def nearestCells(df: DataFrame, idCol: String, vecCol: String,
                                 cents: DataFrame, outId: String, keep: Int): DataFrame =
-    bestCells(
+    if (keep == 1) {
+      val book = CellBook(cents.select(col("cent_id").cast("long"), col("centv")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq)
+      df.select(col(idCol).as(outId),
+        Centroids.nearestCell(col(vecCol), book).getField("id")
+          .cast(cents.schema("cent_id").dataType).as("cent_id"))
+    } else bestCells(
       df.select(col(idCol).as(outId), col(vecCol).as("v"), qnorm2(col(vecCol)).as("n2"))
         .crossJoin(broadcast(cents))
         .withColumn("sim", cosine(qdot(col("v"), col("centv")), col("n2"), col("centn2"))),
@@ -237,7 +255,7 @@ object Similarity {
       .map { case (key, rows) =>
         val v = new Array[Float](dim)
         rows.foreach { r =>
-          v(r.getInt(n)) = (r.getLong(n + 1).toDouble / (r.getLong(n + 2) * 1000000.0)).toFloat
+          v(r.getInt(n)) = CentroidMath.mean(r.getLong(n + 1), r.getLong(n + 2))
         }
         key -> v.toSeq
       }
