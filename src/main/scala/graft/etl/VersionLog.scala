@@ -4,14 +4,20 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 import Snapshots.{Bucketing, CkptRow, ColMap, VMeta}
 
 /** The on-disk format of the snapshot tier's JSON logs — the one
   * module that reads or writes a version body (`_versions/v*.json`),
-  * an audit checkpoint line (`_versions/_ckpt`) or a catalog version
-  * body ([[Catalog]]).
+  * an audit checkpoint line (`_versions/_ckpt`), a catalog version
+  * body ([[Catalog]]) or a layout's skipping index
+  * (`_stats/<layout>.json`, [[encodeStats]]).
   *
   * Bodies are compact JSON with a fixed field order:
   * {{{
@@ -173,6 +179,91 @@ private[graft] object VersionLog {
     objects(o.get("pins")).flatMap(p =>
       for (name <- str(p, "name"); root <- str(p, "root"); v <- long(p, "version"))
         yield name -> Catalog.Pin(root, v)).toMap
+  }
+
+  /** One layout's skipping index (`_stats/<layout>.json`): a header
+    * line `{"schema":"<DDL>"}` holding the stats table's schema, then
+    * one line per file, its values as a JSON array in schema order:
+    * {{{
+    *   {"schema":"file STRING NOT NULL,n_rows BIGINT NOT NULL,min_id BIGINT,…"}
+    *   ["file:/t/data/c-…/part-0.parquet",20,1,20,0]
+    * }}}
+    * Values are written in Spark's internal form, so they read back
+    * exactly: integral types, dates (epoch days) and timestamps
+    * (epoch microseconds) as JSON numbers; floats and doubles as the
+    * strings Java prints them as (NaN, ±Infinity and -0.0 included);
+    * decimals as their exact decimal strings; binary as base64.
+    */
+  def encodeStats(schema: StructType, rows: Seq[Row]): String = {
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val types = schema.fields.map(_.dataType)
+    val out = new StringBuilder(mapper.writeValueAsString(
+      mapper.createObjectNode().put("schema", schema.toDDL)))
+    rows.foreach { r =>
+      val ir = toInternal(r).asInstanceOf[InternalRow]
+      val a = mapper.createArrayNode()
+      types.indices.foreach { i =>
+        if (ir.isNullAt(i)) a.addNull()
+        else types(i) match {
+          case BooleanType => a.add(ir.getBoolean(i))
+          case ByteType => a.add(ir.getByte(i).toInt)
+          case ShortType => a.add(ir.getShort(i).toInt)
+          case IntegerType | DateType | _: YearMonthIntervalType => a.add(ir.getInt(i))
+          case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType =>
+            a.add(ir.getLong(i))
+          case FloatType => a.add(java.lang.Float.toString(ir.getFloat(i)))
+          case DoubleType => a.add(java.lang.Double.toString(ir.getDouble(i)))
+          case d: DecimalType =>
+            a.add(ir.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toString)
+          case _: StringType => a.add(ir.getUTF8String(i).toString)
+          case BinaryType => a.add(java.util.Base64.getEncoder.encodeToString(ir.getBinary(i)))
+          case t => throw new IllegalArgumentException(
+            s"stats column ${schema.fields(i).name}: no index encoding for ${t.simpleString}")
+        }
+      }
+      out.append('\n').append(mapper.writeValueAsString(a))
+    }
+    out.toString
+  }
+
+  /** The (schema, rows) of an index file read from `where` — the rows
+    * [[encodeStats]] was given, value for value. Refuses a body whose
+    * header or any row does not parse.
+    */
+  def decodeStats(body: String, where: String): (StructType, Array[Row]) = {
+    def malformed = new IllegalStateException(s"$where is not a stats index file")
+    val lines = body.split('\n')
+    val schema = parse(lines.head).flatMap(str(_, "schema"))
+      .map(StructType.fromDDL).getOrElse(throw malformed)
+    val types = schema.fields.map(_.dataType)
+    val toExternal = CatalystTypeConverters.createToScalaConverter(schema)
+    def num(n: JsonNode): JsonNode = if (n.isIntegralNumber) n else throw malformed
+    def text(n: JsonNode): String = if (n.isTextual) n.textValue else throw malformed
+    val rows = lines.iterator.drop(1).filter(_.nonEmpty).map { line =>
+      val a = scala.util.Try(mapper.readTree(line)).toOption
+        .filter(x => x.isArray && x.size == types.length).getOrElse(throw malformed)
+      val vals = types.indices.map { i =>
+        val n = a.get(i)
+        if (n.isNull) null
+        else types(i) match {
+          case BooleanType => if (n.isBoolean) n.booleanValue else throw malformed
+          case ByteType => num(n).intValue.toByte
+          case ShortType => num(n).intValue.toShort
+          case IntegerType | DateType | _: YearMonthIntervalType => num(n).intValue
+          case LongType | TimestampType | TimestampNTZType | _: DayTimeIntervalType =>
+            num(n).longValue
+          case FloatType => java.lang.Float.parseFloat(text(n))
+          case DoubleType => java.lang.Double.parseDouble(text(n))
+          case d: DecimalType =>
+            Decimal(new java.math.BigDecimal(text(n)), d.precision, d.scale)
+          case _: StringType => UTF8String.fromString(text(n))
+          case BinaryType => java.util.Base64.getDecoder.decode(text(n))
+          case _ => throw malformed
+        }
+      }
+      toExternal(new GenericInternalRow(vals.toArray[Any])).asInstanceOf[Row]
+    }.toArray
+    (schema, rows)
   }
 
   private def parse(s: String): Option[ObjectNode] =

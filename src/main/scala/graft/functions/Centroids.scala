@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** A driver-resident cell codebook for [[NearestCell]]: cell ids,
@@ -107,11 +106,10 @@ object CentroidMath {
     * (`dot / (√n2_v · √n2_cell)`, `graft.llm.Similarity.cosine`'s
     * value) as `(id, sim)`: the highest sim in Spark's double
     * ordering (NaN greatest, −0.0 = 0.0), ties to the lowest id. A
-    * zero denominator is Spark's division by zero: an error when
-    * `failOnError` (ANSI), else a null sim, which ranks below every
-    * number. An empty codebook has no nearest cell (null).
+    * zero denominator is a null sim, which ranks below every number.
+    * An empty codebook has no nearest cell (null).
     */
-  def nearestCell(book: CellBook, v: ArrayData, failOnError: Boolean): InternalRow = {
+  def nearestCell(book: CellBook, v: ArrayData): InternalRow = {
     if (book.size == 0) return null
     val q = quantize(v)
     val sv = math.sqrt(norm2(q).toDouble)
@@ -122,7 +120,6 @@ object CentroidMath {
     while (j < book.size) {
       val den = sv * book.sqrtN2(j)
       val isNull = den == 0.0
-      if (isNull && failOnError) throw GraftShim.divideByZeroError()
       val sim = if (isNull) 0.0 else dot(q, 0, q.length, book.vecs(j)).toDouble / den
       val better =
         if (best < 0) true
@@ -238,10 +235,9 @@ private[functions] object CodebookKernel {
 }
 
 /** The nearest cell of a vector, as `struct<id: long, sim: double>`
-  * ([[CentroidMath.nearestCell]]). `failOnError` is Spark's ANSI
-  * division mode, fixed when the expression is built as `Divide`'s is.
+  * ([[CentroidMath.nearestCell]]).
   */
-case class NearestCell(child: Expression, book: CellBook, failOnError: Boolean)
+case class NearestCell(child: Expression, book: CellBook)
     extends UnaryExpression with CodebookKernel {
   override def checkInputDataTypes(): TypeCheckResult = CodebookKernel.floatArray(child, prettyName)
   override def dataType: DataType = StructType(Seq(
@@ -249,10 +245,10 @@ case class NearestCell(child: Expression, book: CellBook, failOnError: Boolean)
   override def nullable: Boolean = true
   override def prettyName: String = "nearest_cell"
   override protected def nullSafeEval(v: Any): Any =
-    CentroidMath.nearestCell(book, v.asInstanceOf[ArrayData], failOnError)
+    CentroidMath.nearestCell(book, v.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v =>
-      s"""${ev.value} = ${call(ctx, "nearestCell", v, failOnError.toString)};
+      s"""${ev.value} = ${call(ctx, "nearestCell", v)};
          |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
@@ -313,7 +309,7 @@ object Centroids {
   private def expr(c: Column): Expression = GraftShim.expression(c)
 
   def nearestCell(vec: Column, book: CellBook): Column =
-    col(NearestCell(expr(vec), book, SQLConf.get.ansiEnabled))
+    col(NearestCell(expr(vec), book))
   def pqEncode(vec: Column, book: PqBook): Column = col(PqEncode(expr(vec), book))
   def adcTable(vec: Column, book: PqBook): Column = col(AdcTable(expr(vec), book))
   def adcScore(codes: Column, lut: Column, book: PqBook): Column =

@@ -60,9 +60,12 @@ object Similarity {
   def qdotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => qi(x) * qi(y)), lit(0L), (s, v) => s + v)
 
-  /** Cosine similarity from exact integer parts (one IEEE division). */
+  /** Cosine similarity from exact integer parts (one IEEE division).
+    * A zero norm gives null in every ANSI mode — a zero vector has no
+    * direction, and a null sim ranks below every number.
+    */
   def cosine(dot: Column, n2a: Column, n2b: Column): Column =
-    dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
+    try_divide(dot.cast("double"), sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
   /** Brute-force cosine top-k: broadcast the query set, scan the
     * corpus once, window-rank per query. Deterministic: scores are

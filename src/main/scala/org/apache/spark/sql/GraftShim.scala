@@ -18,10 +18,6 @@ object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** The error an ANSI `Divide` throws on a zero divisor. */
-  def divideByZeroError(): ArithmeticException =
-    errors.QueryExecutionErrors.divideByZeroError(null)
-
   private def cs(spark: SparkSession): classic.SparkSession =
     spark.asInstanceOf[classic.SparkSession]
 

@@ -428,10 +428,11 @@ class LoadSpec extends SparkSpec {
     assertOpensLikeSpark(s"$root/${dv.get}", Seq(".crc"))
   }
 
-  test("openTable equals spark.read.parquet on a snapshot _stats/<layout> dir, with no job") {
+  test("openTable equals spark.read.parquet on a StatsIndex.buildAndSave dir, with no job") {
     val root = snapshotTable("open-stats")
-    assertOpensLikeSpark(
-      s"$root/_stats/${Snapshots.versionMeta(spark, root, 1L).layoutId}", Seq(".crc"))
+    val stats = graft.etl.StatsIndex.buildAndSave(spark,
+      s"$root/${Snapshots.versionMeta(spark, root, 1L).dataDir.get}", Seq("id"), s"$root-stats")
+    assertOpensLikeSpark(stats, Seq(".crc"))
   }
 
   test("openTable equals spark.read.parquet on a partitioned snapshot data dir, with no job") {

@@ -197,9 +197,12 @@ class SnapshotsSpec extends SparkSpec {
     assert(r3.count() === 11L)
     assert((n3, t3) === ((n1, t1)))
     // vacuum drops a reclaimed dir's stats alongside its data
+    val l1 = Snapshots.versionMeta(spark, root, v1).layoutId
     Snapshots.vacuum(spark, root, keepLast = 1, orphanGraceMs = 0) // keeps v3 → v1's dir
-    val statsDirs = new java.io.File(s"$root/_stats").listFiles().map(_.getName)
-    assert(statsDirs.length === 1, s"v$v2's stats survived vacuum: ${statsDirs.mkString(",")}")
+    val statsFiles = new java.io.File(s"$root/_stats").listFiles().map(_.getName)
+      .filterNot(_.startsWith("."))
+    assert(statsFiles.toSeq === Seq(s"$l1.json"),
+      s"v$v2's stats survived vacuum: ${statsFiles.mkString(",")}")
     assert(Snapshots.readPruned(spark, root, None, "id",
       Some(lit(50L)), Some(lit(60L)))._1.count() === 11L)
   }
@@ -448,15 +451,15 @@ class SnapshotsSpec extends SparkSpec {
     val root = tmpDir("snap_cov")
     Snapshots.commitWithStats(spark, kv(1L to 100L, "a"), root, Seq("id"))
     // corrupt the invariant: drop one file's stats row. This simulates
-    // ANOTHER PROCESS having written a bad index — clear the in-process
-    // stats memo so the merge actually re-reads the corrupted dir (the
-    // memo is sound in-process because this library never rewrites a
-    // published layout's stats).
+    // ANOTHER PROCESS having written a bad index file
     val m = Snapshots.versionMeta(spark, root, 1L)
-    val sp = s"$root/_stats/${m.layoutId}"
-    val crippled = spark.read.parquet(sp).limit(2)
-    graft.etl.Load.writeAtomic(spark, crippled, sp)
-    Snapshots.clearStatsCache()
+    val sp = java.nio.file.Paths.get(s"$root/_stats/${m.layoutId}.json")
+    val (schema, rows) = graft.etl.VersionLog.decodeStats(
+      new String(java.nio.file.Files.readAllBytes(sp), "UTF-8"), sp.toString)
+    assert(rows.length > 2)
+    java.nio.file.Files.delete(sp.resolveSibling(s".${m.layoutId}.json.crc"))
+    java.nio.file.Files.write(sp,
+      graft.etl.VersionLog.encodeStats(schema, rows.take(2).toSeq).getBytes("UTF-8"))
     val ex = intercept[IllegalArgumentException] {
       Snapshots.merge(spark, Seq((1L, "U")).toDF("id", "s"),
         root, "id", Seq("id"))
@@ -1463,9 +1466,10 @@ class SnapshotsSpec extends SparkSpec {
     // id range stats inside the partition
     val stats = graft.etl.StatsIndex.build(spark,
       s"$root/data/${m.layoutId}", Seq("id"))
-    // persist under the layout's stats path; sqlScan picks it up
-    graft.etl.Load.writeAtomic(spark, stats,
-      s"$root/_stats/${m.layoutId}")
+    // persist as the layout's index file; sqlScan picks it up
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/_stats"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/_stats/${m.layoutId}.json"),
+      graft.etl.VersionLog.encodeStats(stats.schema, stats.collect().toSeq).getBytes("UTF-8"))
     val (df1, idx1) = Snapshots.sqlScan(spark, root)
     val n = df1.filter(col("grp") === "g1" && col("id") <= 700L)
       .agg(count(lit(1))).head().getLong(0)
@@ -2760,45 +2764,115 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.latestVersion(spark, root) === Some(9L))
   }
 
-  test("vacuum reclaims a crashed clone's stale stats temp dir; dry run lists it") {
-    val src = tmpDir("snap_statstmp_src")
-    val dst = tmpDir("snap_statstmp_dst")
-    Snapshots.commitWithStats(spark, df(5), src, Seq("id"))
-    Snapshots.cloneShallow(spark, src, dst)
-    val layout = Snapshots.versionMeta(spark, dst, 1L).layoutId
-    // the crash shape: the stats copy landed in `<layout>__tmp` and
-    // the swap never ran; aged past the orphan grace
-    val tmp = new java.io.File(s"$dst/_stats/${layout}__tmp")
-    assert(tmp.mkdirs())
-    java.nio.file.Files.write(new java.io.File(tmp, "part-0.parquet").toPath,
-      Array[Byte](1, 2, 3))
+  /** The layout index files (`_stats/<layout>.json`) of a table. */
+  private def indexFiles(root: String): Set[String] =
+    Option(new java.io.File(s"$root/_stats").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".json")).toSet
+
+  test("a crash at publish keeps the prior version; vacuum reclaims the orphan index") {
+    val root = tmpDir("snap_crash_publish")
+    Snapshots.commitWithStats(spark, df(40).repartitionByRange(4, col("id")), root, Seq("id"))
+    val before = indexFiles(root)
+    // the race hook fires after the attempt staged its files and
+    // before its publish: throwing there stands in for a crash
+    var atPublish = Set.empty[String]
+    Snapshots.racePublishHook = Some { () =>
+      atPublish = indexFiles(root)
+      throw new IllegalStateException("crash at the publish point")
+    }
+    intercept[IllegalStateException] {
+      Snapshots.merge(spark, Seq((3L, "U")).toDF("id", "s"), root, "id", Seq("id"))
+    }
+    val orphan = atPublish -- before
+    assert(orphan.size === 1, s"the new layout's index must exist before its publish: $atPublish")
+    assert(Snapshots.latestVersion(spark, root) === Some(1L))
+    def point3 = Snapshots.readPruned(spark, root, None, "id", Some(lit(3L)), Some(lit(3L)))
+    assert(point3._1.as[(Long, String)].collect() === Array((3L, "r3")))
+    // a crash inside the index writer leaves only its temp file
+    val liveIndex = before.head
+    val tmp = new java.io.File(s"$root/_stats/$liveIndex.0badf00d.tmp")
+    java.nio.file.Files.write(tmp.toPath, Array[Byte]('{'))
+    // past the orphan grace: the dry run lists the unreferenced index
+    // and the temp, and the reclaim deletes them with the rest of the
+    // crashed attempt's files; the live layout's index survives
     val grace = 3600L * 1000
-    assert(tmp.setLastModified(System.currentTimeMillis() - 2 * grace))
-    val planned = Snapshots.vacuumDryRun(spark, dst, keepLast = 1,
-      orphanGraceMs = grace).as[(String, String)].collect().toSet
-    assert(planned.contains(("stats", s"_stats/${layout}__tmp")), planned)
-    assert(!planned.exists(_._2 == s"_stats/$layout"), planned)
-    assert(tmp.exists(), "a dry run mutates nothing")
-    Snapshots.vacuum(spark, dst, keepLast = 1, orphanGraceMs = grace)
+    val old = System.currentTimeMillis() - 2 * grace
+    Seq("_stats", "manifests", "data").flatMap(d =>
+      Option(new java.io.File(s"$root/$d").listFiles()).toSeq.flatten)
+      .foreach(f => assert(f.setLastModified(old)))
+    val planned = Snapshots.vacuumDryRun(spark, root, keepLast = 1, orphanGraceMs = grace)
+      .as[(String, String)].collect().toSet
+    assert(planned.contains(("stats", s"_stats/${orphan.head}")), planned)
+    assert(planned.contains(("stats", s"_stats/${tmp.getName}")), planned)
+    assert(!planned.exists(_._2 == s"_stats/$liveIndex"), planned)
+    assert(indexFiles(root) === atPublish && tmp.exists(), "a dry run mutates nothing")
+    Snapshots.vacuum(spark, root, keepLast = 1, orphanGraceMs = grace)
+    assert(indexFiles(root) === before)
     assert(!tmp.exists())
-    assert(new java.io.File(s"$dst/_stats/$layout").exists(),
-      "the live layout's index survives")
-    assert(Snapshots.read(spark, dst).count() === 5L)
+    assert(new java.io.File(s"$root/manifests").listFiles().forall(_.getName.startsWith(".")))
+    assert(point3._2 === 1)
+    assert(Snapshots.read(spark, root).count() === 40L)
   }
 
-  test("vacuum evicts the stats memo of every layout whose _stats dir it deletes") {
-    val root = tmpDir("snap_vacuum_memo")
-    Snapshots.commitWithStats(spark, df(20), root, Seq("id"))          // v1
-    Snapshots.commitWithStats(spark, df(30), root, Seq("id"))          // v2
-    val Seq(l1, l2) = Seq(1L, 2L).map(Snapshots.versionMeta(spark, root, _).layoutId)
-    assert(Snapshots.statsCached(spark, root, l1) && Snapshots.statsCached(spark, root, l2))
-    Snapshots.vacuum(spark, root, keepLast = 1, orphanGraceMs = 0)
-    assert(!new java.io.File(s"$root/_stats/$l1").exists())
-    assert(!Snapshots.statsCached(spark, root, l1),
-      "the memo outlived the _stats dir vacuum deleted")
-    assert(Snapshots.statsCached(spark, root, l2))
-    assert(Snapshots.readPruned(spark, root, None, "id", Some(lit(3L)), Some(lit(3L)))
-      ._1.count() === 1L)
+  test("a published version's stats index is on disk before its version file appears") {
+    import graft.etl.Snapshots.MatchedUpdate
+    val root = tmpDir("snap_index_at_publish")
+    val clone = tmpDir("snap_index_at_publish_clone")
+    Snapshots.commitWithStats(spark, df(40).repartitionByRange(4, col("id")), root, Seq("id"))
+    assert(indexFiles(root) === Set(s"${Snapshots.versionMeta(spark, root, 1L).layoutId}.json"))
+    // the hook runs at the publish point without throwing: the files
+    // it sees are on disk before the version file appears
+    def indexedAtPublish(at: String)(write: => Long): Unit = {
+      var seen = Set.empty[String]
+      Snapshots.racePublishHook = Some(() => seen = indexFiles(at))
+      val v = write
+      assert(Snapshots.racePublishHook.isEmpty, "the writer never reached its publish")
+      val layout = Snapshots.versionMeta(spark, at, v).layoutId
+      assert(seen.contains(s"$layout.json"), s"v$v's index $layout was not on disk at its publish")
+    }
+    indexedAtPublish(root)(Snapshots.merge(spark, Seq((3L, "U")).toDF("id", "s"),
+      root, "id", Seq("id")).version)
+    indexedAtPublish(root)(Snapshots.mergeClauses(spark, Seq((4L, "V"), (41L, "N")).toDF("id", "s"),
+      root, "id", Seq("id"), "t", "u", Seq(MatchedUpdate(None, None)), Some(None)).version)
+    indexedAtPublish(root)(Snapshots.append(spark, df(2).withColumn("id", col("id") + 100L),
+      root, Seq("id")))
+    indexedAtPublish(root)(Snapshots.deleteRange(spark, root, "id", Some(lit(5L)), Some(lit(6L)),
+      Seq("id")).version)
+    indexedAtPublish(root)(Snapshots.optimize(spark, root, statsCols = Seq("id")).version)
+    indexedAtPublish(clone)(Snapshots.cloneShallow(spark, root, clone))
+    assert(Snapshots.readPruned(spark, clone, None, "id", Some(lit(41L)), Some(lit(41L)))
+      ._1.as[(Long, String)].collect() === Array((41L, "N")))
+  }
+
+  test("merge, mergeClauses, append and optimize write their index with no job") {
+    import graft.etl.Snapshots.MatchedUpdate
+    val root = tmpDir("snap_index_jobs")
+    Snapshots.commitWithStats(spark, df(40).repartitionByRange(4, col("id")), root, Seq("id"))
+    // each count includes the one stats build over the statement's
+    // fresh files; writing the index file runs no job (the parquet
+    // index written after the publish cost one more: 11, 16, 4, 5)
+    val (_, mergeJobs) = jobsDuring(Snapshots.merge(spark, Seq((3L, "U")).toDF("id", "s"),
+      root, "id", Seq("id")))
+    val (_, clauseJobs) = jobsDuring(Snapshots.mergeClauses(spark,
+      Seq((4L, "V"), (41L, "N")).toDF("id", "s"), root, "id", Seq("id"), "t", "u",
+      Seq(MatchedUpdate(None, None)), Some(None)))
+    val (_, appendJobs) = jobsDuring(Snapshots.append(spark,
+      df(2).withColumn("id", col("id") + 100L), root, Seq("id")))
+    val (_, optimizeJobs) = jobsDuring(Snapshots.optimize(spark, root, statsCols = Seq("id")))
+    assert((mergeJobs, clauseJobs, appendJobs, optimizeJobs) === ((10, 15, 3, 4)))
+  }
+
+  test("readPruned of a copied table reads its index file with no stats job") {
+    val root = tmpDir("snap_index_copy")
+    Snapshots.commitWithStats(spark, df(40).repartitionByRange(4, col("id")), root, Seq("id"))
+    val copy = tmpDir("snap_index_copy_dst") + "/t"
+    val cp = new ProcessBuilder("cp", "-r", root, copy).inheritIO().start()
+    assert(cp.waitFor() === 0)
+    val ((pr, nRead, nTotal), jobs) = jobsDuring(
+      Snapshots.readPruned(spark, copy, None, "id", Some(lit(3L)), Some(lit(3L))))
+    assert(jobs === 0, "the pruned read's planning ran a Spark job")
+    assert((nRead, nTotal) === ((1, 4)))
+    assert(pr.as[(Long, String)].collect() === Array((3L, "r3")))
   }
 
   test("a version that logs no schema reads under its first data file's footer schema") {

@@ -130,8 +130,8 @@ class CentroidKernelSpec extends SparkSpec {
   }
 
   test("planted ties: duplicates, a zero vector, equidistant cells, a corpus smaller than ksub") {
-    // a zero vector's cosine divides by zero: ANSI refuses it in both
-    // forms (below); with ANSI off both rank its null sims lowest
+    // a zero vector's cosine is null in both forms, whatever the ANSI
+    // mode (below), and both rank its null sims lowest
     withAnsi(on = false) {
       val zero = Seq((0L, Seq.fill(8)(0f))).toDF("vec_id", "embedding")
       for (n <- Seq(1, 4)) {
@@ -164,17 +164,21 @@ class CentroidKernelSpec extends SparkSpec {
     assert(got.select("codes").as[Seq[Int]].collect().toSet === Set(Seq(1)))
   }
 
-  test("a zero vector's cosine is an ANSI division by zero in both forms") {
-    val d = emb.filter(col("vec_id") < 20L)
-      .unionByName(Seq((-1L, Seq.fill(64)(0f))).toDF("vec_id", "embedding"))
-    def failsLikeDivide(df: => DataFrame): String = {
-      val e = intercept[Exception](df.collect())
-      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).find(m => m != null && m.contains("DIVIDE_BY_ZERO"))
-        .getOrElse(fail(s"not a division by zero: $e"))
+  test("zero vector: null cosine, kernel equals the reference with ANSI on") {
+    withAnsi(on = true) {
+      val d = emb.filter(col("vec_id") < 20L)
+        .unionByName(Seq((-1L, Seq.fill(64)(0f))).toDF("vec_id", "embedding"))
+      val sim = Seq((0L, 0L, 5L), (3L, 4L, 0L)).toDF("dot", "n2a", "n2b")
+        .select(Similarity.cosine(col("dot"), col("n2a"), col("n2b")))
+      assert(sim.as[Option[Double]].collect().toSeq === Seq(None, None))
+      for (hash <- Seq(true, false))
+        same(SemDedup.kmeansAssign(d, "vec_id", "embedding", k = 3, initHash = hash),
+          AnnReference.kmeansAssign(d, "vec_id", "embedding", k = 3, initHash = hash),
+          s"kmeansAssign initHash=$hash")
+      val top = Similarity.bruteTopK(d, d.filter(col("vec_id") === -1L), "vec_id", "embedding", 3)
+      assert(top.filter(col("cosine").isNull).count() === 3L,
+        "a zero query scores null instead of failing the query")
     }
-    failsLikeDivide(SemDedup.kmeansAssign(d, "vec_id", "embedding", k = 3, initHash = true))
-    failsLikeDivide(AnnReference.kmeansAssign(d, "vec_id", "embedding", k = 3, initHash = true))
   }
 
   test("job budgets: train 1, local-codebook encode 0, stored-codebook load 1, a job per farthest seed") {
